@@ -11,9 +11,10 @@ import scala.collection.concurrent.TrieMap
   * (which would throw at execution). Entries are plans, not data — Spark's
   * own persist() layer holds the bytes — so the map stays tiny.
   *
-  * Lifetime note: entries are held strongly for the JVM's life, which is
-  * right for the one-shot Verify/Bench drivers this serves; a long-lived
-  * multi-session host would want `clear(session)` on session stop.
+  * Lifetime note: entries are held strongly until `clear(session)`. A
+  * host that stops sessions and starts new ones in the same JVM must
+  * call it on each stop (the perfbench harness does); the one-shot
+  * Verify/Bench drivers run one session and never need to.
   */
 object Memo {
   private val cache = TrieMap.empty[(AnyRef, String), Any]

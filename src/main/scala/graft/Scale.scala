@@ -26,23 +26,11 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Non-declared A/B control plans, probe-able by name alongside the
-    * declared inventory (e.g. the coarse custkey-only range join the
-    * binned `q_join_theta_range` replaced). */
+  /** Non-declared geometry probes, probe-able by name alongside the
+    * declared inventory: the declared IVF/kNN queries at the cell counts
+    * the cells ∝ N rule prescribes for ×10/×100 replicas (the measured
+    * A/B numbers of the retired control plans are in BASELINE.md). */
   val extraProbes: Map[String, graft.queries.U.Q] = Map(
-    "x_join_theta_coarse" -> graft.queries.Joins.thetaRangeCoarse,
-    // checkpoint-strategy A/B behind the r4 kmeans bench regression: the
-    // r4 "lazy" two-consumer form measured 2× the fused declared plan
-    // (both broadcast builds race the unmaterialized checkpoint and each
-    // executes the full lineage); eager ≈ fused + one wasted cache write
-    "x_kmeans_lazy_ckpt" -> ((s, d) => graft.queries.Learn.kmeansWith(s, d, "lazy")),
-    "x_kmeans_eager_ckpt" -> ((s, d) => graft.queries.Learn.kmeansWith(s, d, "eager")),
-    "x_kmeans_no_ckpt" -> ((s, d) => graft.queries.Learn.kmeansWith(s, d, "none")),
-    // wjaccard tf-frame checkpoint A/B: "lazy" is the declared form;
-    // "none" re-derives the (doc, term) shuffle per consumer (or lets
-    // ReuseExchange dedupe it); "memo" derives once per (session, dir)
-    "x_wjaccard_no_ckpt" -> ((s, d) => graft.queries.Llm.wjaccardWith(s, d, "none")),
-    "x_wjaccard_memo_ckpt" -> ((s, d) => graft.queries.Llm.wjaccardWith(s, d, "memo")),
     // IVF quantizer-growth probes: bits chosen so 2^bits tracks N
     // (base 4 bits / 16 cells at sf0.1's 2k vectors → 7 bits at ×10,
     // 11 bits at ×100), holding per-cell population ~constant — the
@@ -75,41 +63,8 @@ object Scale {
       graft.queries.Learn.knnGraphTrained2L(s, d, 2048, 8, 10)),
     "x_knn_2l_c2048_w4_p20" -> ((s, d) =>
       graft.queries.Learn.knnGraphTrained2L(s, d, 2048, 4, 20)),
-    // raw-gram-string join identity, no memo — the baseline the
-    // declared q_llm_source_overlap's 60-bit fold + memo was measured
-    // against (403/79.6 vs 72.9/41.4 s at ×100)
-    "x_source_overlap_strkey" -> graft.queries.Audit.sourceOverlapStrKey,
-    // the round-9 token-frame A/B's runnable artifact: a representative
-    // flat-explode consumer fed from the memoized U.tokenStream instead
-    // of its declared inline explode (the memo LOST in-suite — see
-    // U.tokenStream's scaladoc and BASELINE.md "shared token frame")
-    "x_entropy_tokmemo" -> ((s, d) => graft.queries.Learn.entropyFrom(
-      graft.queries.U.tokenStream(s, d).select("doc_id", "term"))),
-    // (the sketch source-overlap variant was promoted to the DECLARED
-    // surface in-round — q_llm_source_overlap_sketch; probe it by name)
-    // banded aHash Hamming search — measured and NOT declared: exact
-    // pigeonhole recall but 8-bit band keys go ~quadratic at ×100
-    // (217 s vs multi-probe's sub-second; the MIH band-width-vs-log₂N
-    // law — see Multimodal.phashBandedDedup's scaladoc)
-    "x_mm_phash_banded" -> ((s, d) =>
-      graft.queries.Multimodal.phashBandedDedup(graft.Tables(s, d, "documents"))),
     "x_dedup_semantic_b7" -> ((s, d) => graft.queries.Insights.dedupSemanticWithBits(s, d, 7)),
-    "x_dedup_semantic_b11" -> ((s, d) => graft.queries.Insights.dedupSemanticWithBits(s, d, 11)),
-    // A/B control for q_join_skew_salted: the SAME join UNSALTED, left
-    // to Spark's AQE skew-join splitting (adaptive is on by default in
-    // this probe session). Times manual 8-way salting against the
-    // runtime re-plan the platform gives for free — the decision a real
-    // pipeline makes per hot key.
-    "x_join_skew_plain" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val li = graft.Tables(s, d, "lineitem")
-      val sup = graft.Tables(s, d, "supplier")
-      li.join(sup.hint("shuffle_hash"), li("l_suppkey") === sup("s_suppkey"))
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("n_items"),
-          graft.queries.U.dsum(col("l_quantity")).as("sum_qty"))
-        .orderBy("s_name")
-    }))
+    "x_dedup_semantic_b11" -> ((s, d) => graft.queries.Insights.dedupSemanticWithBits(s, d, 11)))
 
   val probeSet: Seq[String] = Seq(
     "q_agg_groupby", "q_win_rank", "q_join_theta_range", "q_join_asof",

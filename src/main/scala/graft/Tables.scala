@@ -12,18 +12,15 @@ import org.apache.spark.storage.StorageLevel
   * per-application `persist`, and Catalyst still prunes columns/predicates
   * beneath it because persist keeps the analyzed plan, with the in-memory
   * columnar batches serving as the scan source.
+  *
+  * Every table is always persisted `MEMORY_AND_DISK`, so plans depend only
+  * on (session, sfDir): a table larger than the cache spills to local disk
+  * instead of re-reading parquet per query.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Caching is a bench-harness optimization (70+ sequential queries over
-    * MB-scale tables). At 100 TB you would NOT persist base tables — set
-    * SPARK_GRAFT_CACHE=false to read straight from parquet, which restores
-    * full predicate pushdown / column pruning at the scan. */
-  private val cacheEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false"
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     // keyed by the session OBJECT: a cached DataFrame is bound to the
@@ -63,6 +60,6 @@ object Tables {
       // ~300 cheap queries (OPTIMIZATION_r14.md "cache-level floor A/B").
       // The adopted form is U.fanOut — the same scale-gated branch applied
       // per-operator exactly where the scan stage is CPU-bound.
-      if (cacheEnabled) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
     }
 }

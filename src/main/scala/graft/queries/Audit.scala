@@ -70,38 +70,6 @@ object Audit {
        hourly AS (SELECT hours.hr, coalesce(hraw.x, 0.0) AS x
          FROM hours LEFT JOIN hraw ON hraw.hr = hours.hr)"""
 
-  /** A/B control for q_llm_source_overlap (`x_source_overlap_strkey`):
-    * the same containment matrix with the RAW GRAM STRING as the join
-    * identity and no memo — the round-8 baseline the 60-bit-fold +
-    * memoized declared plan was measured against (403 s cold / 79.6 s
-    * warm vs 72.9 / 41.4 s at ×100; BASELINE.md "q_llm_source_overlap"
-    * row). Kept runnable so the comparison stays re-measurable. */
-  private[graft] def sourceOverlapStrKey(s: SparkSession,
-      d: String): DataFrame = {
-    val dh = Tables(s, d, "documents")
-      .withColumn("tk", textTokens)
-      .select(col("source"), explode(array_distinct(grams5)).as("h"))
-      .distinct()
-    val tot = dh.groupBy("source").agg(count(lit(1)).as("nd"))
-    val shared = dh.as("x")
-      .join(dh.as("y").hint("shuffle_hash"),
-        col("x.h") === col("y.h") && col("x.source") < col("y.source"))
-      .groupBy(col("x.source").as("sa"), col("y.source").as("sb"))
-      .agg(count(lit(1)).as("ns"))
-    tot.select(col("source").as("source_a"), col("nd").as("n_a"))
-      .crossJoin(broadcast(
-        tot.select(col("source").as("source_b"), col("nd").as("n_b"))))
-      .where(col("source_a") < col("source_b"))
-      .join(broadcast(shared),
-        col("source_a") === col("sa") && col("source_b") === col("sb"),
-        "left")
-      .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
-        coalesce(col("ns"), lit(0L)).as("n_shared"),
-        round(coalesce(col("ns"), lit(0L)).cast("double") /
-          least(col("n_a"), col("n_b")), 6).as("containment"))
-      .orderBy("source_a", "source_b")
-  }
-
   /** SKETCH twin of q_llm_source_overlap (declared as
     * `q_llm_source_overlap_sketch`) —
     * the 100 TB dashboard answer to the exact matrix's honest floor (the
@@ -278,7 +246,8 @@ object Audit {
       // gram string: the distinct + self-join shuffle a ~70-byte
       // 5-gram text otherwise, and the folded key cuts the shuffle
       // width to 8 bytes — measured at ×100 (23.8M distinct grams)
-      // 403 s cold / 79.6 s warm with string keys. Collisions collapse
+      // 403 s cold / 79.6 s warm with string keys (BASELINE.md
+      // "q_llm_source_overlap" row). Collisions collapse
       // two grams into one identity: expected ≈ G²/2⁶¹ ≈ 2.5e-4 at the
       // ×100 gram count — negligible, and the DuckDB twin folds the
       // SAME md5, so any collision is shared and the compare stays

@@ -44,13 +44,11 @@ object Insights {
         .groupBy(col("user_id"), to_date(col("ts")).as("day"))
         .agg(sum(expr("CAST(round(value * 1000) AS BIGINT)")).as("tot"))
       val w = Window.partitionBy("user_id").orderBy("day")
-      val wins = daily
+      daily
         .withColumn("rn", row_number().over(w))
         .withColumn("arr", collect_list(col("tot")).over(w.rowsBetween(0, 6)))
         .where(size(col("arr")) === 7)
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        wins.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else wins
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   val queries: Map[String, Q] = Map(
@@ -710,12 +708,10 @@ object Insights {
       val tcnt = tri
         .select(explode(array(col("w1"), col("w2"), col("w3"))).as("id"))
         .groupBy("id").agg(count(lit(1)).as("n_tri"))
-      val node = deg.join(tcnt, Seq("id"), "left")
+      deg.join(tcnt, Seq("id"), "left")
         .select(col("id"), col("deg"),
           coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        node.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else node
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Sign-bit coarse quantizer over the first `bits` embedding dims

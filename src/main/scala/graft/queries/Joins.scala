@@ -133,8 +133,7 @@ object Joins {
     // made per probe — measured 177× at ×100 input vs 9.6× isolated /
     // 15.9× in-suite for this construction (BASELINE.md "And at ×100";
     // output rows themselves grow ~×100 there, so ~10× runtime on ×100
-    // input+output is at-linear); the coarse form survives only as the
-    // A/B probe `thetaRangeCoarse` below.
+    // input+output is at-linear).
     "q_join_theta_range" -> ((s, d) => {
       val o = Tables(s, d, "orders")
       val o1 = o.select(col("o_custkey").as("ck1"), col("o_orderkey").as("k1"),
@@ -286,25 +285,6 @@ object Joins {
         .orderBy("purchase_id")
     })
   )
-
-  /** The custkey-only range join — the plan `q_join_theta_range` used to
-    * declare. Kept (NOT in `queries`) purely as the scaling A/B control:
-    * `SPARK_GRAFT_PROBE_ONLY=x_join_theta_coarse` probes it via
-    * `Scale.extraProbes`. Same result set, but the residual band is
-    * evaluated over every same-customer pair, which goes quadratic in
-    * per-key history (measured 177× at ×100 input, BASELINE.md). */
-  private[graft] val thetaRangeCoarse: Q = (s, d) => {
-    val o = Tables(s, d, "orders")
-    val o1 = o.select(col("o_custkey").as("ck1"), col("o_orderkey").as("k1"),
-      col("o_orderdate").as("d1"))
-    val o2 = o.select(col("o_custkey").as("ck2"), col("o_orderkey").as("k2"),
-      col("o_orderdate").as("d2"))
-    o1.join(o2, col("ck1") === col("ck2")
-        && col("d2") > col("d1")
-        && col("d2") <= col("d1") + expr("INTERVAL 30 DAYS"))
-      .select(col("k1").as("o1_key"), col("k2").as("o2_key"))
-      .orderBy("o1_key", "o2_key")
-  }
 
   val oracle: Map[String, String] = Map(
     "q_join_null_safe" ->

@@ -356,13 +356,6 @@ object Learn {
       .select(col("vec_id"), col("q"), col("m.sid").as("sid"),
         col("m.lcid").as("lcid"))
 
-  /** Centroids per super-cell — the geometry the two-level cost model
-    * assumes; the diagnostic main prints it. */
-  private[graft] def twoLevelCentHist(s: org.apache.spark.sql.SparkSession,
-      d: String, cells: Int): DataFrame =
-    twoLevelModel(s, d, cells)._2.groupBy("sid")
-      .agg(count(lit(1)).as("n_cent")).orderBy(desc("n_cent"))
-
   private[graft] def twoLevelScored(s: org.apache.spark.sql.SparkSession,
       d: String, cells: Int, w: Int): DataFrame = {
     val vecs = probeVecs(s, d)
@@ -461,30 +454,6 @@ object Learn {
         .orderBy("qid", "rnk")
   }
 
-  /** Distributed Lloyd k-means (k=8, 2 iterations, deterministic seeds =
-    * the first k vectors) over the 64-dim embeddings, entirely in 1e-6
-    * fixed point. Per iteration: broadcast centroids → argmin assignment
-    * (ties to the lower cluster id) → component-wise partial-sum
-    * recompute. Output: one row per cluster with population, smallest
-    * member id, and the centroid's exact L1 norm.
-    *
-    * `ckpt` picks the plan shape for the final report:
-    *  - "fused" (declared): the L1 norm is computed INSIDE the final
-    *    centroid projection and rides the scoring broadcast, so the
-    *    centroid table has exactly ONE consumer — no materialization
-    *    needed, nothing executes at plan-build time, and the lineage runs
-    *    once. (Every r4 strategy below was measurably worse.)
-    *  - "lazy" (the r4 declared form, kept as the A/B control): TWO
-    *    consumers (scoring broadcast + a second L1 broadcast join) over a
-    *    localCheckpoint(eager=false). MEASURED 2× the fused time at
-    *    sf0.1: the two broadcast builds race on the not-yet-materialized
-    *    checkpoint and BOTH execute the full 2-iteration lineage — lazy
-    *    materialization dedupes only consumers that start after the
-    *    first one finishes.
-    *  - "eager"/"none": the same two-consumer plan with an eager
-    *    checkpoint (one lineage run, but it executes at plan-BUILD time,
-    *    which the plan-only consumers PlanSpec/Explain must not trigger)
-    *    / no checkpoint. Probe-able as x_kmeans_{lazy,eager,no}_ckpt. */
   /** The 1e-6-grid vector view the k-means family scores on. */
   private def kmeansVecs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
@@ -494,7 +463,7 @@ object Learn {
   }
 
   /** The converged (ITERS-round) centroid frame — one definition for the
-    * declared report, its A/B probes, and the cluster-labeling
+    * declared report, the silhouette score, and the cluster-labeling
     * assignment (a divergent loop would silently decouple the labels
     * from the declared clustering). */
   private def kmeansCent(vecs: DataFrame): DataFrame = {
@@ -530,45 +499,42 @@ object Learn {
     (vecs, kmeansCent(vecs))
   }
 
-  private[graft] def kmeansWith(s: org.apache.spark.sql.SparkSession,
-      d: String, ckpt: String): DataFrame = {
-    val vecs = kmeansVecs(s, d)
-    var cent = kmeansCent(vecs)
-    if (ckpt == "fused") {
-      // one broadcast carries both the scoring vector and its L1 (the L1
-      // is evaluated once per centroid in the broadcast relation build,
-      // not per (vec, cid) pair); first() is deterministic — every row
-      // of a cid group carries the same broadcast value
-      val centL1 = cent.select(col("cid"), col("c"),
-        expr("aggregate(c, 0L, (acc, v) -> acc + abs(v))").as("centroid_l1"))
-      vecs.crossJoin(broadcast(centL1))
-        .select(col("vec_id"), col("cid"), col("centroid_l1"), d2.as("d2"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))))
-        .where(col("rk") === 1)
-        .groupBy("cid")
-        .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_vec"),
-          first(col("centroid_l1")).as("centroid_l1"))
-        .orderBy("cid")
-    } else {
-      cent = ckpt match {
-        case "lazy"  => cent.localCheckpoint(eager = false)
-        case "eager" => cent.localCheckpoint(eager = true)
-        case _       => cent
-      }
-      assign(vecs, cent)
-        .groupBy("cid")
-        .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_vec"))
-        .join(broadcast(cent.select(col("cid"),
-          expr("aggregate(c, 0L, (acc, v) -> acc + abs(v))").as("centroid_l1"))), "cid")
-        .orderBy("cid")
-    }
+  /** Distributed Lloyd k-means (k=8, 2 iterations, deterministic seeds =
+    * the first k vectors) over the 64-dim embeddings, entirely in 1e-6
+    * fixed point. Per iteration: broadcast centroids → argmin assignment
+    * (ties to the lower cluster id) → component-wise partial-sum
+    * recompute. Output: one row per cluster with population, smallest
+    * member id, and the centroid's exact L1 norm.
+    *
+    * The L1 norm is computed INSIDE the final centroid projection and
+    * rides the scoring broadcast, so the centroid table has exactly ONE
+    * consumer — no materialization needed, nothing executes at
+    * plan-build time, and the lineage runs once. The two-consumer
+    * checkpointed forms this replaced measured up to 2× slower
+    * (BASELINE.md, "BENCH total" row). */
+  private def kmeans(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame = {
+    val (vecs, cent) = kmeansVecCent(s, d)
+    // one broadcast carries both the scoring vector and its L1 (the L1
+    // is evaluated once per centroid in the broadcast relation build,
+    // not per (vec, cid) pair); first() is deterministic — every row
+    // of a cid group carries the same broadcast value
+    val centL1 = cent.select(col("cid"), col("c"),
+      expr("aggregate(c, 0L, (acc, v) -> acc + abs(v))").as("centroid_l1"))
+    vecs.crossJoin(broadcast(centL1))
+      .select(col("vec_id"), col("cid"), col("centroid_l1"), d2.as("d2"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))))
+      .where(col("rk") === 1)
+      .groupBy("cid")
+      .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_vec"),
+        first(col("centroid_l1")).as("centroid_l1"))
+      .orderBy("cid")
   }
 
-  /** q_llm_entropy's body over any (doc_id, term) frame — factored so
-    * the round-9 token-frame A/B stays runnable (`x_entropy_tokmemo`
-    * feeds it U.tokenStream; the declared query feeds the inline
-    * explode, which WON the A/B — BASELINE.md "shared token frame"). */
+  /** q_llm_entropy's body over a (doc_id, term) frame. The declared
+    * query feeds it an inline explode, which beat a corpus-wide
+    * memoized token frame (BASELINE.md "shared token frame"). */
   private[graft] def entropyFrom(tok: DataFrame): DataFrame =
     tok.groupBy("doc_id", "term").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
@@ -586,7 +552,7 @@ object Learn {
 
   val queries: Map[String, Q] = Map(
 
-    "q_llm_cluster_kmeans" -> ((s, d) => kmeansWith(s, d, "fused")),
+    "q_llm_cluster_kmeans" -> kmeans _,
 
     // Doc-to-doc kNN graph over a TRAINED coarse quantizer — since
     // round 13 the declared entry IS the scale-dispatching form

@@ -153,7 +153,7 @@ object Llm {
     * over longs keeps the single doc-keyed shuffle inside
     * HashAggregate. The band key then drops the score and hashes only
     * the winner's 28-bit term id (m % 2²⁸) — the 0-bit CWS rule; see
-    * the band construction note in wjaccardWith. Ties break by
+    * the band construction note in [[wjaccard]]. Ties break by
     * (score, term-hash), mirrored verbatim in the oracle. */
   private def cwsSig(tf: org.apache.spark.sql.DataFrame)
     : org.apache.spark.sql.DataFrame = {
@@ -198,25 +198,22 @@ object Llm {
     * doc_id-keyed repartition at defaultParallelism restores
     * parallelism through the checkpoint AND pre-partitions the frame
     * for the doc-keyed signature/size aggregates (no further shuffle):
-    * full query 12.6 → 2.1 s fresh-materialized at sf0.1. */
-  private def termTf(s: org.apache.spark.sql.SparkSession, d: String,
-      ckpt: String = "lazy"): org.apache.spark.sql.DataFrame = {
-    val base = Tables(s, d, "documents").withColumn("tk", toks)
+    * full query 12.6 → 2.1 s fresh-materialized at sf0.1. No
+    * checkpoint and a per-session memoized eager one were measured
+    * against this form at ×100 (BASELINE.md "q_llm_dedup_wjaccard"
+    * row). */
+  private def termTf(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables(s, d, "documents").withColumn("tk", toks)
       .select(col("doc_id"), explode(U.grams2).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    def par = base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-    ckpt match {
-      case "none" => base
-      case "memo" => graft.Memo(s, s"wj-tf:$d")(par.localCheckpoint(true))
-      case _      => par.localCheckpoint(false)
-    }
-  }
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      .localCheckpoint(false)
 
-  /** The full wjaccard pipeline over a given tf frame — shared by the
-    * declared query and the Scale checkpoint-strategy A/B probes. */
-  private[graft] def wjaccardWith(s: org.apache.spark.sql.SparkSession,
-      d: String, ckpt: String): org.apache.spark.sql.DataFrame = {
-    val tf = termTf(s, d, ckpt)
+  /** The weighted-Jaccard (CWS) dedup pipeline of q_llm_dedup_wjaccard. */
+  private def wjaccard(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val tf = termTf(s, d)
     // Band keys hash the sample IDENTITY ONLY (the 28-bit term id,
     // m % 2²⁸) — the 0-bit CWS semantics. Hashing the full packed atom
     // would additionally require the argmin term's tf to match in both
@@ -446,7 +443,7 @@ object Llm {
     // only — weighted Jaccard Σmin(tf)/Σmax(tf) ≥ 0.8 computed from
     // the identity Σmax = sza + szb − Σmin with exact BIGINT tf sums,
     // one float division at the compare.
-    "q_llm_dedup_wjaccard" -> ((s, d) => wjaccardWith(s, d, "lazy")),
+    "q_llm_dedup_wjaccard" -> wjaccard _,
 
     // ROUGE-2 overlap grading (SURVEY §2.35) — the eval-metric view of
     // the dedup family: for every banding CANDIDATE pair, the

@@ -243,10 +243,9 @@ object Multimodal {
 
   /** (doc_id, phash): the nBlk-bit aHash over a phashBase frame — ONE
     * hash definition shared by the Hamming-≤1 multi-probe dedup (32
-    * blocks), the round-9 banded probe (same 32), and the round-10
-    * 64-bit banded operator (64 blocks: bit 63 rides the long's sign
-    * bit — harmless, XOR/bit_count/band-mask arithmetic is bit-pattern
-    * arithmetic in both engines). */
+    * blocks) and the round-10 64-bit banded operator (64 blocks: bit 63
+    * rides the long's sign bit — harmless, XOR/bit_count/band-mask
+    * arithmetic is bit-pattern arithmetic in both engines). */
   private[graft] def phashFrame(base: org.apache.spark.sql.DataFrame,
       nBlk: Int = 32): org.apache.spark.sql.DataFrame = {
     val codes = base.select(col("doc_id"), col("n"),
@@ -278,54 +277,8 @@ object Multimodal {
     U.dupGroups(base, pairs)
   }
 
-  /** Banded Hamming search over the SAME 32-bit aHash — a PROBE-ONLY
-    * A/B artifact (`x_mm_phash_banded`), NOT declared, and the measured
-    * reason the Hamming-≤1 MULTI-PROBE form is the family's declared
-    * member at this hash width. The attraction: 4 bands of 8 bits need
-    * FOUR keys per doc at any radius (multi-probe needs 33 at r=1, 529
-    * at r=2, 5,489 at r=3), and by pigeonhole two hashes within
-    * Hamming ≤3 share an intact band — recall at the ≤2 confirm is
-    * EXACT, a provable property MinHash banding lacks (AnalyticsSpec
-    * asserts grouping ≡ brute-force Hamming-≤2 on the fixture). The
-    * disqualifier, measured round 9 at ×100 (500k docs): an 8-bit
-    * fragment carries only 256 buckets, so ~2k docs pile per bucket
-    * and the bucket-local join goes ~quadratic — 217 s warm vs the
-    * multi-probe's sub-second, the multi-index-hashing law that band
-    * width must track log₂N, unreachable inside a 32-bit hash. The
-    * length-composite key (band, bits, n) was measured as the fix and
-    * rejected too: it shards buckets but is VACUOUS on this corpus
-    * (near-dups here differ in length — zero same-length Hamming-≤2
-    * pairs at any gate scale), failing the house vacuity rule for a
-    * declared operator. Deployment answer: banding earns its keys at a
-    * 64-bit hash with ≥16-bit bands (4×16 ⇒ radius ≤3 exact, 65k
-    * buckets); below that, enumerate the ball — DECLARED in round 10 as
-    * [[phash64Dedup]] (`q_mm_dedup_phash64`), whose ×100 cost is
-    * output-bound (true pair volume), not bucket-bound. */
-  private[graft] def phashBandedDedup(docs: org.apache.spark.sql.DataFrame)
-    : org.apache.spark.sql.DataFrame = {
-    val base = phashBase(docs)
-    val hashes = phashFrame(base)
-    val bandCols = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"(phash div ${1L << (b * 8)}L) % 256").as("bits"))
-    }
-    val bk = hashes.select(col("doc_id"), col("phash"),
-      explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("phash"),
-        col("bb.band").as("band"), col("bb.bits").as("bits"))
-    val pairs = bk.as("x").join(bk.as("y"),
-        col("x.band") === col("y.band") && col("x.bits") === col("y.bits")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("x.phash").as("ha"),
-        col("y.doc_id").as("b"), col("y.phash").as("hb"))
-      .distinct()
-      .where(expr("bit_count(ha ^ hb) <= 2"))
-      .select("a", "b")
-    U.dupGroups(base, pairs)
-  }
-
-  /** 64-bit banded aHash dedup — the deployment geometry the rejected
-    * 32-bit banded probe's own analysis names (BASELINE "banded aHash":
+  /** 64-bit banded aHash dedup — the deployment geometry the measured
+    * and rejected 32-bit banded form names (BASELINE "banded aHash":
     * band width must track log₂N — the multi-index-hashing law — and
     * ≥16-bit bands need a 64-bit hash). 64 positional block means → a
     * 64-bit hash, 4×16-bit bands as join keys, exact-Hamming ≤2

@@ -257,18 +257,15 @@ object U {
     * writers in the round-6 bench (kcore 86 MB, bfs 83 MB, hits 43 MB,
     * modularity 42 MB of repeated shuffle). One derivation per JVM now;
     * persist() is lazy, so plan-only consumers (PlanSpec, Explain) stay
-    * execution-free. Gated on the same SPARK_GRAFT_CACHE knob as Tables:
-    * at true 100 TB you re-derive (or bucket-write) instead of caching. */
+    * execution-free. */
   def coPurchase(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"copurchase:$d") {
-      val oi = graft.Tables(s, d, "orders")
+      graft.Tables(s, d, "orders")
         .join(graft.Tables(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"),
           (col("l_suppkey") + supplierIdOffset).as("supp"))
         .distinct()
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        oi.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else oi
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Both-direction edge list (src, dst) over [[coPurchase]].
@@ -285,28 +282,18 @@ object U {
     * localCheckpoint this frame (an ExistingRDD scan reports unknown
     * partitioning and puts the per-round shuffle back). Pre-r14 this was
     * a plan-level memo over the persisted incidence; the second cache
-    * layer costs ~2×|E| rows once and is gated off with the rest
-    * (SPARK_GRAFT_CACHE=false → plain union, at 100 TB you bucket-write
-    * instead). */
+    * layer costs ~2×|E| rows once. */
   def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"copurchase-edges:$d") {
       val oi = coPurchase(s, d)
-      val e = oi.select(col("cust").as("src"), col("supp").as("dst"))
+      // sortWithinPartitions completes the bucket+sort idiom: the cached
+      // plan's outputOrdering satisfies SMJ consumers' sort requirement,
+      // so the per-run e-side Sort disappears too (one sort at
+      // materialization instead of one per consumer run)
+      oi.select(col("cust").as("src"), col("supp").as("dst"))
         .unionAll(oi.select(col("supp").as("src"), col("cust").as("dst")))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        // sortWithinPartitions completes the bucket+sort idiom: the cached
-        // plan's outputOrdering satisfies SMJ consumers' sort requirement,
-        // so the per-run e-side Sort disappears too (one sort at
-        // materialization instead of one per consumer run)
-        e.repartition(col("src")).sortWithinPartitions("src")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else
-        // cache-disabled: still truncate the lineage (lazy, execution-
-        // free until first use) so the iterative consumers' per-round
-        // references replay RDD blocks, not the full orders⋈lineitem
-        // re-derivation + re-shuffle each round (r14 advisor item — the
-        // un-persisted branch silently regressed every graph round)
-        e.localCheckpoint(false)
+        .repartition(col("src")).sortWithinPartitions("src")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Weighted co-purchase incidence: the [[coPurchase]] pair set with edge
@@ -319,14 +306,12 @@ object U {
     * round-7 bench's top shuffle writer (146.9 MB) and slowest query. */
   def coPurchaseWeighted(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"copurchase-w:$d") {
-      val oi = graft.Tables(s, d, "orders")
+      graft.Tables(s, d, "orders")
         .join(graft.Tables(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_custkey").as("cust"),
           (col("l_suppkey") + supplierIdOffset).as("supp"))
         .agg(min(round(col("l_extendedprice") * 100).cast("long")).as("w"))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        oi.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else oi
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Both-direction weighted edge list (src, dst, w) over
@@ -336,49 +321,11 @@ object U {
   def coPurchaseWeightedEdges(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"copurchase-w-edges:$d") {
       val oi = coPurchaseWeighted(s, d)
-      val e = oi.select(col("cust").as("src"), col("supp").as("dst"), col("w"))
+      // same bucket+sort idiom as [[coPurchaseEdges]]
+      oi.select(col("cust").as("src"), col("supp").as("dst"), col("w"))
         .unionAll(oi.select(col("supp").as("src"), col("cust").as("dst"), col("w")))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        // sortWithinPartitions completes the bucket+sort idiom: the cached
-        // plan's outputOrdering satisfies SMJ consumers' sort requirement,
-        // so the per-run e-side Sort disappears too (one sort at
-        // materialization instead of one per consumer run)
-        e.repartition(col("src")).sortWithinPartitions("src")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else
-        // cache-disabled: lazy lineage truncation, same rationale as
-        // [[coPurchaseEdges]]'s no-cache branch
-        e.localCheckpoint(false)
-    }
-
-  /** ONE corpus-wide exploded token stream (doc_id, lang, source, term)
-    * — the flat-explode twin of the [[coPurchase]] memo discipline,
-    * A/B'd round 9 under the 19 flat-explode consumers and **NOT
-    * adopted**: the memo LOST in-suite (sf0.1 warm Σ 12.25 → 12.08 s
-    * ~noise with cold 28.9 → 29.6 s worse; ×10 warm Σ 18.28 → 19.15 s
-    * WORSE — BASELINE.md "shared token frame"). Why it loses where the
-    * coPurchase/srcgrams memos win: those cache the output of an
-    * EXPENSIVE derivation (a fact join; 16 md5 draws per row), while
-    * tokenize+explode is a codegen'd map over the already-cached
-    * documents scan — and the exploded frame is WIDER than its source
-    * (one row per token × 3 carried columns), so reading it back from
-    * cache costs more than recomputing it. The one win it contained
-    * (q_llm_langid consumes the frame TWICE per plan: ×10 warm
-    * 2.71 → 1.05 s) is specifically a COLUMNAR-cache-reread win — a
-    * single-query lazy localCheckpoint was measured too (2.76 s, no
-    * help: the RDD-row checkpoint reread costs what the second
-    * codegen'd explode costs), so langid stays inline rather than
-    * adopting a whole-corpus cache for one query. Kept as the runnable
-    * A/B artifact (`x_entropy_tokmemo` probes a representative consumer
-    * through it); not referenced by any declared query. */
-  def tokenStream(s: SparkSession, d: String): DataFrame =
-    graft.Memo(s, s"tokens:$d") {
-      val f = graft.Tables(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("source"),
-          explode(textTokens).as("term"))
-      if (sys.env.getOrElse("SPARK_GRAFT_CACHE", "true") != "false")
-        f.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else f
+        .repartition(col("src")).sortWithinPartitions("src")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** DuckDB twin of [[coPurchase]] — a CTE body ending at `oi(cust, supp)`.

@@ -176,40 +176,11 @@ class AnalyticsSpec extends SparkSpec {
     assert(out(3L) == (3L, 0L), s"unrelated payload grouped: $out")
   }
 
-  test("banded phash probe equals brute-force Hamming<=2 grouping (pigeonhole recall)") {
-    import spark.implicits._
-    // 4 bands of 8 bits over the 32-bit aHash: any two hashes within
-    // Hamming <=3 share an intact band (pigeonhole), so the banded
-    // candidate set must contain EVERY Hamming<=2 pair — banding recall
-    // here is provably exact, unlike MinHash's probabilistic recall.
-    // (Probe-only surface — x_mm_phash_banded; the MEASURED bucket
-    // coarseness at x100 is why multi-probe stays the declared member,
-    // see phashBandedDedup.) Assert full output equality against a
-    // brute-force all-pairs Hamming<=2 grouping on the corpus fixture.
-    val docs = Tables(spark, sf, "documents")
-    val base = docs.where(length(col("text")) > 0)
-      .select(col("doc_id"), col("text"), length(col("text")).as("n"))
-    val hashes = queries.Multimodal.phashFrame(base)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    val brute = for {
-      i <- hashes.indices; j <- (i + 1) until hashes.length
-      if java.lang.Long.bitCount(hashes(i)._2 ^ hashes(j)._2) <= 2
-    } yield (hashes(i)._1, hashes(j)._1)
-    assert(brute.nonEmpty, "fixture has no Hamming<=2 phash pairs — vacuous")
-    val bruteDf = brute.toDF("a", "b")
-    val want = queries.U.dupGroups(base, bruteDf).collect()
-      .map(_.toString).sorted
-    val got = queries.Multimodal.phashBandedDedup(docs)
-      .collect().map(_.toString).sorted
-    assert(got.toSeq == want.toSeq,
-      "banded grouping diverges from brute-force Hamming<=2")
-  }
-
   test("q_mm_dedup_phash64: 16-bit bands equal brute-force Hamming<=2; corruptions group") {
     import spark.implicits._
     // the DECLARED 64-bit geometry (4×16-bit bands — band width tracks
-    // log2 N, the multi-index-hashing law the rejected 8-bit probe
-    // violated): corpus-wide output equality against brute-force
+    // log2 N, the multi-index-hashing law 8-bit bands violate —
+    // BASELINE.md "banded aHash"): corpus-wide output equality against brute-force
     // all-pairs Hamming<=2 over the 64-block hash
     val docs = Tables(spark, sf, "documents")
     val base = docs.where(length(col("text")) > 0)

@@ -22,14 +22,23 @@ class LearnSpec extends SparkSpec {
     ()
   }
 
-  test("kmeans checkpoint strategies are result-equivalent (fused = lazy = eager = none)") {
-    // the declared fused plan must compute EXACTLY what the r4
-    // two-consumer forms computed — the fusion is a plan change only
-    val fused = Learn.kmeansWith(spark, sf, "fused").collect().toSeq
-    Seq("lazy", "eager", "none").foreach { v =>
-      assert(Learn.kmeansWith(spark, sf, v).collect().toSeq === fused,
-        s"strategy $v diverges from the declared fused plan")
-    }
+  test("q_llm_cluster_kmeans: fused report equals the unfused reference") {
+    // the declared plan folds the centroid L1 into the scoring broadcast;
+    // the reference assigns, counts and joins the L1 back as separate
+    // steps over the same converged centroids — the fusion is a plan
+    // change only
+    val (vecs, cent) = Learn.kmeansVecCent(spark, sf)
+    val ref = vecs.crossJoin(cent)
+      .select(col("vec_id"), col("cid"), expr("graft_l2sq(q, c)").as("d2"))
+      .groupBy("vec_id")
+      .agg(min(struct(col("d2"), col("cid"))).getField("cid").as("cid"))
+      .groupBy("cid")
+      .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_vec"))
+      .join(cent.select(col("cid"),
+        expr("aggregate(c, 0L, (acc, v) -> acc + abs(v))").as("centroid_l1")), "cid")
+      .orderBy("cid")
+    val fused = Learn.queries("q_llm_cluster_kmeans")(spark, sf)
+    assert(fused.collect().toSeq === ref.collect().toSeq)
   }
 
   test("trained-IVF kNN: neighbors come from probed cells, dots ranked, ≤3 per query") {

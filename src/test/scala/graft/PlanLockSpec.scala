@@ -38,4 +38,23 @@ class PlanLockSpec extends SparkSpec {
       s"${drift.size} plan shapes drifted from PLANS.lock " +
         s"(intended? regenerate + commit the diff):\n${drift.mkString("\n")}")
   }
+
+  test("plans depend only on (session, sfDir): no env reads in queries/ or Tables") {
+    // PLANS.lock and the benchmark's expected results assume one plan per
+    // query; an environment switch would fork it. java.io.tmpdir sink
+    // paths are deployment paths, not plan switches, and stay allowed.
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get("src/main/scala/graft/queries"))
+    val files: Seq[Path] =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    assert(files.nonEmpty, "no query sources found")
+    val hits = for {
+      f <- files :+ Paths.get("src/main/scala/graft/Tables.scala")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("sys.env") || line.contains("System.getenv")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, s"environment reads in plan code:\n${hits.mkString("\n")}")
+  }
 }

@@ -1117,6 +1117,28 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), s"dim not broadcast:\n$p")
   }
 
+  test("base tables and co-purchase edges are persisted; edges keep src partitioning") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.storage.StorageLevel
+    assert(Tables(spark, sf, "orders").storageLevel == StorageLevel.MEMORY_AND_DISK)
+    val e = queries.U.coPurchaseEdges(spark, sf)
+    assert(e.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    // a src-keyed aggregate (every iterative graph round's shape) reads
+    // the cached hash partitioning: no Exchange between the aggregate and
+    // the in-memory scan. collect walks children only, not the cached
+    // plan inside the scan, which holds the one materializing shuffle.
+    val p = e.groupBy("src").count().queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    assert(p.collect { case s: InMemoryTableScanExec => s }.nonEmpty,
+      s"edge list not read from the cache:\n$p")
+    assert(p.collect { case x: ShuffleExchangeLike => x }.isEmpty,
+      s"src-keyed aggregate re-shuffles the cached edge list:\n$p")
+  }
+
   test("shared derived frames are memoized per session — one instance each") {
     // the whole-graph-family incidence, the trained-quantizer probe
     // frames, and the labeled neighbor frame must be the SAME DataFrame

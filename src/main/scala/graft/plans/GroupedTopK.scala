@@ -26,9 +26,8 @@ import scala.collection.mutable
   * billions of rows per brand the difference is the whole sort.
   *
   * Wiring: logical node → `GraftStrategy` (planner strategy) → physical
-  * `GroupedTopKExec`. Registered either per-session via
-  * `GraftPlans.register` (experimental.extraStrategies, idempotent) or at
-  * build time via `GraftExtensions` (spark.sql.extensions).
+  * `GroupedTopKExec`. Registered per-session via `GraftPlans.register`
+  * (experimental.extraStrategies, idempotent).
   */
 case class GroupedTopK(group: Seq[Expression], order: Seq[SortOrder], k: Int,
     rn: Attribute, child: LogicalPlan) extends UnaryNode {
@@ -97,15 +96,6 @@ object GraftStrategy extends SparkStrategy {
     case GroupedTopK(g, o, k, rn, child) =>
       GroupedTopKExec(g, o, k, rn, planLater(child)) :: Nil
     case _ => Nil
-  }
-}
-
-/** Build-time registration: `.config("spark.sql.extensions",
-  * "graft.plans.GraftExtensions")`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => GraftStrategy)
-    ext.injectOptimizerRule(_ => RowNumberTopKRewrite)
   }
 }
 

@@ -857,27 +857,6 @@ object Insights {
         .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
     }
 
-  /** One semi-synchronous WEIGHTED Louvain move round — the [[louvain]]
-    * round body generalized to a weighted, possibly self-looped edge
-    * frame, so ONE definition serves both phase-1 continuation rounds
-    * (w = 1, no self-loops ⇒ sum(w) ≡ the 4-round loop's count) and the
-    * super-node move phases of every coarsened level. `mapping(id, com)`
-    * is the current membership; `ce(src, dst, w)` the static
-    * both-directions weighted edges (self-loops carry internal mass —
-    * they are EXCLUDED from k_iC, an edge to yourself is not an edge to
-    * another member, but INCLUDED in wdeg/tot, the standard k_i
-    * convention); round parity `k` picks the moving side (odd =
-    * supplier-labeled ids). Gains are the exact-integer ΔQ·2m² =
-    * 2m·k_iC − k_i·Σtot(C∖i) in DECIMAL(38,0); move iff the best
-    * foreign gain strictly beats staying, ties stay, foreign ties to
-    * the smallest label — bit-identical to the DuckDB twin's HUGEINT
-    * window form. */
-  private[graft] def wRoundProbe(mapping: org.apache.spark.sql.DataFrame,
-      ce: org.apache.spark.sql.DataFrame,
-      wdeg: org.apache.spark.sql.DataFrame,
-      m2f: org.apache.spark.sql.DataFrame, k: Int)
-    : org.apache.spark.sql.DataFrame = wRound(mapping, ce, wdeg, m2f, k)
-
   /** Exact-integer modularity NUMERATOR Q·(2m)² = 2m·Σ_c within_c −
     * Σ_c (Σtot_c)² of a membership over the weighted edge frame —
     * self-loops count as within mass (they carry a community's internal
@@ -903,6 +882,21 @@ object Insights {
       .collect()(0).getDecimal(0)
   }
 
+  /** One semi-synchronous WEIGHTED Louvain move round — the [[louvain]]
+    * round body generalized to a weighted, possibly self-looped edge
+    * frame, so ONE definition serves both phase-1 continuation rounds
+    * (w = 1, no self-loops ⇒ sum(w) ≡ the 4-round loop's count) and the
+    * super-node move phases of every coarsened level. `mapping(id, com)`
+    * is the current membership; `ce(src, dst, w)` the static
+    * both-directions weighted edges (self-loops carry internal mass —
+    * they are EXCLUDED from k_iC, an edge to yourself is not an edge to
+    * another member, but INCLUDED in wdeg/tot, the standard k_i
+    * convention); round parity `k` picks the moving side (odd =
+    * supplier-labeled ids). Gains are the exact-integer ΔQ·2m² =
+    * 2m·k_iC − k_i·Σtot(C∖i) in DECIMAL(38,0); move iff the best
+    * foreign gain strictly beats staying, ties stay, foreign ties to
+    * the smallest label — bit-identical to the DuckDB twin's HUGEINT
+    * window form. */
   private def wRound(mapping: org.apache.spark.sql.DataFrame,
       ce: org.apache.spark.sql.DataFrame,
       wdeg: org.apache.spark.sql.DataFrame,

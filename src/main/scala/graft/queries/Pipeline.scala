@@ -29,9 +29,6 @@ object Pipeline {
   private val chunkStride = 24
   private val packCapacity = 2048
 
-  private def tmpDir(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_rt/$name"
-
   val queries: Map[String, Q] = Map(
 
     // Gopher-style repetition filters: duplicate-token fraction and the
@@ -201,7 +198,7 @@ object Pipeline {
     // table directly; any ORC type mangling breaks the hash compare.
     "q_source_orc_roundtrip" -> ((s, d) => {
       val sup = Tables(s, d, "supplier")
-      val out = tmpDir(s"orc_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("orc", d)
       sup.write.mode("overwrite").orc(out)
       s.read.schema(sup.schema).orc(out).orderBy("s_suppkey")
     }),
@@ -221,7 +218,7 @@ object Pipeline {
     "q_source_avro_roundtrip" -> ((s, d) => {
       val cust = Tables(s, d, "customer")
       val fmt = "org.apache.spark.sql.avro.AvroFileFormat"
-      val out = tmpDir(s"avro_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("avro", d)
       cust.write.mode("overwrite").format(fmt).save(out)
       s.read.schema(cust.schema).format(fmt).load(out).orderBy("c_custkey")
     }),
@@ -234,8 +231,8 @@ object Pipeline {
     // compacted copy. The file-count collapse is asserted in the spec.
     "q_sink_compaction" -> ((s, d) => {
       val o = Tables(s, d, "orders")
-      val frag = tmpDir(s"frag_${d.replaceAll("[^0-9.]", "")}")
-      val compact = tmpDir(s"compact_${d.replaceAll("[^0-9.]", "")}")
+      val frag = tmpDir("frag", d)
+      val compact = tmpDir("compact", d)
       o.repartition(64).write.mode("overwrite").parquet(frag)
       s.read.parquet(frag).coalesce(2).write.mode("overwrite").parquet(compact)
       s.read.parquet(compact)

@@ -1,6 +1,9 @@
 package graft.queries
 
 import graft.Tables
+import graft.sources.GraftTable
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import U._
 
@@ -15,35 +18,101 @@ import U._
   */
 object Scans {
 
-  private def tmpDir(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_rt/$name"
-
-  /** Deterministic 8-band key-range layout for the sink-table queries:
-    * band = `k DIV w` (0..7), each band landing in its OWN writer task
-    * so every part file covers one contiguous key range (the layout a
-    * real table's ingest would produce, and the one zone maps prune
-    * selectively). The ×401 multiplier is a probed constant making
-    * `murmur3(band * 401) mod 8` a PERFECT hash of the 8 band ids —
-    * needed because Spark 4's Union propagates a common SinglePartition
-    * through `SQLPartitioningAwareUnionRDD`, so the classic
-    * union-of-coalesce(1) construction silently collapses to ONE task
-    * (and one part); a single hash repartition with a collision-free
-    * band key is both deterministic (murmur3 seed 42 is pinned) and one
-    * shuffle instead of eight jobs. */
-  private def bandLayout8(o: org.apache.spark.sql.DataFrame, w: Long) =
-    o.repartition(8, expr(s"(k DIV ${w}L) * 401L"))
-
   /** max(o_orderkey) of the sfDir's orders table, memoized per
     * (session, sfDir) — r14 optimization: six sink-protocol operators
     * each ran this same 1-row driver aggregate per invocation to derive
     * their band width/split points (guide §5: keep driver actions out of
     * repeated query paths). A pure function of the base table, so the
     * memo is the Tables/coPurchase discipline, not result caching. */
-  private def maxOrderKey(s: org.apache.spark.sql.SparkSession,
-      d: String): Long =
+  private def maxOrderKey(s: SparkSession, d: String): Long =
     graft.Memo(s, s"maxk:$d") {
       Tables(s, d, "orders").agg(max("o_orderkey")).first().getLong(0)
     }
+
+  // ---- the commit-table (GraftCommitSink / GraftManifestSource) queries'
+  // shared rows, layouts and rollups ----
+
+  /** Read schema of the (k, cents) tables; by position — the TSV is
+    * headerless. */
+  private val KC = "k BIGINT, cents BIGINT"
+
+  /** Exact integer cents of a price column: the tables' value column
+    * sums exactly in both engines. */
+  private def cents(price: String): Column =
+    expr(s"CAST(CAST($price AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents")
+
+  /** orders as table rows: `k`, `cents`, then `extra`. */
+  private def ordersKc(s: SparkSession, d: String, extra: Column*) =
+    Tables(s, d, "orders")
+      .select(Seq(col("o_orderkey").as("k"), cents("o_totalprice")) ++ extra: _*)
+
+  /** A wiped table dir, so generation numbering restarts at 0 on every
+    * invocation. */
+  private def freshDir(name: String, d: String): String = {
+    val out = tmpDir(name, d)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    out
+  }
+
+  /** Writes orders' (k, cents) rows to `out` in a deterministic 8-band
+    * key-range layout and returns (rows, band width w): band = `k DIV w`
+    * (0..7), each band landing in its OWN writer task so every part file
+    * covers one contiguous key range (the layout a real table's ingest
+    * would produce, and the one zone maps prune selectively). The ×401
+    * multiplier is a probed constant making `murmur3(band * 401) mod 8`
+    * a PERFECT hash of the 8 band ids — needed because Spark 4's Union
+    * propagates a common SinglePartition through
+    * `SQLPartitioningAwareUnionRDD`, so the classic union-of-coalesce(1)
+    * construction silently collapses to ONE task (and one part); a single
+    * hash repartition with a collision-free band key is both
+    * deterministic (murmur3 seed 42 is pinned) and one shuffle instead of
+    * eight jobs. */
+  private def bandedTable(s: SparkSession, d: String,
+      out: String): (DataFrame, Long) = {
+    val o = ordersKc(s, d)
+    val w = maxOrderKey(s, d) / 8 + 1
+    GraftTable.write(o.repartition(8, expr(s"(k DIV ${w}L) * 401L")), out,
+      "overwrite")
+    (o, w)
+  }
+
+  /** The banded delete queries' key set: every 5th key of band 3 and
+    * every 7th of band 6. */
+  private def bandDeletes(o: DataFrame, w: Long): DataFrame =
+    o.where(
+      (col("k") >= 3 * w && col("k") < 4 * w && col("k") % 5 === 0) ||
+        (col("k") >= 6 * w && col("k") < 7 * w && col("k") % 7 === 0))
+      .select("k")
+
+  /** The rollup every table view is graded by: row count, min key,
+    * exact cents sum. */
+  private def rollup(g: RelationalGroupedDataset, key: String = "k",
+      keyAs: String = "min_key"): DataFrame =
+    g.agg(count(lit(1)).as("cnt"), min(col(key)).as(keyAs),
+      sum(col("cents")).as("total_cents"))
+
+  /** One [[rollup]] row per named view, aggregated over the views' union. */
+  private def views(vs: (String, DataFrame)*): DataFrame =
+    rollup(vs.map { case (v, df) => df.withColumn("view", lit(v)) }
+      .reduce(_ unionByName _).groupBy("view"))
+
+  /** A protocol report as one row of the [[views]] shape. */
+  private def report(s: SparkSession, view: String, cnt: Long, minKey: Long,
+      total: Long): DataFrame =
+    s.range(1).select(lit(view).as("view"), lit(cnt).as("cnt"),
+      lit(minKey).as("min_key"), lit(total).as("total_cents"))
+
+  /** 1 when the as-of-generation-0 read of `out` fails at resolution
+    * (its manifest was expired), else 0 — eagerly, at the call. */
+  private def asof0Fails(s: SparkSession, out: String): Long =
+    try { GraftTable.read(s, out, KC, Some(0)).count(); 0L }
+    catch { case _: java.io.FileNotFoundException => 1L }
+
+  /** Generations committed under `out` (one history manifest each). */
+  private def generations(out: String): Long =
+    Option(new java.io.File(out).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .count(_.getName.matches("_GRAFT_COMMIT\\.g\\d+")).toLong
 
   val queries: Map[String, Q] = Map(
     // The two scan queries read parquet directly (not through the Tables
@@ -66,7 +135,7 @@ object Scans {
 
     "q_source_csv_roundtrip" -> ((s, d) => {
       val r = Tables(s, d, "region")
-      val out = tmpDir(s"csv_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("csv", d)
       r.write.mode("overwrite").option("header", "true").csv(out)
       s.read.schema(r.schema).option("header", "true").csv(out)
         .orderBy("r_regionkey")
@@ -74,7 +143,7 @@ object Scans {
 
     "q_source_json_roundtrip" -> ((s, d) => {
       val n = Tables(s, d, "nation")
-      val out = tmpDir(s"json_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("json", d)
       n.write.mode("overwrite").json(out)
       s.read.schema(n.schema).json(out).orderBy("n_nationkey")
     }),
@@ -87,7 +156,7 @@ object Scans {
     // image files" first stage; pathGlobFilter prunes non-data files at
     // the LISTING, before any read is scheduled.
     "q_source_binaryfile" -> ((s, d) => {
-      val out = tmpDir(s"bin_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("bin", d)
       Tables(s, d, "region")
         .select(concat(col("r_regionkey"), lit("|"), col("r_name")).as("value"),
           col("r_regionkey"))
@@ -107,7 +176,7 @@ object Scans {
     // explicit schema keeps inference (a full extra pass at 100 TB) off.
     "q_source_xml_roundtrip" -> ((s, d) => {
       val n = Tables(s, d, "nation")
-      val out = tmpDir(s"xml_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("xml", d)
       n.write.mode("overwrite").option("rowTag", "nation").format("xml").save(out)
       s.read.schema(n.schema).option("rowTag", "nation").format("xml").load(out)
         .orderBy("n_nationkey")
@@ -119,7 +188,7 @@ object Scans {
     // regexes. At 100 TB this is the classic "parse the crawl" first
     // stage: a narrow scan, no shuffle, fully codegen'd extraction.
     "q_source_text_lines" -> ((s, d) => {
-      val out = tmpDir(s"text_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("text", d)
       Tables(s, d, "documents")
         .select(concat(col("doc_id"), lit("|"), col("lang"), lit("|"), col("text")).as("value"))
         .write.mode("overwrite").text(out)
@@ -134,7 +203,7 @@ object Scans {
     "q_sink_parquet_partitioned" -> ((s, d) => {
       val o = Tables(s, d, "orders")
         .withColumn("yr", year(col("o_orderdate")))
-      val out = tmpDir(s"part_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("part", d)
       // hash-distribute by the partition column before the partitioned
       // write — see q_scan_dpp (guide §6)
       o.repartition(col("yr"))
@@ -160,7 +229,7 @@ object Scans {
     "q_scan_dpp" -> ((s, d) => {
       val li = Tables(s, d, "lineitem")
         .withColumn("syr", year(col("l_shipdate")))
-      val out = tmpDir(s"dpp_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("dpp", d)
       // hash-distribute by the partition column before the partitioned
       // write (r14, guide §6 — Iceberg write.distribution-mode=hash): one
       // writer task per year directory instead of one task writing ALL
@@ -215,19 +284,11 @@ object Scans {
     // torn/duplicated/dropped publish would mismatch the straight-from-
     // orders rollup.
     "q_sink_custom_dsv2" -> ((s, d) => {
-      val out = tmpDir(s"dsv2w_${d.replaceAll("[^0-9.]", "")}")
-      Tables(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      s.read.format("graft.sources.GraftManifestSource")
-        .schema("k BIGINT, st STRING, cents BIGINT")
-        .option("path", out).load()
-        .groupBy(col("st").as("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
+      val out = tmpDir("dsv2w", d)
+      GraftTable.write(Tables(s, d, "orders").select(col("o_orderkey"),
+        col("o_orderstatus"), cents("o_totalprice")), out, "overwrite")
+      rollup(GraftTable.read(s, out, "k BIGINT, st STRING, cents BIGINT")
+          .groupBy(col("st").as("o_orderstatus")))
         .orderBy("o_orderstatus")
     }),
 
@@ -249,28 +310,15 @@ object Scans {
     // history costs one tiny manifest per commit; parts are shared with
     // the live table (append topology), so as-of reads are zero-copy.
     "q_sink_time_travel" -> ((s, d) => {
-      val out = tmpDir(s"ttravel_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      o.where(col("o_orderkey") % 2 === 0)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      o.where(col("o_orderkey") % 2 =!= 0)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, st STRING, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      read(Some(0)).withColumn("gen", lit(0L))
-        .unionByName(read(None).withColumn("gen", lit(1L)))
-        .groupBy("gen")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
+      val out = freshDir("ttravel", d)
+      val o = Tables(s, d, "orders").select(col("o_orderkey"),
+        col("o_orderstatus"), cents("o_totalprice"))
+      GraftTable.write(o.where(col("o_orderkey") % 2 === 0), out, "overwrite")
+      GraftTable.write(o.where(col("o_orderkey") % 2 =!= 0), out, "append")
+      val ddl = "k BIGINT, st STRING, cents BIGINT"
+      rollup(GraftTable.read(s, out, ddl, Some(0)).withColumn("gen", lit(0L))
+          .unionByName(GraftTable.read(s, out, ddl).withColumn("gen", lit(1L)))
+          .groupBy("gen"))
         .orderBy("gen")
     }),
 
@@ -290,30 +338,18 @@ object Scans {
     // change with zero data rewritten: old parts stay byte-identical,
     // only manifests know the widths.
     "q_sink_schema_evolution" -> ((s, d) => {
-      val out = tmpDir(s"sevo_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"),
-          col("o_orderstatus").as("st"))
-      o.where(col("k") % 2 === 0).select("k", "cents")
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      o.where(col("k") % 2 =!= 0).select("k", "cents", "st")
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT, st STRING").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      read(None).withColumn("view", lit("current"))
-        .unionByName(read(Some(0)).withColumn("view", lit("asof_g0")))
-        .groupBy(col("view"),
-          coalesce(col("st"), lit("~pre_evolution")).as("st_group"))
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
+      val out = freshDir("sevo", d)
+      val o = ordersKc(s, d, col("o_orderstatus").as("st"))
+      GraftTable.write(o.where(col("k") % 2 === 0).select("k", "cents"), out,
+        "overwrite")
+      GraftTable.write(o.where(col("k") % 2 =!= 0).select("k", "cents", "st"),
+        out, "append")
+      val ddl = "k BIGINT, cents BIGINT, st STRING"
+      rollup(GraftTable.read(s, out, ddl).withColumn("view", lit("current"))
+          .unionByName(GraftTable.read(s, out, ddl, Some(0))
+            .withColumn("view", lit("asof_g0")))
+          .groupBy(col("view"),
+            coalesce(col("st"), lit("~pre_evolution")).as("st_group")))
         .orderBy("view", "st_group")
     }),
 
@@ -337,49 +373,28 @@ object Scans {
     // partitions without breaking snapshot readers, let retention
     // reclaim the space on its own schedule.
     "q_sink_compact_generations" -> ((s, d) => {
-      val out = tmpDir(s"cgen_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      o.where(col("k") % 2 === 0).repartition(8)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      o.where(col("k") % 2 =!= 0).repartition(4)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
+      val out = freshDir("cgen", d)
+      val o = ordersKc(s, d)
+      GraftTable.write(o.where(col("k") % 2 === 0).repartition(8), out,
+        "overwrite")
+      GraftTable.write(o.where(col("k") % 2 =!= 0).repartition(4), out,
+        "append")
       val (before, after) = graft.sources.GraftCommitCompact.compact(
-        s, out, "k BIGINT, cents BIGINT", 2)
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
+        s, out, KC, 2)
       // pre-compaction history, read THROUGH the compaction — EAGERLY
       // materialized (1-row checkpoint): the vacuum below expires g0's
       // manifest by design, so this view must execute before it, not
       // lazily after (the whole point of the row is proving the old
       // layout was readable between the compaction and the sweep)
-      val asofG0 = read(Some(0)).withColumn("view", lit("asof_g0_precompact"))
-        .groupBy("view")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
-        .localCheckpoint(true)
-      val planned = read(None).rdd.getNumPartitions.toLong
+      val asofG0 = views("asof_g0_precompact" ->
+        GraftTable.read(s, out, KC, Some(0))).localCheckpoint(true)
+      val planned = GraftTable.read(s, out, KC).rdd.getNumPartitions.toLong
       val (nMan, nParts) =
         graft.sources.GraftCommitVacuum.vacuum(s, out, keep = 1)
       asofG0
-        .unionByName(read(None).withColumn("view", lit("current"))
-          .groupBy("view")
-          .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-            sum(col("cents")).as("total_cents")))
-        .unionByName(s.range(1).select(lit("compact_report").as("view"),
-          lit(before.toLong).as("cnt"), lit(after.toLong).as("min_key"),
-          lit(planned).as("total_cents")))
-        .unionByName(s.range(1).select(lit("vacuum_report").as("view"),
-          lit(nMan.toLong).as("cnt"), lit(nParts.toLong).as("min_key"),
-          lit(0L).as("total_cents")))
+        .unionByName(views("current" -> GraftTable.read(s, out, KC)))
+        .unionByName(report(s, "compact_report", before, after, planned))
+        .unionByName(report(s, "vacuum_report", nMan, nParts, 0L))
         .orderBy("view")
     }),
 
@@ -403,36 +418,14 @@ object Scans {
     // rewritten, 6 carried, removed = the delete set's exact count)
     // against straight-from-orders SQL.
     "q_sink_delete_rows" -> ((s, d) => {
-      val out = tmpDir(s"delr_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      val w = maxOrderKey(s, d) / 8 + 1
-      bandLayout8(o, w)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      val delKeys = o.where(
-        (col("k") >= 3 * w && col("k") < 4 * w && col("k") % 5 === 0) ||
-          (col("k") >= 6 * w && col("k") < 7 * w && col("k") % 7 === 0))
-        .select("k")
+      val out = freshDir("delr", d)
+      val (o, w) = bandedTable(s, d, out)
       val rep = graft.sources.GraftCommitMerge.delete(
-        s, out, "k BIGINT, cents BIGINT", "k", delKeys)
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      read(None).withColumn("view", lit("current"))
-        .unionByName(read(Some(0)).withColumn("view", lit("asof_predelete")))
-        .groupBy("view")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
-        .unionByName(s.range(1).select(lit("delete_report").as("view"),
-          lit(rep.rewritten.toLong).as("cnt"),
-          lit(rep.carried.toLong).as("min_key"),
-          lit(rep.removed).as("total_cents")))
+        s, out, KC, "k", bandDeletes(o, w))
+      views("current" -> GraftTable.read(s, out, KC),
+          "asof_predelete" -> GraftTable.read(s, out, KC, Some(0)))
+        .unionByName(report(s, "delete_report", rep.rewritten, rep.carried,
+          rep.removed))
         .orderBy("view")
     }),
 
@@ -452,45 +445,24 @@ object Scans {
     // protocol report: 1 tombstone file, the exact key count, zero
     // delete entries left after materialization.
     "q_sink_delete_mor" -> ((s, d) => {
-      val out = tmpDir(s"dmor_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      val w = maxOrderKey(s, d) / 8 + 1
-      bandLayout8(o, w)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      val delKeys = o.where(
-        (col("k") >= 3 * w && col("k") < 4 * w && col("k") % 5 === 0) ||
-          (col("k") >= 6 * w && col("k") < 7 * w && col("k") % 7 === 0))
-        .select("k")
+      val out = freshDir("dmor", d)
+      val (o, w) = bandedTable(s, d, out)
       val (delFiles, nKeys) = graft.sources.GraftCommitMerge.deleteMor(
-        s, out, "k BIGINT, cents BIGINT", "k", delKeys)
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      def roll(df: org.apache.spark.sql.DataFrame, v: String) =
-        df.withColumn("view", lit(v)).groupBy("view")
-          .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-            sum(col("cents")).as("total_cents"))
+        s, out, KC, "k", bandDeletes(o, w))
       // the MOR view must be read BEFORE materialization retires the
       // tombstoned layout (eager, like the other history-graded rows)
-      val morView = roll(read(None), "current_mor").localCheckpoint(true)
+      val morView =
+        views("current_mor" -> GraftTable.read(s, out, KC)).localCheckpoint(true)
       val cnt = o.count()
-      graft.sources.GraftCommitCompact.binpack(
-        s, out, "k BIGINT, cents BIGINT", cnt + 1)
+      graft.sources.GraftCommitCompact.binpack(s, out, KC, cnt + 1)
       val tombsAfter = graft.sources.GraftManifestMeta.files(s, out)
         .where(col("kind") === "delete").select("file").distinct().count()
       morView
-        .unionByName(roll(read(Some(0)), "asof_predelete"))
-        .unionByName(roll(read(None), "current_materialized"))
-        .unionByName(s.range(1).select(lit("mor_report").as("view"),
-          lit(delFiles.toLong).as("cnt"), lit(nKeys).as("min_key"),
-          lit(tombsAfter).as("total_cents")))
+        .unionByName(views("asof_predelete" ->
+          GraftTable.read(s, out, KC, Some(0))))
+        .unionByName(views("current_materialized" ->
+          GraftTable.read(s, out, KC)))
+        .unionByName(report(s, "mor_report", delFiles, nKeys, tombsAfter))
         .orderBy("view")
     }),
 
@@ -506,16 +478,8 @@ object Scans {
     // carried, removed = the matched-key count, added = the change-set
     // count.
     "q_sink_merge_upsert" -> ((s, d) => {
-      val out = tmpDir(s"mrg_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      val w = maxOrderKey(s, d) / 8 + 1
-      bandLayout8(o, w)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
+      val out = freshDir("mrg", d)
+      val (o, w) = bandedTable(s, d, out)
       val upd = o.where(col("k") >= 2 * w && col("k") < 3 * w
           && col("k") % 3 === 0)
         .select(col("k"), (col("cents") + 555L).as("cents"))
@@ -523,24 +487,12 @@ object Scans {
           && col("k") % 11 === 0)
         .select((col("k") + 8 * w).as("k"), lit(77L).as("cents"))
       val rep = graft.sources.GraftCommitMerge.merge(
-        s, out, "k BIGINT, cents BIGINT", "k", upd.unionByName(ins))
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      read(None).withColumn("view", lit("current"))
-        .unionByName(read(Some(0)).withColumn("view", lit("asof_premerge")))
-        .groupBy("view")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
-        .unionByName(s.range(1).select(lit("merge_report").as("view"),
-          lit(rep.rewritten.toLong).as("cnt"),
-          lit(rep.carried.toLong).as("min_key"),
-          lit(rep.removed).as("total_cents")))
-        .unionByName(s.range(1).select(lit("merge_report_added").as("view"),
-          lit(rep.added).as("cnt"), lit(0L).as("min_key"),
-          lit(0L).as("total_cents")))
+        s, out, KC, "k", upd.unionByName(ins))
+      views("current" -> GraftTable.read(s, out, KC),
+          "asof_premerge" -> GraftTable.read(s, out, KC, Some(0)))
+        .unionByName(report(s, "merge_report", rep.rewritten, rep.carried,
+          rep.removed))
+        .unionByName(report(s, "merge_report_added", rep.added, 0L, 0L))
         .orderBy("view")
     }),
 
@@ -557,16 +509,8 @@ object Scans {
     // as-of view, and both protocol report rows grade against
     // CASE-restated orders.
     "q_sink_cdc_apply" -> ((s, d) => {
-      val out = tmpDir(s"cdca_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      val w = maxOrderKey(s, d) / 8 + 1
-      bandLayout8(o, w)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
+      val out = freshDir("cdca", d)
+      val (o, w) = bandedTable(s, d, out)
       val removed = o.where(col("k") >= 1 * w && col("k") < 2 * w
         && col("k") % 5 === 0).select("k")
       val changed = o.where(col("k") >= 6 * w && col("k") < 7 * w
@@ -576,28 +520,13 @@ object Scans {
           && col("k") % 11 === 0)
         .select((col("k") + 8 * w).as("k"), lit(88L).as("cents"))
       val rep = graft.sources.GraftCommitMerge.applyCdc(
-        s, out, "k BIGINT, cents BIGINT", "k",
-        changed.unionByName(added), removed)
-      val gens = Option(new java.io.File(out).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .count(_.getName.matches("_GRAFT_COMMIT\\.g\\d+"))
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      read(None).withColumn("view", lit("current"))
-        .unionByName(read(Some(0)).withColumn("view", lit("asof_precdc")))
-        .groupBy("view")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
-        .unionByName(s.range(1).select(lit("cdc_report").as("view"),
-          lit(rep.rewritten.toLong).as("cnt"),
-          lit(rep.carried.toLong).as("min_key"),
-          lit(rep.removed).as("total_cents")))
-        .unionByName(s.range(1).select(lit("cdc_report_added").as("view"),
-          lit(rep.added).as("cnt"), lit(gens.toLong).as("min_key"),
-          lit(0L).as("total_cents")))
+        s, out, KC, "k", changed.unionByName(added), removed)
+      val gens = generations(out)
+      views("current" -> GraftTable.read(s, out, KC),
+          "asof_precdc" -> GraftTable.read(s, out, KC, Some(0)))
+        .unionByName(report(s, "cdc_report", rep.rewritten, rep.carried,
+          rep.removed))
+        .unionByName(report(s, "cdc_report_added", rep.added, gens, 0L))
         .orderBy("view")
     }),
 
@@ -613,16 +542,8 @@ object Scans {
     // writer's stats pipeline end to end (a wrong bound, a wrong null
     // tally, or a dropped entry mismatches).
     "q_sink_metadata_table" -> ((s, d) => {
-      val out = tmpDir(s"mtab_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      val w = maxOrderKey(s, d) / 8 + 1
-      bandLayout8(o, w)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
+      val out = freshDir("mtab", d)
+      bandedTable(s, d, out)
       graft.sources.GraftManifestMeta.files(s, out)
         .where(col("col_idx") === 0)
         .select(col("num_lo").cast("bigint").as("k_lo"),
@@ -651,37 +572,20 @@ object Scans {
     // scalar derives the target (the documented layout-scalar
     // exception).
     "q_sink_binpack" -> ((s, d) => {
-      val out = tmpDir(s"bpk_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      o.where(col("k") % 6 <= 3).repartition(2)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      o.where(col("k") % 6 === 4).repartition(6)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
-      o.where(col("k") % 6 === 5).repartition(4)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
+      val out = freshDir("bpk", d)
+      val o = ordersKc(s, d)
+      GraftTable.write(o.where(col("k") % 6 <= 3).repartition(2), out,
+        "overwrite")
+      GraftTable.write(o.where(col("k") % 6 === 4).repartition(6), out,
+        "append")
+      GraftTable.write(o.where(col("k") % 6 === 5).repartition(4), out,
+        "append")
       val target = o.count() / 6 + 1
       val (frags, bins, carried) = graft.sources.GraftCommitCompact.binpack(
-        s, out, "k BIGINT, cents BIGINT", target)
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      read(None).withColumn("view", lit("current"))
-        .unionByName(read(Some(2)).withColumn("view", lit("asof_prebinpack")))
-        .groupBy("view")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
-        .unionByName(s.range(1).select(lit("binpack_report").as("view"),
-          lit(frags.toLong).as("cnt"), lit(bins.toLong).as("min_key"),
-          lit(carried.toLong).as("total_cents")))
+        s, out, KC, target)
+      views("current" -> GraftTable.read(s, out, KC),
+          "asof_prebinpack" -> GraftTable.read(s, out, KC, Some(2)))
+        .unionByName(report(s, "binpack_report", frags, bins, carried))
         .orderBy("view")
     }),
 
@@ -704,22 +608,12 @@ object Scans {
     // hash-mismatches. Skipping is advisory-only for correctness: kept
     // files still evaluate every filter row-wise.
     "q_sink_zonemap_skip" -> ((s, d) => {
-      val out = tmpDir(s"zmap_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      val w = maxOrderKey(s, d) / 8 + 1
-      bandLayout8(o, w)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      val band = s.read.format("graft.sources.GraftManifestSource")
-        .schema("k BIGINT, cents BIGINT").option("path", out).load()
+      val out = freshDir("zmap", d)
+      val (_, w) = bandedTable(s, d, out)
+      val band = GraftTable.read(s, out, KC)
         .where(col("k") >= lit(3 * w) && col("k") < lit(3 * w + w / 2))
       val planned = band.rdd.getNumPartitions.toLong
-      band.agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
+      rollup(band.groupBy())
         .withColumn("files_planned", lit(planned))
         .withColumn("files_total", lit(8L))
     }),
@@ -741,36 +635,27 @@ object Scans {
     // epochs ⇒ 3 generations, pinned in the report), and grades the
     // manifest-read rollup against straight-from-events SQL.
     "q_sink_stream_write" -> ((s, d) => {
-      val in = tmpDir(s"swin_${d.replaceAll("[^0-9.]", "")}")
-      val out = tmpDir(s"swout_${d.replaceAll("[^0-9.]", "")}")
-      val ckpt = tmpDir(s"swck_${d.replaceAll("[^0-9.]", "")}")
-      Seq(out, ckpt).foreach(p =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+      val in = tmpDir("swin", d)
+      val out = freshDir("swout", d)
+      val ckpt = freshDir("swck", d)
       Tables(s, d, "events")
-        .select(col("event_id"), col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
+        .select(col("event_id"), col("event_type"), cents("value"))
         .repartition(3)
         .write.mode("overwrite").parquet(in)
       val q = s.readStream
         .schema("event_id BIGINT, event_type STRING, cents BIGINT")
         .option("maxFilesPerTrigger", "1").parquet(in)
-        .writeStream.format("graft.sources.GraftCommitSink")
+        .writeStream.format(GraftTable.sinkFormat)
         .option("path", out).option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val gens = Option(new java.io.File(out).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .count(_.getName.matches("_GRAFT_COMMIT\\.g\\d+"))
-      s.read.format("graft.sources.GraftManifestSource")
-        .schema("event_id BIGINT, event_type STRING, cents BIGINT")
-        .option("path", out).load()
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("cnt"), min(col("event_id")).as("min_id"),
-          sum(col("cents")).as("total_cents"))
-        .withColumn("generations", lit(gens.toLong))
+      val gens = generations(out)
+      rollup(GraftTable.read(s, out,
+          "event_id BIGINT, event_type STRING, cents BIGINT")
+          .groupBy("event_type"), key = "event_id", keyAs = "min_id")
+        .withColumn("generations", lit(gens))
         .orderBy("event_type")
     }),
 
@@ -793,25 +678,19 @@ object Scans {
     // — files_total=6, status prune=2, composed=1, isnull=0 — so a
     // reader that stops pruning on any layer hash-mismatches.
     "q_sink_partitioned_skip" -> ((s, d) => {
-      val out = tmpDir(s"pskip_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"), col("o_orderstatus").as("st"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
+      val out = freshDir("pskip", d)
+      val o = Tables(s, d, "orders").select(col("o_orderkey").as("k"),
+        col("o_orderstatus").as("st"), cents("o_totalprice"))
       val half = maxOrderKey(s, d) / 2 + 1
-      o.repartition(6, concat(col("st"),
-          when(col("k") < half, lit("a")).otherwise(lit("b")), lit("49")))
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      def read() = s.read.format("graft.sources.GraftManifestSource")
-        .schema("k BIGINT, st STRING, cents BIGINT").option("path", out).load()
+      GraftTable.write(o.repartition(6, concat(col("st"),
+        when(col("k") < half, lit("a")).otherwise(lit("b")), lit("49"))),
+        out, "overwrite")
+      def read() = GraftTable.read(s, out, "k BIGINT, st STRING, cents BIGINT")
       val pStatus = read().where(col("st") === "F").rdd.getNumPartitions.toLong
       val band = read().where(col("st") === "F" && col("k") < half)
       val pComposed = band.rdd.getNumPartitions.toLong
       val pIsNull = read().where(col("st").isNull).rdd.getNumPartitions.toLong
-      band.agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
+      rollup(band.groupBy())
         .withColumn("files_total", lit(6L))
         .withColumn("planned_status", lit(pStatus))
         .withColumn("planned_composed", lit(pComposed))
@@ -834,21 +713,11 @@ object Scans {
     // Runs under the commit lease; SinksSpec fuzzes kill-points inside
     // the sweep and proves retained generations stay readable.
     "q_sink_vacuum" -> ((s, d) => {
-      val out = tmpDir(s"vac_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      o.where(col("k") % 3 === 0)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      o.where(col("k") % 3 === 1)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
-      o.where(col("k") % 3 === 2)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
+      val out = freshDir("vac", d)
+      val o = ordersKc(s, d)
+      GraftTable.write(o.where(col("k") % 3 === 0), out, "overwrite")
+      GraftTable.write(o.where(col("k") % 3 === 1), out, "append")
+      GraftTable.write(o.where(col("k") % 3 === 2), out, "append")
       // plant the crashed-commit debris vacuum exists to sweep
       java.nio.file.Files.write(
         java.nio.file.Paths.get(out, "part-99999-g0009.tsv"),
@@ -858,22 +727,10 @@ object Scans {
         "#gen\t9\npart-99999-g0009.tsv\t1\t2\n".getBytes("UTF-8"))
       val (nManifests, nParts) =
         graft.sources.GraftCommitVacuum.vacuum(s, out, keep = 2)
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
-      val asof0Fails =
-        try { read(Some(0)).count(); 0L }
-        catch { case _: java.io.FileNotFoundException => 1L }
-      read(None).withColumn("view", lit("current"))
-        .unionByName(read(Some(1)).withColumn("view", lit("asof_g1")))
-        .groupBy("view")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
-        .unionByName(s.range(1).select(lit("vacuum_report").as("view"),
-          lit(nManifests.toLong).as("cnt"), lit(nParts.toLong).as("min_key"),
-          lit(asof0Fails).as("total_cents")))
+      views("current" -> GraftTable.read(s, out, KC),
+          "asof_g1" -> GraftTable.read(s, out, KC, Some(1)))
+        .unionByName(report(s, "vacuum_report", nManifests, nParts,
+          asof0Fails(s, out)))
         .orderBy("view")
     }),
 
@@ -893,21 +750,14 @@ object Scans {
     // sweep's identical counts with as-of-g0 now failing AT RESOLUTION
     // and the current view untouched.
     "q_sink_retention_age" -> ((s, d) => {
-      val out = tmpDir(s"rage_${d.replaceAll("[^0-9.]", "")}")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      val o = Tables(s, d, "orders")
-        .select(col("o_orderkey").as("k"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      o.where(col("k") % 2 === 0).repartition(8)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("overwrite").save()
-      o.where(col("k") % 2 =!= 0).repartition(4)
-        .write.format("graft.sources.GraftCommitSink")
-        .option("path", out).mode("append").save()
+      val out = freshDir("rage", d)
+      val o = ordersKc(s, d)
+      GraftTable.write(o.where(col("k") % 2 === 0).repartition(8), out,
+        "overwrite")
+      GraftTable.write(o.where(col("k") % 2 =!= 0).repartition(4), out,
+        "append")
       val cnt = o.count()
-      graft.sources.GraftCommitCompact.binpack(
-        s, out, "k BIGINT, cents BIGINT", cnt + 1)
+      graft.sources.GraftCommitCompact.binpack(s, out, KC, cnt + 1)
       // age the pre-binpack histories past the horizon (the manifest
       // mtime IS the commit time — planted here to make age testable)
       val tenDaysAgo = System.currentTimeMillis() - 10L * 86400 * 1000
@@ -918,35 +768,18 @@ object Scans {
       val sevenDays = 7L * 86400 * 1000
       val (dryMan, dryParts) = graft.sources.GraftCommitVacuum.vacuumAged(
         s, out, sevenDays, dryRun = true)
-      def read(gen: Option[Int]) = {
-        val r = s.read.format("graft.sources.GraftManifestSource")
-          .schema("k BIGINT, cents BIGINT").option("path", out)
-        gen.fold(r)(g => r.option("generation", g.toString)).load()
-      }
       // the dry run deleted NOTHING: the aged-out generation is still
       // fully readable — materialized EAGERLY (the real sweep below
       // removes it by design)
-      val asofG0 = read(Some(0)).withColumn("view", lit("asof_g0_postdry"))
-        .groupBy("view")
-        .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-          sum(col("cents")).as("total_cents"))
-        .localCheckpoint(true)
+      val asofG0 = views("asof_g0_postdry" ->
+        GraftTable.read(s, out, KC, Some(0))).localCheckpoint(true)
       val (nMan, nParts) = graft.sources.GraftCommitVacuum.vacuumAged(
         s, out, sevenDays, dryRun = false)
-      val asof0Fails =
-        try { read(Some(0)).count(); 0L }
-        catch { case _: java.io.FileNotFoundException => 1L }
       asofG0
-        .unionByName(read(None).withColumn("view", lit("current"))
-          .groupBy("view")
-          .agg(count(lit(1)).as("cnt"), min(col("k")).as("min_key"),
-            sum(col("cents")).as("total_cents")))
-        .unionByName(s.range(1).select(lit("dry_report").as("view"),
-          lit(dryMan.toLong).as("cnt"), lit(dryParts.toLong).as("min_key"),
-          lit(0L).as("total_cents")))
-        .unionByName(s.range(1).select(lit("vacuum_report").as("view"),
-          lit(nMan.toLong).as("cnt"), lit(nParts.toLong).as("min_key"),
-          lit(asof0Fails).as("total_cents")))
+        .unionByName(views("current" -> GraftTable.read(s, out, KC)))
+        .unionByName(report(s, "dry_report", dryMan, dryParts, 0L))
+        .unionByName(report(s, "vacuum_report", nMan, nParts,
+          asof0Fails(s, out)))
         .orderBy("view")
     }),
 
@@ -955,7 +788,7 @@ object Scans {
     // column. At 100 TB this is how a long-lived table absorbs schema
     // change without rewriting history.
     "q_source_schema_evolution" -> ((s, d) => {
-      val out = tmpDir(s"evo_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("evo", d)
       val o = Tables(s, d, "orders")
       o.select("o_orderkey", "o_totalprice")
         .write.mode("overwrite").parquet(s"$out/v1")
@@ -980,7 +813,7 @@ object Scans {
     // schema. Digests are only ever compared WITHIN one engine, so
     // double-formatting conventions can't skew the oracle.
     "q_cdc_snapshot_diff" -> ((s, d) => {
-      val out = tmpDir(s"cdc_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("cdc", d)
       val o = Tables(s, d, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
       o.write.mode("overwrite").parquet(s"$out/gen0")
@@ -1016,7 +849,7 @@ object Scans {
     // anti join shuffles on the key — the same plan a row-level MERGE
     // executes underneath; the result is round-tripped through parquet.
     "q_sink_upsert" -> ((s, d) => {
-      val out = tmpDir(s"upsert_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("upsert", d)
       val cols = Seq("o_orderkey", "o_totalprice", "o_orderpriority").map(col)
       val o = Tables(s, d, "orders").select(cols: _*)
       val changes = o.where(col("o_orderkey") % 10 === 0)
@@ -1040,7 +873,7 @@ object Scans {
     // with one partition of I/O. The spec asserts untouched partition
     // files are byte-identical (not rewritten).
     "q_sink_dynamic_overwrite" -> ((s, d) => {
-      val out = tmpDir(s"dynow_${d.replaceAll("[^0-9.]", "")}")
+      val out = tmpDir("dynow", d)
       val o = Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
         .withColumn("yr", year(col("o_orderdate")).cast("int"))
@@ -1115,7 +948,7 @@ object Scans {
     "q_source_binaryfile" ->
       s"""SELECT CAST(size AS BIGINT) AS length,
            md5(decode(content)) AS digest
-         FROM read_blob('${tmpDir("bin_0.01")}/part-*')
+         FROM read_blob('${tmpDir("bin", "0.01")}/part-*')
          ORDER BY digest""",
 
     "q_source_custom_dsv2" ->

@@ -42,6 +42,13 @@ object U {
 
   def ts(s: String): Column = lit(s).cast("timestamp")
 
+  /** Scratch directory `graft_rt/<name>_<scale tag>` under java.io.tmpdir
+    * for the write-then-read queries; the tag (`0.01` for `.../sf0.01`)
+    * keeps scale factors apart. */
+  def tmpDir(name: String, sfDir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_rt/${name}_" +
+      sfDir.replaceAll("[^0-9.]", "")
+
   /** DuckDB fragment: order-independent decimal sum of a double expr. */
   def oDsum(expr: String): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,6))) AS DOUBLE)"

@@ -113,12 +113,10 @@ object GraftCommitMerge {
     fs.delete(stage, true)
     // distinct: tombstones are a SET — re-deleting a key must not grow
     // the read-side amplification
-    deleteKeys.toDF("__gm_key")
+    GraftTable.write(deleteKeys.toDF("__gm_key")
       .select(col("__gm_key").cast(schema.fields(keyIdx).dataType))
       .where(col("__gm_key").isNotNull)
-      .distinct().repartition(1)
-      .write.format("graft.sources.GraftCommitSink")
-      .option("path", stage.toString).mode("overwrite").save()
+      .distinct().repartition(1), stage.toString, "overwrite")
     val (_, _, stageEntries) = GraftCommitMeta.readManifestFile(
       fs, new Path(stage, "_GRAFT_COMMIT"))
     val published = GraftCommitCompact.publishStaged(fs, dir, gen0, stage,
@@ -243,10 +241,7 @@ object GraftCommitMerge {
     val kept =
       if (affected.isEmpty) None
       else Some {
-        spark.read.format("graft.sources.GraftManifestSource")
-          .schema(schemaDdl).option("path", path)
-          .option("files", affected.map(_.file).mkString(","))
-          .load()
+        GraftTable.read(spark, path, schemaDdl, files = affected.map(_.file))
           .join(keyed, col(keyCol) === col("__gm_key"), "left_anti")
       }
     val insertCnt = insert.map(_.count()).getOrElse(0L)
@@ -260,9 +255,8 @@ object GraftCommitMerge {
     }
     // the anti-join's shuffle would otherwise fragment the output into
     // shuffle.partitions files; size the staged layout to the rewrite
-    staged.repartition(targetParts)
-      .write.format("graft.sources.GraftCommitSink")
-      .option("path", stage.toString).mode("overwrite").save()
+    GraftTable.write(staged.repartition(targetParts), stage.toString,
+      "overwrite")
     val (_, stageCols, stageEntries) =
       readManifestFile(fs, new Path(stage, "_GRAFT_COMMIT"))
 

@@ -99,7 +99,8 @@ object GraftTsv {
 
 /** Custom DataSource V2 batch SINK with a two-phase commit protocol —
   * the write-side twin of [[GraftGenSource]]
-  * (`df.write.format("graft.sources.GraftCommitSink").option("path", dir)`).
+  * (`df.write.format("graft.sources.GraftCommitSink").option("path", dir)`;
+  * graft's own code writes through [[GraftTable.write]]).
   *
   * Demonstrates the full connector write surface a real sink (a feature
   * store, a proprietary export format, an object-store table) must get
@@ -702,11 +703,8 @@ object GraftCommitCompact {
     //    touches only _compact/
     val stage = new Path(dir, "_compact")
     fs.delete(stage, true)
-    spark.read.format("graft.sources.GraftManifestSource")
-      .schema(schemaDdl).option("path", path).load()
-      .repartition(targetParts)
-      .write.format("graft.sources.GraftCommitSink")
-      .option("path", stage.toString).mode("overwrite").save()
+    GraftTable.write(GraftTable.read(spark, path, schemaDdl)
+      .repartition(targetParts), stage.toString, "overwrite")
     val (_, stageCols, stageEntries) =
       readManifestFile(fs, new Path(stage, "_GRAFT_COMMIT"))
     // 2. PUBLISH under the table lease
@@ -772,13 +770,8 @@ object GraftCommitCompact {
     val bins = math.max(1L, (fragRows + targetRows - 1L) / targetRows).toInt
     val stage = new Path(dir, "_compact")
     fs.delete(stage, true)
-    spark.read.format("graft.sources.GraftManifestSource")
-      .schema(schemaDdl).option("path", path)
-      .option("files", frags.map(_.file).mkString(","))
-      .load()
-      .repartition(bins)
-      .write.format("graft.sources.GraftCommitSink")
-      .option("path", stage.toString).mode("overwrite").save()
+    GraftTable.write(GraftTable.read(spark, path, schemaDdl,
+      files = frags.map(_.file)).repartition(bins), stage.toString, "overwrite")
     val (_, stageCols, stageEntries) =
       readManifestFile(fs, new Path(stage, "_GRAFT_COMMIT"))
     val published = publishStaged(fs, dir, gen0, stage, stageEntries,

@@ -20,7 +20,8 @@ import scala.jdk.CollectionConverters._
   * source that reads a sink directory THROUGH its `_GRAFT_COMMIT`
   * manifest
   * (`spark.read.format("graft.sources.GraftManifestSource")
-  *   .schema(s).option("path", dir)`).
+  *   .schema(s).option("path", dir)`; graft's own code reads through
+  * [[GraftTable.read]]).
   *
   * This is the contract the sink's manifest-last publish exists for: a
   * glob over `part-*` could observe a torn generation (a crashed
@@ -299,6 +300,34 @@ object GraftManifestMeta {
     import spark.implicits._
     rows.toDF("file", "part_rows", "ncols", "col_idx", "num_lo", "num_hi",
       "str_lo", "str_hi", "nulls", "kind")
+  }
+}
+
+/** The commit table's address — the two connectors' format names and
+  * their `path` / `generation` / `files` options — in one place: every
+  * batch write and manifest read in graft's own code goes through here.
+  * Users (and the connector specs) call
+  * `format("graft.sources.GraftCommitSink")` /
+  * `format("graft.sources.GraftManifestSource")` directly. */
+object GraftTable {
+  /** The sink's format name, for `writeStream` (a streaming write has no
+    * batch `write` twin here). */
+  val sinkFormat: String = classOf[GraftCommitSink].getName
+
+  def write(df: org.apache.spark.sql.DataFrame, path: String,
+      mode: String): Unit =
+    df.write.format(sinkFormat).option("path", path).mode(mode).save()
+
+  /** Reads the table at `path` under `schemaDdl` (by position: the TSV
+    * is headerless) — the current manifest, or as of `generation`;
+    * `files` restricts the scan to those committed entries (empty = all). */
+  def read(spark: org.apache.spark.sql.SparkSession, path: String,
+      schemaDdl: String, generation: Option[Long] = None,
+      files: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
+    val r = spark.read.format(classOf[GraftManifestSource].getName)
+      .schema(schemaDdl).option("path", path)
+    val g = generation.fold(r)(v => r.option("generation", v.toString))
+    (if (files.isEmpty) g else g.option("files", files.mkString(","))).load()
   }
 }
 

@@ -39,16 +39,20 @@ class PlanLockSpec extends SparkSpec {
         s"(intended? regenerate + commit the diff):\n${drift.mkString("\n")}")
   }
 
+  private def scalaFiles(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("plans depend only on (session, sfDir): no env reads in queries/ or Tables") {
     // PLANS.lock and the benchmark's expected results assume one plan per
     // query; an environment switch would fork it. java.io.tmpdir sink
     // paths are deployment paths, not plan switches, and stay allowed.
-    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val walk = Files.walk(Paths.get("src/main/scala/graft/queries"))
-    val files: Seq[Path] =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
+    val files = scalaFiles("src/main/scala/graft/queries")
     assert(files.nonEmpty, "no query sources found")
     val hits = for {
       f <- files :+ Paths.get("src/main/scala/graft/Tables.scala")
@@ -56,5 +60,25 @@ class PlanLockSpec extends SparkSpec {
       if line.contains("sys.env") || line.contains("System.getenv")
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, s"environment reads in plan code:\n${hits.mkString("\n")}")
+  }
+
+  test("only graft.sources names the commit table's formats (GraftTable owns the address)") {
+    // outside the connectors, every commit-table write and read goes
+    // through GraftTable.write/read (or GraftTable.sinkFormat), so the
+    // format names and their options are spelled out in one place
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Paths.get("src/main/scala/graft/sources")
+    val files = scalaFiles("src/main/scala/graft").filterNot(_.startsWith(sources))
+    assert(files.nonEmpty, "no main sources found")
+    val formats = Seq("\"graft.sources.GraftCommitSink\"",
+      "\"graft.sources.GraftManifestSource\"")
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if formats.exists(line.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"commit-table format names outside graft.sources:\n${hits.mkString("\n")}")
   }
 }

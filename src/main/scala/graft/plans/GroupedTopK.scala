@@ -65,11 +65,16 @@ case class GroupedTopKExec(group: Seq[Expression], order: Seq[SortOrder], k: Int
         GenerateOrdering.generate(orderExprs, childOutput)
       // max-heap under ord: head is the WORST kept row, evicted when a
       // better one arrives — rows are copied before buffering (Spark
-      // reuses the row object across iterator steps)
+      // reuses the row object across iterator steps); the projected key
+      // is looked up as is and copied only when its group's heap is made
       val heaps = mutable.HashMap.empty[UnsafeRow, mutable.PriorityQueue[InternalRow]]
       iter.foreach { row =>
-        val heap = heaps.getOrElseUpdate(keyProj(row).copy(),
-          mutable.PriorityQueue.empty[InternalRow](ord))
+        val key = keyProj(row)
+        val heap = heaps.getOrElse(key, {
+          val h = mutable.PriorityQueue.empty[InternalRow](ord)
+          heaps.update(key.copy(), h)
+          h
+        })
         if (heap.size < limit) heap.enqueue(row.copy())
         else if (ord.compare(row, heap.head) < 0) {
           heap.dequeue(); heap.enqueue(row.copy())

@@ -362,11 +362,21 @@ object Assay {
     // source containing the term, b/c/d the complements. This is what
     // picks discriminative vocabulary for a quality/domain classifier
     // (and, run against a held-out split, flags distribution leaks).
-    // Scale shape: ONE corpus presence pass (explode + distinct), a
-    // (term, source)-keyed aggregate, the per-term df via a window over
-    // the ≤|vocab|×20 aggregate (NOT the corpus incidence), source
-    // sizes and N broadcast (20 rows / 1 row), and the top-10 through
-    // the house GroupedTopK heap — never a vocabulary-wide sort.
+    // Scale shape: ONE pass over documents. Each row explodes its
+    // distinct tokens (doc_id is the documents key, so per-row
+    // array_distinct IS the presence incidence — no DISTINCT shuffle of
+    // it) plus one NULL term standing for the document itself, so a
+    // NULL-text document still counts. The (term, source) aggregate is
+    // the only corpus-scale shuffle and carries partial-aggregated
+    // cells; its df window is partitioned by term, and the NULL-term
+    // cells are the margins: per source, nd = that cell's a and N = its
+    // df (every document, any source), read by one window over source.
+    // NULL terms and NULL sources are dropped only then (a NULL-source
+    // document counts in df and N but ranks in no source). The top-10
+    // runs through the house GroupedTopK heap on the source window's
+    // partitioning — never a vocabulary-wide sort — and the ≤ 10 rows
+    // per source are ordered in one partition, not by a sampled range
+    // shuffle.
     // Exactness: all four cells exact BIGINTs; the χ² numerator/
     // denominator products ride DECIMAL(38,0) (N⁵ < 10³⁸ holds through
     // ~3·10⁷ docs — beyond that switch the statistic to the G-test's
@@ -375,19 +385,20 @@ object Assay {
     // Universal terms (df = N ⇒ c+d = 0) carry no signal and are
     // excluded before the division.
     "q_llm_chi2_terms" -> ((s, d) => {
-      val inc = Tables(s, d, "documents")
-        .select(col("doc_id"), col("source"), explode(textTokens).as("term"))
-        .distinct()
-      val bySrc = inc.groupBy("term", "source").agg(count(lit(1)).as("a"))
+      val terms = concat(
+        coalesce(array_distinct(textTokens), array().cast("array<string>")),
+        array(lit(null).cast("string")))
+      val margin = (c: String) =>
+        max(when(col("term").isNull, col(c))).over(Window.partitionBy("source"))
+      val cells = Tables(s, d, "documents")
+        .select(col("source"), explode(terms).as("term"))
+        .groupBy("term", "source").agg(count(lit(1)).as("a"))
         .withColumn("df", sum(col("a")).over(Window.partitionBy("term")))
-      val srcN = Tables(s, d, "documents")
-        .groupBy("source").agg(count(lit(1)).as("nd"))
-      val tot = Tables(s, d, "documents").agg(count(lit(1)).as("n"))
+        .select(col("*"), margin("a").as("nd"), margin("df").as("n"))
       val dec = "DECIMAL(38,0)"
-      val scored = bySrc
-        .join(broadcast(srcN), "source")
-        .crossJoin(broadcast(tot))
-        .where(col("df") < col("n"))
+      val scored = cells
+        .where(col("term").isNotNull && col("source").isNotNull &&
+          col("df") < col("n"))
         .select(col("source"), col("term"), col("a"), col("df"),
           expr(s"""round(
               CAST(CAST(n AS $dec) *
@@ -399,7 +410,7 @@ object Assay {
       graft.plans.GraftPlans.groupedTopK(scored, "source", "chi2", "term", 10)
         .select(col("source"), col("rn"), col("term"), col("a").as("n_in"),
           col("df"), col("chi2"))
-        .orderBy("source", "rn")
+        .repartition(1).sortWithinPartitions("source", "rn")
     })
   )
 
@@ -737,8 +748,9 @@ object Assay {
            round(CAST(bytes AS DOUBLE) * ${U.shardCount} / tb, 6) AS load_x
          FROM p, t ORDER BY shard""",
 
-    // mirrors the declared plan CTE-for-stage: presence incidence →
-    // (term, source) cells with a window df → broadcast margins →
+    // the independent DISTINCT formulation, not the declared plan's
+    // shape: a DISTINCT (doc_id, source, term) incidence → (term, source)
+    // cells with a window df → margins counted straight off documents →
     // DECIMAL(38,0) χ² products → per-source rank (the GroupedTopK
     // semantics as a window row_number)
     "q_llm_chi2_terms" ->

@@ -287,9 +287,12 @@ object Scans {
       val out = tmpDir("dsv2w", d)
       GraftTable.write(Tables(s, d, "orders").select(col("o_orderkey"),
         col("o_orderstatus"), cents("o_totalprice")), out, "overwrite")
+      // the final aggregate's input is already partial-aggregated (one
+      // row per status per published part), so its 3 rows are merged and
+      // ordered in one task — no sampled range shuffle for a report
       rollup(GraftTable.read(s, out, "k BIGINT, st STRING, cents BIGINT")
           .groupBy(col("st").as("o_orderstatus")))
-        .orderBy("o_orderstatus")
+        .coalesce(1).sortWithinPartitions("o_orderstatus")
     }),
 
     // TIME-TRAVEL read over the commit sink's generation history (round

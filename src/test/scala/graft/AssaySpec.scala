@@ -339,22 +339,24 @@ class AssaySpec extends SparkSpec {
     assert(out === expect)
   }
 
-  test("q_llm_chi2_terms matches the contingency mirror; scores discriminate") {
-    val out = Assay.queries("q_llm_chi2_terms")(spark, sf).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2),
-        r.getLong(3), r.getLong(4), r.getDouble(5)))
-    val docs = Tables(spark, sf, "documents").select("doc_id", "source", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+  /** The χ² contingency mirror of q_llm_chi2_terms over (doc_id,
+    * source, text) rows: tokens split like Spark's `split` (Java
+    * `split(" ", -1)`, so empty tokens are terms), presence per
+    * document, a NULL text counted in nd and N, a NULL source counted in
+    * df and N but ranked in no source; (source, rn, term, n_in, df, chi2)
+    * in (source, rn) order. */
+  private def chi2Mirror(docs: Seq[(Long, String, String)])
+      : Seq[(String, Int, String, Long, Long, Double)] = {
     val n = docs.length.toLong
     // presence incidence: (source, term) -> a, term -> df
     val pres = docs.flatMap { case (_, src, t) =>
-      t.split(" ").distinct.map(term => (src, term))
+      Option(t).toSeq.flatMap(_.split(" ", -1).distinct).map(term => (src, term))
     }
     val a = pres.groupBy(identity).map { case (k, v) => k -> v.length.toLong }
     val df = pres.groupBy(_._2).map { case (t, v) => t -> v.length.toLong }
     val nd = docs.groupBy(_._2).map { case (s, v) => s -> v.length.toLong }
-    val expect = a.keys.toSeq
-      .filter { case (_, t) => df(t) < n }
+    a.keys.toSeq
+      .filter { case (src, t) => src != null && df(t) < n }
       .map { case k @ (src, t) =>
         val (av, dfv, ndv) = (a(k), df(t), nd(src))
         val x = BigDecimal(av * (n - dfv - ndv + av) - (dfv - av) * (ndv - av))
@@ -367,7 +369,20 @@ class AssaySpec extends SparkSpec {
         xs.sortBy { case (_, t, _, _, c) => (-c, t) }.take(10).zipWithIndex
           .map { case ((src, t, av, dfv, c), i) => (src, i + 1, t, av, dfv, c) }
       }.toSeq.sortBy(x => (x._1, x._2))
-    assert(out.toSeq === expect)
+  }
+
+  private def chi2Rows(sfDir: String) =
+    Assay.queries("q_llm_chi2_terms")(spark, sfDir).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2),
+        r.getLong(3), r.getLong(4), r.getDouble(5))).toSeq
+
+  test("q_llm_chi2_terms matches the contingency mirror; scores discriminate") {
+    val out = chi2Rows(sf)
+    val docs = Tables(spark, sf, "documents").select("doc_id", "source", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    val n = docs.length.toLong
+    val nd = docs.groupBy(_._2).map { case (s, v) => s -> v.length.toLong }
+    assert(out === chi2Mirror(docs))
     // the scores must discriminate: many distinct values
     assert(out.map(_._6).distinct.length > out.length / 2)
     // the df < n exclusion exists as a division guard (den = 0 iff
@@ -377,5 +392,28 @@ class AssaySpec extends SparkSpec {
     assert(out.forall { case (src, _, _, _, dfv, _) =>
       dfv < n && nd(src) < n && !out.exists(_._6.isNaN)
     })
+  }
+
+  test("q_llm_chi2_terms edge cases: repeated and empty tokens, NULL text, NULL source") {
+    import spark.implicits._
+    val docs = Seq[(Long, String, String)](
+      (1L, "s1", "alpha alpha beta"),   // a term repeated inside one document
+      (2L, "s1", "beta  gamma"),        // a double space: an empty token
+      (3L, "s2", null),                 // NULL text: counts in nd and N
+      (4L, null, "alpha gamma delta"),  // NULL source: counts in df and N
+      (5L, "s2", "gamma delta"),
+      (6L, "s2", "alpha  "),            // trailing empty tokens (limit -1)
+      (7L, "s3", "beta delta"))
+    val dir = java.nio.file.Files.createTempDirectory("chi2edge").toString
+    docs.toDF("doc_id", "source", "text").write.parquet(s"$dir/documents.parquet")
+    val out = chi2Rows(dir)
+    assert(out === chi2Mirror(docs))
+    // every case reaches the output: the empty token ranks as a term,
+    // the repeated term counts once (df of alpha = docs 1, 4, 6), and
+    // the NULL source emits no rows
+    assert(out.exists(_._3 == ""), out)
+    val alpha = out.filter(_._3 == "alpha")
+    assert(alpha.nonEmpty && alpha.forall(_._5 == 3L), out)
+    assert(out.map(_._1).distinct.sorted === Seq("s1", "s2", "s3"))
   }
 }

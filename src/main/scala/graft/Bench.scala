@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   /** Host steal meter: (steal ticks, total ticks) from `/proc/stat`'s
@@ -48,42 +47,9 @@ object Bench {
     } catch { case _: Throwable => (0L, 0.0) }
   }
 
-  /** Janino's codegen cache holds 100 generated-source entries by
-    * default (`spark.sql.codegen.cache.maxEntries`, a STATIC conf) —
-    * measured round 11: a 320-query bench thrashes it so badly that the
-    * WARM pass still recompiled 4,332 stages (the shared memoized base
-    * frames generate identical scan/filter sources across queries, but
-    * the LRU evicts them between uses). Sized to hold the whole
-    * surface's stages, as Verify, Explain, Scale, StreamBench and the
-    * test session also pin it. The A/B numbers live in BASELINE.md. */
-  private val codegenCacheEntries = "8192"
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables' TIMESTAMP_NTZ normalization assumes a UTC session (same
-      // pin as Verify/Explain/Scale); on a non-UTC host the cast would
-      // read shifted instants.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
-      // r15: the generated class name embeds the per-query codegen stage
-      // id (GeneratedIteratorForCodegenStage<N>); under AQE the id
-      // assignment order varies run-to-run (stages materialize in
-      // nondeterministic order), so byte-identical generated code misses
-      // the Janino cache and RE-COMPILES — measured: q_ts_survival_km
-      // compiled 22/18/16 NEW sources on iterations 2/3/4 of an identical
-      // plan, and 9–19 queries re-compiled on the bench's warm pass
-      // (~15 s of a 125 s draw). With the id out of the class name the
-      // source is stable: 0 compiles after iteration 1, and iteration 1
-      // itself drops ~2× (identical sub-plan stages across queries now
-      // share one compiled class). The id is cosmetic (stack-trace
-      // labels); plans and results are unchanged.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (steal0, total0) = procSteal()
     // Warm-up pass: materializes the table caches and triggers
@@ -183,7 +149,7 @@ object Bench {
       val cgMsJ = m(k => r3(codegenMs.getOrElse(k, 0.0)))
       val loadJ = m(k => r3(load1.getOrElse(k, -1.0)))
       val fw = new java.io.FileWriter("bench_full.json")
-      fw.write(s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_minus_codegen":${r3(totalMinusCodegen)},"queries":${full.mkString("{", ",", "}")},"cold":${coldJ.mkString("{", ",", "}")},"shuffle_mb":${shufMb.mkString("{", ",", "}")},"steal_ticks":${stealJ.mkString("{", ",", "}")},"load1":${loadJ.mkString("{", ",", "}")},"codegen_compiles":${cgJ.mkString("{", ",", "}")},"codegen_ms":${cgMsJ.mkString("{", ",", "}")},"steal_ticks_total":$stealDelta,"steal_pct":${r3(stealPct)},"load1_start":${r3(loadStart)},"load1_end":${r3(loadEnd)},"load1_max":${r3(loadMax)},"runq_max":$runqMax,"codegen_compile_count":$cgCount,"codegen_compile_ms":${r3(cgMs)},"codegen_compile_ms_warm":${r3(warmCgSec * 1000)},"codegen_cache_max_entries":$codegenCacheEntries,"failed":$failedJson,"sf":"$sfDir"}""")
+      fw.write(s"""{"metric":"total","value":${r3(total)},"unit":"sec","total_minus_codegen":${r3(totalMinusCodegen)},"queries":${full.mkString("{", ",", "}")},"cold":${coldJ.mkString("{", ",", "}")},"shuffle_mb":${shufMb.mkString("{", ",", "}")},"steal_ticks":${stealJ.mkString("{", ",", "}")},"load1":${loadJ.mkString("{", ",", "}")},"codegen_compiles":${cgJ.mkString("{", ",", "}")},"codegen_ms":${cgMsJ.mkString("{", ",", "}")},"steal_ticks_total":$stealDelta,"steal_pct":${r3(stealPct)},"load1_start":${r3(loadStart)},"load1_end":${r3(loadEnd)},"load1_max":${r3(loadMax)},"runq_max":$runqMax,"codegen_compile_count":$cgCount,"codegen_compile_ms":${r3(cgMs)},"codegen_compile_ms_warm":${r3(warmCgSec * 1000)},"codegen_cache_max_entries":${spark.conf.get("spark.sql.codegen.cache.maxEntries")},"failed":$failedJson,"sf":"$sfDir"}""")
       fw.close()
     } catch { case _: Throwable => () }
     val budget = 1500

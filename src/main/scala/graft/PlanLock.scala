@@ -66,16 +66,10 @@ object PlanLock {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // mirror the TEST session's confs exactly (SparkSpec) — the lock is
-    // compared there, and shuffle-partition or timezone drift would
-    // show up as spurious shape changes in conf-sensitive plans
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the TEST session (SparkSpec) comes from the same builder with the
+    // same 4 cores, so the lock regenerated here is the one compared
+    // there, whatever core count the caller's environment asks for
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val out = SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val fp =

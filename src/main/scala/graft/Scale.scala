@@ -73,22 +73,7 @@ object Scale {
     "q_llm_bpe_pairs", "q_ts_ewma", "q_stream_session", "q_llm_tfidf")
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // sized codegen cache: the Spark-default 100-entry LRU thrashes on a
-      // 320-query surface (measured round 11: 4,341 warm recompiles, bench
-      // 139.4 -> 92.3 s at 8192 — BASELINE.md "codegen cache")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // stable codegen class names: AQE assigns codegen stage ids in
-      // nondeterministic order, so the id-in-class-name default makes
-      // byte-identical generated code miss the Janino cache and
-      // recompile per invocation (r15, measured in Bench.scala)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

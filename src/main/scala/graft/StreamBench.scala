@@ -86,30 +86,11 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val batchRows = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "5000").toInt
     val scenarios =
       if (args.nonEmpty) args.toSeq
       else Seq("session", "kalman", "chained", "multitouch", "bandcollide")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // sized codegen cache: the Spark-default 100-entry LRU thrashes on a
-      // 320-query surface (measured round 11: 4,341 warm recompiles, bench
-      // 139.4 -> 92.3 s at 8192 — BASELINE.md "codegen cache")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // stable codegen class names: AQE assigns codegen stage ids in
-      // nondeterministic order, so the id-in-class-name default makes
-      // byte-identical generated code miss the Janino cache and
-      // recompile per invocation (r15, measured in Bench.scala)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // track sizes so stateMemory/rocksdb metrics are populated
-      .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -136,7 +117,7 @@ object StreamBench {
       println(f"""{"metric":"stream_${name}_rocksdb","rows":${rows.length},"batches":${(rows.length + batchRows - 1) / batchRows},"sec":$dt%.2f,"rows_per_sec":$rps%.0f,$st,"sf":"$sfDir"}""")
     }
 
-    scenarios.foreach {
+    val scenario: String => Unit = {
       case "session" => run("session")(df =>
         graft.streaming.Streams.sessionTimers(
           df.select("event_id", "ts", "user_id")).toDF())
@@ -368,6 +349,8 @@ object StreamBench {
           "multitouch|heavyhitters|heavyhitters_zipf|bandcollide|" +
           "bandcollide_ttl|dedupconfirm|dedupconfirm_ttl)")
     }
+    // the transformWithState processors need the RocksDB state store
+    graft.streaming.Streams.withRocksDb(spark)(scenarios.foreach(scenario))
     spark.stop()
   }
 }

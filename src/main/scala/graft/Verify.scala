@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,22 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional args 3+: only dump queries whose name contains any of them
     val only = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // sized codegen cache: the Spark-default 100-entry LRU thrashes on a
-      // 320-query surface (measured round 11: 4,341 warm recompiles, bench
-      // 139.4 -> 92.3 s at 8192 — BASELINE.md "codegen cache")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      // stable codegen class names: AQE assigns codegen stage ids in
-      // nondeterministic order, so the id-in-class-name default makes
-      // byte-identical generated code miss the Janino cache and
-      // recompile per invocation (r15, measured in Bench.scala)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

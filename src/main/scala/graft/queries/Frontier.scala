@@ -53,7 +53,7 @@ object Frontier {
     // the Pregel shape, like q_llm_dedup_cc. LAZY localCheckpoints (the
     // round count is fixed; nothing inspects data mid-loop) keep lineage
     // flat at execution time while plan-only consumers (PlanSpec sweeps,
-    // Explain) never run a job; the edge list checkpoints too, so the
+    // PlanLock) never run a job; the edge list checkpoints too, so the
     // orders⋈lineitem build runs once, not once per round. dist = first
     // level an id appears in.
     "q_graph_bfs" -> ((s, d) => {

@@ -72,7 +72,7 @@ object Learn {
     * DAGScheduler shares its stages and the cache manager's per-block
     * locks guarantee the sample-bounded Lloyd lineage materializes once
     * per JVM. persist() is lazy, so plan-only consumers (PlanSpec,
-    * Explain) remain execution-free — unlike an eager checkpoint
+    * PlanLock) remain execution-free — unlike an eager checkpoint
     * (trains at plan-build) or a lazy localCheckpoint (two racing
     * broadcast builds each ran the full lineage — the measured r4/r5
     * lesson). This is the in-plan analogue of a production pipeline
@@ -281,7 +281,7 @@ object Learn {
     * that takes ~2 s once the model is frozen). Eager is safe on this
     * path even now that the DECLARED entries dispatch here past
     * [[FLAT_MAX_CELLS]] (round 13): every plan-only consumer (PlanSpec,
-    * Explain, PlanLock) runs at gate scales, where cellsFor resolves to
+    * PlanLock) runs at gate scales, where cellsFor resolves to
     * 16 and the dispatch stays on the lazy flat path — the eager train
     * only ever fires where the query will execute anyway — and the
     * frames are KB-scale, so this is literally "train the model once,

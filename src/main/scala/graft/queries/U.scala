@@ -263,7 +263,7 @@ object U {
     * re-derive this orders⋈lineitem distinct frame — the top shuffle
     * writers in the round-6 bench (kcore 86 MB, bfs 83 MB, hits 43 MB,
     * modularity 42 MB of repeated shuffle). One derivation per JVM now;
-    * persist() is lazy, so plan-only consumers (PlanSpec, Explain) stay
+    * persist() is lazy, so plan-only consumers (PlanSpec, PlanLock) stay
     * execution-free. */
   def coPurchase(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"copurchase:$d") {

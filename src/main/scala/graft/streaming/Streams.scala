@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig,
@@ -22,6 +22,20 @@ import graft.queries.U.D
   * volume.
   */
 object Streams {
+
+  /** Runs `body` with the session's state store set to RocksDB, which the
+    * transformWithState processors here require, then restores the
+    * previous provider, or unsets the key if none was set. */
+  def withRocksDb[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getAll.get(key) // explicitly set values only
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 
   /** 10-min tumbling count+sum per event_type, 30-min watermark.
     * Output: (bucket epoch-s, event_type, cnt, total) = the twin's shape. */
@@ -101,8 +115,8 @@ object Streams {
 
   /** The same running count on Spark 4's arbitrary-state API
     * (transformWithState). State is a named ValueState[Long] per user in
-    * the RocksDB state store (the API requires the RocksDB provider — set
-    * spark.sql.streaming.stateStore.providerClass accordingly); versus
+    * the RocksDB state store (the API requires the RocksDB provider — start
+    * the stream inside `withRocksDb`); versus
     * flatMapGroupsWithState this gets incremental checkpointing, TTL
     * support, and state-schema evolution at 100 TB state sizes. Both
     * implementations ship; the test suite asserts they produce identical

@@ -81,4 +81,21 @@ class PlanLockSpec extends SparkSpec {
     assert(hits.isEmpty,
       s"commit-table format names outside graft.sources:\n${hits.mkString("\n")}")
   }
+
+  test("only GraftSession builds sessions in src/main") {
+    // one builder owns master, partitions, UTC and the codegen confs, so
+    // the mains and the test session cannot drift apart again
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val files = scalaFiles("src/main/scala/graft")
+      .filterNot(_.getFileName.toString == "GraftSession.scala")
+    assert(files.nonEmpty, "no main sources found")
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("SparkSession.builder")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"session builders outside GraftSession:\n${hits.mkString("\n")}")
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,12 +29,9 @@ class ResilienceSpec extends AnyFunSuite {
       .orderBy("l_returnflag").collect().toSeq.map(_.toString)
     shared.stop()
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(4)
       .master("local[4, 2]") // second field: task attempts allowed
       .appName("graft-resilience")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
@@ -60,12 +56,9 @@ class ResilienceSpec extends AnyFunSuite {
     val sf = TestSession.sf
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_rt/resilience_sink"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    val spark = SparkSession.builder()
-      .master("local[4, 2]")
+    val spark = GraftSession.builder(4)
+      .master("local[4, 2]") // second field: task attempts allowed
       .appName("graft-resilience-sink")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

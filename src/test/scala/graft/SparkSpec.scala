@@ -18,17 +18,7 @@ object TestSession {
       .orElse(SparkSession.getDefaultSession)
       .filter(s => !s.sparkContext.isStopped)
       .getOrElse {
-        val s = SparkSession.builder()
-          .master("local[4]")
-          .appName("graft-tests")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.sql.session.timeZone", "UTC")
-      // sized codegen cache: the Spark-default 100-entry LRU thrashes on a
-      // 320-query surface (measured round 11: 4,341 warm recompiles, bench
-      // 139.4 -> 92.3 s at 8192 — BASELINE.md "codegen cache")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
+        val s = GraftSession.builder(4).appName("graft-tests").getOrCreate()
         s.sparkContext.setLogLevel("ERROR")
         s
       }

@@ -166,14 +166,29 @@ class StreamingSpec extends SparkSpec {
     assert(got.sorted == want.sorted)
   }
 
+  test("withRocksDb sets RocksDB for its body and restores the previous provider") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    // a value set before the call comes back after it
+    spark.conf.set(key, hdfs)
+    Streams.withRocksDb(spark)(assert(spark.conf.get(key).contains("RocksDB")))
+    assert(spark.conf.get(key) === hdfs)
+    // an unset key is unset again, also when the body throws
+    spark.conf.unset(key)
+    intercept[IllegalStateException] {
+      Streams.withRocksDb(spark) {
+        assert(spark.conf.get(key).contains("RocksDB"))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(spark.conf.getAll.get(key) === None)
+  }
+
   test("transformWithState running count matches flatMapGroupsWithState") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     // transformWithState requires the RocksDB state store provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Ev]
       val ds = mem.toDS().map(e => Streams.PurchaseEvent(e.user_id, e.event_id, e.event_type))
       val q = Streams.statefulCountTws(ds).toDF().writeStream.format("memory")
@@ -187,21 +202,13 @@ class StreamingSpec extends SparkSpec {
       val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
         .select("user_id", "event_id", "purchase_seq").collect().toSeq
       assert(sortedSet(got) == sortedSet(want))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("heavy hitters (SpaceSaving) exact regime converges to the batch twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Ev]
       val ds = mem.toDS().map(e => Streams.HhEvent(e.user_id, e.event_id))
       val q = Streams.heavyHittersTws(ds).toDF().writeStream.format("memory")
@@ -222,21 +229,13 @@ class StreamingSpec extends SparkSpec {
       val want = queries.StreamTwins.queries("q_stream_heavy_hitters")(spark, sf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(got == want, "SpaceSaving exact-regime top-20 diverges from the twin")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("heavy hitters eviction regime: ledger replays to a reference SpaceSaving") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       // constructed skew: users 1..3 dominate, 4..20 are background noise —
       // with cap=4 per bucket the background keys churn through the
       // displaced slot while the heavy keys stay tracked (the guarantee)
@@ -290,11 +289,6 @@ class StreamingSpec extends SparkSpec {
           assert(replayed(b).contains(u), s"guaranteed heavy key $u not tracked")
         }
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -316,10 +310,7 @@ class StreamingSpec extends SparkSpec {
   test("heavy hitters survives a checkpointed restart: MapState carries") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       def wipe(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(wipe)
         f.delete(); ()
@@ -357,11 +348,6 @@ class StreamingSpec extends SparkSpec {
       drain()
       assert(spark.read.parquet(s"$base/out").count() === before,
         "empty restart re-emitted ledger rows")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -369,10 +355,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // transformWithState needs the multi-column-family store (RocksDB)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Ev]
       // epochS ≡ floor-seconds: getTime is epoch ms, / 1000 floors for
       // the positive timestamps the generator emits
@@ -389,21 +372,13 @@ class StreamingSpec extends SparkSpec {
       val want = queries.StreamTwins.queries("q_stream_attribution")(spark, sf)
         .select(cols.head, cols.tail: _*).collect().toSeq
       assert(got.nonEmpty && sortedSet(got) == sortedSet(want))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("transformWithState multi-touch attribution converges to the batch twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Ev]
       val ds = mem.toDS().map(e =>
         Streams.AttrEvent(e.user_id, e.event_id, e.event_type, e.ts.getTime / 1000))
@@ -418,21 +393,13 @@ class StreamingSpec extends SparkSpec {
       assert(got.nonEmpty && sortedSet(got) == sortedSet(want))
       // the share rows must actually split credit somewhere (k > 1)
       assert(got.exists(_.getLong(3) > 1L))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("transformWithState Kalman filter converges to the batch twin bitwise") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Ev]
       val ds = mem.toDS().map(e => Streams.ValObs(e.user_id, e.event_id, e.value))
       val q = Streams.kalmanTws(ds).toDF().writeStream.format("memory")
@@ -447,11 +414,6 @@ class StreamingSpec extends SparkSpec {
       val want = queries.StreamTwins.queries("q_stream_kalman")(spark, sf)
         .select("user_id", "event_id", "x_hat", "p_cov").collect().toSeq
       assert(sortedSet(got) == sortedSet(want))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -592,10 +554,7 @@ class StreamingSpec extends SparkSpec {
   test("event-time-timer sessionization (transformWithState) matches the session twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Ev]
       val q = Streams.sessionTimers(mem.toDF()).toDF().writeStream.format("memory")
         .queryName("t_sesstimer").outputMode("append").start()
@@ -616,11 +575,6 @@ class StreamingSpec extends SparkSpec {
         .select("user_id", "n_events", "start_s", "end_s").collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       assert(got.sorted == want.sorted)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -631,10 +585,7 @@ class StreamingSpec extends SparkSpec {
     // row would wrongly split at 26m (26−10 ≥ gap).
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       def ev(id: Long, user: Long, minute: Long): Ev =
         Ev(id, java.sql.Timestamp.valueOf(
           f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00"), user, "click", 1.0, "{}")
@@ -654,11 +605,6 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime / 1000
       assert(got === Seq((4L, t0, t0 + 26 * 60)), s"expected one merged session, got $got")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -669,10 +615,7 @@ class StreamingSpec extends SparkSpec {
     // session would emit overlapping sessions [0,0] and [4m,20m].
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       def ev(id: Long, user: Long, minute: Long): Ev =
         Ev(id, java.sql.Timestamp.valueOf(
           f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00"), user, "click", 1.0, "{}")
@@ -691,11 +634,6 @@ class StreamingSpec extends SparkSpec {
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime / 1000
       assert(got === Seq((1L, t0 + 20 * 60, t0 + 20 * 60), (2L, t0, t0 + 4 * 60)).sorted,
         s"expected islands [0,4m](2) and [20m](1), got $got")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -814,10 +752,7 @@ class StreamingSpec extends SparkSpec {
     // guard across the checkpoint boundary, not just within a batch)
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       def wipe(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(wipe)
         f.delete(); ()
@@ -854,11 +789,6 @@ class StreamingSpec extends SparkSpec {
       drain()
       assert(spark.read.parquet(s"$base/out").count() === before,
         "empty restart re-emitted candidate pairs")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -1021,10 +951,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     // transformWithState needs the RocksDB (multi-column-family) store
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Streams.withRocksDb(spark) {
       // the ONE banding definition: the stream replays exactly the frame
       // the batch candidate join consumes, in doc_id (arrival) order
       val bands = queries.Llm.bandKeyFrame(spark, sf)
@@ -1053,21 +980,6 @@ class StreamingSpec extends SparkSpec {
       assert(got === want,
         s"stream candidates diverge from batch banding: " +
           s"stream-only=${(got -- want).take(5)}, batch-only=${(want -- got).take(5)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1085,7 +997,7 @@ class StreamingSpec extends SparkSpec {
   test("end-to-end streaming dedup: confirmed pairs equal the batch exact-Jaccard confirm") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Streams.DocArrival]
       val q = Streams.dedupConfirm(mem.toDS()).toDF()
         .writeStream.format("memory").queryName("t_dedupconfirm")
@@ -1115,7 +1027,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup confirm survives a checkpointed restart") {
     import org.apache.spark.sql.streaming.Trigger
-    withRocksDb {
+    Streams.withRocksDb(spark) {
       def wipe(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(wipe)
         f.delete(); ()
@@ -1163,7 +1075,7 @@ class StreamingSpec extends SparkSpec {
     // two-drain shape doubles as the checkpoint-restart case (drain 2
     // resumes from drain 1's RocksDB state across a fresh query)
     import org.apache.spark.sql.streaming.Trigger
-    withRocksDb {
+    Streams.withRocksDb(spark) {
       def wipe(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(wipe)
         f.delete(); ()
@@ -1208,7 +1120,7 @@ class StreamingSpec extends SparkSpec {
     // arrived); the same two docs inside one window MUST confirm — so the
     // miss is provably the window, not a banding accident
     import org.apache.spark.sql.streaming.Trigger
-    withRocksDb {
+    Streams.withRocksDb(spark) {
       def wipe(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(wipe)
         f.delete(); ()
@@ -1307,7 +1219,7 @@ class StreamingSpec extends SparkSpec {
   test("confirm hop stashes a candidate that outruns its set, drains on arrival") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
+    Streams.withRocksDb(spark) {
       val mem = MemoryStream[Streams.AttachMsg]
       val q = mem.toDS().groupByKey(_.key)
         .transformWithState(new Streams.SetConfirmProcessor(0.8),

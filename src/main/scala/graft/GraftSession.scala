@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session builder: Bench, Verify, Scale, StreamBench,
-  * PlanLock and the test session all start here, so their confs cannot
-  * drift apart. Callers add only their own app name, master override or
-  * log level. */
+/** The one local session builder: Bench, Verify, Scale, PlanLock and
+  * the test session all start here, so their confs cannot drift apart.
+  * Callers add only their own app name, master override or log level. */
 object GraftSession {
 
   /** Local cores and shuffle partitions: `SPARK_GRAFT_CPUS`, default 4. */

@@ -4,6 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
 import org.apache.spark.storage.StorageLevel
 
+/** Replayed event row (top-level so Catalyst can derive its Encoder). */
+case class BenchEv(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+  event_type: String, value: Double)
+
 /** Cached base-table loads, one per (session, sfDir, table).
   *
   * Every SURVEY §2 query reads through here so that `Bench`'s 55+

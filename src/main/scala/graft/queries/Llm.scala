@@ -73,8 +73,8 @@ object Llm {
     * definition, exposed for the streaming collide processor
     * (graft.streaming.Streams.bandCollide replays exactly this frame;
     * StreamingSpec asserts its emitted candidates equal
-    * [[bandCandidates]] on in-order replay, StreamBench replays it at
-    * bench scale for the state-metrics row). */
+    * [[bandCandidates]] on in-order replay, and perfbench's
+    * `stream:bandcollide` item replays it for the state-store metrics). */
   private[graft] def bandKeyFrame(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     bandKeys(shingles(s, d))

@@ -21,6 +21,20 @@ object StreamTwins {
   private def withEs(s: org.apache.spark.sql.SparkSession, d: String) =
     Tables(s, d, "events").withColumn("es", epochS(col("ts")))
 
+  /** Purchases × the same user's clicks in the preceding 30 minutes on
+    * the µs timeline, joined as `how`: the band the four stream-stream
+    * join twins share (Streams.clickBand is its streaming form). */
+  private def clickBand(s: org.apache.spark.sql.SparkSession, d: String,
+      how: String): org.apache.spark.sql.DataFrame = {
+    val ev = Tables(s, d, "events").withColumn("us", unix_micros(col("ts")))
+    val p = ev.where(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("purchase_id"), col("us").as("pus"))
+    val c = ev.where(col("event_type") === "click")
+      .select(col("user_id").as("cuser"), col("event_id").as("click_id"), col("us").as("cus"))
+    p.join(c, col("user_id") === col("cuser")
+        && col("cus") >= col("pus") - 1800000000L && col("cus") <= col("pus"), how)
+  }
+
   val queries: Map[String, Q] = Map(
     "q_stream_tumbling" -> ((s, d) =>
       withEs(s, d)
@@ -140,37 +154,22 @@ object StreamTwins {
     // µs timeline (identical in both engines); streaming impl is
     // Streams.streamJoin (two watermarked streams, time-range condition —
     // state bounded to the 30-min band on both sides).
-    "q_stream_stream_join" -> ((s, d) => {
-      val ev = Tables(s, d, "events").withColumn("us", unix_micros(col("ts")))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("us").as("pus"))
-      val c = ev.where(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("event_id").as("click_id"), col("us").as("cus"))
-      p.join(c, col("user_id") === col("cuser")
-          && col("cus") >= col("pus") - 1800000000L && col("cus") <= col("pus"))
+    "q_stream_stream_join" -> ((s, d) =>
+      clickBand(s, d, "inner")
         .select(col("user_id"), col("purchase_id"), col("click_id"),
           expr("(pus - cus) div 1000000").as("gap_s"))
-        .orderBy("purchase_id", "click_id")
-    }),
+        .orderBy("purchase_id", "click_id")),
 
     // LEFT OUTER stream-stream join twin: every purchase emits, matched
     // or not (click_id −1 when no click in the preceding 30 minutes).
     // Streaming impl is Streams.streamJoinOuter — same watermark + band,
     // with watermark-driven eviction emitting the unmatched rows.
-    "q_stream_outer_join" -> ((s, d) => {
-      val ev = Tables(s, d, "events").withColumn("us", unix_micros(col("ts")))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("us").as("pus"))
-      val c = ev.where(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("event_id").as("click_id"), col("us").as("cus"))
-      p.join(c, col("user_id") === col("cuser")
-          && col("cus") >= col("pus") - 1800000000L && col("cus") <= col("pus"),
-          "left_outer")
+    "q_stream_outer_join" -> ((s, d) =>
+      clickBand(s, d, "left_outer")
         .select(col("user_id"), col("purchase_id"),
           coalesce(col("click_id"), lit(-1L)).as("click_id"),
           coalesce(expr("(pus - cus) div 1000000"), lit(-1L)).as("gap_s"))
-        .orderBy("purchase_id", "click_id")
-    }),
+        .orderBy("purchase_id", "click_id")),
 
     // RIGHT OUTER stream-stream join twin — the mirror of
     // q_stream_outer_join completing the left/right/full matrix: every
@@ -179,21 +178,13 @@ object StreamTwins {
     // Streams.streamJoinRightOuter: click state evicts at watermark >
     // cts + 30 min). (purchase_id, click_id) stays a unique pair, so
     // the order is total.
-    "q_stream_right_outer" -> ((s, d) => {
-      val ev = Tables(s, d, "events").withColumn("us", unix_micros(col("ts")))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("us").as("pus"))
-      val c = ev.where(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("event_id").as("click_id"), col("us").as("cus"))
-      p.join(c, col("user_id") === col("cuser")
-          && col("cus") >= col("pus") - 1800000000L && col("cus") <= col("pus"),
-          "right_outer")
+    "q_stream_right_outer" -> ((s, d) =>
+      clickBand(s, d, "right_outer")
         .select(col("cuser").as("user_id"),
           coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
           col("click_id"),
           coalesce(expr("(pus - cus) div 1000000"), lit(-1L)).as("gap_s"))
-        .orderBy("purchase_id", "click_id")
-    }),
+        .orderBy("purchase_id", "click_id")),
 
     // FULL OUTER stream-stream join twin: unmatched rows emit from BOTH
     // sides — a purchase with no click in its preceding 30 minutes
@@ -204,21 +195,13 @@ object StreamTwins {
     // its band — purchase state at pts, click state at cts + 30 min.
     // (purchase_id, click_id) is a unique pair across all three row
     // classes, so the output order is total.
-    "q_stream_full_outer" -> ((s, d) => {
-      val ev = Tables(s, d, "events").withColumn("us", unix_micros(col("ts")))
-      val p = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("us").as("pus"))
-      val c = ev.where(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("event_id").as("click_id"), col("us").as("cus"))
-      p.join(c, col("user_id") === col("cuser")
-          && col("cus") >= col("pus") - 1800000000L && col("cus") <= col("pus"),
-          "full_outer")
+    "q_stream_full_outer" -> ((s, d) =>
+      clickBand(s, d, "full_outer")
         .select(coalesce(col("user_id"), col("cuser")).as("user_id"),
           coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
           coalesce(col("click_id"), lit(-1L)).as("click_id"),
           coalesce(expr("(pus - cus) div 1000000"), lit(-1L)).as("gap_s"))
-        .orderBy("purchase_id", "click_id")
-    }),
+        .orderBy("purchase_id", "click_id")),
 
     // Full-history running Kalman filter per user (round 6): the batch
     // twin of Streams.kalmanTws — per event, the filtered estimate and

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.commons.io.FileUtils
+import org.scalatest.BeforeAndAfterAll
 import graft.streaming.Streams
 
 /** Replayed event row — top-level so Spark can generate its Encoder
@@ -18,18 +20,36 @@ case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
   * equal the batch twin computed on the same rows — the twin being the
   * DuckDB-oracled declared query.
   */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private val scratchDirs =
+    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh, empty directory for one test's sources, sinks and
+    * checkpoints. `createTempDirectory` names it uniquely, so two test
+    * JVMs on one host never share or wipe each other's directories. The
+    * suite removes them when it ends. */
+  private def scratchDir(tag: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_stream_${tag}_")
+    scratchDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try scratchDirs.foreach(d => FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
 
   private lazy val eventsDf: DataFrame =
     Tables(spark, sf, "events").select("event_id", "ts", "user_id", "event_type", "value", "props")
 
   private lazy val allEvents: Seq[Ev] = {
     import spark.implicits._
-    // Replay in event_id order (the generator co-orders event_id and ts —
-    // the StreamBench convention). The explicit orderBy pins the arrival
-    // order these convergence cases are specified against; before r14 it
-    // was implicit in the parquet file's natural time-sorted order, which
-    // any upstream repartition would silently interleave.
+    // Replay in event_id order (the generator co-orders event_id and ts;
+    // perfbench's stream replays feed the same order). The explicit
+    // orderBy pins the arrival order these convergence cases are
+    // specified against; before r14 it was implicit in the parquet file's
+    // natural time-sorted order, which any upstream repartition would
+    // silently interleave.
     eventsDf.orderBy("event_id").as[Ev].collect().toSeq
   }
 
@@ -99,17 +119,20 @@ class StreamingSpec extends SparkSpec {
   test("stateful purchase count stream equals batch running count") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val ds = mem.toDS().map(e => Streams.PurchaseEvent(e.user_id, e.event_id, e.event_type))
-    val q = Streams.statefulCount(ds).toDF().writeStream.format("memory")
-      .queryName("t_stateful").outputMode("append").start()
-    chunksInOrder.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("t_stateful")
-      .select("user_id", "event_id", "purchase_seq").collect().toSeq
-    val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
-      .select("user_id", "event_id", "purchase_seq").collect().toSeq
-    assert(sortedSet(got) == sortedSet(want))
+    // transformWithState requires the RocksDB state store provider
+    Streams.withRocksDb(spark) {
+      val mem = MemoryStream[Ev]
+      val ds = mem.toDS().map(e => Streams.PurchaseEvent(e.user_id, e.event_id, e.event_type))
+      val q = Streams.statefulCountTws(ds).toDF().writeStream.format("memory")
+        .queryName("t_stateful").outputMode("append").start()
+      chunksInOrder.foreach { c => mem.addData(c); q.processAllAvailable() }
+      q.stop()
+      val got = spark.table("t_stateful")
+        .select("user_id", "event_id", "purchase_seq").collect().toSeq
+      val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
+        .select("user_id", "event_id", "purchase_seq").collect().toSeq
+      assert(sortedSet(got) == sortedSet(want))
+    }
   }
 
   test("stream-static join converges to batch twin") {
@@ -182,27 +205,6 @@ class StreamingSpec extends SparkSpec {
       }
     }
     assert(spark.conf.getAll.get(key) === None)
-  }
-
-  test("transformWithState running count matches flatMapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    Streams.withRocksDb(spark) {
-      val mem = MemoryStream[Ev]
-      val ds = mem.toDS().map(e => Streams.PurchaseEvent(e.user_id, e.event_id, e.event_type))
-      val q = Streams.statefulCountTws(ds).toDF().writeStream.format("memory")
-        .queryName("t_tws").outputMode("append").start()
-      chunksInOrder.foreach { c => mem.addData(c); q.processAllAvailable() }
-      q.stop()
-      val got = spark.table("t_tws")
-        .select("user_id", "event_id", "purchase_seq").collect().toSeq
-      // same arrival order ⇒ must match both the fMGWS stream (asserted via
-      // the twin in the test above) and the batch running count
-      val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
-        .select("user_id", "event_id", "purchase_seq").collect().toSeq
-      assert(sortedSet(got) == sortedSet(want))
-    }
   }
 
   test("heavy hitters (SpaceSaving) exact regime converges to the batch twin") {
@@ -311,12 +313,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     Streams.withRocksDb(spark) {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(wipe)
-        f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_hhrestart"
-      wipe(new java.io.File(base))
+      val base = scratchDir("hhrestart")
       import spark.implicits._
       val src = eventsDf.select(col("user_id"), col("event_id"))
       val med = src.agg(expr("percentile_approx(event_id, 0.5)")).first().getLong(0)
@@ -668,7 +665,7 @@ class StreamingSpec extends SparkSpec {
     // SURVEY §3.4 entry point: replay events through the file source with
     // maxFilesPerTrigger. The source dir carries the ns-normalized events
     // split into multiple parquet files so several micro-batches fire.
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_src"
+    val dir = scratchDir("src")
     // range-partition by ts so part-file order ≈ time order (file source
     // lists files in name order; a 30-min watermark then never drops)
     eventsDf.repartitionByRange(5, col("ts")).write.mode("overwrite").parquet(dir)
@@ -690,7 +687,7 @@ class StreamingSpec extends SparkSpec {
     // terminate — the incremental-backfill trigger a scheduled 100 TB
     // ingest would run instead of a long-lived query.
     import org.apache.spark.sql.streaming.Trigger
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_src_an"
+    val dir = scratchDir("src_an")
     eventsDf.repartitionByRange(5, col("ts")).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(eventsDf.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
@@ -710,37 +707,34 @@ class StreamingSpec extends SparkSpec {
     // new files, with keyed state carried across the restart.
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(wipe)
-      f.delete(); ()
+    Streams.withRocksDb(spark) {
+      val base = scratchDir("restart")
+      val ev = eventsDf.select(col("user_id"), col("event_id"), col("event_type"))
+      val med = allEvents.map(_.event_id).sorted.apply(allEvents.size / 2)
+      ev.where(col("event_id") <= med).coalesce(1).write.parquet(s"$base/src")
+      def drain(): Unit = {
+        val stream = spark.readStream.schema(ev.schema).parquet(s"$base/src")
+          .as[Streams.PurchaseEvent]
+        val q = Streams.statefulCountTws(stream).toDF().writeStream.format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ck")
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        assert(q.awaitTermination(120000), "restart query did not terminate")
+      }
+      drain()
+      val afterFirst = spark.read.parquet(s"$base/out").count()
+      ev.where(col("event_id") > med).coalesce(1).write.mode("append").parquet(s"$base/src")
+      drain()
+      val got = spark.read.parquet(s"$base/out")
+        .select("user_id", "event_id", "purchase_seq").collect().toSeq
+      val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
+        .select("user_id", "event_id", "purchase_seq").collect().toSeq
+      assert(sortedSet(got) == sortedSet(want), "restart output diverges from batch twin")
+      // every row written after the restart is NEW — nothing reprocessed
+      assert(got.size > afterFirst, "second half produced no output")
+      assert(got.size.toLong == got.map(r => (r.getLong(0), r.getLong(1))).distinct.size,
+        "restart duplicated committed output")
     }
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_restart"
-    wipe(new java.io.File(base))
-    val ev = eventsDf.select(col("user_id"), col("event_id"), col("event_type"))
-    val med = allEvents.map(_.event_id).sorted.apply(allEvents.size / 2)
-    ev.where(col("event_id") <= med).coalesce(1).write.parquet(s"$base/src")
-    def drain(): Unit = {
-      val stream = spark.readStream.schema(ev.schema).parquet(s"$base/src")
-        .as[Streams.PurchaseEvent]
-      val q = Streams.statefulCount(stream).toDF().writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ck")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000), "restart query did not terminate")
-    }
-    drain()
-    val afterFirst = spark.read.parquet(s"$base/out").count()
-    ev.where(col("event_id") > med).coalesce(1).write.mode("append").parquet(s"$base/src")
-    drain()
-    val got = spark.read.parquet(s"$base/out")
-      .select("user_id", "event_id", "purchase_seq").collect().toSeq
-    val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
-      .select("user_id", "event_id", "purchase_seq").collect().toSeq
-    assert(sortedSet(got) == sortedSet(want), "restart output diverges from batch twin")
-    // every row written after the restart is NEW — nothing reprocessed
-    assert(got.size > afterFirst, "second half produced no output")
-    assert(got.size.toLong == got.map(r => (r.getLong(0), r.getLong(1))).distinct.size,
-      "restart duplicated committed output")
   }
 
   test("band-collide survives a checkpointed restart: bucket state carries, no re-emission") {
@@ -753,12 +747,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     Streams.withRocksDb(spark) {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(wipe)
-        f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_bandrestart"
-      wipe(new java.io.File(base))
+      val base = scratchDir("bandrestart")
       val bands = queries.Llm.bandKeyFrame(spark, sf)
         .selectExpr("CAST(band_id AS INT) AS band_id", "bkey", "doc_id")
       val med = bands.agg(expr("percentile_approx(doc_id, 0.5)")).first().getLong(0)
@@ -795,25 +784,22 @@ class StreamingSpec extends SparkSpec {
   test("file-sink stream (writeStream parquet + checkpoint) persists the append output") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(wipe)
-      f.delete(); ()
+    Streams.withRocksDb(spark) {
+      val base = scratchDir("sink")
+      val mem = MemoryStream[Ev]
+      val ds = mem.toDS().map(e => Streams.PurchaseEvent(e.user_id, e.event_id, e.event_type))
+      val q = Streams.statefulCountTws(ds).toDF().writeStream.format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ck")
+        .outputMode("append").start()
+      chunksInOrder.foreach { c => mem.addData(c); q.processAllAvailable() }
+      q.stop()
+      val got = spark.read.parquet(s"$base/out")
+        .select("user_id", "event_id", "purchase_seq").collect().toSeq
+      val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
+        .select("user_id", "event_id", "purchase_seq").collect().toSeq
+      assert(sortedSet(got) == sortedSet(want))
     }
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_sink"
-    wipe(new java.io.File(base))
-    val mem = MemoryStream[Ev]
-    val ds = mem.toDS().map(e => Streams.PurchaseEvent(e.user_id, e.event_id, e.event_type))
-    val q = Streams.statefulCount(ds).toDF().writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ck")
-      .outputMode("append").start()
-    chunksInOrder.foreach { c => mem.addData(c); q.processAllAvailable() }
-    q.stop()
-    val got = spark.read.parquet(s"$base/out")
-      .select("user_id", "event_id", "purchase_seq").collect().toSeq
-    val want = queries.StreamTwins.queries("q_stream_stateful_count")(spark, sf)
-      .select("user_id", "event_id", "purchase_seq").collect().toSeq
-    assert(sortedSet(got) == sortedSet(want))
   }
 
   test("foreachBatch upsert sink maintains a serving table equal to the batch twin") {
@@ -824,13 +810,7 @@ class StreamingSpec extends SparkSpec {
     // upsert loses no window and final values win over intermediates.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(wipe)
-      f.delete(); ()
-    }
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_febatch"
-    wipe(new java.io.File(base))
-    new java.io.File(base).mkdirs()
+    val base = scratchDir("febatch")
     val serving = s"$base/serving"
     val mem = MemoryStream[Ev]
     val q = Streams.tumbling(mem.toDF()).writeStream
@@ -845,7 +825,7 @@ class StreamingSpec extends SparkSpec {
               Seq("bucket", "event_type"), "left_anti"))
         val staged = new java.io.File(s"$base/staged")
         merged.coalesce(1).write.mode("overwrite").parquet(staged.toString)
-        wipe(new java.io.File(serving))
+        FileUtils.deleteQuietly(new java.io.File(serving))
         assert(staged.renameTo(new java.io.File(serving)))
         ()
       }
@@ -1028,12 +1008,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming dedup confirm survives a checkpointed restart") {
     import org.apache.spark.sql.streaming.Trigger
     Streams.withRocksDb(spark) {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(wipe)
-        f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_confirmrestart"
-      wipe(new java.io.File(base))
+      val base = scratchDir("confirmrestart")
       val arrivals = queries.Llm.docArrivalFrame(spark, sf)
         .select(col("doc_id"), col("shingles"), col("bands"))
       val med = arrivals.agg(expr("percentile_approx(doc_id, 0.5)")).first().getLong(0)
@@ -1076,12 +1051,7 @@ class StreamingSpec extends SparkSpec {
     // resumes from drain 1's RocksDB state across a fresh query)
     import org.apache.spark.sql.streaming.Trigger
     Streams.withRocksDb(spark) {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(wipe)
-        f.delete(); ()
-      }
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_confirmttl"
-      wipe(new java.io.File(base))
+      val base = scratchDir("confirmttl")
       val arrivals = queries.Llm.docArrivalFrame(spark, sf)
         .select(col("doc_id"), col("shingles"), col("bands"))
       val med = arrivals.agg(expr("percentile_approx(doc_id, 0.5)")).first().getLong(0)
@@ -1092,7 +1062,7 @@ class StreamingSpec extends SparkSpec {
           .as[Streams.DocArrival]
         // ProcessingTime TimeMode never quiesces (TTL cleanup keeps
         // scheduling batches) — Trigger.Once is the drain protocol
-        val q = Streams.dedupConfirmTtl(stream, ttlMs = 3600L * 1000).toDF()
+        val q = Streams.dedupConfirm(stream, ttlMs = Some(3600L * 1000)).toDF()
           .writeStream.format("parquet")
           .option("path", s"$base/out")
           .option("checkpointLocation", s"$base/ck")
@@ -1121,10 +1091,6 @@ class StreamingSpec extends SparkSpec {
     // miss is provably the window, not a banding accident
     import org.apache.spark.sql.streaming.Trigger
     Streams.withRocksDb(spark) {
-      def wipe(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(wipe)
-        f.delete(); ()
-      }
       val toks = (1 to 40).map(i => s"tok$i")
       val textA = toks.mkString(" ")
       val textB = (toks.dropRight(1) :+ "changed").mkString(" ")
@@ -1136,12 +1102,11 @@ class StreamingSpec extends SparkSpec {
       val schema = org.apache.spark.sql.Encoders.product[Streams.DocArrival].schema
       def run(tag: String, together: Boolean, ttlMs: Long): Set[(Long, Long)] = {
         import spark.implicits._
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_ttlloss_$tag"
-        wipe(new java.io.File(base))
+        val base = scratchDir(s"ttlloss_$tag")
         def drain(): Unit = {
           val stream = spark.readStream.schema(schema).parquet(s"$base/src")
             .as[Streams.DocArrival]
-          val q = Streams.dedupConfirmTtl(stream, ttlMs).toDF()
+          val q = Streams.dedupConfirm(stream, ttlMs = Some(ttlMs)).toDF()
             .writeStream.format("parquet").option("path", s"$base/out")
             .option("checkpointLocation", s"$base/ck")
             .outputMode("append").trigger(Trigger.Once()).start()
@@ -1166,6 +1131,43 @@ class StreamingSpec extends SparkSpec {
       val crossWindow = run("crosswin", together = false, ttlMs = 2000L)
       assert(crossWindow.isEmpty,
         s"cross-window pair survived a 2 s TTL: $crossWindow")
+    }
+  }
+
+  test("TTL'd band-collide: a cross-drain collision is lost, an in-drain one emits") {
+    // stage 1's TTL on its own, without the set hops (whose TTLs would
+    // also lose a cross-drain pair): docs 1 and 2 share a bucket in the
+    // first drain and must collide; doc 3 lands in the same bucket one
+    // TTL later, after both entries aged out, and must collide with
+    // neither
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.Trigger
+    Streams.withRocksDb(spark) {
+      val base = scratchDir("bandttl")
+      val ttlMs = 2000L
+      def drain(): Unit = {
+        val stream = spark.readStream
+          .schema(org.apache.spark.sql.Encoders.product[Streams.BandKeyRow].schema)
+          .parquet(s"$base/src").as[Streams.BandKeyRow]
+        val q = Streams.bandCollide(stream, ttlMs = Some(ttlMs)).toDF()
+          .writeStream.format("parquet").option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ck")
+          .outputMode("append").trigger(Trigger.Once()).start()
+        assert(q.awaitTermination(240000), "ttl band-collide drain did not terminate")
+      }
+      def add(docs: Long*): Unit =
+        docs.map(Streams.BandKeyRow(0, "bucket", _)).toDS().coalesce(1)
+          .write.mode("append").parquet(s"$base/src")
+      add(1L, 2L)
+      drain()
+      Thread.sleep(ttlMs + 1500)
+      add(3L)
+      drain()
+      val got = spark.read.parquet(s"$base/out").select("a", "b")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got.contains((1L, 2L)), s"in-drain collision not emitted: $got")
+      assert(got === Set((1L, 2L)),
+        s"cross-drain collisions survived a ${ttlMs} ms TTL: ${got - ((1L, 2L))}")
     }
   }
 
@@ -1251,12 +1253,7 @@ class StreamingSpec extends SparkSpec {
   test("commit-sink streaming write: one generation per epoch, exactly-once across restart and re-delivery") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    def wipe(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-      f.delete(); ()
-    }
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_sink"
-    wipe(new java.io.File(base))
+    val base = scratchDir("commitsink")
     val src = s"$base/src"; val out = s"$base/out"; val ck = s"$base/ck"
     def addFile(lo: Long, n: Long): Unit =
       spark.range(lo, lo + n).select(col("id").as("k"),

@@ -64,24 +64,31 @@ object Workloads {
     }),
 
     // Q3 shape — shipping priority: unshipped-as-of-pivot revenue for one
-    // market segment, top 10 orders. customer is a broadcast dim; orders
-    // and lineitem join on orderkey (their natural co-partitioning at
-    // scale); the LIMIT lands as TakeOrderedAndProject.
+    // market segment, top 10 orders. The segment is semi-joined into
+    // orders BEFORE orders meets lineitem, so only that segment's orders
+    // are broadcast or shuffled (exact: c_custkey is customer's key). A
+    // semi join keeps orders' size estimate, so the orders×lineitem join
+    // plans as the orders side alone would: broadcast at small scale,
+    // sort-merge on orderkey at scale (an inner join's estimate is the
+    // product of both sides). The groups key on the raw o_orderdate
+    // (l_orderkey determines it); the date is formatted on the 10 output
+    // rows only, inside the TakeOrderedAndProject that ends the plan.
     "q_wl_shipping_priority" -> ((s, d) => {
       val cust = Tables(s, d, "customer")
         .where(col("c_mktsegment") === "BUILDING").select("c_custkey")
       val ord = Tables(s, d, "orders")
         .where(col("o_orderdate") < ts("1998-06-15"))
+        .join(broadcast(cust), col("o_custkey") === col("c_custkey"), "left_semi")
       val li = Tables(s, d, "lineitem")
         .where(col("l_shipdate") > ts("1998-06-15"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("odate"),
-          col("o_orderpriority"))
+        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
         .agg(dsum(revenue).as("rev"))
         .orderBy(col("rev").desc, col("l_orderkey"))
         .limit(10)
+        .select(col("l_orderkey"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd").as("odate"),
+          col("o_orderpriority"), col("rev"))
     }),
 
     // Q5 shape — local-supplier volume: revenue per nation in one region
@@ -107,7 +114,10 @@ object Workloads {
           col("c_nationkey") === col("s_nationkey"))
         .groupBy(col("n_name"))
         .agg(dsum(revenue).as("rev"))
-        .orderBy(col("rev").desc, col("n_name"))
+        // the final aggregate's input is already partial-aggregated and
+        // holds at most one row per nation (25), so its rows are merged
+        // and ordered in one task — no sampled range shuffle for a report
+        .coalesce(1).sortWithinPartitions(col("rev").desc, col("n_name"))
     }),
 
     // Q10 shape — returned-item ranking: the 20 customers losing the most
@@ -194,11 +204,12 @@ object Workloads {
         .join(hot, col("o_orderkey") === col("l_orderkey"))
         .join(broadcast(Tables(s, d, "customer")),
           col("o_custkey") === col("c_custkey"))
+        .orderBy(col("total_qty").desc, col("o_orderkey"))
+        .limit(20)
+        // report columns are formatted after the top-k, on 20 rows
         .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("odate"),
           col("total_qty"))
-        .orderBy(col("total_qty").desc, col("o_orderkey"))
-        .limit(20)
     }),
 
     // Q21 shape — suppliers who kept orders waiting: on multi-supplier

@@ -10,8 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * the cost unit these budgets pin. The base tables are loaded into the
   * cache first, as a warm pass finds them. */
 class JobBudgetSpec extends SparkSpec {
-  private def jobs(query: String, tables: String*): Int = {
-    tables.foreach(t => Tables(spark, sf, t).count())
+  private def jobs(query: String, tables: Seq[String], dir: String = sf): Int = {
+    tables.foreach(t => Tables(spark, dir, t).count())
     val sc = spark.sparkContext
     val group = s"job-budget/$query"
     val n = new AtomicInteger
@@ -24,7 +24,7 @@ class JobBudgetSpec extends SparkSpec {
     sc.addSparkListener(counter)
     sc.setJobGroup(group, query, interruptOnCancel = false)
     try {
-      assert(SparkEntry.queries(query)(spark, sf).collect().nonEmpty)
+      assert(SparkEntry.queries(query)(spark, dir).collect().nonEmpty)
       GraftTestBus.drain(sc)
       n.get
     } finally {
@@ -34,12 +34,26 @@ class JobBudgetSpec extends SparkSpec {
   }
 
   test("q_llm_chi2_terms: one corpus pass and an unsampled final sort in <= 5 jobs") {
-    val n = jobs("q_llm_chi2_terms", "documents")
+    val n = jobs("q_llm_chi2_terms", Seq("documents"))
     assert(n <= 5, s"$n jobs")
   }
 
   test("q_sink_custom_dsv2: write, partial and final rollup in <= 3 jobs") {
-    val n = jobs("q_sink_custom_dsv2", "orders")
+    val n = jobs("q_sink_custom_dsv2", Seq("orders"))
     assert(n <= 3, s"$n jobs")
+  }
+
+  test("q_wl_shipping_priority: segment semi join and top-10 in <= 4 jobs") {
+    val n = jobs("q_wl_shipping_priority", Seq("customer", "orders", "lineitem"))
+    assert(n <= 4, s"$n jobs")
+  }
+
+  // at sf0.001 the report is one row and adaptive execution drops any
+  // sort of it, so the budget is taken where it has five
+  test("q_wl_local_volume: five joins and an unsampled final sort in <= 7 jobs at sf0.01") {
+    val n = jobs("q_wl_local_volume",
+      Seq("region", "nation", "customer", "supplier", "orders", "lineitem"),
+      "/root/testdata/sf0.01")
+    assert(n <= 7, s"$n jobs")
   }
 }

@@ -455,6 +455,38 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
   }
 
+  test("q_wl_shipping_priority: segment semi-joined into orders under the lineitem join, dates formatted after the top-10") {
+    import org.apache.spark.sql.catalyst.expressions.DateFormatClass
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val p = SparkEntry.queries("q_wl_shipping_priority")(spark, sf)
+      .queryExecution.sparkPlan
+    val semi = p.collect { case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }
+    assert(semi.length == 1, s"no single LeftSemi broadcast join:\n$p")
+    val liJoin = p.collect {
+      case j: BaseJoinExec
+          if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "l_orderkey")) => j
+    }
+    assert(liJoin.length == 1 && liJoin.head.find(_ eq semi.head).isDefined,
+      s"the segment semi join is not under the lineitem join:\n$p")
+    val aggs = p.collect { case a: HashAggregateExec => a }
+    assert(aggs.nonEmpty, p)
+    assert(aggs.flatMap(_.groupingExpressions)
+      .forall(_.find(_.isInstanceOf[DateFormatClass]).isEmpty),
+      s"date_format in an aggregate key:\n$p")
+    val top = p.collect { case t: TakeOrderedAndProjectExec => t }
+    assert(top.length == 1 && top.head.limit == 10, p)
+    assert(top.head.projectList.exists(_.find(_.isInstanceOf[DateFormatClass]).isDefined),
+      s"date_format not applied to the top-10 rows:\n$p")
+  }
+
+  test("q_wl_local_volume: the per-nation report is ordered without a range shuffle") {
+    val p = plan("q_wl_local_volume")
+    assert(!p.contains("rangepartitioning"), s"range sort of the report:\n$p")
+  }
+
   test("q_wl_promo_share: partial+final aggregate above one broadcast join") {
     val p = plan("q_wl_promo_share")
     assert(p.contains("BroadcastHashJoin"), p)

@@ -76,8 +76,8 @@ object Assay {
     // fixed 16 cells measured 28.4 s at ×10 vs 3.74 s under the growth
     // rule, and the flat build itself is 32·cells² ∝ N²); every gate
     // scale still resolves to the bit-exact flat 16-cell form the
-    // DuckDB mirror pins. `labelNoiseWith` keeps the pinned-geometry
-    // form `Scale.extraProbes` A/Bs at ×10/×100 cell counts.
+    // DuckDB mirror pins. `labelNoiseWith` is the flat form at an
+    // explicit cell count, the reference LearnSpec compares this against.
     "q_llm_label_noise" -> ((s, d) => labelNoiseFrom(nnTop3Auto(s, d))),
 
     // Cluster labeling — "what is each k-means cluster ABOUT": the top-5
@@ -469,11 +469,9 @@ object Assay {
   }
 
   private[graft] def nnTop3(s: SparkSession, d: String,
-      cells: Int, twoLevel: Boolean = false): DataFrame =
-    graft.Memo(s, s"nn3:$d:$cells:$twoLevel") {
-      val (qs, cand) =
-        if (twoLevel) Learn.trainedProbeFrames2L(s, d, cells, 5, 2)
-        else Learn.trainedProbeFrames(s, d, cells, 5)
+      cells: Int): DataFrame =
+    graft.Memo(s, s"nn3:$d:$cells") {
+      val (qs, cand) = Learn.trainedProbeFrames(s, d, cells, 5)
       nnTop3From(qs, cand).persist()
     }
 
@@ -489,12 +487,12 @@ object Assay {
       nnTop3From(qs, cand).persist()
     }
 
-  /** Parameterized label-noise sweep over an explicit geometry —
-    * `Scale.extraProbes` measures the flat-vs-2L A/B at pinned cell
-    * counts; the declared query is the [[nnTop3Auto]] dispatch. */
+  /** Label-noise sweep over the flat quantizer at an explicit cell
+    * count — the reference the declared [[nnTop3Auto]] dispatch must
+    * reproduce at gate scales (LearnSpec). */
   private[graft] def labelNoiseWith(s: SparkSession, d: String,
-      cells: Int, twoLevel: Boolean = false): DataFrame =
-    labelNoiseFrom(nnTop3(s, d, cells, twoLevel))
+      cells: Int): DataFrame =
+    labelNoiseFrom(nnTop3(s, d, cells))
 
   private[graft] def labelNoiseFrom(nn: DataFrame): DataFrame = {
     nn.groupBy("qid", "qlabel")

@@ -85,8 +85,9 @@ object Audit {
     * source crossing the wire), then a sources²-bounded broadcast pair
     * matrix. Denominators are sketch estimates as well (at 100 TB the
     * exact per-source distinct is itself a job you didn't run).
-    * Accuracy bracket vs the exact matrix is measured per scale by
-    * `graft.Scale hll` and recorded in BASELINE.md — the estimate
+    * Accuracy bracket vs the exact matrix: `graft.Scale hll` runs the
+    * declared q_llm_source_overlap_sketch entry against
+    * q_llm_source_overlap per scale (BASELINE.md) — the estimate
     * inherits ~1.6%σ per sketch and the subtraction compounds it, so
     * LOW-containment pairs carry large relative error (an absolute-
     * error instrument, like every inclusion–exclusion sketch). */

@@ -472,9 +472,8 @@ object Insights {
     // per vector, smallest-id representative) — the embedding-space
     // counterpart of the MinHash/SimHash lexical dedups, composed from
     // the same cell bound + dupGroups pieces. Candidates are same-cell
-    // only: at scale the bit count grows so each cell — and with it the
-    // per-task pair volume — stays constant.
-    "q_llm_dedup_semantic" -> ((s, d) => dedupSemanticWithBits(s, d, 4)),
+    // only, over the 16 sign-bit cells.
+    "q_llm_dedup_semantic" -> dedupSemantic _,
 
     // Perplexity-proxy quality score: per-doc mean unigram negative
     // log-likelihood under the corpus's own add-1-smoothed unigram LM —
@@ -609,11 +608,11 @@ object Insights {
     // sign-bit cells with Hamming-1 multi-probe — the build step of a
     // semantic-dedup / clustering pass. Candidates are bounded per cell;
     // the join is EQUI on the cell id (shuffle_hash: both sides scale
-    // with N, broadcast would be wrong at 100 TB). 16 cells is right for
-    // the 2k-vector sf0.1 fixture; at scale the bit count grows with N
-    // so per-cell population stays constant while the probe budget (the
-    // recall knob) stays fixed — measured at ×10/×100 in BASELINE.md.
-    "q_llm_knn_graph" -> ((s, d) => knnGraphWithBits(s, d, 4)),
+    // with N, broadcast would be wrong at 100 TB). The 4 sign bits fix
+    // 16 cells and 5 probes at every N, so per-query candidates grow as
+    // 5·N/16; the cells ∝ N route is q_llm_knn_graph_trained, and
+    // `graft.Scale recall` prints both against brute force.
+    "q_llm_knn_graph" -> knnGraph _,
 
     // Triangle counting with DEGREE ORIENTATION — the construction that
     // makes the wedge join feasible at scale: orient every edge from its
@@ -714,20 +713,12 @@ object Insights {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  /** Sign-bit coarse quantizer over the first `bits` embedding dims
-    * (2^bits cells). The declared IVF queries use bits=4 — 16 cells,
-    * right for the 2k-vector fixture; their scale notes prescribe
-    * growing the bit count with N so per-cell population stays constant.
-    * These parameterized forms exist so `Scale.extraProbes` can MEASURE
-    * that rule at ×10/×100 instead of leaving it as prose. */
-  private def cellOfBits(bits: Int) = expr((1 to bits)
-    .map(i => s"${1 << (i - 1)} * CAST(element_at(embedding, $i) > 0 AS INT)")
-    .mkString(" + "))
+  /** Sign-bit coarse quantizer over the first 4 embedding dims — 16
+    * cells, the geometry both sign-bit IVF queries declare. */
+  private def signCell = expr(
+    "1 * CAST(element_at(embedding, 1) > 0 AS INT) + 2 * CAST(element_at(embedding, 2) > 0 AS INT)" +
+      " + 4 * CAST(element_at(embedding, 3) > 0 AS INT) + 8 * CAST(element_at(embedding, 4) > 0 AS INT)")
 
-  /** Doc-to-doc kNN graph over 2^bits IVF cells. The multi-probe budget
-    * stays FIXED at 5 (own cell + 4 one-bit flips) at every bit count —
-    * probe count is the recall knob, independent of quantizer size — so
-    * per-query candidate volume is constant and total work linear in N. */
   /** 4 SEMI-SYNCHRONOUS label-propagation rounds over
     * [[U.coPurchaseEdges]] — odd rounds update the supplier side,
     * even rounds the customer side (see q_graph_label_prop: the fully
@@ -1082,24 +1073,16 @@ object Insights {
       .collect()(0).getDouble(0)
   }
 
-  /** `flips` = how many neighbor cells to probe besides the query's own
-    * (the probe BUDGET — the recall knob): first the `bits` single-bit
-    * flips, then two-bit flips in index order. The declared query uses 4
-    * (5 probes total); Scale.recall measures what the budget buys: with
-    * cells ∝ N and the budget FIXED, cost stays linear but the probed
-    * fraction (1+flips)/2^bits shrinks and recall@k decays with it, so a
-    * constant-recall deployment grows flips with bits. */
-  private[graft] def knnGraphWithBits(s: org.apache.spark.sql.SparkSession,
-      d: String, bits: Int, flips: Int = 4): org.apache.spark.sql.DataFrame = {
+  /** Doc-to-doc kNN graph over the 16 sign-bit cells. Each query probes
+    * its own cell and the 4 one-bit flips (5 of 16 cells), so per-query
+    * candidate volume is 5·(N/16) and the equi-join on the cell id is the
+    * only candidate source. */
+  private def knnGraph(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val singles = (0 until bits).map(b => 1 << b)
-    val doubles = for { i <- 0 until bits; j <- i + 1 until bits }
-      yield (1 << i) | (1 << j)
-    val probes = "cell" +: (singles ++ doubles).take(flips)
-      .map(m => s"cell ^ $m")
-    val emb = Tables(s, d, "embeddings").withColumn("cell", cellOfBits(bits))
+    val emb = Tables(s, d, "embeddings").withColumn("cell", signCell)
     val qs = emb.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-      explode(expr(probes.mkString("array(", ", ", ")"))).as("probe"))
+      explode(expr("array(cell, cell ^ 1, cell ^ 2, cell ^ 4, cell ^ 8)")).as("probe"))
     val cand = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"),
       col("cell").as("ccell"))
     val w = Window.partitionBy("qid").orderBy(col("dot").desc, col("cid"))
@@ -1112,14 +1095,13 @@ object Insights {
       .orderBy("qid", "rnk")
   }
 
-  /** Semantic dedup over 2^bits IVF cells: same-cell candidate pairs,
-    * codegen'd dot ≥ 0.42 confirm, then transitive dup groups. Cells
-    * ∝ N keeps per-cell population c constant, so pair volume
-    * (cells · c²/2) grows linearly with N. */
-  private[graft] def dedupSemanticWithBits(s: org.apache.spark.sql.SparkSession,
-      d: String, bits: Int): org.apache.spark.sql.DataFrame = {
+  /** Semantic dedup over the 16 sign-bit cells: same-cell candidate
+    * pairs, codegen'd dot ≥ 0.42 confirm, then transitive dup groups.
+    * Pair volume is cells · c²/2 for per-cell population c. */
+  private def dedupSemantic(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val emb = Tables(s, d, "embeddings").withColumn("cell", cellOfBits(bits))
+    val emb = Tables(s, d, "embeddings").withColumn("cell", signCell)
     val a = emb.select(col("vec_id").as("a"), col("embedding").as("ea"),
       col("cell").as("ca"))
     val b = emb.select(col("vec_id").as("b"), col("embedding").as("eb"),

@@ -205,13 +205,13 @@ object Learn {
     * (measured on the PQ family's shared build: the ×100/2048c cold
     * trainer decomposition at BASELINE "q_llm_label_noise scaling"). */
   private[graft] def coarseModelAuto(s: org.apache.spark.sql.SparkSession,
-      d: String, cells: Int, w2l: Int = W2L): (DataFrame, DataFrame) =
+      d: String, cells: Int): (DataFrame, DataFrame) =
     if (cells <= FLAT_MAX_CELLS) {
       val (_, cand) = trainedProbeFrames(s, d, cells, 5)
       (cand, trainedCentFrame(s, d, cells)
         .select(col("cid").as("gcell"), col("c").as("gc")))
     } else {
-      val (_, cand) = trainedProbeFrames2L(s, d, cells, PROBES2L, w2l)
+      val (_, cand) = trainedProbeFrames2L(s, d, cells, PROBES2L, W2L)
       (cand, twoLevelModel(s, d, cells)._2
         .select(col("ccid").as("gcell"), col("c").as("gc")))
     }
@@ -247,8 +247,8 @@ object Learn {
     * With w = #super-cells the probed set is ALL centroids and the
     * result is bit-identical to the flat pass (the hierarchy is then
     * just a partition of the centroid table) — LearnSpec pins that
-    * identity; the scale probes run w=2 and the recall harness prices
-    * what the skipped super-cells cost. The same grid arithmetic and
+    * identity and that w = 2 still agrees on ≥ 90% of vectors; the
+    * declared geometry serves w = [[W2L]]. The same grid arithmetic and
     * (d2, id) tie-breaks keep both levels deterministic. */
   /** (super-centroids, sub-centroids-with-super-cell) — the two-level
     * model frames, memoized per (session, sfDir, cells).
@@ -377,10 +377,10 @@ object Learn {
   }
 
   /** Two-level probe/assignment frames — memoized like
-    * [[trainedProbeFrames]]. Since round 13 this is the DECLARED build
-    * past [[FLAT_MAX_CELLS]] (via [[probeFramesAuto]] /
-    * [[coarseModelAuto]]); the explicit-geometry form stays for the A/B
-    * probes (`x_label_noise_*_2l`, `x_knn_2l_*`, the recall harness). */
+    * [[trainedProbeFrames]]. The DECLARED build past [[FLAT_MAX_CELLS]]
+    * (via [[probeFramesAuto]] / [[coarseModelAuto]], at [[PROBES2L]] and
+    * [[W2L]]); `w` stays a parameter because LearnSpec checks the
+    * w = √cells exactness identity against it. */
   private[graft] def trainedProbeFrames2L(s: org.apache.spark.sql.SparkSession,
       d: String, cells: Int, probes: Int, w: Int): (DataFrame, DataFrame) =
     graft.Memo(s, s"probeframes2l:$d:$cells:$probes:$w") {
@@ -421,12 +421,12 @@ object Learn {
     knnFromFrames(qs, cand, negatives)
   }
 
-  /** kNN graph over the TWO-LEVEL quantizer — same bucketed equi-join
-    * as [[knnGraphTrained]], candidates drawn through the hierarchical
-    * assignment; the recall harness prices it against the flat pass. */
+  /** kNN graph over the TWO-LEVEL quantizer at 5 probes — same
+    * bucketed equi-join as [[knnGraphTrained]], candidates drawn through
+    * the hierarchical assignment of the top-`wSup` super-cells. */
   private[graft] def knnGraphTrained2L(s: org.apache.spark.sql.SparkSession,
-      d: String, cells: Int, wSup: Int, probes: Int = 5): DataFrame = {
-    val (qs, cand) = trainedProbeFrames2L(s, d, cells, probes, wSup)
+      d: String, cells: Int, wSup: Int): DataFrame = {
+    val (qs, cand) = trainedProbeFrames2L(s, d, cells, 5, wSup)
     knnFromFrames(qs, cand, negatives = false)
   }
 

@@ -56,19 +56,14 @@ import U._
   */
 object Refine {
 
-  /** Declared PQ geometry: 64 dims → M subspaces × (64/M) dims, K codes
+  /** The PQ geometry: 64 dims → M subspaces × (64/M) dims, K codes
     * each, 2 Lloyd rounds on a ~32·K stride sample. M·log₂K is the code
-    * budget in BITS per vector — the knob the round-12 recall frontier
-    * (Scale recall `simsearch_pq_m*k*` grid, 4 geometries × 3 shortlist
-    * depths × 3 scales, all THROUGH this pipeline) priced before the
-    * default was chosen: 8×16 = 32 bits (16× compression, 8 code bytes
-    * + id per vector) reads shortlist-200 rerank recall@3
-    * 0.865/0.677/0.604 at ×1/×10/×100 where the round-11 4×8 pure-ADC
-    * declared form read 0.073/0.042/0.031 — past the ≥0.5 bar at every
-    * scale, and the best point of the whole measured grid (BASELINE.md
-    * ANN table). `pqAdcScores`/`pqRerank` keep the geometry as
-    * parameters so every grid point stays A/B-measurable against the
-    * declared form. */
+    * budget in BITS per vector: 8×16 = 32 bits (16× compression, 8 code
+    * bytes + id per vector). A round-12 grid of 4 geometries × 3
+    * shortlist depths × 3 scales chose it: shortlist-200 rerank recall@3
+    * 0.865/0.677/0.604 at ×1/×10/×100, where the round-11 4×8 pure-ADC
+    * form read 0.073/0.042/0.031 (BASELINE.md ANN table; that grid is
+    * a record of a deleted probe). */
   private[graft] val M = 8
   private[graft] val KPQ = 16
   private val SUBDIM = 64 / M
@@ -126,8 +121,8 @@ object Refine {
       .as("q"))
 
   /** Quantizer-growth rule, DECLARED (round 11): coarse cells =
-    * 2^max(4, round(log₂(N/125))) — the same cells-∝-N law `graft.Scale
-    * recall` anchors at the fixture's ~2k vectors → 16 cells (so every
+    * 2^max(4, round(log₂(N/125))) — cells ∝ N, anchored at the
+    * fixture's ~2k vectors → 16 cells (so every
     * gate scale ≤ sf0.1 resolves to 16 and the fixed-16 DuckDB mirror
     * stays exact), 128 at ×10, 2048 at ×100. Growing cells with N keeps
     * per-cell population — hence residual spread — CONSTANT, which is
@@ -195,11 +190,10 @@ object Refine {
     * free (shortlist ≪ N raw vectors touched per query). Emits
     * (qid, cid, d2x, rnk) — exact BIGINT distances, hash-stable. */
   private[graft] def pqRerank(s: org.apache.spark.sql.SparkSession, d: String,
-      shortlist: Int, cells: Int = -1, m: Int = M, kpq: Int = KPQ,
-      probes: Int = -1, w2l: Int = Learn.W2L)
+      shortlist: Int, cells: Int, probes: Int = -1)
     : org.apache.spark.sql.DataFrame = {
     val wA = Window.partitionBy("qid").orderBy(col("adc"), col("cid"))
-    val short = pqAdcScores(s, d, cells, m, kpq, probes, w2l)
+    val short = pqAdcScores(s, d, cells, probes)
       .withColumn("rk", row_number().over(wA)).where(col("rk") <= shortlist)
       .select("qid", "cid")
     val grid = gridVecs(s, d)
@@ -215,43 +209,35 @@ object Refine {
 
   /** The full IVF-PQ pipeline up to the per-(query, candidate) ADC
     * score — RESIDUAL encoding (round 10): vectors are first assigned
-    * to the memoized 16-cell trained coarse quantizer
-    * (`Learn.trainedProbeFrames` — the SAME frames
+    * to the memoized `cells`-cell coarse model
+    * ([[Learn.coarseModelAuto]] — the SAME frames
     * q_llm_knn_graph_trained & co already share, zero extra training),
     * and PQ quantizes the residual x − centroid(x), not the raw
     * vector. This is IVF-PQ proper (Jégou et al.'s "encode the
     * residual" recipe): residuals are concentrated around 0 with far
-    * smaller spread than raw vectors, so the same M=4×K=8 integer-grid
+    * smaller spread than raw vectors, so the [[M]]×[[KPQ]] integer-grid
     * codebooks capture them with materially less quantization error —
     * the round-9 raw-vector ADC measured recall 0.00–0.05 at ×10/×100
-    * (BASELINE "ANN recall"), the round-10 residual form is re-measured
-    * there. Serving reads per-(query, coarse-cell) distance tables:
-    * ‖q − c − r̂‖² decomposes exactly over the disjoint dim slices as
-    * Σₘ‖(q−c)ₘ − cbₘ[code]‖², so ADC stays an exact BIGINT given the
-    * codes — the table is Q·cells·M·K rows (32·16·4·8 = 16 k,
-    * broadcast); at 100 TB the query side prices only its PROBED cells
-    * (Q·probes·M·K), the composition q_llm_knn_graph_trained already
-    * demonstrates. The candidate side never touches a raw vector after
-    * encoding: one byte-scale code row per vector per subspace. */
-  /** `cells` parametrizes the coarse quantizer. The default −1 derives
-    * it from the corpus via [[cellsFor]] (the quantizer-growth rule,
-    * cells ∝ N) — since round 11 that IS the declared form: the round-10
-    * fixed-16 declared plan's own ANN table showed pure-ADC recall 0.00
-    * at ×10/×100, so the growth rule every other ANN member applies
-    * moved into the declared operator. An explicit positive `cells`
-    * pins the geometry for A/B probes (`graft.Scale recall`). */
-  /** `probes` > 0 restricts the query side to each query's `probes`
-    * nearest coarse cells by EXACT grid ‖q − c‖² (the IVF probe list —
-    * Q·cells tiny rows, rank-windowed per query) BEFORE the codes join,
-    * so per-query candidate volume is probes·(N/cells): CONSTANT under
-    * the cells ∝ N growth rule — the sub-linear serving form. −1 =
-    * exhaustive ADC over all cells (the q_llm_simsearch_pq form). */
+    * (BASELINE "ANN recall"). Serving reads per-(query, coarse-cell)
+    * distance tables: ‖q − c − r̂‖² decomposes exactly over the disjoint
+    * dim slices as Σₘ‖(q−c)ₘ − cbₘ[code]‖², so ADC stays an exact BIGINT
+    * given the codes — the table is Q·cells·M·K rows (32·16·8·16 = 64 k
+    * at the gate scales' 16 cells, broadcast). The candidate side never
+    * touches a raw vector after encoding: one byte-scale code row per
+    * vector per subspace.
+    *
+    * Both declared entries pass `cells` = [[cellsFor]] (the
+    * quantizer-growth rule, cells ∝ N — the round-10 fixed-16 form
+    * measured pure-ADC recall 0.00 at ×10/×100). `probes` > 0 restricts
+    * the query side to each query's `probes` nearest coarse cells by
+    * EXACT grid ‖q − c‖² (the IVF probe list — Q·cells tiny rows,
+    * rank-windowed per query) BEFORE the codes join, so per-query
+    * candidate volume is probes·(N/cells): CONSTANT under the cells ∝ N
+    * growth rule — the sub-linear serving form. −1 = exhaustive ADC
+    * over all cells (the q_llm_simsearch_pq form). */
   private[graft] def pqAdcScores(s: org.apache.spark.sql.SparkSession,
-      d: String, cells0: Int = -1, m: Int = M, kpq: Int = KPQ,
-      probes: Int = -1, w2l: Int = Learn.W2L)
+      d: String, cells: Int, probes: Int = -1)
     : org.apache.spark.sql.DataFrame = {
-    val cells = if (cells0 > 0) cells0 else cellsFor(s, d)
-    val sub = 64 / m
     graft.functions.GraftFunctions.register(s)
     // coarse assignment: the memoized frames every trained-quantizer
     // consumer shares, under the round-13 DECLARED dispatch
@@ -263,7 +249,7 @@ object Refine {
     // end-to-end at ×100). cand = (cid2, ce, clabel, ccell) — each
     // vector's argmin cell, tie-broken (d2, cid) exactly like the
     // oracle's rank-1 window; centG = that quantizer's (cell, centroid).
-    val (cand, centG) = Learn.coarseModelAuto(s, d, cells, w2l)
+    val (cand, centG) = Learn.coarseModelAuto(s, d, cells)
     // residuals on the 1e-6 grid: r = grid(x) − centroid(cell(x)) — one
     // broadcast map pass over the assignment frame, no extra shuffle.
     // Memoized + LAZY localCheckpoint (not persist): the coarse
@@ -275,7 +261,7 @@ object Refine {
     // over neighboring bench queries). localCheckpoint truncates the
     // LOGICAL plan to a LogicalRDD immediately while staying lazy, so
     // plan-only consumers remain execution-free.
-    val res = graft.Memo(s, s"pq-res:$d:$cells:$w2l") {
+    val res = graft.Memo(s, s"pq-res:$d:$cells") {
       cand.select(col("cid2").as("vec_id"), col("ccell").as("gcell"),
           expr("transform(ce, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))")
             .as("q"))
@@ -294,16 +280,16 @@ object Refine {
     // tables — share ONE training materialization instead of each
     // re-running the sampled Lloyd subplan; plan-only consumers stay
     // execution-free because persist() is lazy.
-    val cbs = graft.Memo(s, s"pq-res-codebooks:$d:$cells:$m:$kpq:$w2l") {
+    val cbs = graft.Memo(s, s"pq-res-codebooks:$d:$cells") {
       val sampleStep = res.agg(
-        expr(s"greatest(CAST(1 AS BIGINT), count(1) div ${32L * kpq})").as("st"))
+        expr(s"greatest(CAST(1 AS BIGINT), count(1) div ${32L * KPQ})").as("st"))
       val sample = res.crossJoin(broadcast(sampleStep))
         .where(col("vec_id") % col("st") === 0)
         .select(col("vec_id"), col("r").as("q"), col("st"))
-      (0 until m).map { mi =>
+      (0 until M).map { mi =>
         val subf = sample.select(col("vec_id"),
-          slice(col("q"), mi * sub + 1, sub).as("sq"), col("st"))
-        var cent = subf.where(col("vec_id") < lit(kpq.toLong) * col("st"))
+          slice(col("q"), mi * SUBDIM + 1, SUBDIM).as("sq"), col("st"))
+        var cent = subf.where(col("vec_id") < lit(KPQ.toLong) * col("st"))
           .select(expr("CAST(vec_id div st AS INT)").as("cid"), col("sq").as("c"))
         for (_ <- 1 to ROUNDS) {
           val asg = subf.crossJoin(broadcast(cent))
@@ -326,8 +312,8 @@ object Refine {
     }
     // every vector's M residual subvectors (tagged with its coarse cell)
     val subs = res.select(col("vec_id"), col("gcell"), explode(expr(
-        s"""transform(sequence(0, ${m - 1}), m -> named_struct(
-             'm', CAST(m AS INT), 'sq', slice(r, m * $sub + 1, $sub)))"""))
+        s"""transform(sequence(0, ${M - 1}), m -> named_struct(
+             'm', CAST(m AS INT), 'sq', slice(r, m * $SUBDIM + 1, $SUBDIM)))"""))
         .as("e"))
       .select(col("vec_id"), col("gcell"), col("e.m").as("m"), col("e.sq").as("sq"))
     // encode: argmin code per (vector, subspace) — a broadcast map pass
@@ -343,8 +329,8 @@ object Refine {
       .select(col("vec_id").as("qid"), col("gcell"),
         expr("zip_with(q, gc, (x, y) -> x - y)").as("qr"))
       .select(col("qid"), col("gcell"), explode(expr(
-        s"""transform(sequence(0, ${m - 1}), m -> named_struct(
-             'm', CAST(m AS INT), 'sq', slice(qr, m * $sub + 1, $sub)))"""))
+        s"""transform(sequence(0, ${M - 1}), m -> named_struct(
+             'm', CAST(m AS INT), 'sq', slice(qr, m * $SUBDIM + 1, $SUBDIM)))"""))
         .as("e"))
       .select(col("qid"), col("gcell"), col("e.m").as("m"), col("e.sq").as("sq"))
     val dtab0 = qres.join(broadcast(cbs), "m")
@@ -374,7 +360,7 @@ object Refine {
     // the declared query and the re-rank probe each window over it, and
     // the query-side tables still carry the coarse trainer's lineage —
     // per-invocation analysis must stop at a LogicalRDD leaf
-    graft.Memo(s, s"pq-adc:$d:$cells:$m:$kpq:$probes:$w2l") {
+    graft.Memo(s, s"pq-adc:$d:$cells:$probes") {
       codes.join(dtabSide, Seq("gcell", "m", "code"))
         .where(col("qid") =!= col("vec_id"))
         .select(col("qid"), col("vec_id").as("cid"), col("d2"))
@@ -401,9 +387,8 @@ object Refine {
     // BASELINE.md), and the deeper exact re-rank — whose cost is ∝ √N
     // raw reads per query, never ∝ N — buys recall PAST the old flat
     // build: 0.86 / 0.76 / 0.85 recall@3 at ×1/×10/×100 vs the r12
-    // declared form's 0.86 / 0.68 / 0.60 (BASELINE.md ANN table; every
-    // grid point stays probe-able via the pqAdcScores/pqRerank
-    // parameters).
+    // declared form's 0.86 / 0.68 / 0.60 (BASELINE.md ANN table;
+    // `graft.Scale recall` re-measures this entry against brute force).
     "q_llm_simsearch_pq" -> ((s, d) => {
       val cells = cellsFor(s, d)
       pqRerank(s, d, shortlistFor(cells), cells).orderBy("qid", "rnk")
@@ -424,7 +409,7 @@ object Refine {
     // the DuckDB mirror pins the same restriction.
     "q_llm_simsearch_pq_probe" -> ((s, d) => {
       val cells = cellsFor(s, d)
-      pqRerank(s, d, shortlistFor(cells), cells, M, KPQ,
+      pqRerank(s, d, shortlistFor(cells), cells,
         probesForCells(cells)).orderBy("qid", "rnk")
     }),
 

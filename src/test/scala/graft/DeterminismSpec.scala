@@ -43,6 +43,14 @@ class DeterminismSpec extends SparkSpec {
       val b = SparkEntry.queries(name)(s2, sf).collect().toSeq
       assert(a == b, s"$name changes under a different partition count")
     }
+    // at sf0.001 q_wl_local_volume returns one row, which cannot show an
+    // ordering or merge-order dependence; the sf0.01 fixture gives it 5
+    val sf01 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val lv = SparkEntry.queries("q_wl_local_volume")
+    val a = lv(spark, sf01).collect().toSeq
+    assert(a.length > 1, s"q_wl_local_volume returned ${a.length} rows at sf0.01")
+    assert(a == lv(s2, sf01).collect().toSeq,
+      "q_wl_local_volume changes under a different partition count at sf0.01")
   }
 
   test("oracleSql keys are a subset of queries keys") {

@@ -62,12 +62,12 @@ class PlanLockSpec extends SparkSpec {
     assert(hits.isEmpty, s"environment reads in plan code:\n${hits.mkString("\n")}")
   }
 
-  test("src/main reads the environment only in GraftSession, Bench and Scale") {
-    // the env knobs are read in the session builder and the two harness
-    // mains; a read anywhere else would add a knob outside those owners
+  test("src/main reads the environment only in GraftSession and Bench") {
+    // the env knobs are read in the session builder and the bench main;
+    // a read anywhere else would add a knob outside those owners
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val allowed = Seq("GraftSession", "Bench", "Scale")
+    val allowed = Seq("GraftSession", "Bench")
       .map(n => Paths.get(s"src/main/scala/graft/$n.scala")).toSet
     val files = scalaFiles("src/main/scala/graft").filterNot(allowed)
     assert(files.nonEmpty, "no main sources found")
@@ -77,7 +77,7 @@ class PlanLockSpec extends SparkSpec {
       if line.contains("sys.env") || line.contains("System.getenv")
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty,
-      s"environment reads outside GraftSession, Bench and Scale:\n${hits.mkString("\n")}")
+      s"environment reads outside GraftSession and Bench:\n${hits.mkString("\n")}")
   }
 
   test("only graft.sources names the commit table's formats (GraftTable owns the address)") {

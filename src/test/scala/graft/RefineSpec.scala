@@ -93,7 +93,7 @@ class RefineSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     val vacuous = rows(Refine.pqRerank(spark, sf, Refine.SHORTLIST, 16,
-      Refine.M, Refine.KPQ, 16))
+      probes = 16))
     val exhaustive = rows(Refine.queries("q_llm_simsearch_pq")(spark, sf))
     assert(vacuous === exhaustive,
       "probes = cells must be exactly the exhaustive form")

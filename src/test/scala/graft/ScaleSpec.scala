@@ -9,8 +9,10 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_scale_x2"
+    // a fresh directory per run: two concurrent suites must not share it
+    val out = java.nio.file.Files.createTempDirectory("graft_scale_x2").toString
     Scale.gen(spark, sf, out, 2)
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(out))
     out
   }
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.sources.GraftTable
+import graft.sources.{GraftCommitMeta, GraftTable}
 import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset,
   SparkSession}
 import org.apache.spark.sql.functions._
@@ -108,11 +108,15 @@ object Scans {
     try { GraftTable.read(s, out, KC, Some(0)).count(); 0L }
     catch { case _: java.io.FileNotFoundException => 1L }
 
+  /** Generation g's history manifest under `out`. */
+  private def histFile(out: String, g: Long): java.io.File = new java.io.File(
+    GraftCommitMeta.manifestPath(new org.apache.hadoop.fs.Path(out), Some(g)).toUri.getPath)
+
   /** Generations committed under `out` (one history manifest each). */
   private def generations(out: String): Long =
     Option(new java.io.File(out).listFiles())
       .getOrElse(Array.empty[java.io.File])
-      .count(_.getName.matches("_GRAFT_COMMIT\\.g\\d+")).toLong
+      .count(f => GraftCommitMeta.histGen(f.getName) >= 0L).toLong
 
   val queries: Map[String, Q] = Map(
     // The two scan queries read parquet directly (not through the Tables
@@ -725,8 +729,7 @@ object Scans {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(out, "part-99999-g0009.tsv"),
         "0\t0\n".getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(out, "_GRAFT_COMMIT.g0009"),
+      java.nio.file.Files.write(histFile(out, 9L).toPath,
         "#gen\t9\npart-99999-g0009.tsv\t1\t2\n".getBytes("UTF-8"))
       val (nManifests, nParts) =
         graft.sources.GraftCommitVacuum.vacuum(s, out, keep = 2)
@@ -764,9 +767,8 @@ object Scans {
       // age the pre-binpack histories past the horizon (the manifest
       // mtime IS the commit time — planted here to make age testable)
       val tenDaysAgo = System.currentTimeMillis() - 10L * 86400 * 1000
-      Seq("_GRAFT_COMMIT.g0000", "_GRAFT_COMMIT.g0001").foreach { f =>
-        require(new java.io.File(out, f).setLastModified(tenDaysAgo),
-          s"could not age $f")
+      Seq(0L, 1L).map(histFile(out, _)).foreach { f =>
+        require(f.setLastModified(tenDaysAgo), s"could not age $f")
       }
       val sevenDays = 7L * 86400 * 1000
       val (dryMan, dryParts) = graft.sources.GraftCommitVacuum.vacuumAged(

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
@@ -29,11 +29,9 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType
   *    spec-asserted);
   *  - the rewrite stages under `<path>/_merge` through the sink's own
   *    two-phase commit (invisible until fully committed there), then
-  *    publishes under the table lease with the compact() discipline:
-  *    generation re-read and REFUSED if the table advanced while
-  *    staging; gen-ahead debris swept (retry-safe under HDFS rename
-  *    semantics); tmp manifest → immutable history copy → pointer swap,
-  *    so every crash point leaves old-or-new, never mixed;
+  *    publishes through [[GraftCommitCompact.publishStaged]] — REFUSED
+  *    if the table advanced while staging, and every crash point leaves
+  *    old-or-new, never mixed;
   *  - REPLACED parts are NOT deleted: prior generations still reference
   *    them, so as-of reads BEFORE the delete/merge still see the
   *    pre-mutation rows (time travel composes; retention vacuum retires
@@ -94,21 +92,8 @@ object GraftCommitMerge {
     * @return (tombstone files published, keys recorded) */
   def deleteMor(spark: SparkSession, path: String, schemaDdl: String,
       keyCol: String, deleteKeys: DataFrame): (Int, Long) = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen0, cols0, entries0) =
-      GraftCommitMeta.readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
-    if (gen0 < 0L)
-      throw new java.io.FileNotFoundException(
-        s"no _GRAFT_COMMIT manifest under $path — nothing to delete from")
-    val schema = StructType.fromDDL(schemaDdl)
-    val keyIdx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(keyCol))
-    require(keyIdx >= 0, s"key column '$keyCol' not in schema [$schemaDdl]")
-    val sig = GraftCommitMeta.colsSig(schema)
-    if (cols0.exists(_ != sig))
-      throw new java.io.IOException(
-        s"delete schema [$schemaDdl] does not match the committed " +
-          s"signature [${cols0.get}] — pass the table's current full schema")
+    val Target(dir, fs, cur, schema, keyIdx, sig) =
+      target(spark, path, schemaDdl, keyCol, "delete", "delete from")
     val stage = new Path(dir, "_merge")
     fs.delete(stage, true)
     // distinct: tombstones are a SET — re-deleting a key must not grow
@@ -117,10 +102,9 @@ object GraftCommitMerge {
       .select(col("__gm_key").cast(schema.fields(keyIdx).dataType))
       .where(col("__gm_key").isNotNull)
       .distinct().repartition(1), stage.toString, "overwrite")
-    val (_, _, stageEntries) = GraftCommitMeta.readManifestFile(
-      fs, new Path(stage, "_GRAFT_COMMIT"))
-    val published = GraftCommitCompact.publishStaged(fs, dir, gen0, stage,
-      stageEntries, sig, carried = entries0, what = "mor-delete",
+    val stageEntries = readManifestFile(fs, manifestPath(stage)).entries
+    val published = GraftCommitCompact.publishStaged(fs, dir, cur.gen, stage,
+      stageEntries, sig, carried = cur.entries, what = "mor-delete",
       prefix = "del", entryNcols = Some(keyIdx)) { (cols, _) =>
       if (cols.exists(_ != sig))
         throw new java.io.IOException(
@@ -146,35 +130,44 @@ object GraftCommitMerge {
       upserts.select(keyCol).unionByName(deleteKeys.toDF(keyCol)),
       insert = Some(upserts))
 
+  /** A keyed rewrite's target: the table's committed manifest, the
+    * schema, the key column's index in it, and its column signature. */
+  private case class Target(dir: Path, fs: FileSystem,
+    cur: GraftManifest, schema: StructType, keyIdx: Int, sig: String)
+
+  /** Reads the committed manifest (refusing with "nothing to `nothing`"
+    * when there is none) and resolves the key column. The rewrite must
+    * read/write the table's exact current signature — a narrower schema
+    * would silently drop columns from the live view. */
+  private def target(spark: SparkSession, path: String, schemaDdl: String,
+      keyCol: String, op: String, nothing: String): Target = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = committed(fs, dir, s"nothing to $nothing")
+    val schema = StructType.fromDDL(schemaDdl)
+    val keyIdx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(keyCol))
+    require(keyIdx >= 0, s"key column '$keyCol' not in schema [$schemaDdl]")
+    val sig = colsSig(schema)
+    if (cur.cols.exists(_ != sig))
+      throw new java.io.IOException(
+        s"$op schema [$schemaDdl] does not match the committed " +
+          s"signature [${cur.cols.get}] — pass the table's current full schema")
+    Target(dir, fs, cur, schema, keyIdx, sig)
+  }
+
   private def run(spark: SparkSession, path: String, schemaDdl: String,
       keyCol: String, keys: DataFrame,
       insert: Option[DataFrame]): MergeReport = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen0, cols0, entries0) =
-      readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
-    if (gen0 < 0L)
-      throw new java.io.FileNotFoundException(
-        s"no _GRAFT_COMMIT manifest under $path — nothing to merge into")
-    val schema = StructType.fromDDL(schemaDdl)
-    val keyIdx = schema.fieldNames
-      .indexWhere(_.equalsIgnoreCase(keyCol))
-    require(keyIdx >= 0, s"key column '$keyCol' not in schema [$schemaDdl]")
-    // the rewrite must read/write the table's exact current signature —
-    // a narrower schema would silently drop columns from the live view
-    val sig = colsSig(schema)
-    if (cols0.exists(_ != sig))
-      throw new java.io.IOException(
-        s"merge schema [$schemaDdl] does not match the committed " +
-          s"signature [${cols0.get}] — pass the table's current full schema")
+    val Target(dir, fs, cur, schema, keyIdx, sig) =
+      target(spark, path, schemaDdl, keyCol, "merge", "merge into")
+    val entries0 = cur.entries
 
     // ---- affected-part selection (metadata + one broadcast join) ----
     // merge-on-read tombstones are not data: they carry forward
     // verbatim (they still apply to every untouched part; applying them
     // to the rewritten parts is idempotent — the staged read already
     // filtered those rows)
-    val (tombs, dataEntries) =
-      entries0.partition(GraftCommitMeta.isDeleteEntry)
+    val (tombs, dataEntries) = entries0.partition(isDeleteEntry)
     // provably clean: the key column was appended AFTER the part was
     // written — every key there is NULL, equality can never match
     val (evolutionClean, inPlay) =
@@ -257,18 +250,15 @@ object GraftCommitMerge {
     // shuffle.partitions files; size the staged layout to the rewrite
     GraftTable.write(staged.repartition(targetParts), stage.toString,
       "overwrite")
-    val (_, stageCols, stageEntries) =
-      readManifestFile(fs, new Path(stage, "_GRAFT_COMMIT"))
+    val stagedMan = readManifestFile(fs, manifestPath(stage))
+    val (stageCols, stageEntries) = (stagedMan.cols, stagedMan.entries)
 
-    // ---- publish under the table lease (the shared staged-publish
-    // discipline: advanced-generation refusal, gen-ahead debris sweep,
-    // heartbeated renames, tmp → history → pointer swap; untouched
-    // entries carry VERBATIM — zero bytes moved — and replaced parts
-    // stay on disk for the prior generations that reference them) ----
+    // ---- publish under the table lease; untouched entries carry
+    // VERBATIM — zero bytes moved ----
     val affectedRows = affected.map(_.rows).sum
     val stagedRows = stageEntries.map(_.rows).sum
     val removed = affectedRows + insertCnt - stagedRows
-    GraftCommitCompact.publishStaged(fs, dir, gen0, stage, stageEntries,
+    GraftCommitCompact.publishStaged(fs, dir, cur.gen, stage, stageEntries,
       sig, carried = untouched, what = "merge") { (cols, _) =>
       if (cols.exists(c => !stageCols.contains(c)))
         throw new java.io.IOException(

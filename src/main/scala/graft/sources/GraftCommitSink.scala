@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.{Map => JMap}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -213,15 +213,35 @@ case class GraftColStat(num: Option[(String, String)] = None,
   str: Option[(Array[Byte], Option[Array[Byte]])] = None,
   nulls: Option[Long] = None)
 
-/** Manifest parsing/naming shared by the sink's commit, its abort, the
-  * manifest reader, and the retention vacuum — one definition of the
-  * on-disk format so the four consumers cannot drift.
+/** A parsed manifest: its generation (-1 = no manifest; a legacy one
+  * without `#gen` reads as 0), its column signature, the last committed
+  * streaming (queryId, epochId) from `#epoch` (None for batch-written or
+  * pre-r14 manifests), and its entries. */
+case class GraftManifest(gen: Long, cols: Option[String],
+  epoch: Option[(String, Long)], entries: Seq[GraftManEntry])
+
+/** The commit log's one owner: its file names, the manifest parse, and
+  * every step that makes a generation durable or retires one. The
+  * sink's commit and abort, the staged rewrites (compact, binpack,
+  * merge/delete), retention and the manifest reader all call these, so
+  * the order of the protocol's filesystem mutations is kept here:
   *
-  * Format (round 13):
+  *  - names: the current pointer `_GRAFT_COMMIT`, immutable history
+  *    copies `_GRAFT_COMMIT.gGGGG`, tmp manifests `_GRAFT_COMMIT.gG.tmp`,
+  *    parts `part-NNNNN-gGGGG.tsv`, tombstones `del-NNNNN-gGGGG.tsv` and
+  *    the lease `_GRAFT_LOCK` ([[manifestPath]], [[fileName]]);
+  *  - publish: [[renameParts]], then [[publish]] (tmp → history →
+  *    pointer swap);
+  *  - sweeps: [[sweepAhead]] (uncommitted gen-ahead debris),
+  *    [[sweepTmpManifests]], [[sweepStaleStaging]];
+  *  - the single-writer lease: [[withLease]], [[heartbeatLease]].
+  *
+  * Format (round 13; `#epoch` round 14, streaming commits only):
   * {{{
   *   #gen\tG
   *   #cols\tname:type,name:type,...   (generation's column signature)
-  *   part-NNNNN-gGGGG.tsv\trows\tncols
+  *   #epoch\tqueryId:epochId
+  *   part-NNNNN-gGGGG.tsv\trows\tncols[\tstats]
   * }}}
   * `#cols` and the per-entry `ncols` are the SCHEMA-EVOLUTION carriers:
   * columns are append-only across generations (the mergeSchema
@@ -230,9 +250,20 @@ case class GraftColStat(num: Option[(String, String)] = None,
   * Legacy manifests (no `#cols`, 2-field entries) parse with
   * `cols = None` / `ncols = -1` and keep their strict semantics. */
 private[graft] object GraftCommitMeta {
-  def readManifestFile(fs: FileSystem, man: Path)
-    : (Long, Option[String], Seq[GraftManEntry]) = {
-    if (!fs.exists(man)) (-1L, None, Nil)
+  private val Manifest = "_GRAFT_COMMIT"
+
+  /** The current pointer (`generation` None) or generation g's
+    * immutable history copy — what an as-of read resolves against. */
+  def manifestPath(dir: Path, generation: Option[Long] = None): Path =
+    new Path(dir, generation.fold(Manifest)(g => f"$Manifest.g$g%04d"))
+
+  /** Published name of the n-th part (`prefix` "part") or tombstone
+    * ("del") file of generation `gen`. */
+  def fileName(prefix: String, n: Int, gen: Long): String =
+    f"$prefix%s-$n%05d-g$gen%04d.tsv"
+
+  def readManifestFile(fs: FileSystem, man: Path): GraftManifest = {
+    if (!fs.exists(man)) GraftManifest(-1L, None, None, Nil)
     else {
       val in = new java.io.BufferedReader(
         new java.io.InputStreamReader(fs.open(man), "UTF-8"))
@@ -244,6 +275,15 @@ private[graft] object GraftCommitMeta {
         case _ => 0L
       }
       val cols = lines.find(_.startsWith("#cols\t")).map(_.substring(6))
+      // the queryId may itself contain ':' — the epoch is everything
+      // after the LAST colon
+      val epoch = lines.find(_.startsWith("#epoch\t")).map { l =>
+        val v = l.substring(7)
+        val i = v.lastIndexOf(':')
+        if (i < 0) throw new java.io.IOException(
+          s"corrupt #epoch marker '$l' in $man")
+        (v.substring(0, i), v.substring(i + 1).toLong)
+      }
       val entries = lines.filterNot(_.startsWith("#")).toSeq.map { l =>
         l.split("\t") match {
           case Array(f, n) => GraftManEntry(f, n.toLong, -1)
@@ -253,14 +293,20 @@ private[graft] object GraftCommitMeta {
             s"corrupt manifest entry '$l' in $man")
         }
       }
-      (gen, cols, entries)
+      GraftManifest(gen, cols, epoch, entries)
     }
   }
 
-  /** Generation a published part name carries (`part-NNNNN-gGGGG.tsv`);
-    * None for any other file. */
-  def partGen(name: String): Option[Long] =
-    "^part-\\d+-g(\\d+)\\.tsv$".r.findFirstMatchIn(name).map(_.group(1).toLong)
+  /** The current manifest of `dir`; a directory with none refuses with
+    * a FileNotFoundException saying why the caller needs one (`what`) —
+    * it may be the recovery seam, and no maintenance path guesses. */
+  def committed(fs: FileSystem, dir: Path, what: String): GraftManifest = {
+    val m = readManifestFile(fs, manifestPath(dir))
+    if (m.gen < 0L)
+      throw new java.io.FileNotFoundException(
+        s"no $Manifest manifest under $dir — $what")
+    m
+  }
 
   /** Generation ANY published file carries — data parts AND equality-
     * delete (tombstone) files (`del-NNNNN-gGGGG.tsv`, round 14). The
@@ -278,12 +324,11 @@ private[graft] object GraftCommitMeta {
 
   /** Every committed data-or-tombstone file in the directory (the
     * sweep/orphan globs must cover both name families). */
-  def listCommittedFiles(fs: FileSystem, dir: Path)
-    : Array[org.apache.hadoop.fs.FileStatus] =
-    (Option(fs.globStatus(new Path(dir, "part-*")))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus]) ++
-      Option(fs.globStatus(new Path(dir, "del-*")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus]))
+  def listCommittedFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    listed(fs, new Path(dir, "part-*")) ++ listed(fs, new Path(dir, "del-*"))
+
+  private def listed(fs: FileSystem, glob: Path): Array[FileStatus] =
+    Option(fs.globStatus(glob)).getOrElse(Array.empty[FileStatus])
 
   /** Generation a tmp manifest name carries (`_GRAFT_COMMIT.gGGGG.tmp`). */
   def tmpGen(name: String): Long =
@@ -296,6 +341,15 @@ private[graft] object GraftCommitMeta {
   def histGen(name: String): Long =
     "^_GRAFT_COMMIT\\.g(\\d+)$".r.findFirstMatchIn(name)
       .map(_.group(1).toLong).getOrElse(-1L)
+
+  /** Every tmp manifest in the directory, name-conforming or not. */
+  def tmpManifests(fs: FileSystem, dir: Path): Array[FileStatus] =
+    listed(fs, new Path(dir, s"$Manifest.*.tmp"))
+
+  /** The immutable history manifests (tmp manifests excluded). */
+  def histories(fs: FileSystem, dir: Path): Array[FileStatus] =
+    listed(fs, new Path(dir, s"$Manifest.g*"))
+      .filter(s => histGen(s.getPath.getName) >= 0L)
 
   /** `name:type,...` signature of a write schema — the evolution
     * compatibility check compares these (lowercased names: Spark
@@ -392,28 +446,6 @@ private[graft] object GraftCommitMeta {
       Integer.parseInt(s.substring(2 * i, 2 * i + 2), 16).toByte)
   }
 
-  /** Last committed streaming (queryId, epochId) recorded in a
-    * manifest's `#epoch\tqid:epoch` header; None for batch-written or
-    * pre-r14 manifests. The queryId may itself contain ':' — the epoch
-    * is everything after the LAST colon. */
-  def readEpochMarker(fs: FileSystem, man: Path): Option[(String, Long)] = {
-    if (!fs.exists(man)) None
-    else {
-      val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(fs.open(man), "UTF-8"))
-      val line = try Iterator.continually(in.readLine())
-        .takeWhile(_ != null).find(_.startsWith("#epoch\t"))
-      finally in.close()
-      line.map { l =>
-        val v = l.substring(7)
-        val i = v.lastIndexOf(':')
-        if (i < 0) throw new java.io.IOException(
-          s"corrupt #epoch marker '$l' in $man")
-        (v.substring(0, i), v.substring(i + 1).toLong)
-      }
-    }
-  }
-
   /** Inclusive lower string bound: the min's 16-byte prefix (a prefix
     * sorts ≤ the value in binary order), hexed. */
   def strLoBound(min: Array[Byte]): String = hex(min.take(16))
@@ -449,11 +481,11 @@ private[graft] object GraftCommitMeta {
     * freshly renamed parts. A STALE lease (older than [[leaseStaleMs]])
     * is a crashed holder: break it and take over — the crashed commit's
     * on-disk state is whatever seam it died at, which the recovery paths
-    * in the next commit already repair. Shared by the commit and the
-    * retention vacuum (a vacuum racing a commit could sweep the parts
-    * the commit is about to reference). */
+    * in the next commit already repair. Shared by the commit, the staged
+    * rewrites, abort and the retention vacuum (a vacuum racing a commit
+    * could sweep the parts the commit is about to reference). */
   def acquireLease(fs: FileSystem, dir: Path): Path = {
-    val lock = new Path(dir, "_GRAFT_LOCK")
+    val lock = lockPath(dir)
     def tryCreate(): Boolean =
       try {
         val out = fs.create(lock, false)
@@ -479,6 +511,15 @@ private[graft] object GraftCommitMeta {
             "(another writer took it) — refusing to race")
     }
     lock
+  }
+
+  private def lockPath(dir: Path): Path = new Path(dir, "_GRAFT_LOCK")
+
+  /** Runs `body` holding the directory's lease, released when `body`
+    * returns or throws. */
+  def withLease[T](fs: FileSystem, dir: Path)(body: => T): T = {
+    val lease = acquireLease(fs, dir)
+    try body finally { fs.delete(lease, false); () }
   }
 
   /** Age-scoped janitor for the shared staging areas (round 14 — the
@@ -511,38 +552,98 @@ private[graft] object GraftCommitMeta {
     * object stores) just skips, degrading to the documented
     * best-effort-lease behavior, never failing the commit itself. */
   def heartbeatLease(fs: FileSystem, dir: Path): Unit =
-    try { fs.setTimes(new Path(dir, "_GRAFT_LOCK"), System.currentTimeMillis(), -1); () }
+    try { fs.setTimes(lockPath(dir), System.currentTimeMillis(), -1); () }
     catch { case _: Exception => () }
+
+  /** Crash-recovery sweep BEFORE publishing generation `gen` + 1: a
+    * writer that died mid-publish (after some renames, before the
+    * manifest swap) leaves part and tombstone files whose generation
+    * exceeds the committed `gen` — uncommitted by construction. A retry
+    * computes the SAME next generation, so on filesystems where rename
+    * fails when the destination exists (HDFS, S3A) those orphans would
+    * make every retry throw forever (the local FS overwrites on rename,
+    * which is why the crash fuzz alone could not catch this — ADVICE
+    * r14). Deleted first, then the history twin
+    * ([[sweepAheadHistories]]); the committed generation is untouched. */
+  def sweepAhead(fs: FileSystem, dir: Path, gen: Long): Unit = {
+    listCommittedFiles(fs, dir)
+      .filter(s => fileGen(s.getPath.getName).exists(_ > gen))
+      .foreach(s => fs.delete(s.getPath, false))
+    sweepAheadHistories(fs, dir, gen)
+  }
+
+  /** History manifests beyond the committed `gen` (ADVICE r12, medium):
+    * the immutable `_GRAFT_COMMIT.gGGGG` is written BEFORE the pointer
+    * swap, so a crashed or aborted commit strands a fully-formed history
+    * manifest for a generation that was never published — left in
+    * place, `option("generation", g)` would resolve it and return
+    * uncommitted data, breaching the manifest-swap-is-the-single-publish-
+    * point contract. */
+  def sweepAheadHistories(fs: FileSystem, dir: Path, gen: Long): Unit =
+    histories(fs, dir).filter(s => histGen(s.getPath.getName) > gen)
+      .foreach(s => fs.delete(s.getPath, false))
+
+  /** Deletes every tmp manifest. Only safe where a committed manifest
+    * exists or no parts do: otherwise the newest tmp is the seam-crash
+    * recovery material the next commit promotes. */
+  def sweepTmpManifests(fs: FileSystem, dir: Path): Unit =
+    tmpManifests(fs, dir).foreach(s => fs.delete(s.getPath, false))
+
+  /** Renames each staged file to its entry's final name under `dir`, in
+    * order, and returns the entries. The loop is O(files), so it
+    * heartbeats the lease every 64 renames: a long publish (thousands of
+    * parts on an object store) never reads as stale mid-loop. */
+  def renameParts(fs: FileSystem, dir: Path,
+      moves: Seq[(Path, GraftManEntry)], what: String): Seq[GraftManEntry] =
+    moves.zipWithIndex.map { case ((src, e), i) =>
+      if (i % 64 == 63) heartbeatLease(fs, dir)
+      if (!fs.rename(src, new Path(dir, e.file)))
+        throw new java.io.IOException(s"$what publish failed for $src")
+      e
+    }
+
+  /** Publishes `visible` as generation `gen` — the commit point, run
+    * after every part of the generation is renamed into place:
+    *
+    *  1. the manifest is written to a tmp name;
+    *  2. the IMMUTABLE history copy `_GRAFT_COMMIT.gGGGG` (round 12) —
+    *     the commit log an as-of read resolves against — is written
+    *     BEFORE the pointer swap, so a promoted seam-crash commit already
+    *     has its history entry; overwrite-create makes a crashed
+    *     attempt's stale copy converge on retry. The padded name cannot
+    *     match the `.tmp` sweep glob or the recovery's tmpGen parse;
+    *  3. the pointer swap: delete the old manifest, rename the tmp into
+    *     place. The delete+rename pair is the one non-atomic seam on
+    *     filesystems without overwriting rename; a crash inside it
+    *     leaves the generation's data on disk, no manifest, and the
+    *     fully-written tmp — the next commit's missing-manifest guard
+    *     promotes that tmp, completing this publish. Never data-lossy.
+    *
+    * Legacy (pre-evolution, `ncols < 0`) entries round-trip as 2-field
+    * lines — an invented width would silently weaken their strict-read
+    * contract. */
+  def publish(fs: FileSystem, dir: Path, gen: Long, sig: String,
+      epoch: Option[(String, Long)], visible: Seq[GraftManEntry]): Unit = {
+    val epochLine = epoch.fold("") { case (q, e) => s"#epoch\t$q:$e\n" }
+    val manBytes = (s"#gen\t$gen\n#cols\t$sig\n$epochLine" +
+      visible.map { e =>
+        if (e.ncols < 0) s"${e.file}\t${e.rows}"
+        else if (e.stats.isEmpty) s"${e.file}\t${e.rows}\t${e.ncols}"
+        else s"${e.file}\t${e.rows}\t${e.ncols}\t${e.stats}"
+      }.mkString("", "\n", "\n")).getBytes("UTF-8")
+    val manTmp = new Path(dir, s"$Manifest.g$gen.tmp")
+    Seq(manTmp, manifestPath(dir, Some(gen))).foreach { p =>
+      val out = fs.create(p, true)
+      out.write(manBytes)
+      out.close()
+    }
+    val man = manifestPath(dir)
+    if (fs.exists(man)) fs.delete(man, false)
+    if (!fs.rename(manTmp, man))
+      throw new java.io.IOException(s"manifest swap failed for $manTmp")
+  }
 }
 
-/** Generation-retention VACUUM for a commit-sink directory (round 13 —
-  * the r12 verdict's frontier item: "retention/vacuum as a first-class
-  * operator", plus the ADVICE metadata-growth finding): keep the newest
-  * `keep` generations readable as-of, expire everything older.
-  *
-  * What it sweeps, in crash-safe order:
-  *   1. history manifests with generation ≤ curGen − keep — the as-of
-  *      HORIZON moves first, so no reader can resolve a generation
-  *      whose files a later step might remove — plus any generation-
-  *      ahead history manifest (uncommitted metadata from a crashed
-  *      commit, the same rule commit's own sweep applies);
-  *   2. part files referenced by NO surviving manifest (current +
-  *      retained histories). In append topology every part stays
-  *      referenced by the current manifest forever, so this step sweeps
-  *      only crashed-commit orphans; after a truncate (which already
-  *      deletes its barrier's parts and manifests) it is likewise
-  *      orphan-only — "unreferenced" is the invariant, not a topology
-  *      assumption;
-  *   3. stranded tmp manifests and the `_temp` attempt directory.
-  *
-  * Runs under the SAME single-writer lease as commit (a vacuum racing a
-  * commit could sweep parts the commit is mid-publish on). Idempotent:
-  * re-running after a crash at any step completes the sweep, and
-  * retained generations are untouched by construction — their manifests
-  * are never matched by step 1 and step 2 deletes only files no
-  * retained manifest references. A directory with no committed manifest
-  * refuses loudly (it may be the recovery seam; vacuum never guesses).
-  */
 /** MANIFEST-NATIVE COMPACTION (round 13): rewrite a fragmented table's
   * current entries as `targetParts` new part files and publish them as
   * the next GENERATION — the Iceberg rewrite-data-files shape on the
@@ -568,98 +669,48 @@ private[graft] object GraftCommitMeta {
   * generation (another writer advancing the table during staging is
   * detected and refused — rerun on fresh state), verify the staged
   * row count and column signature against the manifest's, rename the
-  * staged parts to generation-unique names, and swap the manifest with
-  * REPLACED entries (tmp → immutable history copy → pointer swap, the
-  * exact commitLocked order, so every crash point leaves
-  * old-or-compacted, never mixed — a crashed compaction's orphan parts
-  * and gen-ahead history manifest are swept by the established
-  * commit/abort/vacuum rules). Idempotent: a re-run restages from
-  * scratch (`_compact` is wiped first).
+  * staged parts to generation-unique names, and publish the REPLACED
+  * entries through the commit's own [[GraftCommitMeta.publish]], so
+  * every crash point leaves old-or-compacted, never mixed — a crashed
+  * compaction's orphan parts and gen-ahead history manifest are swept
+  * by the established commit/abort/vacuum rules. Idempotent: a re-run
+  * restages from scratch (`_compact` is wiped first).
   */
 object GraftCommitCompact {
   import GraftCommitMeta._
 
-  /** Shared staged-rewrite PUBLISH discipline (round 14 — factored out
-    * of compact() for the binpack and merge paths): under the table
-    * lease, re-read the manifest and REFUSE if the table advanced while
-    * the rewrite staged; run the caller's validation against the
-    * re-read entries; sweep gen-ahead debris (crash-retry idempotence
-    * under HDFS rename semantics — ADVICE r14); rename the staged parts
-    * to generation-unique names (heartbeating the lease every 64
-    * renames); publish `carried ++ staged` as the next generation in
-    * the exact commit order (tmp → immutable history → pointer swap).
-    * Replaced parts are NEVER deleted here — prior generations
-    * reference them; retention vacuum retires them.
+  /** Shared staged-rewrite PUBLISH discipline (round 14 — compact,
+    * binpack and the merge paths): under the table lease, re-read the
+    * manifest and REFUSE if the table advanced while the rewrite staged;
+    * run the caller's validation against the re-read entries; sweep
+    * gen-ahead debris; rename the staged parts to generation-unique
+    * names; publish `carried ++ staged` as the next generation. Replaced parts are NEVER deleted here — prior
+    * generations reference them; retention vacuum retires them.
     * @return the new generation's staged entries as published */
   private[sources] def publishStaged(fs: FileSystem, dir: Path, gen0: Long,
       stage: Path, stageEntries: Seq[GraftManEntry], sig: String,
       carried: Seq[GraftManEntry], what: String,
       prefix: String = "part", entryNcols: Option[Int] = None)(
       validate: (Option[String], Seq[GraftManEntry]) => Unit)
-    : Seq[GraftManEntry] = {
-    val lease = acquireLease(fs, dir)
-    try {
-      val (gen, cols, entries) =
-        readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
-      if (gen != gen0)
-        throw new java.io.IOException(
-          s"$dir advanced from generation $gen0 to $gen while the $what " +
-            "staged — refusing to publish a stale rewrite; rerun")
-      validate(cols, entries)
-      val newGen = gen + 1L
-      // crash-retry idempotence (ADVICE r14, medium): a publish that
-      // died between its staged-part renames and the manifest swap left
-      // part-NNNNN-g{newGen} files in the table dir; a re-run computes
-      // the SAME newGen (manifest unchanged) and under HDFS rename
-      // semantics renaming onto an existing name returns false — every
-      // retry would fail forever. Mirror commitLocked's sweep: any part
-      // or history manifest whose generation exceeds the committed one
-      // is uncommitted debris by construction; delete it before
-      // publishing. (The local FS overwrites on rename, which is why the
-      // crash fuzz alone could not catch this.)
-      listCommittedFiles(fs, dir)
-        .filter(s => fileGen(s.getPath.getName).exists(_ > gen))
-        .foreach(s => fs.delete(s.getPath, false))
-      val aheadHists = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.g*"))
-      if (aheadHists != null) aheadHists
-        .filter(s => histGen(s.getPath.getName) > gen)
-        .foreach(s => fs.delete(s.getPath, false))
-      val published = stageEntries.sortBy(_.file).zipWithIndex.map {
-        case (e, i) =>
-          // the rename loop is O(files) — keep the lease visibly alive
-          // so a >10-min publish is never broken as stale mid-loop
-          if (i % 64 == 63) heartbeatLease(fs, dir)
-          val fin = new Path(dir, f"$prefix%s-$i%05d-g$newGen%04d.tsv")
-          if (!fs.rename(new Path(stage, e.file), fin))
-            throw new java.io.IOException(s"$what publish failed for ${e.file}")
-          // tombstone entries reuse the ncols slot for the KEY COLUMN
-          // INDEX ([[GraftCommitMeta.isDeleteEntry]])
-          GraftManEntry(fin.getName, e.rows, entryNcols.getOrElse(e.ncols),
-            e.stats)
-      }
-      val visible = carried ++ published
-      // legacy (pre-evolution) entries round-trip as 2-field lines
-      val manBytes = (s"#gen\t$newGen\n#cols\t$sig\n" +
-        visible.map { e =>
-          if (e.ncols < 0) s"${e.file}\t${e.rows}"
-          else if (e.stats.isEmpty) s"${e.file}\t${e.rows}\t${e.ncols}"
-          else s"${e.file}\t${e.rows}\t${e.ncols}\t${e.stats}"
-        }.mkString("", "\n", "\n")).getBytes("UTF-8")
-      val manTmp = new Path(dir, s"_GRAFT_COMMIT.g$newGen.tmp")
-      val out = fs.create(manTmp, true)
-      out.write(manBytes); out.close()
-      val hist = new Path(dir, f"_GRAFT_COMMIT.g$newGen%04d")
-      val hout = fs.create(hist, true)
-      hout.write(manBytes); hout.close()
-      val man = new Path(dir, "_GRAFT_COMMIT")
-      if (fs.exists(man)) fs.delete(man, false)
-      if (!fs.rename(manTmp, man))
-        throw new java.io.IOException(s"manifest swap failed for $manTmp")
-      // replaced parts stay on disk — prior generations reference them;
-      // retention (vacuum) reclaims them when those generations expire
-      fs.delete(stage, true)
-      published
-    } finally { fs.delete(lease, false); () }
+    : Seq[GraftManEntry] = withLease(fs, dir) {
+    val cur = readManifestFile(fs, manifestPath(dir))
+    if (cur.gen != gen0)
+      throw new java.io.IOException(
+        s"$dir advanced from generation $gen0 to ${cur.gen} while the " +
+          s"$what staged — refusing to publish a stale rewrite; rerun")
+    validate(cur.cols, cur.entries)
+    val newGen = cur.gen + 1L
+    sweepAhead(fs, dir, cur.gen)
+    // tombstone entries reuse the ncols slot for the KEY COLUMN INDEX
+    // ([[GraftCommitMeta.isDeleteEntry]])
+    val published = renameParts(fs, dir,
+      stageEntries.sortBy(_.file).zipWithIndex.map { case (e, i) =>
+        (new Path(stage, e.file), GraftManEntry(fileName(prefix, i, newGen),
+          e.rows, entryNcols.getOrElse(e.ncols), e.stats))
+      }, what)
+    publish(fs, dir, newGen, sig, epoch = None, carried ++ published)
+    fs.delete(stage, true)
+    published
   }
 
   /** Signature guard shared by the rewrite paths: the staged data must
@@ -686,11 +737,8 @@ object GraftCommitCompact {
     require(targetParts >= 1, s"targetParts must be >= 1, got $targetParts")
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen0, _, entries0) =
-      readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
-    if (gen0 < 0L)
-      throw new java.io.FileNotFoundException(
-        s"no _GRAFT_COMMIT manifest under $path — nothing to compact")
+    val cur = committed(fs, dir, "nothing to compact")
+    val entries0 = cur.entries
     // a full rewrite also MATERIALIZES merge-on-read tombstones (the
     // staged read applies them and the new generation carries none) —
     // so a table holding tombstones is never a no-op even at low part
@@ -705,10 +753,10 @@ object GraftCommitCompact {
     fs.delete(stage, true)
     GraftTable.write(GraftTable.read(spark, path, schemaDdl)
       .repartition(targetParts), stage.toString, "overwrite")
-    val (_, stageCols, stageEntries) =
-      readManifestFile(fs, new Path(stage, "_GRAFT_COMMIT"))
+    val staged = readManifestFile(fs, manifestPath(stage))
+    val (stageCols, stageEntries) = (staged.cols, staged.entries)
     // 2. PUBLISH under the table lease
-    val published = publishStaged(fs, dir, gen0, stage, stageEntries,
+    val published = publishStaged(fs, dir, cur.gen, stage, stageEntries,
       stageCols.getOrElse(""), carried = Nil, what = "compaction") {
         (cols, entries) =>
       checkSig(cols, stageCols, schemaDdl, "compaction")
@@ -751,11 +799,8 @@ object GraftCommitCompact {
     require(targetRows >= 1L, s"targetRows must be >= 1, got $targetRows")
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (gen0, cols0, entries0) =
-      readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
-    if (gen0 < 0L)
-      throw new java.io.FileNotFoundException(
-        s"no _GRAFT_COMMIT manifest under $path — nothing to binpack")
+    val cur = committed(fs, dir, "nothing to binpack")
+    val entries0 = cur.entries
     // tombstones are never "fragments": they carry while ANY data entry
     // still needs them and drop once every data entry is rewritten (the
     // staged reads apply them, so a full repack materializes them —
@@ -772,11 +817,11 @@ object GraftCommitCompact {
     fs.delete(stage, true)
     GraftTable.write(GraftTable.read(spark, path, schemaDdl,
       files = frags.map(_.file)).repartition(bins), stage.toString, "overwrite")
-    val (_, stageCols, stageEntries) =
-      readManifestFile(fs, new Path(stage, "_GRAFT_COMMIT"))
-    val published = publishStaged(fs, dir, gen0, stage, stageEntries,
+    val staged = readManifestFile(fs, manifestPath(stage))
+    val (stageCols, stageEntries) = (staged.cols, staged.entries)
+    val published = publishStaged(fs, dir, cur.gen, stage, stageEntries,
       stageCols.getOrElse(""), carried, what = "binpack") { (cols, _) =>
-      checkSig(cols.orElse(cols0), stageCols, schemaDdl, "binpack")
+      checkSig(cols.orElse(cur.cols), stageCols, schemaDdl, "binpack")
       val haveRows = stageEntries.map(_.rows).sum
       val tombMax = dels0.map(_.rows).sum * math.max(1L, frags.length.toLong)
       if (haveRows > fragRows ||
@@ -790,114 +835,107 @@ object GraftCommitCompact {
   }
 }
 
+/** Generation RETENTION for a commit-sink directory (round 13 keep-K —
+  * the r12 verdict's "retention/vacuum as a first-class operator", plus
+  * the ADVICE metadata-growth finding; round 14 age-based — the r13
+  * verdict's frontier #7: real policies are "expire snapshots older than
+  * 7 days"). Two entry points, one sweep: they differ only in which
+  * older generations the policy expires.
+  *
+  * What the sweep does, in crash-safe order:
+  *   1. expire history manifests — the as-of HORIZON moves first, so no
+  *      reader can resolve a generation whose files a later step might
+  *      remove. A generation-ahead history (uncommitted metadata from a
+  *      crashed commit, the rule commit's own sweep applies) is always
+  *      expired; the CURRENT generation's never is (the live view stays
+  *      as-of readable); anything older by the caller's policy;
+  *   2. part files referenced by NO surviving manifest (current +
+  *      retained histories). In append topology every part stays
+  *      referenced by the current manifest forever, so this step sweeps
+  *      only crashed-commit orphans and the parts compaction/merge
+  *      replaced; after a truncate (which already deletes its barrier's
+  *      parts and manifests) it is likewise orphan-only — "unreferenced"
+  *      is the invariant, not a topology assumption;
+  *   3. stranded tmp manifests and aged staging debris.
+  *
+  * Runs under the SAME single-writer lease as commit (a vacuum racing a
+  * commit could sweep parts the commit is mid-publish on), and reads the
+  * manifest UNDER it (ADVICE r13, high: a commit landing between a
+  * pre-lease read and the lease would make the sweep see a stale
+  * generation — the new generation's history would read as "ahead" and
+  * its freshly committed parts as unreferenced). Idempotent: re-running
+  * after a crash at any step completes the sweep, and retained
+  * generations are untouched by construction. A directory with no
+  * committed manifest refuses loudly (it may be the recovery seam;
+  * vacuum never guesses).
+  */
 object GraftCommitVacuum {
-  /** @return (expired history manifests, swept unreferenced part files) */
+  import GraftCommitMeta._
+
+  /** Keep the newest `keep` generations readable as-of, expire the rest.
+    * @return (expired history manifests, swept unreferenced part files) */
   def vacuum(spark: org.apache.spark.sql.SparkSession, path: String,
       keep: Int): (Int, Int) = {
     require(keep >= 1, s"retention must keep >= 1 generation, got $keep")
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the manifest is read UNDER the lease (ADVICE r13, high): a commit
-    // landing between a pre-lease read and the lease acquisition would
-    // make this sweep see a STALE curGen/curEntries — the new
-    // generation's history manifest reads as "generation-ahead" and its
-    // freshly committed parts as "unreferenced", and the sweep would
-    // delete committed data the live pointer references. Reading under
-    // the lease is exactly the guard compact() applies.
-    val lease = GraftCommitMeta.acquireLease(fs, dir)
-    try {
-      val (curGen, _, curEntries) =
-        GraftCommitMeta.readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
-      if (curGen < 0L)
-        throw new java.io.FileNotFoundException(
-          s"no _GRAFT_COMMIT manifest under $path — nothing is committed " +
-            "(or a crashed commit awaits recovery); refusing to vacuum")
-      val horizon = curGen - keep + 1L
-      def hists() = Option(fs.globStatus(new Path(dir, "_GRAFT_COMMIT.g*")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(s => GraftCommitMeta.histGen(s.getPath.getName) >= 0L)
-      val expired = hists().filter { s =>
-        val g = GraftCommitMeta.histGen(s.getPath.getName)
-        g < horizon || g > curGen
-      }
-      expired.foreach(s => fs.delete(s.getPath, false))
-      // referenced = current manifest ∪ every SURVIVING history (re-list
-      // after the expiry deletes, so a crash between the two steps still
-      // yields a consistent set on re-run)
-      val referenced = (curEntries ++ hists().flatMap(s =>
-        GraftCommitMeta.readManifestFile(fs, s.getPath)._3)).map(_.file).toSet
-      val orphans = GraftCommitMeta.listCommittedFiles(fs, dir)
-        .filter(s => !referenced(s.getPath.getName))
-      orphans.zipWithIndex.foreach { case (s, i) =>
-        if (i % 256 == 255) GraftCommitMeta.heartbeatLease(fs, dir)
-        fs.delete(s.getPath, false)
-      }
-      val tmps = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.*.tmp"))
-      if (tmps != null) tmps.foreach(s => fs.delete(s.getPath, false))
-      // staging janitor is AGE-SCOPED (r13 advisory): an active job's
-      // attempt files and a mid-stage compaction/merge survive; only
-      // debris idle past the lease-staleness bound is swept
-      GraftCommitMeta.sweepStaleStaging(fs, dir)
-      (expired.length, orphans.length)
-    } finally { fs.delete(lease, false); () }
+    sweep(spark, path, dryRun = false) { (curGen, s) =>
+      histGen(s.getPath.getName) < curGen - keep + 1L
+    }
   }
 
-  /** AGE-BASED retention (round 14 — the r13 verdict's frontier #7:
-    * real policies are "expire snapshots older than 7 days", not
-    * keep-K): expire history manifests whose COMMIT TIME (the manifest
-    * file's mtime — written once at publish, never touched again) is
-    * older than `olderThanMs`, always retaining the CURRENT
-    * generation's history regardless of age (the live view must stay
-    * as-of readable), plus any generation-ahead uncommitted debris;
-    * then sweep parts referenced by no surviving manifest — exactly the
-    * keep-K sweep with an age horizon. `dryRun = true` is the
-    * REPORT-ONLY mode every retention tool needs before a destructive
-    * sweep: it computes the same (expired manifests, sweepable parts)
-    * counts while mutating NOTHING — retained and expired generations
-    * alike stay readable. Same single-writer lease; same read-under-
-    * lease discipline.
+  /** Expire history manifests whose COMMIT TIME (the manifest file's
+    * mtime — written once at publish, never touched again) is older than
+    * `olderThanMs`. `dryRun = true` is the REPORT-ONLY mode every
+    * retention tool needs before a destructive sweep: it computes the
+    * same (expired manifests, sweepable parts) counts while mutating
+    * NOTHING — retained and expired generations alike stay readable.
     * @return (history manifests expired, unreferenced parts swept) —
     * in dryRun mode, the counts that WOULD be acted on. */
   def vacuumAged(spark: org.apache.spark.sql.SparkSession, path: String,
       olderThanMs: Long, dryRun: Boolean = false): (Int, Int) = {
     require(olderThanMs >= 0L, s"olderThanMs must be >= 0, got $olderThanMs")
+    val cutoff = System.currentTimeMillis() - olderThanMs
+    sweep(spark, path, dryRun)((_, s) => s.getModificationTime < cutoff)
+  }
+
+  /** The retention sweep; `expires(curGen, history)` is the policy for
+    * generations older than the current one. */
+  private def sweep(spark: org.apache.spark.sql.SparkSession, path: String,
+      dryRun: Boolean)(expires: (Long, FileStatus) => Boolean): (Int, Int) = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = GraftCommitMeta.acquireLease(fs, dir)
-    try {
-      val (curGen, _, curEntries) =
-        GraftCommitMeta.readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
-      if (curGen < 0L)
-        throw new java.io.FileNotFoundException(
-          s"no _GRAFT_COMMIT manifest under $path — nothing is committed " +
-            "(or a crashed commit awaits recovery); refusing to vacuum")
-      val cutoff = System.currentTimeMillis() - olderThanMs
-      val hists = Option(fs.globStatus(new Path(dir, "_GRAFT_COMMIT.g*")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(s => GraftCommitMeta.histGen(s.getPath.getName) >= 0L)
-      val (expired, surviving) = hists.partition { s =>
-        val g = GraftCommitMeta.histGen(s.getPath.getName)
-        g > curGen || (g != curGen && s.getModificationTime < cutoff)
+    withLease(fs, dir) {
+      val cur = committed(fs, dir, "nothing is committed (or a crashed " +
+        "commit awaits recovery); refusing to vacuum")
+      val expired = histories(fs, dir).filter { s =>
+        val g = histGen(s.getPath.getName)
+        g > cur.gen || (g != cur.gen && expires(cur.gen, s))
       }
       if (!dryRun) expired.foreach(s => fs.delete(s.getPath, false))
-      // referenced set from the SURVIVING manifests (computed, not
-      // re-listed, so the dry run prices exactly what the real run
-      // would sweep)
-      val referenced = (curEntries ++ surviving.flatMap(s =>
-        GraftCommitMeta.readManifestFile(fs, s.getPath)._3)).map(_.file).toSet
-      val orphans = GraftCommitMeta.listCommittedFiles(fs, dir)
+      // referenced = current manifest ∪ every SURVIVING history: re-listed
+      // after the expiry deletes, so a crash between the two steps still
+      // yields a consistent set on re-run; a dry run (which deleted
+      // nothing) drops the ones it would have expired, so it counts
+      // exactly what the real run sweeps
+      val gone = expired.map(_.getPath.getName).toSet
+      val referenced = (cur.entries ++ histories(fs, dir)
+        .filterNot(s => gone(s.getPath.getName))
+        .flatMap(s => readManifestFile(fs, s.getPath).entries))
+        .map(_.file).toSet
+      val orphans = listCommittedFiles(fs, dir)
         .filter(s => !referenced(s.getPath.getName))
       if (!dryRun) {
         orphans.zipWithIndex.foreach { case (s, i) =>
-          if (i % 256 == 255) GraftCommitMeta.heartbeatLease(fs, dir)
+          if (i % 256 == 255) heartbeatLease(fs, dir)
           fs.delete(s.getPath, false)
         }
-        val tmps = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.*.tmp"))
-        if (tmps != null) tmps.foreach(s => fs.delete(s.getPath, false))
-        GraftCommitMeta.sweepStaleStaging(fs, dir)
+        sweepTmpManifests(fs, dir)
+        // staging janitor is AGE-SCOPED (r13 advisory): an active job's
+        // attempt files and a mid-stage compaction/merge survive; only
+        // debris idle past the lease-staleness bound is swept
+        sweepStaleStaging(fs, dir)
       }
       (expired.length, orphans.length)
-    } finally { fs.delete(lease, false); () }
+    }
   }
 }
 
@@ -913,14 +951,7 @@ class GraftCommitWrite(path: String, schema: StructType,
   override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
     new GraftCommitStreamingWrite(path, schema, queryId)
 
-  import GraftCommitMeta.{histGen, partGen, tmpGen}
-
-  /** Read the committed manifest: its generation (first line `#gen\tG`;
-    * absent/legacy manifests read as generation 0, no manifest at all as
-    * -1), its column signature, and its entries. */
-  private def readManifest(fs: FileSystem, dir: Path)
-    : (Long, Option[String], Seq[GraftManEntry]) =
-    GraftCommitMeta.readManifestFile(fs, new Path(dir, "_GRAFT_COMMIT"))
+  import GraftCommitMeta._
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new GraftCommitWriterFactory(path, schema, new SerializableHadoopConf(
@@ -931,9 +962,7 @@ class GraftCommitWrite(path: String, schema: StructType,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     fs.mkdirs(dir)
-    val lease = GraftCommitMeta.acquireLease(fs, dir)
-    try commitLocked(fs, dir, messages, epoch = None)
-    finally { fs.delete(lease, false); () }
+    withLease(fs, dir)(commitLocked(fs, dir, messages, epoch = None))
   }
 
   private[sources] def commitLocked(fs: FileSystem, dir: Path,
@@ -942,7 +971,7 @@ class GraftCommitWrite(path: String, schema: StructType,
     // generation counter in their names so they can never collide with
     // (or clobber) the previous generation's files — the old generation
     // stays fully readable until the new manifest is durable.
-    val (rawGen, rawCols, rawPrior) = readManifest(fs, dir)
+    val raw = readManifestFile(fs, manifestPath(dir))
     // Missing-manifest guard BEFORE the orphan sweep: with no committed
     // manifest every part file reads as "gen > curGen" and the sweep
     // below would delete it. A truly fresh directory has neither parts
@@ -955,19 +984,18 @@ class GraftCommitWrite(path: String, schema: StructType,
     // so its existence alongside a missing manifest proves its
     // generation's data is complete on disk — renaming it into place
     // finishes that commit exactly.
-    val (curGen, priorCols, prior) =
-      if (rawGen >= 0L) (rawGen, rawCols, rawPrior)
+    val cur =
+      if (raw.gen >= 0L) raw
       else {
-        val parts = GraftCommitMeta.listCommittedFiles(fs, dir)
-        val stranded = Option(fs.globStatus(new Path(dir, "_GRAFT_COMMIT.*.tmp")))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
+        val parts = listCommittedFiles(fs, dir)
+        val stranded = tmpManifests(fs, dir)
         // only NAME-CONFORMING tmp manifests are recovery candidates: a
         // non-parsing `_GRAFT_COMMIT.*.tmp` (manual damage) has tmpGen
         // -1 and promoting it would install garbage as the manifest —
         // split('\t') MatchError at best, a wrong generation whose
         // gen>curGen sweep deletes committed parts at worst
         val conforming = stranded.filter(s => tmpGen(s.getPath.getName) >= 0L)
-        if (parts.isEmpty && stranded.isEmpty) (rawGen, rawCols, rawPrior)
+        if (parts.isEmpty && stranded.isEmpty) raw
         else if (conforming.nonEmpty) {
           val newest = conforming.maxBy(s => tmpGen(s.getPath.getName))
           val nameGen = tmpGen(newest.getPath.getName)
@@ -979,27 +1007,27 @@ class GraftCommitWrite(path: String, schema: StructType,
           // start) makes the newest tmp's gen ≥ every on-disk part gen
           // and its content gen ≡ its name gen — anything else is manual
           // damage and is refused, never promoted.
-          val recovered @ (recGen, _, _) =
-            try GraftCommitMeta.readManifestFile(fs, newest.getPath)
+          val recovered =
+            try readManifestFile(fs, newest.getPath)
             catch {
               case e: Exception => throw new java.io.IOException(
                 s"stranded tmp manifest ${newest.getPath} does not parse " +
                   "— refusing to promote it; manual recovery required", e)
             }
-          if (recGen != nameGen)
+          if (recovered.gen != nameGen)
             throw new java.io.IOException(
               s"stranded tmp manifest ${newest.getPath} carries content " +
-                s"generation $recGen under name generation $nameGen — " +
+                s"generation ${recovered.gen} under name generation $nameGen — " +
                 "refusing to promote damaged metadata; manual recovery required")
           val maxPart = parts.iterator
-            .flatMap(s => GraftCommitMeta.fileGen(s.getPath.getName))
+            .flatMap(s => fileGen(s.getPath.getName))
             .foldLeft(-1L)(math.max)
-          if (recGen < maxPart)
+          if (recovered.gen < maxPart)
             throw new java.io.IOException(
-              s"stranded tmp manifest generation $recGen is older than " +
+              s"stranded tmp manifest generation ${recovered.gen} is older than " +
                 s"on-disk part generation $maxPart in $dir — refusing to " +
                 "sweep newer committed data; manual recovery required")
-          if (!fs.rename(newest.getPath, new Path(dir, "_GRAFT_COMMIT")))
+          if (!fs.rename(newest.getPath, manifestPath(dir)))
             throw new java.io.IOException(
               s"manifest recovery failed for ${newest.getPath}")
           recovered
@@ -1020,40 +1048,16 @@ class GraftCommitWrite(path: String, schema: StructType,
     // drop the marker (they break the stream's lineage — the documented
     // single-writer contract makes interleaving an operator decision).
     val reDelivered = epoch.exists { e =>
-      GraftCommitMeta.readEpochMarker(fs, new Path(dir, "_GRAFT_COMMIT"))
-        .exists { case (qid, committed) => qid == queryId && committed >= e }
+      cur.epoch.exists { case (qid, committed) => qid == queryId && committed >= e }
     }
     if (reDelivered) {
       messages.collect { case m: GraftTempFile => m }
         .foreach(m => fs.delete(new Path(m.tmp), false))
       return
     }
-    // Crash-recovery sweep BEFORE publishing: a driver that died mid-commit
-    // (after some renames, before the manifest swap) leaves part files whose
-    // generation exceeds the committed manifest's — uncommitted by
-    // construction — plus possibly a stranded tmp manifest. A retry computes
-    // the SAME next generation from the old manifest, so on filesystems
-    // where rename fails when the destination exists (HDFS, S3A) those
-    // orphans would make every retry throw forever. Delete them first; the
-    // committed generation is untouched.
-    GraftCommitMeta.listCommittedFiles(fs, dir)
-      .filter(s => GraftCommitMeta.fileGen(s.getPath.getName).exists(_ > curGen))
-      .foreach(s => fs.delete(s.getPath, false))
-    // history-manifest twin of the part sweep (ADVICE r12, medium): the
-    // immutable _GRAFT_COMMIT.gGGGG is written BEFORE the pointer swap,
-    // so a crashed commit strands a fully-formed history manifest for a
-    // generation that was never published — left in place, a reader's
-    // option("generation", g) would resolve it and return uncommitted
-    // data, breaching the manifest-swap-is-the-single-publish-point
-    // contract. Any history file whose generation exceeds the committed
-    // manifest's is uncommitted by construction; swept with the parts.
-    val orphanHists = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.g*"))
-    if (orphanHists != null) orphanHists
-      .filter(s => histGen(s.getPath.getName) > curGen)
-      .foreach(s => fs.delete(s.getPath, false))
-    val tmps = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.*.tmp"))
-    if (tmps != null) tmps.foreach(s => fs.delete(s.getPath, false))
-    val gen = curGen + 1L
+    sweepAhead(fs, dir, cur.gen)
+    sweepTmpManifests(fs, dir)
+    val gen = cur.gen + 1L
     // one attempt per partition becomes visible (retries/speculation may
     // have produced several messages per partition — first wins, the
     // rest stay in _temp and are swept below)
@@ -1072,90 +1076,47 @@ class GraftCommitWrite(path: String, schema: StructType,
     // records the WIDER of the two signatures; per-entry ncols is what
     // the reader NULL-fills against. Truncate starts the signature over
     // with the table.
-    val newSig = GraftCommitMeta.colsSig(schema)
-    val manifestSig = priorCols match {
+    val newSig = colsSig(schema)
+    val manifestSig = cur.cols match {
       case Some(p) if !truncateFirst =>
-        if (GraftCommitMeta.sigPrefix(p, newSig)) newSig
-        else if (GraftCommitMeta.sigPrefix(newSig, p)) p
+        if (sigPrefix(p, newSig)) newSig
+        else if (sigPrefix(newSig, p)) p
         else throw new java.io.IOException(
           s"incompatible schema evolution for $dir: committed columns " +
             s"[$p] vs incoming [$newSig] — columns may only be APPENDED " +
             "across generations (truncate to restate the table)")
       case _ => newSig
     }
-    val published = chosen.zipWithIndex.map { case (m, i) =>
-      // O(partitions) rename loop: heartbeat the lease so a long publish
-      // (thousands of parts on an object store) never reads as stale
-      if (i % 64 == 63) GraftCommitMeta.heartbeatLease(fs, dir)
-      val fin = new Path(dir, f"part-${m.partitionId}%05d-g$gen%04d.tsv")
-      if (!fs.rename(new Path(m.tmp), fin))
-        throw new java.io.IOException(s"publish failed for ${m.tmp}")
-      GraftManEntry(fin.getName, m.rows, schema.length, m.stats)
-    }
-    // manifest swap: write the new generation's manifest to a temp name,
-    // then move it into place — written LAST, so readers keyed on it
-    // never observe a partially-published generation. (The delete+rename
-    // pair is the one non-atomic seam on filesystems without overwriting
-    // rename; a crash inside it leaves BOTH data generations on disk,
-    // no manifest, and the fully-written tmp manifest — the next
-    // commit's missing-manifest guard promotes that tmp into place,
-    // completing this commit. Never data-lossy.)
+    val published = renameParts(fs, dir, chosen.map { m =>
+      (new Path(m.tmp), GraftManEntry(fileName("part", m.partitionId, gen),
+        m.rows, schema.length, m.stats))
+    }, "commit")
     // Non-truncate commit is a true APPEND: the prior generations' entries
     // carry forward into the new manifest (their part files stay on disk
     // and stay visible), with this generation's entries appended. Truncate
     // starts the manifest over — the old parts are deleted below.
-    val visible = (if (truncateFirst) Nil else prior) ++ published
-    // legacy (pre-evolution) entries round-trip as 2-field lines — an
-    // invented width would silently weaken their strict-read contract
-    val epochLine = epoch.map(e => s"#epoch\t$queryId:$e\n").getOrElse("")
-    val manBytes = (s"#gen\t$gen\n#cols\t$manifestSig\n$epochLine" +
-      visible.map { e =>
-        if (e.ncols < 0) s"${e.file}\t${e.rows}"
-        else if (e.stats.isEmpty) s"${e.file}\t${e.rows}\t${e.ncols}"
-        else s"${e.file}\t${e.rows}\t${e.ncols}\t${e.stats}"
-      }.mkString("", "\n", "\n"))
-      .getBytes("UTF-8")
-    val manTmp = new Path(dir, s"_GRAFT_COMMIT.g$gen.tmp")
-    val out = fs.create(manTmp, true)
-    out.write(manBytes)
-    out.close()
-    // TIME-TRAVEL history (round 12): every generation also publishes an
-    // IMMUTABLE manifest copy under its padded name — the commit log a
-    // reader's `option("generation", g)` resolves "as of g" against.
-    // Written BEFORE the current-pointer swap so a promoted seam-crash
-    // commit already has its history entry; overwrite-create makes a
-    // crashed attempt's stale copy converge on retry (same gen, fresh
-    // content). The padded name cannot match the `.tmp` sweep glob or
-    // the recovery's tmpGen parse. In append topology every generation
-    // stays fully readable forever; TRUNCATE deletes old parts and is
-    // therefore the vacuum barrier — as-of reads behind the last
-    // truncate fail loudly on the missing parts, never silently thin.
-    val hist = new Path(dir, f"_GRAFT_COMMIT.g$gen%04d")
-    val hout = fs.create(hist, true)
-    hout.write(manBytes)
-    hout.close()
-    val man = new Path(dir, "_GRAFT_COMMIT")
-    if (fs.exists(man)) fs.delete(man, false)
-    if (!fs.rename(manTmp, man))
-      throw new java.io.IOException(s"manifest swap failed for $manTmp")
+    val visible = (if (truncateFirst) Nil else cur.entries) ++ published
+    // In append topology every generation stays fully readable as of its
+    // history manifest forever; TRUNCATE deletes old parts and is
+    // therefore the vacuum barrier — as-of reads behind the last truncate
+    // fail loudly, never silently thin.
+    publish(fs, dir, gen, manifestSig, epoch.map(queryId -> _), visible)
     // only now — new generation durably published — drop the previous
     // generation's parts (truncate mode) and sweep losing-attempt temps
     if (truncateFirst) {
       val mine = published.map(_.file).toSet
-      GraftCommitMeta.listCommittedFiles(fs, dir)
+      listCommittedFiles(fs, dir)
         .filterNot(s => mine(s.getPath.getName))
         .foreach(s => fs.delete(s.getPath, false))
-      // metadata twin of the part delete (ADVICE r12, low): truncate is
-      // the vacuum barrier — generations behind it are unreadable by
-      // construction (their parts are deleted just above), so their
-      // history manifests are pruned in the same cleanup. An as-of read
-      // behind the barrier now fails AT MANIFEST RESOLUTION with the
-      // reader's clear vacuumed-or-never-committed error instead of a
-      // part-open failure deep in the scan, and manifest metadata stops
-      // growing without bound across overwrite cycles.
-      val oldHists = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.g*"))
-      if (oldHists != null) oldHists
-        .filter { s => val g = histGen(s.getPath.getName); g >= 0L && g < gen }
+      // metadata twin of the part delete (ADVICE r12, low): generations
+      // behind the barrier are unreadable by construction (their parts
+      // are deleted just above), so their history manifests are pruned in
+      // the same cleanup. An as-of read behind the barrier now fails AT
+      // MANIFEST RESOLUTION with the reader's clear vacuumed-or-never-
+      // committed error instead of a part-open failure deep in the scan,
+      // and manifest metadata stops growing without bound across
+      // overwrite cycles.
+      histories(fs, dir).filter(s => histGen(s.getPath.getName) < gen)
         .foreach(s => fs.delete(s.getPath, false))
     }
     fs.delete(new Path(dir, "_temp"), true)
@@ -1175,7 +1136,7 @@ class GraftCommitWrite(path: String, schema: StructType,
     // are attempt-unique and inert). A stale lease is a crashed holder
     // and acquireLease breaks it as usual.
     val lease =
-      try Some(GraftCommitMeta.acquireLease(fs, dir))
+      try Some(acquireLease(fs, dir))
       catch { case _: java.io.IOException => None }
     if (lease.isEmpty) return
     try abortLocked(fs, dir)
@@ -1184,32 +1145,20 @@ class GraftCommitWrite(path: String, schema: StructType,
 
   private def abortLocked(fs: FileSystem, dir: Path): Unit = {
     fs.delete(new Path(dir, "_temp"), true)
-    val (curGen, _, _) = readManifest(fs, dir)
-    val parts = GraftCommitMeta.listCommittedFiles(fs, dir)
+    val curGen = readManifestFile(fs, manifestPath(dir)).gen
     // parts on disk but NO committed manifest = the delete(man)/
     // rename(manTmp) seam — the stranded tmp manifest IS the recovery
     // path the next commit promotes, and the gen-ahead history file
     // belongs to that promotable commit. Sweeping either here would
     // strand the directory in the refuse-loudly state (or orphan its
     // as-of entry); leave recovery material for commit-time repair.
-    if (curGen >= 0L || parts.isEmpty) {
-      // an abort between fs.create(manTmp) and the manifest swap would
-      // otherwise strand the tmp manifest forever (commit()'s sweep also
-      // clears these, but abort shouldn't rely on a future commit)
-      val tmps = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.*.tmp"))
-      if (tmps != null) tmps.foreach(s => fs.delete(s.getPath, false))
-      // ADVICE r12 (medium): the history manifest is written BEFORE the
-      // commit point, so an aborted commit that is never retried leaves
-      // option("generation", g) resolving a fully-formed manifest for a
-      // generation that was never committed. Mirror the commit-time
-      // sweep: any history file beyond the committed generation is
-      // uncommitted metadata and goes with the temps.
-      val hists = fs.globStatus(new Path(dir, "_GRAFT_COMMIT.g*"))
-      if (hists != null) hists
-        .filter(s => histGen(s.getPath.getName) > curGen)
-        .foreach(s => fs.delete(s.getPath, false))
+    if (curGen >= 0L || listCommittedFiles(fs, dir).isEmpty) {
+      // an aborted commit that is never retried must not strand its tmp
+      // manifest or its gen-ahead history (abort shouldn't rely on a
+      // future commit's sweep); its parts are left to that sweep
+      sweepTmpManifests(fs, dir)
+      sweepAheadHistories(fs, dir, curGen)
     }
-    ()
   }
 }
 
@@ -1240,10 +1189,10 @@ class GraftCommitStreamingWrite(path: String, schema: StructType,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     fs.mkdirs(dir)
-    val lease = GraftCommitMeta.acquireLease(fs, dir)
-    try new GraftCommitWrite(path, schema, truncateFirst = false, queryId)
-      .commitLocked(fs, dir, messages, epoch = Some(epochId))
-    finally { fs.delete(lease, false); () }
+    GraftCommitMeta.withLease(fs, dir) {
+      new GraftCommitWrite(path, schema, truncateFirst = false, queryId)
+        .commitLocked(fs, dir, messages, epoch = Some(epochId))
+    }
   }
 
   override def abort(epochId: Long,

@@ -275,14 +275,11 @@ object GraftManifestMeta {
       generation: Option[Long] = None): org.apache.spark.sql.DataFrame = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val man = generation match {
-      case Some(g) => new Path(dir, f"_GRAFT_COMMIT.g$g%04d")
-      case None => new Path(dir, "_GRAFT_COMMIT")
-    }
+    val man = GraftCommitMeta.manifestPath(dir, generation)
     if (!fs.exists(man))
       throw new java.io.FileNotFoundException(
         s"no manifest ${man.getName} under $path")
-    val (_, _, entries) = GraftCommitMeta.readManifestFile(fs, man)
+    val entries = GraftCommitMeta.readManifestFile(fs, man).entries
     val rows = entries.flatMap { e =>
       val st = GraftCommitMeta.parseStats(e.stats)
       val kind = if (GraftCommitMeta.isDeleteEntry(e)) "delete" else "data"
@@ -365,10 +362,7 @@ class GraftManifestScan(path: String, full: StructType,
     // of the current pointer (a generation never published here is a
     // clear error — "which generations exist" is a directory listing of
     // _GRAFT_COMMIT.g*, not a guess)
-    val man = generation match {
-      case Some(g) => new Path(dir, f"_GRAFT_COMMIT.g$g%04d")
-      case None => new Path(dir, "_GRAFT_COMMIT")
-    }
+    val man = GraftCommitMeta.manifestPath(dir, generation)
     if (!fs.exists(man))
       throw new java.io.FileNotFoundException(generation match {
         case Some(g) =>
@@ -378,7 +372,7 @@ class GraftManifestScan(path: String, full: StructType,
         case None =>
           s"no _GRAFT_COMMIT manifest under $path — nothing is committed here"
       })
-    val (_, _, rawEntries) = GraftCommitMeta.readManifestFile(fs, man)
+    val rawEntries = GraftCommitMeta.readManifestFile(fs, man).entries
     // MERGE-ON-READ tombstones (round 14): equality-delete entries are
     // split out BEFORE any subsetting — they are not data, are never
     // planned as splits, and apply to EVERY data read of this

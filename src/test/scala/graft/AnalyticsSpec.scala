@@ -211,7 +211,7 @@ class AnalyticsSpec extends SparkSpec {
     val pay2 = ("sphinx of black quartz judge my vow again and " * 14).trim
     val corrupt2 = pay2.updated(30, '#').toString
     val other = ("zzzz aaaa " + "m" * 600 + " qqqq").trim
-    val dir = java.nio.file.Files.createTempDirectory("phash64corpus").toString
+    val dir = scratchDir("phash64corpus")
     Seq((1L, payload), (2L, corrupt), (3L, other), (4L, pay2), (5L, corrupt2))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -404,7 +404,7 @@ class AssaySpec extends SparkSpec {
       (5L, "s2", "gamma delta"),
       (6L, "s2", "alpha  "),            // trailing empty tokens (limit -1)
       (7L, "s3", "beta delta"))
-    val dir = java.nio.file.Files.createTempDirectory("chi2edge").toString
+    val dir = scratchDir("chi2edge")
     docs.toDF("doc_id", "source", "text").write.parquet(s"$dir/documents.parquet")
     val out = chi2Rows(dir)
     assert(out === chi2Mirror(docs))

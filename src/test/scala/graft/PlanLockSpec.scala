@@ -100,6 +100,33 @@ class PlanLockSpec extends SparkSpec {
       s"commit-table format names outside graft.sources:\n${hits.mkString("\n")}")
   }
 
+  test("only GraftCommitMeta spells the commit log's manifest names in src/main") {
+    // the manifest names, their parse and the publish order have one
+    // owner; everything else asks it (manifestPath, histGen, tmpGen), so
+    // a string literal starting "_GRAFT_COMMIT may appear only in the
+    // body of GraftCommitMeta
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val owner = Paths.get("src/main/scala/graft/sources/GraftCommitSink.scala")
+    def metaBody(lines: Seq[String]): Range = {
+      val start = lines.indexWhere(_.startsWith("private[graft] object GraftCommitMeta {"))
+      if (start < 0) 0 until 0 else start until lines.indexOf("}", start)
+    }
+    val files = scalaFiles("src/main/scala/graft")
+    assert(files.contains(owner), s"$owner not found")
+    assert(metaBody(Files.readAllLines(owner).asScala.toSeq).nonEmpty,
+      s"GraftCommitMeta not found in $owner")
+    val hits = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toSeq
+      allowed = if (f == owner) metaBody(lines) else 0 until 0
+      (line, i) <- lines.zipWithIndex
+      if line.contains("\"_GRAFT_COMMIT") && !allowed.contains(i)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      s"manifest names outside GraftCommitMeta:\n${hits.mkString("\n")}")
+  }
+
   test("only GraftSession builds sessions in src/main") {
     // one builder owns master, partitions, UTC and the codegen confs, so
     // the mains and the test session cannot drift apart again

@@ -150,7 +150,7 @@ class PropertySpec extends SparkSpec {
     // constructed corpus: containment(srcA, srcB) = 0.12 = target exactly
     // (the real corpus has no pair near the target — this is the only
     // non-vacuous probe of the guarantee); srcC is gram-disjoint
-    val dir = TriageFixture.write(spark, 1)
+    val dir = TriageFixture.write(spark, 1, scratchDir("triage_x1"))
     val triage = queries.Audit.queries("q_llm_source_overlap_triage")(spark, dir)
       .collect()
     val ab = triage.find(r => r.getString(0) == "srcA" && r.getString(1) == "srcB")

@@ -9,10 +9,8 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    // a fresh directory per run: two concurrent suites must not share it
-    val out = java.nio.file.Files.createTempDirectory("graft_scale_x2").toString
+    val out = scratchDir("scale_x2")
     Scale.gen(spark, sf, out, 2)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(out))
     out
   }
 
@@ -129,7 +127,7 @@ class ScaleSpec extends SparkSpec {
     // The constructed corpus replicates with disjoint per-copy grams, so
     // containment(A, B) = 0.12 = target at any size while totals scale.
     Seq(1, 8).foreach { k =>
-      val d = TriageFixture.write(spark, k)
+      val d = TriageFixture.write(spark, k, scratchDir(s"triage_x$k"))
       val triage = queries.Audit.queries("q_llm_source_overlap_triage")(spark, d)
         .collect()
       val ab = triage.find(r =>

@@ -23,11 +23,7 @@ class SinksSpec extends SparkSpec {
   private def serConf = new SerializableHadoopConf(
     spark.sparkContext.hadoopConfiguration)
 
-  private def freshDir(name: String): String = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_rt/sinkspec_$name"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-    p
-  }
+  private def freshDir(name: String): String = scratchDir(s"sinks_$name")
 
   private def partFiles(dir: String): Seq[String] = {
     val d = new java.io.File(dir)
@@ -929,45 +925,56 @@ class SinksSpec extends SparkSpec {
           }
       }
     }
-    var k = 0
-    var crashed = true
-    while (crashed && k < 32) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(local))
-      CrashFs.disarm()
-      commitGen("g0", 100L); commitGen("g1", 200L); commitGen("g2", 300L)
-      Files.write(Paths.get(local, "part-99999-g0009.tsv"),
-        "9\tx\n".getBytes("UTF-8"))
-      Files.write(Paths.get(local, "_GRAFT_COMMIT.g0009"),
-        "#gen\t9\npart-99999-g0009.tsv\t1\t2\n".getBytes("UTF-8"))
-      CrashFs.arm(k)
-      crashed =
-        try { graft.sources.GraftCommitVacuum.vacuum(spark, cdir, 2); false }
-        catch { case _: java.io.IOException => true }
-      CrashFs.disarm()
-      // THE retention invariant, at every kill point: the current view
-      // and both retained generations remain fully readable — vacuum
-      // may die anywhere and no reader of a kept generation notices
-      assert(readable(None), s"kill point $k: current view torn")
-      assert(readable(Some(2)), s"kill point $k: retained g2 torn")
-      assert(readable(Some(1)), s"kill point $k: retained g1 torn")
-      if (crashed) {
-        // the crashed sweep may hold the lease — break it as a stale
-        // holder would, then the re-run must complete the sweep
-        val lock = new java.io.File(local, "_GRAFT_LOCK")
-        if (lock.exists()) assert(lock.delete())
-        graft.sources.GraftCommitVacuum.vacuum(spark, cdir, 2)
-        ()
+    // both retention policies expire exactly g0 here: keep-K with K = 2,
+    // and the age horizon with g0's history aged past it
+    val week = 7L * 86400 * 1000
+    val policies: Seq[(String, () => Unit)] = Seq(
+      "keep=2" -> (() => { graft.sources.GraftCommitVacuum.vacuum(spark, cdir, 2); () }),
+      "aged" -> (() => {
+        graft.sources.GraftCommitVacuum.vacuumAged(spark, cdir, week); ()
+      }))
+    for ((policy, runVacuum) <- policies) {
+      var k = 0
+      var crashed = true
+      while (crashed && k < 32) {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(local))
+        CrashFs.disarm()
+        commitGen("g0", 100L); commitGen("g1", 200L); commitGen("g2", 300L)
+        assert(new java.io.File(local, "_GRAFT_COMMIT.g0000")
+          .setLastModified(System.currentTimeMillis() - 2 * week))
+        Files.write(Paths.get(local, "part-99999-g0009.tsv"),
+          "9\tx\n".getBytes("UTF-8"))
+        Files.write(Paths.get(local, "_GRAFT_COMMIT.g0009"),
+          "#gen\t9\npart-99999-g0009.tsv\t1\t2\n".getBytes("UTF-8"))
+        CrashFs.arm(k)
+        crashed =
+          try { runVacuum(); false }
+          catch { case _: java.io.IOException => true }
+        CrashFs.disarm()
+        // THE retention invariant, at every kill point: the current view
+        // and both retained generations remain fully readable — vacuum
+        // may die anywhere and no reader of a kept generation notices
+        assert(readable(None), s"$policy kill point $k: current view torn")
+        assert(readable(Some(2)), s"$policy kill point $k: retained g2 torn")
+        assert(readable(Some(1)), s"$policy kill point $k: retained g1 torn")
+        if (crashed) {
+          // the crashed sweep may hold the lease — break it as a stale
+          // holder would, then the re-run must complete the sweep
+          val lock = new java.io.File(local, "_GRAFT_LOCK")
+          if (lock.exists()) assert(lock.delete())
+          runVacuum()
+        }
+        assert(!new java.io.File(local, "_GRAFT_COMMIT.g0000").exists(),
+          s"$policy kill point $k: sweep incomplete after re-run (g0 manifest)")
+        assert(!new java.io.File(local, "part-99999-g0009.tsv").exists(),
+          s"$policy kill point $k: sweep incomplete after re-run (orphan part)")
+        assert(!new java.io.File(local, "_GRAFT_COMMIT.g0009").exists(),
+          s"$policy kill point $k: sweep incomplete after re-run (orphan manifest)")
+        k += 1
       }
-      assert(!new java.io.File(local, "_GRAFT_COMMIT.g0000").exists(),
-        s"kill point $k: sweep incomplete after re-run (g0 manifest)")
-      assert(!new java.io.File(local, "part-99999-g0009.tsv").exists(),
-        s"kill point $k: sweep incomplete after re-run (orphan part)")
-      assert(!new java.io.File(local, "_GRAFT_COMMIT.g0009").exists(),
-        s"kill point $k: sweep incomplete after re-run (orphan manifest)")
-      k += 1
+      assert(!crashed, s"$policy vacuum fuzz never reached a crash-free sweep in 32 points")
+      assert(k > 2, s"suspiciously few $policy vacuum fault points covered: $k")
     }
-    assert(!crashed, "vacuum fuzz never reached a crash-free sweep in 32 points")
-    assert(k > 2, s"suspiciously few vacuum fault points covered: $k")
   }
 
   test("crash-point fuzz: a kill before EVERY commit mutation leaves old-or-new, never mixed; every state recovers") {
@@ -1072,6 +1079,287 @@ class SinksSpec extends SparkSpec {
     assert(k > 5, s"suspiciously few fault points covered: $k")
     // the crash-free run landed the new generation exactly
     assert(visible().contains(expect("gen1", 200L)))
+  }
+
+  test("mutation order: each commit-log entry point's filesystem mutations, in order, on fixed inputs") {
+    // Crash safety rests on the ORDER of the protocol's mutations (lease,
+    // gen-ahead sweep, renames, tmp → history → pointer swap, cleanup).
+    // This pins the exact ordered list each entry point performs on a
+    // fixed directory, so a change to that order shows up here first.
+    // Every directory carries a crashed commit's debris (a gen-ahead part,
+    // tombstone and history manifest, and a stranded tmp manifest) so the
+    // sweeps mutate too. Writer-side `_temp` attempt files are not gated.
+    import org.apache.spark.sql.functions._
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    CrashFs.disarm()
+    val ddl = "k BIGINT, s STRING"
+    val aged = System.currentTimeMillis() - 10L * 86400 * 1000
+    // attempt temps of one write: part p holds rows(p) rows keyed t0 + 100p + i
+    def temps(cdir: String, rows: Seq[Int], t0: Long): Array[WriterCommitMessage] = {
+      val fac = new GraftCommitWriterFactory(cdir, schema, serConf)
+      rows.zipWithIndex.map { case (n, p) =>
+        val w = fac.createWriter(p, t0 + p)
+        (0 until n).foreach(i => w.write(row(t0 + 100L * p + i, s"v$p-$i")))
+        w.commit(): WriterCommitMessage
+      }.toArray
+    }
+    // a table with one committed generation per entry of `gens`, plus debris
+    def table(name: String, gens: Seq[Int]*): (String, String) = {
+      val local = freshDir(name)
+      val cdir = s"crashfs://$local"
+      gens.zipWithIndex.foreach { case (rows, g) =>
+        new GraftCommitWrite(cdir, schema, truncateFirst = false)
+          .commit(temps(cdir, rows, 1000L * g))
+      }
+      Files.write(Paths.get(local, "part-99999-g0009.tsv"), "9\tx\n".getBytes("UTF-8"))
+      Files.write(Paths.get(local, "del-99999-g0009.tsv"), "9\n".getBytes("UTF-8"))
+      Files.write(Paths.get(local, "_GRAFT_COMMIT.g0009"),
+        "#gen\t9\npart-99999-g0009.tsv\t1\t2\n".getBytes("UTF-8"))
+      Files.write(Paths.get(local, "_GRAFT_COMMIT.g9.tmp"),
+        "#gen\t9\npart-99999-g0009.tsv\t1\t2\n".getBytes("UTF-8"))
+      (local, cdir)
+    }
+    // an abandoned (aged) staging dir for the retention janitor
+    def agedStage(local: String): Unit = {
+      val st = new java.io.File(local, "_merge")
+      assert(st.mkdirs())
+      assert(st.setLastModified(aged))
+    }
+    def mutations(local: String)(body: => Unit): Seq[String] =
+      CrashFs.record(body).map { case (op, p) =>
+        s"$op ${p.toUri.getPath.stripPrefix(local + "/")}"
+      }
+    val got = Seq.newBuilder[(String, Seq[String])]
+    locally {
+      val (local, cdir) = table("ord_append", Seq(1, 1), Seq(1))
+      val ms = temps(cdir, Seq(1, 1), 3000L)
+      got += "append" -> mutations(local) {
+        new GraftCommitWrite(cdir, schema, truncateFirst = false).commit(ms)
+      }
+    }
+    locally {
+      val (local, cdir) = table("ord_overwrite", Seq(1, 1), Seq(1))
+      val ms = temps(cdir, Seq(1, 1), 3000L)
+      got += "overwrite" -> mutations(local) {
+        new GraftCommitWrite(cdir, schema, truncateFirst = true).commit(ms)
+      }
+    }
+    locally {
+      val (local, cdir) = table("ord_stream", Seq(1))
+      val sw = new graft.sources.GraftCommitStreamingWrite(cdir, schema, "q-order")
+      def epochTemps(taskId: Long): Array[WriterCommitMessage] = {
+        val w = sw.createStreamingWriterFactory(null).createWriter(0, taskId, 0L)
+        w.write(row(taskId, "e0"))
+        Array(w.commit())
+      }
+      val ms = epochTemps(7L)
+      got += "stream epoch" -> mutations(local)(sw.commit(0L, ms))
+      val again = epochTemps(8L)
+      got += "stream re-delivery" -> mutations(local)(sw.commit(0L, again))
+    }
+    locally {
+      val (local, cdir) = table("ord_compact", Seq(1, 1), Seq(1))
+      got += "compact" -> mutations(local) {
+        graft.sources.GraftCommitCompact.compact(spark, cdir, ddl, 1); ()
+      }
+    }
+    locally {
+      val (local, cdir) = table("ord_binpack", Seq(10, 10, 1, 1, 1))
+      got += "binpack" -> mutations(local) {
+        graft.sources.GraftCommitCompact.binpack(spark, cdir, ddl, 5L); ()
+      }
+    }
+    locally {
+      val (local, cdir) = table("ord_merge", Seq(10, 10))
+      val changes = spark.range(2).select(
+        when(col("id") === 0, 5L).otherwise(500L).as("k"),
+        concat(lit("m"), col("id")).as("s"))
+      got += "merge" -> mutations(local) {
+        graft.sources.GraftCommitMerge.merge(spark, cdir, ddl, "k", changes); ()
+      }
+    }
+    locally {
+      val (local, cdir) = table("ord_mor", Seq(10, 10))
+      val keys = spark.range(2).select((col("id") * 101 + 3).as("k")) // 3, 104
+      got += "deleteMor" -> mutations(local) {
+        graft.sources.GraftCommitMerge.deleteMor(spark, cdir, ddl, "k", keys); ()
+      }
+    }
+    locally {
+      val (local, cdir) = table("ord_vacuum", Seq(1), Seq(1), Seq(1))
+      agedStage(local)
+      got += "vacuum keep=2" -> mutations(local) {
+        graft.sources.GraftCommitVacuum.vacuum(spark, cdir, 2); ()
+      }
+    }
+    locally {
+      val (local, cdir) = table("ord_aged", Seq(1), Seq(1), Seq(1))
+      agedStage(local)
+      assert(new java.io.File(local, "_GRAFT_COMMIT.g0000").setLastModified(aged))
+      val week = 7L * 86400 * 1000
+      got += "vacuumAged dry run" -> mutations(local) {
+        graft.sources.GraftCommitVacuum.vacuumAged(spark, cdir, week, dryRun = true); ()
+      }
+      got += "vacuumAged" -> mutations(local) {
+        graft.sources.GraftCommitVacuum.vacuumAged(spark, cdir, week); ()
+      }
+    }
+    val golden: Seq[(String, Seq[String])] = Seq(
+      "append" -> Seq(
+        "create _GRAFT_LOCK",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g0009",
+        "delete _GRAFT_COMMIT.g9.tmp",
+        "rename part-00000-g0002.tsv",
+        "rename part-00001-g0002.tsv",
+        "create _GRAFT_COMMIT.g2.tmp",
+        "create _GRAFT_COMMIT.g0002",
+        "delete _GRAFT_COMMIT",
+        "rename _GRAFT_COMMIT",
+        "delete _GRAFT_LOCK"),
+      "overwrite" -> Seq(
+        "create _GRAFT_LOCK",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g0009",
+        "delete _GRAFT_COMMIT.g9.tmp",
+        "rename part-00000-g0002.tsv",
+        "rename part-00001-g0002.tsv",
+        "create _GRAFT_COMMIT.g2.tmp",
+        "create _GRAFT_COMMIT.g0002",
+        "delete _GRAFT_COMMIT",
+        "rename _GRAFT_COMMIT",
+        "delete part-00000-g0000.tsv",
+        "delete part-00000-g0001.tsv",
+        "delete part-00001-g0000.tsv",
+        "delete _GRAFT_COMMIT.g0000",
+        "delete _GRAFT_COMMIT.g0001",
+        "delete _GRAFT_LOCK"),
+      "stream epoch" -> Seq(
+        "create _GRAFT_LOCK",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g0009",
+        "delete _GRAFT_COMMIT.g9.tmp",
+        "rename part-00000-g0001.tsv",
+        "create _GRAFT_COMMIT.g1.tmp",
+        "create _GRAFT_COMMIT.g0001",
+        "delete _GRAFT_COMMIT",
+        "rename _GRAFT_COMMIT",
+        "delete _GRAFT_LOCK"),
+      "stream re-delivery" -> Seq(
+        "create _GRAFT_LOCK",
+        "delete _GRAFT_LOCK"),
+      "compact" -> Seq(
+        "delete _compact",
+        "create _compact/_GRAFT_LOCK",
+        "rename _compact/part-00000-g0000.tsv",
+        "create _compact/_GRAFT_COMMIT.g0.tmp",
+        "create _compact/_GRAFT_COMMIT.g0000",
+        "rename _compact/_GRAFT_COMMIT",
+        "delete _compact/_GRAFT_LOCK",
+        "create _GRAFT_LOCK",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g0009",
+        "rename part-00000-g0002.tsv",
+        "create _GRAFT_COMMIT.g2.tmp",
+        "create _GRAFT_COMMIT.g0002",
+        "delete _GRAFT_COMMIT",
+        "rename _GRAFT_COMMIT",
+        "delete _compact",
+        "delete _GRAFT_LOCK"),
+      "binpack" -> Seq(
+        "delete _compact",
+        "create _compact/_GRAFT_LOCK",
+        "rename _compact/part-00000-g0000.tsv",
+        "create _compact/_GRAFT_COMMIT.g0.tmp",
+        "create _compact/_GRAFT_COMMIT.g0000",
+        "rename _compact/_GRAFT_COMMIT",
+        "delete _compact/_GRAFT_LOCK",
+        "create _GRAFT_LOCK",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g0009",
+        "rename part-00000-g0001.tsv",
+        "create _GRAFT_COMMIT.g1.tmp",
+        "create _GRAFT_COMMIT.g0001",
+        "delete _GRAFT_COMMIT",
+        "rename _GRAFT_COMMIT",
+        "delete _compact",
+        "delete _GRAFT_LOCK"),
+      "merge" -> Seq(
+        "delete _merge",
+        "create _merge/_GRAFT_LOCK",
+        "rename _merge/part-00000-g0000.tsv",
+        "rename _merge/part-00001-g0000.tsv",
+        "create _merge/_GRAFT_COMMIT.g0.tmp",
+        "create _merge/_GRAFT_COMMIT.g0000",
+        "rename _merge/_GRAFT_COMMIT",
+        "delete _merge/_GRAFT_LOCK",
+        "create _GRAFT_LOCK",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g0009",
+        "rename part-00000-g0001.tsv",
+        "rename part-00001-g0001.tsv",
+        "create _GRAFT_COMMIT.g1.tmp",
+        "create _GRAFT_COMMIT.g0001",
+        "delete _GRAFT_COMMIT",
+        "rename _GRAFT_COMMIT",
+        "delete _merge",
+        "delete _GRAFT_LOCK"),
+      "deleteMor" -> Seq(
+        "delete _merge",
+        "create _merge/_GRAFT_LOCK",
+        "rename _merge/part-00000-g0000.tsv",
+        "create _merge/_GRAFT_COMMIT.g0.tmp",
+        "create _merge/_GRAFT_COMMIT.g0000",
+        "rename _merge/_GRAFT_COMMIT",
+        "delete _merge/_GRAFT_LOCK",
+        "create _GRAFT_LOCK",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g0009",
+        "rename del-00000-g0001.tsv",
+        "create _GRAFT_COMMIT.g1.tmp",
+        "create _GRAFT_COMMIT.g0001",
+        "delete _GRAFT_COMMIT",
+        "rename _GRAFT_COMMIT",
+        "delete _merge",
+        "delete _GRAFT_LOCK"),
+      "vacuum keep=2" -> Seq(
+        "create _GRAFT_LOCK",
+        "delete _GRAFT_COMMIT.g0000",
+        "delete _GRAFT_COMMIT.g0009",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g9.tmp",
+        "delete _merge",
+        "delete _GRAFT_LOCK"),
+      "vacuumAged dry run" -> Seq(
+        "create _GRAFT_LOCK",
+        "delete _GRAFT_LOCK"),
+      "vacuumAged" -> Seq(
+        "create _GRAFT_LOCK",
+        "delete _GRAFT_COMMIT.g0000",
+        "delete _GRAFT_COMMIT.g0009",
+        "delete part-99999-g0009.tsv",
+        "delete del-99999-g0009.tsv",
+        "delete _GRAFT_COMMIT.g9.tmp",
+        "delete _merge",
+        "delete _GRAFT_LOCK"))
+    val actual = got.result()
+    def q(x: String) = "\"" + x + "\""
+    def render(xs: Seq[(String, Seq[String])]): String = xs.map { case (k, v) =>
+      q(k) + " -> Seq(\n" + v.map("  " + q(_)).mkString(",\n") + ")"
+    }.mkString(",\n")
+    assert(actual.map(_._1) === golden.map(_._1), render(actual))
+    actual.zip(golden).foreach { case ((k, got), (_, want)) =>
+      assert(got === want, s"$k mutation order changed:\n${render(Seq(k -> got))}")
+    }
   }
 
   test("merge/delete: copy-on-write rewrites only affected parts, untouched parts byte-identical, time travel composes") {
@@ -1848,14 +2136,26 @@ class CrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 object CrashFs {
   @volatile private var limit: Int = Int.MaxValue
   private val count = new java.util.concurrent.atomic.AtomicInteger(0)
+  @volatile private var log: Option[
+    java.util.concurrent.ConcurrentLinkedQueue[(String, org.apache.hadoop.fs.Path)]] = None
   def arm(k: Int): Unit = { count.set(0); limit = k }
   def disarm(): Unit = { limit = Int.MaxValue; count.set(0) }
+  /** Runs `body` and returns the (op, path) of every mutation the gate
+    * let through, in the order they ran. */
+  def record(body: => Unit): Seq[(String, org.apache.hadoop.fs.Path)] = {
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.hadoop.fs.Path)]()
+    log = Some(q)
+    try body finally log = None
+    scala.jdk.CollectionConverters.IteratorHasAsScala(q.iterator()).asScala.toSeq
+  }
   private[graft] def gate(op: String,
       p: org.apache.hadoop.fs.Path): Unit = {
     if (!p.toString.contains("_temp")) {
       if (count.incrementAndGet() > limit)
         throw new java.io.IOException(
           s"injected crash before $op $p (mutation ${count.get()})")
+      log.foreach(_.add((op, p)))
     }
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.commons.io.FileUtils
-import org.scalatest.BeforeAndAfterAll
 import graft.streaming.Streams
 
 /** Replayed event row — top-level so Spark can generate its Encoder
@@ -20,24 +19,7 @@ case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
   * equal the batch twin computed on the same rows — the twin being the
   * DuckDB-oracled declared query.
   */
-class StreamingSpec extends SparkSpec with BeforeAndAfterAll {
-
-  private val scratchDirs =
-    scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  /** A fresh, empty directory for one test's sources, sinks and
-    * checkpoints. `createTempDirectory` names it uniquely, so two test
-    * JVMs on one host never share or wipe each other's directories. The
-    * suite removes them when it ends. */
-  private def scratchDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_stream_${tag}_")
-    scratchDirs += d
-    d.toString
-  }
-
-  override def afterAll(): Unit =
-    try scratchDirs.foreach(d => FileUtils.deleteQuietly(d.toFile))
-    finally super.afterAll()
+class StreamingSpec extends SparkSpec {
 
   private lazy val eventsDf: DataFrame =
     Tables(spark, sf, "events").select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -1293,8 +1275,8 @@ class StreamingSpec extends SparkSpec with BeforeAndAfterAll {
     // attempt temp is swept
     val fsPath = new org.apache.hadoop.fs.Path(out)
     val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = graft.sources.GraftCommitMeta.readEpochMarker(
-      fs, new org.apache.hadoop.fs.Path(out, "_GRAFT_COMMIT"))
+    val marker = graft.sources.GraftCommitMeta.readManifestFile(
+      fs, new org.apache.hadoop.fs.Path(out, "_GRAFT_COMMIT")).epoch
     assert(marker.isDefined, "streaming manifest must carry the epoch marker")
     val (qid, lastEpoch) = marker.get
     val schema2 = new org.apache.spark.sql.types.StructType()

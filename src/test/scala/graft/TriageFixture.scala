@@ -23,10 +23,9 @@ import org.apache.spark.sql.SparkSession
   */
 object TriageFixture {
 
-  def write(spark: SparkSession, copies: Int): String = {
+  /** Writes the corpus (`copies` replicas) under `dir`; returns `dir`. */
+  def write(spark: SparkSession, copies: Int, dir: String): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_triage_x$copies").toString
     val rows = (0 until copies).flatMap { c =>
       val aTok = (0 until 104).map(i => s"a${i}_c$c")
       val bTok = aTok.take(16) ++ (16 until 104).map(i => s"b${i}_c$c")

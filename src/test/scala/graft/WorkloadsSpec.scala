@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.Workloads
@@ -127,7 +126,7 @@ class WorkloadsSpec extends SparkSpec {
     * BUILDING segment and ASIA has no nations, so both queries are empty. */
   private def fixture(empty: Boolean): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("wl_edge").toString
+    val dir = scratchDir("wl_edge")
     def write(df: DataFrame, t: String): Unit = df.write.parquet(s"$dir/$t.parquet")
     val asia = if (empty) 2 else 0
     val building = if (empty) "AUTOMOBILE" else "BUILDING"

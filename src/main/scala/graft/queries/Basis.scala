@@ -304,8 +304,9 @@ object Basis {
       // agg + two semi-join probes): without a barrier the co-purchase
       // lineage re-executes 3^rounds times (measured 48 s at sf0.1 —
       // the round-6 bench caught it). Lazy localCheckpoints (the BFS/CC
-      // discipline) flatten every round to one materialization while
-      // keeping the first plan reference execution-free.
+      // discipline) flatten every round to one materialization; under
+      // adaptive execution each one runs the shuffle stages beneath it
+      // when the query is built, not at its first action.
       def peel(e: DataFrame): DataFrame =
         kcoreRound(e, k).localCheckpoint(false)
       // kcore keeps its e0 checkpoint (unlike bfs/sp/label-prop): each

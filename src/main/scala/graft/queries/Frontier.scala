@@ -51,11 +51,13 @@ object Frontier {
     // round joins the reached set to the edge list and re-distincts, so
     // per-round state is ≤|V| ids and the work is one equi-join shuffle —
     // the Pregel shape, like q_llm_dedup_cc. LAZY localCheckpoints (the
-    // round count is fixed; nothing inspects data mid-loop) keep lineage
-    // flat at execution time while plan-only consumers (PlanSpec sweeps,
-    // PlanLock) never run a job; the edge list checkpoints too, so the
-    // orders⋈lineitem build runs once, not once per round. dist = first
-    // level an id appears in.
+    // round count is fixed; nothing inspects data mid-loop) keep each
+    // round's lineage flat. They are not job-free at build: under
+    // adaptive execution each one finalizes its adaptive plan, so
+    // building the query (PlanSpec sweeps, PlanLock) already runs the
+    // shuffle stages beneath every round. The edge list is a cached
+    // frame, so the orders⋈lineitem build runs once, not once per
+    // round. dist = first level an id appears in.
     "q_graph_bfs" -> ((s, d) => {
       val e = U.coPurchaseEdges(s, d) // src-partitioned cache; no ckpt (see U)
       val seeds = Tables(s, d, "customer").where(col("c_custkey") < 5)

@@ -28,7 +28,8 @@ object Learn {
   private val K = 8
   private val ITERS = 2
 
-  /** exact BIGINT floor division (numerator adjusted to divisibility). */
+  /** exact BIGINT floor division (numerator adjusted to divisibility) —
+    * truncating (Spark `div`) ≡ flooring (DuckDB `//`) engines agree. */
   private def fdiv(s: String, n: String): String =
     s"($s - ((($s % $n) + $n) % $n)) div $n"
 
@@ -38,22 +39,80 @@ object Learn {
     * scoring loop. Integer arithmetic ⇒ bit-identical either way. */
   private val d2: Column = expr("graft_l2sq(q, c)")
 
-  private def assign(vecs: DataFrame, cent: DataFrame): DataFrame =
-    // argmin as a MIN(struct(d2, cid)) aggregate, NOT a rank window: the
-    // aggregate partial-combines map-side (each input partition collapses
-    // its |partition|·k scored rows to |partition| before any exchange),
-    // while the window form SORTS the full |vecs|·k scored frame — with
-    // the 64-long grid array on every row, that sort was the measured
-    // bulk of the ×100/2048-cell training pass (the scored frame is
-    // 134M rows there). Same result bit-for-bit: lexicographic struct
-    // min ≡ rank 1 under orderBy(d2, cid). first(q) is deterministic —
-    // q is functionally dependent on the group key.
-    vecs.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("q"), col("cid"), d2.as("d2"))
-      .groupBy("vec_id")
+  /** Each vector's argmin centroid: vecs (vec_id, keys…, q) scored
+    * against cent (keys…, cid, c) → (vec_id, keys…, q, cid). With no
+    * key every vector scores every centroid (a broadcast cross join);
+    * with keys it scores only its own key's centroids (a broadcast
+    * equi-join, never a cross).
+    *
+    * argmin as a MIN(struct(d2, cid)) aggregate, NOT a rank window: the
+    * aggregate partial-combines map-side (each input partition collapses
+    * its |partition|·k scored rows to |partition| before any exchange),
+    * while the window form SORTS the full |vecs|·k scored frame — with
+    * the 64-long grid array on every row, that sort was the measured
+    * bulk of the ×100/2048-cell training pass (the scored frame is
+    * 134M rows there). Same result bit-for-bit: lexicographic struct
+    * min ≡ rank 1 under orderBy(d2, cid). first(q) is deterministic —
+    * q is functionally dependent on the group key. */
+  private def assign(vecs: DataFrame, cent: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    val k = keys.map(col)
+    val scored =
+      if (keys.isEmpty) vecs.crossJoin(broadcast(cent))
+      else vecs.join(broadcast(cent), keys)
+    scored.select(col("vec_id") +: k :+ col("q") :+ col("cid") :+ d2.as("d2"): _*)
+      .groupBy(col("vec_id") +: k: _*)
       .agg(min(struct(col("d2"), col("cid"))).getField("cid").as("cid"),
         first(col("q")).as("q"))
-      .select(col("vec_id"), col("q"), col("cid"))
+      .select(col("vec_id") +: k :+ col("q") :+ col("cid"): _*)
+  }
+
+  /** [[ITERS]] Lloyd rounds over grid vectors `vecs` (vec_id, keys…, q)
+    * from `seeds` (keys…, cid, c) → (keys…, cid, c) — the ONE
+    * assignment-and-update body every trained quantizer runs: the flat
+    * coarse cells and k-means with no key, the two-level sub-cells keyed
+    * by super-cell `sid`, the PQ codebooks keyed by subspace `m`. A key
+    * partitions the work: each vector scores only its key's centroids
+    * and each centroid averages only its key's members, so one chain
+    * trains every key's codebook in the same rounds (bit-identical to
+    * one chain per key — LearnSpec pins that). The recompute is ONE
+    * partial-aggregated shuffle of (keys, cid, pos) component sums per
+    * round, floor-divided on the integer grid. */
+  private[graft] def lloyd(vecs: DataFrame, seeds: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    val k = keys.map(col)
+    (1 to ITERS).foldLeft(seeds) { (cent, _) =>
+      assign(vecs, cent, keys)
+        .select(k :+ col("cid") :+ posexplode(col("q")).as(Seq("pos", "v")): _*)
+        .groupBy(k :+ col("cid") :+ col("pos"): _*)
+        .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
+        .withColumn("cv", expr(fdiv("sv", "n")))
+        .groupBy(k :+ col("cid"): _*)
+        .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").as("c"))
+    }
+  }
+
+  /** The deterministic training sample (vec_id, q, st) of grid vectors
+    * `vecs` (vec_id, q): every `st`-th vector, st = max(1, N div
+    * `size`), so ~`size` rows at any N. Integer `div` (not
+    * double-divide-then-cast) so the DuckDB twins' `//` agrees exactly. */
+  private[graft] def strideSample(vecs: DataFrame, size: Long): DataFrame = {
+    val step = vecs.agg(
+      expr(s"greatest(CAST(1 AS BIGINT), count(1) div $size)").as("st"))
+    vecs.crossJoin(broadcast(step))
+      .where(col("vec_id") % col("st") === 0)
+      .select(col("vec_id"), col("q"), col("st"))
+  }
+
+  /** Lloyd seeds (keys…, cid, c): the `n` lowest members of a stride
+    * sample (per key), indexed ARITHMETICALLY — cid = vec_id div st: the
+    * stride construction makes the rank a closed form, so no window at
+    * all (vec_ids are dense from 0, which LearnSpec guards). */
+  private[graft] def strideSeeds(sample: DataFrame, n: Int,
+      keys: Seq[String] = Nil): DataFrame =
+    sample.where(col("vec_id") < lit(n.toLong) * col("st"))
+      .select(keys.map(col) :+ expr("CAST(vec_id div st AS INT)").as("cid") :+
+        col("q").as("c"): _*)
 
   /** The two frames every trained-quantizer consumer joins: the probe
     * list (one row per (vector, probed cell), ranks 1..`probes` of the
@@ -108,30 +167,9 @@ object Learn {
     * assignment, it never retrains the cells). */
   private def trainedCent(s: org.apache.spark.sql.SparkSession,
       d: String, cells: Int, vecs: DataFrame): DataFrame =
-    // integer `div` (not double-divide-then-cast) so the DuckDB twin's
-    // `//` agrees exactly at any N
     graft.Memo(s, s"quantizer:$d:$cells") {
-      val sampleStep = vecs.agg(
-        expr(s"greatest(CAST(1 AS BIGINT), count(1) div ${32L * cells})").as("st"))
-      val sample = vecs.crossJoin(broadcast(sampleStep))
-        .where(col("vec_id") % col("st") === 0)
-        .select(col("vec_id"), col("q"), col("st"))
-      // seeds: the `cells` lowest sample members, indexed ARITHMETICALLY
-      // (cid = vec_id div stride — the stride construction makes the rank
-      // a closed form, so no window at all, global or otherwise; vec_ids
-      // are dense from 0, which LearnSpec guards)
-      var c0 = sample.where(col("vec_id") < lit(cells.toLong) * col("st"))
-        .select(expr("CAST(vec_id div st AS INT)").as("cid"), col("q").as("c"))
-      for (_ <- 1 to ITERS) {
-        c0 = assign(sample, c0)
-          .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
-          .groupBy("cid", "pos")
-          .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-          .withColumn("cv", expr(fdiv("sv", "n")))
-          .groupBy("cid")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").as("c"))
-      }
-      c0.persist()
+      val sample = strideSample(vecs, 32L * cells)
+      lloyd(sample, strideSeeds(sample, cells)).persist()
     }
 
   /** The shared tail of every scoring pass: scored (vec_id, embedding,
@@ -293,68 +331,32 @@ object Learn {
     val sub = (cells + scells - 1) / scells
     graft.Memo(s, s"quantizer2l:$d:$cells") {
       // the full training sample (32·cells rows, arithmetic stride)
-      val sampleStep = vecs.agg(
-        expr(s"greatest(CAST(1 AS BIGINT), count(1) div ${32L * cells})").as("st"))
-      val sample = vecs.crossJoin(broadcast(sampleStep))
-        .where(col("vec_id") % col("st") === 0)
-        .select(col("vec_id"), col("q"), col("st"))
+      val sample = strideSample(vecs, 32L * cells)
       // 1. super codebook on a 32·√cells sub-sample (stride widened by
       //    `sub`; seeds indexed arithmetically like the flat trainer)
       val sample2 = sample.where(col("vec_id") % (col("st") * sub) === 0)
         .select(col("vec_id"), col("q"), (col("st") * sub).as("st"))
-      var sup = sample2
-        .where(col("vec_id") < lit(scells.toLong) * col("st"))
-        .select(expr("CAST(vec_id div st AS INT)").as("cid"), col("q").as("c"))
-      for (_ <- 1 to ITERS) {
-        sup = assign(sample2, sup)
-          .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
-          .groupBy("cid", "pos")
-          .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-          .withColumn("cv", expr(fdiv("sv", "n")))
-          .groupBy("cid")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").as("c"))
-      }
-      val supM = sup.persist(); supM.count()
+      val supM = lloyd(sample2, strideSeeds(sample2, scells)).persist()
+      supM.count()
       // 2. tag the full sample with its super-cell
       val tagged = assign(sample, supM)
         .select(col("vec_id"), col("q"), col("cid").as("sid"))
       // 3. per-super-cell sub-Lloyd, all cells in one pass per round:
       //    seeds = each super-cell's `sub` lowest sample ids (a rank
       //    window over the BOUNDED 32·cells-row sample, one-time)
-      var cw = tagged
+      val seeds = tagged
         .withColumn("rk", row_number().over(
           Window.partitionBy("sid").orderBy(col("vec_id"))))
         .where(col("rk") <= sub)
-        .select(col("sid"), (col("rk") - 1).as("lcid"), col("q").as("c"))
-      for (_ <- 1 to ITERS) {
-        cw = assignBy(tagged, cw)
-          .select(col("sid"), col("lcid"), posexplode(col("q")).as(Seq("pos", "v")))
-          .groupBy("sid", "lcid", "pos")
-          .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-          .withColumn("cv", expr(fdiv("sv", "n")))
-          .groupBy("sid", "lcid")
-          .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").as("c"))
-      }
+        .select(col("sid"), (col("rk") - 1).as("cid"), col("q").as("c"))
       // global cid = sid·sub + local — the tree IS the centroid→super map
-      val cs = cw.select((col("sid") * sub + col("lcid")).cast("int").as("ccid"),
-        col("c"), col("sid"))
+      val cs = lloyd(tagged, seeds, Seq("sid"))
+        .select((col("sid") * sub + col("cid")).cast("int").as("ccid"),
+          col("c"), col("sid"))
       val csm = cs.persist(); csm.count()
       (supM, csm)
     }
   }
-
-  /** [[assign]] with an extra equi-key: vecs (vec_id, q, sid) score only
-    * the cents (sid, lcid, c) of THEIR sid — the data-parallel
-    * per-super-cell Lloyd step (a broadcast hash join, never a cross). */
-  private def assignBy(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs.join(broadcast(cents), "sid")
-      .select(col("vec_id"), col("q"), col("sid"), col("lcid"),
-        d2.as("d2"))
-      .groupBy("vec_id")
-      .agg(min(struct(col("d2"), col("sid"), col("lcid"))).as("m"),
-        first(col("q")).as("q"))
-      .select(col("vec_id"), col("q"), col("m.sid").as("sid"),
-        col("m.lcid").as("lcid"))
 
   private[graft] def twoLevelScored(s: org.apache.spark.sql.SparkSession,
       d: String, cells: Int, w: Int): DataFrame = {
@@ -466,20 +468,9 @@ object Learn {
     * declared report, the silhouette score, and the cluster-labeling
     * assignment (a divergent loop would silently decouple the labels
     * from the declared clustering). */
-  private def kmeansCent(vecs: DataFrame): DataFrame = {
-    var cent = vecs.where(col("vec_id") < K)
-      .select(col("vec_id").cast("int").as("cid"), col("q").as("c"))
-    for (_ <- 1 to ITERS) {
-      cent = assign(vecs, cent)
-        .select(col("cid"), posexplode(col("q")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-        .withColumn("cv", expr(fdiv("sv", "n")))
-        .groupBy("cid")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), s -> s.cv)").as("c"))
-    }
-    cent
-  }
+  private def kmeansCent(vecs: DataFrame): DataFrame =
+    lloyd(vecs, vecs.where(col("vec_id") < K)
+      .select(col("vec_id").cast("int").as("cid"), col("q").as("c")))
 
   /** (vec_id, cid): every vector's converged cluster assignment —
     * q_llm_cluster_terms' join side. */

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import U._
@@ -67,7 +67,6 @@ object Refine {
   private[graft] val M = 8
   private[graft] val KPQ = 16
   private val SUBDIM = 64 / M
-  private val ROUNDS = 2
   /** Capped ADC query set (the q_llm_simsearch_topk convention). */
   private val QCAP = 32
   /** Gate-scale shortlist depth for the ADC → exact-re-rank serving
@@ -96,11 +95,6 @@ object Refine {
                OR greatest(0.0, acc[1] + ($mu - v) - $SLACK) > $THRESH
              THEN 1.0 ELSE 0.0 END))"""
 
-  /** exact BIGINT floor division (numerator adjusted to divisibility) —
-    * truncating (Spark `div`) ≡ flooring (DuckDB `//`) engines agree. */
-  private def fdiv(s: String, n: String): String =
-    s"($s - ((($s % $n) + $n) % $n)) div $n"
-
   /** Per-language target mix in micro-units (Σ = 1e6): the re-balance a
     * multilingual pretraining run wants against this corpus's ~44% en
     * skew. Kept as (lang, target) pairs so Spark and DuckDB literal
@@ -119,6 +113,12 @@ object Refine {
     Tables(s, d, "embeddings").select(col("vec_id"), expr(
       "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))")
       .as("q"))
+
+  /** One row per subspace of grid-vector column `v`: explode this into
+    * (m, sq) — `sq` is the `m`-th [[SUBDIM]]-dim slice. */
+  private def subspaces(v: String): Column = explode(expr(
+    s"""transform(sequence(0, ${M - 1}), m -> named_struct(
+         'm', CAST(m AS INT), 'sq', slice($v, m * $SUBDIM + 1, $SUBDIM)))"""))
 
   /** Quantizer-growth rule, DECLARED (round 11): coarse cells =
     * 2^max(4, round(log₂(N/125))) — cells ∝ N, anchored at the
@@ -253,14 +253,18 @@ object Refine {
     // residuals on the 1e-6 grid: r = grid(x) − centroid(cell(x)) — one
     // broadcast map pass over the assignment frame, no extra shuffle.
     // Memoized + LAZY localCheckpoint (not persist): the coarse
-    // trainer's logical lineage rides in through `cand`, and the Lloyd
-    // loop + encode below reference `res` nine times — with persist the
-    // ANALYZER re-walked the multiplied ~20k-node tree on every
-    // invocation (measured: the declared query's warm bench time went
-    // 1.6 → 20.4 s, pure driver-side analysis + the GC smear it threw
-    // over neighboring bench queries). localCheckpoint truncates the
-    // LOGICAL plan to a LogicalRDD immediately while staying lazy, so
-    // plan-only consumers remain execution-free.
+    // trainer's logical lineage rides in through `cand`, and the
+    // codebook sample + encode below reference `res` again — with
+    // persist the ANALYZER re-walked the multiplied tree on every
+    // invocation (measured when the codebooks were 8 unrolled chains:
+    // the declared query's warm bench time went 1.6 → 20.4 s, pure
+    // driver-side analysis + the GC smear it threw over neighboring
+    // bench queries). localCheckpoint truncates the LOGICAL plan to a
+    // LogicalRDD immediately, but it is NOT execution-free: under
+    // adaptive execution it finalizes the adaptive plan, so the shuffle
+    // stages beneath it (the coarse trainer's Lloyd rounds and
+    // assignment) run when the query is BUILT — plan-only consumers
+    // (PlanLock, explain) run them too.
     val res = graft.Memo(s, s"pq-res:$d:$cells") {
       cand.select(col("cid2").as("vec_id"), col("ccell").as("gcell"),
           expr("transform(ce, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))")
@@ -270,51 +274,26 @@ object Refine {
           expr("zip_with(q, gc, (x, y) -> x - y)").as("r"))
         .localCheckpoint(false)
     }
-    // one codebook per subspace, trained on RESIDUAL slices: seeds
-    // indexed arithmetically from the stride construction (no window),
-    // then ROUNDS Lloyd iterations entirely on the sample — constant
+    // the M subspace codebooks, trained on RESIDUAL slices as ONE Lloyd
+    // chain keyed by subspace `m`: the stride sample explodes into its
+    // M slices, seeds are indexed arithmetically per slice (no window),
+    // and every round trains all M codebooks in one pass — constant
     // work at any N. The M·K-row codebook frame is memoized per
     // (session, sfDir) and lazily persist()ed (the
     // q_llm_knn_graph_trained quantizer discipline), so its two
     // consumers below — the encode pass and the query-side distance
     // tables — share ONE training materialization instead of each
-    // re-running the sampled Lloyd subplan; plan-only consumers stay
-    // execution-free because persist() is lazy.
+    // re-running the sampled Lloyd subplan.
     val cbs = graft.Memo(s, s"pq-res-codebooks:$d:$cells") {
-      val sampleStep = res.agg(
-        expr(s"greatest(CAST(1 AS BIGINT), count(1) div ${32L * KPQ})").as("st"))
-      val sample = res.crossJoin(broadcast(sampleStep))
-        .where(col("vec_id") % col("st") === 0)
-        .select(col("vec_id"), col("r").as("q"), col("st"))
-      (0 until M).map { mi =>
-        val subf = sample.select(col("vec_id"),
-          slice(col("q"), mi * SUBDIM + 1, SUBDIM).as("sq"), col("st"))
-        var cent = subf.where(col("vec_id") < lit(KPQ.toLong) * col("st"))
-          .select(expr("CAST(vec_id div st AS INT)").as("cid"), col("sq").as("c"))
-        for (_ <- 1 to ROUNDS) {
-          val asg = subf.crossJoin(broadcast(cent))
-            .select(col("vec_id"), col("sq"), col("cid"),
-              expr("graft_l2sq(sq, c)").as("d2"))
-            .withColumn("rk", row_number().over(
-              Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))))
-            .where(col("rk") === 1)
-          cent = asg
-            .select(col("cid"), posexplode(col("sq")).as(Seq("pos", "v")))
-            .groupBy("cid", "pos")
-            .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-            .withColumn("cv", expr(fdiv("sv", "n")))
-            .groupBy("cid")
-            .agg(expr("transform(array_sort(collect_list(struct(pos, cv))), x -> x.cv)")
-              .as("c"))
-        }
-        cent.select(lit(mi).as("m"), col("cid"), col("c"))
-      }.reduce(_ unionAll _).persist()
+      val sample = Learn.strideSample(res.select(col("vec_id"), col("r").as("q")),
+          32L * KPQ)
+        .select(col("vec_id"), col("st"), subspaces("q").as("e"))
+        .select(col("vec_id"), col("st"), col("e.m").as("m"), col("e.sq").as("q"))
+      Learn.lloyd(sample, Learn.strideSeeds(sample, KPQ, Seq("m")), Seq("m"))
+        .persist()
     }
     // every vector's M residual subvectors (tagged with its coarse cell)
-    val subs = res.select(col("vec_id"), col("gcell"), explode(expr(
-        s"""transform(sequence(0, ${M - 1}), m -> named_struct(
-             'm', CAST(m AS INT), 'sq', slice(r, m * $SUBDIM + 1, $SUBDIM)))"""))
-        .as("e"))
+    val subs = res.select(col("vec_id"), col("gcell"), subspaces("r").as("e"))
       .select(col("vec_id"), col("gcell"), col("e.m").as("m"), col("e.sq").as("sq"))
     // encode: argmin code per (vector, subspace) — a broadcast map pass
     val codes = subs.join(broadcast(cbs), "m")
@@ -328,10 +307,7 @@ object Refine {
       .crossJoin(broadcast(centG))
       .select(col("vec_id").as("qid"), col("gcell"),
         expr("zip_with(q, gc, (x, y) -> x - y)").as("qr"))
-      .select(col("qid"), col("gcell"), explode(expr(
-        s"""transform(sequence(0, ${M - 1}), m -> named_struct(
-             'm', CAST(m AS INT), 'sq', slice(qr, m * $SUBDIM + 1, $SUBDIM)))"""))
-        .as("e"))
+      .select(col("qid"), col("gcell"), subspaces("qr").as("e"))
       .select(col("qid"), col("gcell"), col("e.m").as("m"), col("e.sq").as("sq"))
     val dtab0 = qres.join(broadcast(cbs), "m")
       .select(col("qid"), col("gcell"), col("m"), col("cid").as("code"),

@@ -684,8 +684,10 @@ object GraftCommitCompact {
     * manifest and REFUSE if the table advanced while the rewrite staged;
     * run the caller's validation against the re-read entries; sweep
     * gen-ahead debris; rename the staged parts to generation-unique
-    * names; publish `carried ++ staged` as the next generation. Replaced parts are NEVER deleted here — prior
-    * generations reference them; retention vacuum retires them.
+    * names; publish `carried ++ staged` as the next generation, with the
+    * current manifest's streaming `#epoch` marker. Replaced parts are
+    * NEVER deleted here — prior generations reference them; retention
+    * vacuum retires them.
     * @return the new generation's staged entries as published */
   private[sources] def publishStaged(fs: FileSystem, dir: Path, gen0: Long,
       stage: Path, stageEntries: Seq[GraftManEntry], sig: String,
@@ -708,7 +710,9 @@ object GraftCommitCompact {
         (new Path(stage, e.file), GraftManEntry(fileName(prefix, i, newGen),
           e.rows, entryNcols.getOrElse(e.ncols), e.stats))
       }, what)
-    publish(fs, dir, newGen, sig, epoch = None, carried ++ published)
+    // without the marker a re-delivered, already-committed epoch of a
+    // streamed table would publish again after the rewrite
+    publish(fs, dir, newGen, sig, cur.epoch, carried ++ published)
     fs.delete(stage, true)
     published
   }

@@ -10,8 +10,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * the cost unit these budgets pin. The base tables are loaded into the
   * cache first, as a warm pass finds them. */
 class JobBudgetSpec extends SparkSpec {
-  private def jobs(query: String, tables: Seq[String], dir: String = sf): Int = {
-    tables.foreach(t => Tables(spark, dir, t).count())
+  private def jobs(query: String, tables: Seq[String], dir: String = sf,
+      session: org.apache.spark.sql.SparkSession = spark): Int = {
+    tables.foreach(t => Tables(session, dir, t).count())
     val sc = spark.sparkContext
     val group = s"job-budget/$query"
     val n = new AtomicInteger
@@ -24,7 +25,7 @@ class JobBudgetSpec extends SparkSpec {
     sc.addSparkListener(counter)
     sc.setJobGroup(group, query, interruptOnCancel = false)
     try {
-      assert(SparkEntry.queries(query)(spark, dir).collect().nonEmpty)
+      assert(SparkEntry.queries(query)(session, dir).collect().nonEmpty)
       GraftTestBus.drain(sc)
       n.get
     } finally {
@@ -55,5 +56,13 @@ class JobBudgetSpec extends SparkSpec {
       Seq("region", "nation", "customer", "supplier", "orders", "lineitem"),
       "/root/testdata/sf0.01")
     assert(n <= 7, s"$n jobs")
+  }
+
+  // a fresh session has no memoized quantizer, so the count covers the
+  // cold first call: the coarse model, the residuals, the M codebooks
+  // trained as one chain keyed by subspace, the ADC frame and the action
+  test("q_llm_simsearch_pq: cold first call, build and action, in <= 47 jobs") {
+    val n = jobs("q_llm_simsearch_pq", Seq("embeddings"), session = spark.newSession())
+    assert(n <= 47, s"$n jobs")
   }
 }

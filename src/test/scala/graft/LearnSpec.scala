@@ -154,6 +154,42 @@ class LearnSpec extends SparkSpec {
       === rows(Assay.labelNoiseWith(spark, sf, 16)))
   }
 
+  test("Lloyd step: a key partitions the work (keyed by m or sid ≡ one unkeyed run per key)") {
+    import graft.queries.Refine
+    graft.functions.GraftFunctions.register(spark)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val grid = Tables(spark, sf, "embeddings").select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))").as("g"))
+    // the PQ codebook shape: every vector's M slices keyed by subspace m,
+    // seeded per slice by the KPQ lowest ids
+    val dim = 64 / Refine.M
+    val bySub = grid.select(col("vec_id"), explode(expr(
+        s"""transform(sequence(0, ${Refine.M - 1}), m -> named_struct(
+             'm', m, 'q', slice(g, m * $dim + 1, $dim)))""")).as("e"))
+      .select(col("vec_id"), col("e.m").as("m"), col("e.q").as("q"))
+    val subSeeds = bySub.where(col("vec_id") < Refine.KPQ)
+      .select(col("m"), col("vec_id").cast("int").as("cid"), col("q").as("c"))
+    // the two-level sub-cell shape: each vector in one super-cell sid,
+    // seeded per super-cell by its 4 lowest ids
+    val bySid = grid.select(col("vec_id"), (col("vec_id") % 4).cast("int").as("sid"),
+      col("g").as("q"))
+    val sidSeeds = bySid.where(col("vec_id") < 16).select(col("sid"),
+      expr("CAST(vec_id div 4 AS INT)").as("cid"), col("q").as("c"))
+    for ((vecs, seeds, key, n) <- Seq((bySub, subSeeds, "m", Refine.M),
+        (bySid, sidSeeds, "sid", 4))) {
+      val keyed = Learn.lloyd(vecs, seeds, Seq(key)).cache()
+      assert(keyed.select(key).distinct().count() === n)
+      for (k <- 0 until n) {
+        val alone = Learn.lloyd(vecs.where(col(key) === k).drop(key),
+          seeds.where(col(key) === k).drop(key), Nil)
+        assert(rows(keyed.where(col(key) === k).drop(key)) === rows(alone),
+          s"keyed run differs from the unkeyed run of $key = $k")
+      }
+      keyed.unpersist()
+    }
+  }
+
   test("q_llm_bpe_pairs: ranked top-30 with a verifiable champion count") {
     val out = Learn.queries("q_llm_bpe_pairs")(spark, sf).collect()
     assert(out.length === 30)

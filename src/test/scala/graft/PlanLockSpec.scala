@@ -143,4 +143,22 @@ class PlanLockSpec extends SparkSpec {
     assert(hits.isEmpty,
       s"session builders outside GraftSession:\n${hits.mkString("\n")}")
   }
+
+  test("one Lloyd update in src/main: struct(pos, cv) and def fdiv appear once each") {
+    // every trained quantizer (flat, two-level, k-means, PQ) runs
+    // Learn.lloyd; a second copy of its centroid recompute or of its
+    // floor division would let the trainers drift apart again
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val files = scalaFiles("src/main/scala/graft")
+    assert(files.nonEmpty, "no main sources found")
+    for (needle <- Seq("struct(pos, cv)", "def fdiv")) {
+      val hits = for {
+        f <- files
+        (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+        if line.contains(needle)
+      } yield s"$f:${i + 1}: ${line.trim}"
+      assert(hits.size === 1, s"`$needle` must appear exactly once:\n${hits.mkString("\n")}")
+    }
+  }
 }

@@ -1303,4 +1303,35 @@ class StreamingSpec extends SparkSpec {
     assert(gens().size === 4, "fresh lineage epoch must commit")
     assert(readOut().count() === 31L)
   }
+
+  test("commit-sink streaming write: a compaction keeps the epoch marker, so a re-delivered epoch stays a no-op") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    val out = scratchDir("commitcompact")
+    val ddl = "k BIGINT, s STRING"
+    val schema = new StructType().add("k", LongType).add("s", StringType)
+    val sw = new graft.sources.GraftCommitStreamingWrite(out, schema, "q-compact")
+    def deliver(epoch: Long, taskId: Long): Unit = {
+      val w = sw.createStreamingWriterFactory(null).createWriter(0, taskId, epoch)
+      w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](epoch, org.apache.spark.unsafe.types.UTF8String.fromString(s"e$epoch"))))
+      sw.commit(epoch, Array(w.commit()))
+    }
+    def gens(): Int = new java.io.File(out).listFiles()
+      .count(_.getName.matches("_GRAFT_COMMIT\\.g\\d+"))
+    def rows(): Long = graft.sources.GraftTable.read(spark, out, ddl).count()
+    deliver(0L, 1L); deliver(1L, 2L)
+    assert(gens() === 2 && rows() === 2L)
+    // two one-row parts rewritten as one: a new generation, same rows
+    graft.sources.GraftCommitCompact.compact(spark, out, ddl, 1)
+    assert(gens() === 3 && rows() === 2L)
+    val dir = new org.apache.hadoop.fs.Path(out)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(graft.sources.GraftCommitMeta.readManifestFile(fs,
+      graft.sources.GraftCommitMeta.manifestPath(dir)).epoch === Some("q-compact" -> 1L),
+      "the compacted manifest must carry the stream's epoch marker")
+    // checkpoint recovery re-delivers epoch 1 after the compaction
+    deliver(1L, 3L)
+    assert(gens() === 3, "re-delivered epoch published a generation after compaction")
+    assert(rows() === 2L)
+  }
 }

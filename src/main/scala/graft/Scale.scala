@@ -163,9 +163,7 @@ object Scale {
     val a = ann.toMap.apply(name)
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables(spark, d, "embeddings")
-    val v = if (a.l2) expr(
-      "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))")
-      else col("embedding")
+    val v = if (a.l2) graft.queries.U.gridE6("embedding") else col("embedding")
     val vecs = emb.select(col("vec_id"), col("label"), v.as("v"))
     val qs = vecs.where(a.queries(emb.count()))
       .select(col("vec_id").as("qid"), col("v").as("qv"))

@@ -309,7 +309,7 @@ object Analytics {
       // tokenizer/grams shared with q_llm_decontaminate via U — the
       // equivalence test requires the two paths to tokenize identically
       val docs = Tables(s, d, "documents").withColumn("tk", textTokens)
-      val grams = U.grams5
+      val grams = U.gramsN(5)
       val bench = docs.where(col("doc_id") % 97 === 0)
         .select(explode(array_distinct(grams)).as("g")).distinct()
       // 4096 expected items × 10 bits/item ≈ the old 1% fpp geometry.
@@ -535,8 +535,6 @@ object Analytics {
       .orderBy("user_id")
   }
 
-  private val oGrams5 = U.oGrams5
-
   val oracle: Map[String, String] = Map(
     "q_dq_benford" ->
       """WITH d AS (SELECT CAST(substring(CAST(CAST(round(o_totalprice * 100)
@@ -725,9 +723,9 @@ object Analytics {
 
     "q_llm_decontaminate_bloom" ->
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-         bench AS (SELECT DISTINCT unnest(list_distinct($oGrams5)) AS g
+         bench AS (SELECT DISTINCT unnest(list_distinct(${oGramsN(5)})) AS g
                    FROM d WHERE doc_id % 97 = 0),
-         cg AS (SELECT doc_id, unnest(list_distinct($oGrams5)) AS g
+         cg AS (SELECT doc_id, unnest(list_distinct(${oGramsN(5)})) AS g
                 FROM d WHERE doc_id % 97 <> 0)
          SELECT doc_id, COUNT(*) AS n_contaminated
          FROM cg WHERE g IN (SELECT g FROM bench)

@@ -183,7 +183,9 @@ object Assay {
         sum((col("a") === col("p")).cast("long")).as("n_agree"))
       val ra = pred.groupBy(col("a").as("k")).agg(count(lit(1)).as("ra"))
       val cp = pred.groupBy(col("p").as("k")).agg(count(lit(1)).as("cp"))
-      val pe = ra.join(cp, "k")
+      // cp holds one row per label at any scale: broadcast it, so the
+      // join does not follow whether nnTop3Auto has been materialized
+      val pe = ra.join(broadcast(cp), "k")
         .agg(coalesce(sum(col("ra") * col("cp")), lit(0L)).as("penum"))
       agg.crossJoin(broadcast(pe))
         .select(col("n"), col("n_agree"),
@@ -278,9 +280,8 @@ object Assay {
     // than the 128-row pivot.
     "q_dq_embed_drift" -> ((s, d) =>
       Tables(s, d, "embeddings")
-        .select((col("vec_id") % 2).cast("int").as("half"), posexplode(expr(
-          "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"))
-          .as(Seq("dim", "g")))
+        .select((col("vec_id") % 2).cast("int").as("half"), posexplode(
+          gridE6("embedding")).as(Seq("dim", "g")))
         .groupBy("half", "dim")
         .agg(sum("g").as("sg"), count(lit(1)).as("n"))
         .groupBy("dim")

@@ -95,7 +95,7 @@ object Audit {
       d: String): DataFrame = {
     val raw = Tables(s, d, "documents")
       .withColumn("tk", textTokens)
-      .select(col("source"), explode(array_distinct(grams5)).as("g"))
+      .select(col("source"), explode(array_distinct(gramsN(5))).as("g"))
       .select(col("source"), expr(hexFold("md5(g)", 15)).as("h"))
     val sk = raw.groupBy("source").agg(hll_sketch_agg(col("h")).as("sk"))
     sk.select(col("source").as("source_a"), col("sk").as("ska"))
@@ -122,7 +122,7 @@ object Audit {
     graft.Memo(s, s"srcgrams:$d") {
       Tables(s, d, "documents")
         .withColumn("tk", textTokens)
-        .select(col("source"), explode(array_distinct(grams5)).as("g"))
+        .select(col("source"), explode(array_distinct(gramsN(5))).as("g"))
         .select(col("source"),
           expr(hexFold("md5(g)", 15)).as("h"))
         .distinct()
@@ -638,7 +638,7 @@ object Audit {
       val g = Tables(s, d, "documents")
         .withColumn("tk", textTokens)
         .select(col("doc_id"), col("lang"),
-          explode(array_distinct(grams2)).as("g"))
+          explode(array_distinct(gramsN(2))).as("g"))
         .withColumn("side", covSide)
       val train = g.where(col("side") < 4).select("lang", "g").distinct()
       val held = g.where(col("side") === 4).select("lang", "g").distinct()
@@ -677,7 +677,7 @@ object Audit {
       val tok = Tables(s, d, "documents")
         .withColumn("tk", textTokens)
         .withColumn("side", covSide)
-        .select(col("lang"), col("side"), explode(grams2).as("g"))
+        .select(col("lang"), col("side"), explode(gramsN(2)).as("g"))
         .select(col("lang"), col("side"),
           split(col("g"), " ").getItem(0).as("w1"),
           split(col("g"), " ").getItem(1).as("w2"))
@@ -883,7 +883,7 @@ object Audit {
     "q_llm_source_overlap" ->
       s"""WITH dtk AS (SELECT source, string_split(text, ' ') AS tk
                FROM documents),
-         gr AS (SELECT source, unnest(list_distinct($oGrams5)) AS g
+         gr AS (SELECT source, unnest(list_distinct(${oGramsN(5)})) AS g
                 FROM dtk),
          dh AS (SELECT DISTINCT source, ${oHexFold("md5(g)", 15)} AS h
                 FROM gr),
@@ -1167,7 +1167,7 @@ object Audit {
     "q_llm_ngram_coverage" ->
       s"""WITH dtk AS (SELECT doc_id, lang, string_split(text, ' ') AS tk
                FROM documents),
-         g AS (SELECT doc_id, lang, unnest(list_distinct(${U.oGrams2})) AS g
+         g AS (SELECT doc_id, lang, unnest(list_distinct(${U.oGramsN(2)})) AS g
                FROM dtk),
          sided AS (SELECT lang, g,
                $oCovSide
@@ -1196,7 +1196,7 @@ object Audit {
       s"""WITH dtk AS (SELECT doc_id, lang, string_split(text, ' ') AS tk,
                $oCovSide AS side
              FROM documents),
-         g AS (SELECT lang, side, unnest(${U.oGrams2}) AS g FROM dtk),
+         g AS (SELECT lang, side, unnest(${U.oGramsN(2)}) AS g FROM dtk),
          bi AS (SELECT lang, side, string_split(g, ' ')[1] AS w1,
                   string_split(g, ' ')[2] AS w2 FROM g),
          c12 AS (SELECT lang, w1, w2, COUNT(*) AS c12 FROM bi

@@ -158,10 +158,10 @@ object Basis {
     "q_llm_contamination_report" -> ((s, d) => {
       val docs = Tables(s, d, "documents").withColumn("tk", textTokens)
       val train = docs.where(col("doc_id") % 97 =!= 0)
-        .select(explode(array_distinct(grams5)).as("g"))
+        .select(explode(array_distinct(gramsN(5))).as("g"))
         .distinct().withColumn("hit", lit(1))
       docs.where(col("doc_id") % 97 === 0)
-        .select(col("doc_id"), explode(array_distinct(grams5)).as("g"))
+        .select(col("doc_id"), explode(array_distinct(gramsN(5))).as("g"))
         .join(train, Seq("g"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_grams"),
@@ -371,7 +371,7 @@ object Basis {
     "q_llm_contamination_report" ->
       s"""WITH dtk AS (SELECT doc_id, string_split(text, ' ') AS tk
              FROM documents),
-         gr AS (SELECT doc_id, unnest(list_distinct($oGrams5)) AS g FROM dtk),
+         gr AS (SELECT doc_id, unnest(list_distinct(${oGramsN(5)})) AS g FROM dtk),
          train AS (SELECT DISTINCT g FROM gr WHERE doc_id % 97 <> 0),
          b AS (SELECT gr.doc_id, CASE WHEN t.g IS NULL THEN 0 ELSE 1 END AS hit
                FROM gr LEFT JOIN train t ON gr.g = t.g

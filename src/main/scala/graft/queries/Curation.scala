@@ -103,7 +103,7 @@ object Curation {
     // islands trick (pos − row_number is constant within a run).
     "q_llm_substring_dedup" -> ((s, d) => {
       val docs = Tables(s, d, "documents").withColumn("tk", textTokens)
-      val spans = docs.select(col("doc_id"), posexplode(grams5).as(Seq("pos", "gram")))
+      val spans = docs.select(col("doc_id"), posexplode(gramsN(5)).as(Seq("pos", "gram")))
       val df = spans.groupBy("gram").agg(count(lit(1)).as("gcnt"))
       val w = Window.partitionBy("doc_id").orderBy("pos")
       val runs = spans.join(df.where(col("gcnt") > 1), "gram")

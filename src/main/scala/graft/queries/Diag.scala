@@ -57,7 +57,7 @@ object Diag {
     "q_llm_gram_novelty" -> ((s, d) => {
       val g = Tables(s, d, "documents").withColumn("tk", textTokens)
         .select(col("doc_id"), col("source"),
-          explode(array_distinct(grams5)).as("g"))
+          explode(array_distinct(gramsN(5))).as("g"))
       g.withColumn("first_doc",
           min(col("doc_id")).over(Window.partitionBy("g")))
         .groupBy(col("source"), expr("doc_id div 100").as("bucket"))
@@ -612,7 +612,7 @@ object Diag {
         s"""WITH dtk AS (SELECT doc_id, source, string_split(text, ' ') AS tk
                FROM documents),
            gr AS (SELECT doc_id, source,
-               unnest(list_distinct($oGrams5)) AS g FROM dtk),
+               unnest(list_distinct(${oGramsN(5)})) AS g FROM dtk),
            fm AS (SELECT doc_id, source,
                MIN(doc_id) OVER (PARTITION BY g) AS first_doc FROM gr)
            SELECT source, CAST(doc_id // 100 AS BIGINT) AS bucket,

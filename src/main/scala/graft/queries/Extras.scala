@@ -19,8 +19,6 @@ import U._
   */
 object Extras {
 
-  private def toks = split(col("text"), " ")
-
   /** 24-bit portable SimHash: per-term md5 hex digits supply the bit
     * pattern, term frequency the weight — identical integer arithmetic in
     * Spark and DuckDB. 24 bits keeps the space sparse enough (16.7M) that
@@ -38,7 +36,7 @@ object Extras {
   private def simhashOf(s: org.apache.spark.sql.SparkSession, d: String)
     : org.apache.spark.sql.DataFrame = {
     val tok = Tables(s, d, "documents")
-      .select(col("doc_id"), explode(toks).as("term"))
+      .select(col("doc_id"), explode(textTokens).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("c"))
     val sign = (b: Int) =>
       expr(s"""(((instr('0123456789abcdef', substr(h, ${b / 4 + 1}, 1)) - 1)
@@ -66,7 +64,7 @@ object Extras {
       // checkpoint re-read costs what the second codegen'd explode
       // costs), and the cross-query token memo that DID cut it to
       // 1.05 s lost suite-wide (BASELINE.md "shared token frame").
-      val tok = docs.select(col("doc_id"), col("lang"), explode(toks).as("term"))
+      val tok = docs.select(col("doc_id"), col("lang"), explode(textTokens).as("term"))
       val wTok = Window.partitionBy("term").orderBy(col("c").desc, col("lang"))
       val profile = tok.groupBy("term", "lang").agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(wTok)).where(col("rn") === 1)
@@ -91,7 +89,7 @@ object Extras {
     "q_llm_quality" -> ((s, d) =>
       Tables(s, d, "documents").select(
         col("doc_id"),
-        size(toks).as("n_tokens"),
+        size(textTokens).as("n_tokens"),
         expr("""CAST(size(filter(split(text, ' '),
              x -> x IN ('the', 'a', 'and', 'of', 'to', 'is'))) AS INT)""")
           .as("n_stop"),
@@ -101,7 +99,7 @@ object Extras {
     "q_llm_token_count" -> ((s, d) =>
       Tables(s, d, "documents").select(
         col("doc_id"),
-        size(toks).as("n_ws"),
+        size(textTokens).as("n_ws"),
         ceil(length(regexp_replace(col("text"), " ", "")) / lit(4.0)).as("n_subword_est"),
         size(split(col("text"), "[aeiou]+")).as("n_vowel_pieces"))
         .orderBy("doc_id")),
@@ -109,7 +107,7 @@ object Extras {
     "q_llm_fingerprint" -> ((s, d) =>
       Tables(s, d, "documents").select(
         col("doc_id"),
-        md5(array_join(array_sort(array_distinct(toks)), " ")).as("bow_fp"),
+        md5(array_join(array_sort(array_distinct(textTokens)), " ")).as("bow_fp"),
         expr("""aggregate(transform(sequence(1, length(text)),
                    i -> CAST(ascii(substr(text, i, 1)) AS BIGINT)),
                  CAST(0 AS BIGINT),
@@ -149,12 +147,9 @@ object Extras {
     }),
 
     "q_llm_dedup_ngram_jaccard" -> ((s, d) => {
-      val tri = expr(
-        """transform(slice(tk, 1, greatest(size(tk) - 2, 0)),
-             (x, i) -> concat_ws(' ', x, tk[i + 1], tk[i + 2]))""")
       val g = Tables(s, d, "documents").where(col("doc_id") < 150)
-        .withColumn("tk", split(col("text"), " "))
-        .select(col("doc_id"), explode(array_distinct(tri)).as("g"))
+        .withColumn("tk", textTokens)
+        .select(col("doc_id"), explode(array_distinct(gramsN(3))).as("g"))
       val sizes = g.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       val inter = g.as("x").join(g.as("y"),
           col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))

@@ -208,7 +208,7 @@ object Insights {
     // uses to split hot terms (cf. q_llm_vocab_prune).
     "q_mr_inverted_index" -> ((s, d) =>
       Tables(s, d, "documents")
-        .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("word"))
+        .select(col("doc_id"), explode(array_distinct(textTokens)).as("word"))
         .groupBy("word")
         .agg(count(lit(1)).as("df"),
           expr("array_join(transform(array_sort(collect_list(doc_id)), v -> CAST(v AS STRING)), ',')")
@@ -342,7 +342,7 @@ object Insights {
       val perHost = docs.select(
           expr("parse_url(url, 'HOST')").as("host"),
           expr("parse_url(url, 'PATH')").as("path"),
-          size(split(col("text"), " ")).as("ntok"))
+          size(textTokens).as("ntok"))
         .groupBy("host")
         .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("tok_total"),
           countDistinct(expr("split_part(path, '/', 2)")).as("n_sections"))
@@ -398,7 +398,7 @@ object Insights {
     // one profile row per doc (linear).
     "q_llm_winnow" -> ((s, d) => {
       val gr = Tables(s, d, "documents").withColumn("tk", textTokens)
-        .select(col("doc_id"), posexplode(grams5).as(Seq("pos", "g")))
+        .select(col("doc_id"), posexplode(gramsN(5)).as(Seq("pos", "g")))
         .select(col("doc_id"), col("pos"), expr(hexFold("md5(g)", 15)).as("h"))
       val wFrame = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
       val wDoc = Window.partitionBy("doc_id")
@@ -1532,7 +1532,7 @@ object Insights {
 
     "q_llm_winnow" ->
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-         ga AS (SELECT doc_id, $oGrams5 AS grams FROM d),
+         ga AS (SELECT doc_id, ${oGramsN(5)} AS grams FROM d),
          gr AS (SELECT doc_id, unnest(range(0, len(grams))) AS pos,
                   ${U.oHexFold("md5(unnest(grams))", 15)} AS h
                 FROM ga WHERE len(grams) > 0),

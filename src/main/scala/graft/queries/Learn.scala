@@ -158,7 +158,7 @@ object Learn {
     graft.functions.GraftFunctions.register(s)
     Tables(s, d, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"),
-      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))").as("q"))
+      gridE6("embedding").as("q"))
   }
 
   /** The memoized sampled-Lloyd centroid frame (cid, c) — trained once
@@ -461,7 +461,7 @@ object Learn {
       d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     Tables(s, d, "embeddings").select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))").as("q"))
+      gridE6("embedding").as("q"))
   }
 
   /** The converged (ITERS-round) centroid frame — one definition for the
@@ -580,7 +580,7 @@ object Learn {
     // pagerank-style driver iteration.
     "q_llm_bpe_pairs" -> ((s, d) =>
       Tables(s, d, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
+        .select(explode(textTokens).as("word"))
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .select(col("freq"), explode(expr(
           """CASE WHEN length(word) < 2 THEN array()

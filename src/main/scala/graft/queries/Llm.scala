@@ -16,8 +16,6 @@ import U._
   */
 object Llm {
 
-  private def toks = split(col("text"), " ")
-
   /** MinHash-LSH geometry for q_llm_dedup_near: 16 signature hashes in 4
     * bands of 4 rows. At the confirm threshold j=0.8 a true pair collides
     * in ≥1 band with prob 1−(1−j⁴)⁴ ≈ 97% (99.6% measured at sf0.1: 255 of
@@ -34,14 +32,14 @@ object Llm {
     *
     * 48-bit integer minhash inputs fold the first 12 hex digits of
     * md5(shingle|i) — the same fold DuckDB runs via list_reduce. */
-  /** Distinct trigram shingles (doc_id, g) — the MinHash family's input. */
+  /** Distinct trigram shingles (doc_id, g, tf = 1) — the MinHash
+    * family's input, and a gram SET as a tf frame: through
+    * [[clippedOverlap]] its Σ min and Σ tf are the intersection and set
+    * sizes of the Jaccard and containment confirms. */
   private def shingles(s: org.apache.spark.sql.SparkSession, d: String)
     : org.apache.spark.sql.DataFrame = {
-    val tri = expr(
-      """transform(slice(tk, 1, greatest(size(tk) - 2, 0)),
-           (x, i) -> concat_ws(' ', x, tk[i + 1], tk[i + 2]))""")
-    Tables(s, d, "documents").withColumn("tk", split(col("text"), " "))
-      .select(col("doc_id"), explode(array_distinct(tri)).as("g"))
+    Tables(s, d, "documents").withColumn("tk", textTokens)
+      .select(col("doc_id"), explode(array_distinct(gramsN(3))).as("g"), lit(1L).as("tf"))
   }
 
   /** Per-doc MinHash signature (doc_id, mh0..mh15) over gram frame `g`
@@ -79,33 +77,69 @@ object Llm {
       d: String): org.apache.spark.sql.DataFrame =
     bandKeys(shingles(s, d))
 
-  /** (a, b, i, sza, szb): exact trigram intersection size plus both set
-    * sizes for candidate pairs — the ONE intersection pipeline every
-    * set-overlap confirm (Jaccard, containment) filters; a fix here
-    * fixes every dedup flavor at once. */
-  private def interSizes(g: org.apache.spark.sql.DataFrame,
-      cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sz = g.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    cand
-      .join(g.as("gx"), col("gx.doc_id") === col("a"))
-      .join(g.as("gy"), col("gy.doc_id") === col("b") && col("gy.g") === col("gx.g"))
-      .groupBy("a", "b").agg(count(lit(1)).as("i"))
-      .join(sz.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
-      .join(sz.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
+  /** The candidate documents of `cand(a, b)`: distinct (doc_id). */
+  private def candDocs(cand: org.apache.spark.sql.DataFrame)
+    : org.apache.spark.sql.DataFrame =
+    cand.select(col("a").as("doc_id"))
+      .unionByName(cand.select(col("b").as("doc_id"))).distinct()
+
+  /** The ONE clipped-overlap join of the pair operators. For candidate
+    * pairs `cand(a, b)` and a tf frame `tf(doc_id, by…, g, tf)` keyed by
+    * (doc_id, by…, g) it returns (a, b, by…, sza, szb, i) per `by` key:
+    * i = Σ_g min(tf_a, tf_b) and sz = Σ tf over the doc's grams. A gram
+    * SET (tf = 1, [[shingles]]) makes i and sz the intersection and set
+    * sizes of the Jaccard and containment confirms; counts make i the
+    * multiset (clipped) overlap of the CWS weighted-Jaccard confirm,
+    * ROUGE-2, BLEU and chrF. Each pair lays both docs' grams along
+    * itself (side 0 = a, 1 = b) and two aggregates give all three sums,
+    * so `cand` and `tf` are each read once.
+    * Pairs sharing no gram drop out. A fix here fixes every pair
+    * operator at once. */
+  private def clippedOverlap(cand: org.apache.spark.sql.DataFrame,
+      tf: org.apache.spark.sql.DataFrame, by: String*)
+    : org.apache.spark.sql.DataFrame = {
+    def on(side: Int) = sum(when(col("side") === side, col("tf")).otherwise(0L))
+    cand.select(col("a"), col("b"),
+        posexplode(array(col("a"), col("b"))).as(Seq("side", "doc_id")))
+      .join(tf, "doc_id")
+      .groupBy("a", "b" +: by :+ "g": _*)
+      .agg(on(0).as("tfa"), on(1).as("tfb"))
+      .groupBy("a", "b" +: by: _*)
+      .agg(sum(col("tfa")).as("sza"), sum(col("tfb")).as("szb"),
+        sum(least(col("tfa"), col("tfb"))).as("i"))
+      .where(col("i") > 0)
   }
 
-  /** Exact-Jaccard confirm of banding candidates `cand(a, b)` over gram
-    * frame `g`: keeps pairs with trigram-set Jaccard ≥ 0.8. */
-  private def jaccardConfirm(g: org.apache.spark.sql.DataFrame,
+  /** Term frequencies (doc_id, by…, g, tf) of the grams `grams` emits
+    * from the CANDIDATE documents of `cand` only. The pair grades join
+    * nothing but candidate docs' grams, so the documents are
+    * semi-joined to the candidate doc set BEFORE the explode's shuffle
+    * (measured: a corpus-wide tf ran 37 s warm at ×10; restricted, the
+    * frame is candidate-bound like the pairs). The doc set is
+    * dup-rate-bounded ⇒ broadcast here; at a 100 TB dup rate the same
+    * restriction rides a keyed semi-join instead. */
+  private def candTf(s: org.apache.spark.sql.SparkSession, d: String,
+      cand: org.apache.spark.sql.DataFrame, by: String*)(
+      grams: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+    : org.apache.spark.sql.DataFrame =
+    grams(Tables(s, d, "documents")
+        .join(broadcast(candDocs(cand)), Seq("doc_id"), "left_semi"))
+      .groupBy("doc_id", by :+ "g": _*).agg(count(lit(1)).as("tf"))
+
+  /** Jaccard confirm of candidates `cand(a, b)` over tf frame `tf`:
+    * Σ min / Σ max ≥ 0.8, with Σ max = sza + szb − i from exact BIGINT
+    * sums and one float division at the compare — the set Jaccard over
+    * [[shingles]], the weighted Jaccard over [[termTf]]. */
+  private def jaccardConfirm(tf: org.apache.spark.sql.DataFrame,
       cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    interSizes(g, cand)
+    clippedOverlap(cand, tf)
       .where(col("i").cast("double") / (col("sza") + col("szb") - col("i")) >= 0.8)
       .select("a", "b")
 
   /** Containment confirm: the smaller gram set is ≥90% inside the larger. */
   private def containConfirm(g: org.apache.spark.sql.DataFrame,
       cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    interSizes(g, cand)
+    clippedOverlap(cand, g)
       .where(col("i").cast("double") / least(col("sza"), col("szb")) >= 0.9)
       .select("a", "b")
 
@@ -157,17 +191,17 @@ object Llm {
     * (score, term-hash), mirrored verbatim in the oracle. */
   private def cwsSig(tf: org.apache.spark.sql.DataFrame)
     : org.apache.spark.sql.DataFrame = {
-    val uh = tf.select("term").distinct().select(
-      col("term") +:
-        expr(s"${hexFold("md5(term)", 7)}").as("tid") +:
+    val uh = tf.select("g").distinct().select(
+      col("g") +:
+        expr(s"${hexFold("md5(g)", 7)}").as("tid") +:
         (0 until cwsHashes).map { h =>
-          expr(s"""round(-ln((${hexFold(s"md5(concat(term, '#', '$h'))", 12)}
+          expr(s"""round(-ln((${hexFold(s"md5(concat(g, '#', '$h'))", 12)}
               % 1000000 + 1) / 1000000.0), 9)""").as(s"u$h")
         }: _*)
     // uh is the KB-scale vocab artifact — always broadcast; the sig
     // frame (one row per doc) is lazily checkpointed so the band
     // self-join reads it instead of deriving the aggregate twice
-    tf.join(broadcast(uh), "term")
+    tf.join(broadcast(uh), "g")
       .groupBy("doc_id")
       .agg(
         min(expr(packedMin(0))).as("m0"),
@@ -184,11 +218,11 @@ object Llm {
   private def packedMin(h: Int): String =
     s"CAST(round(round(u$h / tf, 9) * 1e9) AS BIGINT) * 268435456 + tid"
 
-  /** Per-doc bigram-shingle frequencies — the weighted shingle frame.
-    * Lazily localCheckpointed (the orderBrandSets discipline): FIVE
-    * consumers (vocab distinct, the signature join, both confirm
-    * sides, the size frame) would otherwise each re-run the tokenize +
-    * (doc, term) shuffle.
+  /** Per-doc bigram-shingle frequencies (doc_id, g, tf) — the weighted
+    * shingle frame.
+    * Lazily localCheckpointed (the orderBrandSets discipline): THREE
+    * consumers (vocab distinct, the signature join, the confirm) would
+    * otherwise each re-run the tokenize + (doc, term) shuffle.
     *
     * The repartition BEFORE the checkpoint is load-bearing, measured:
     * AQE coalesces this small aggregate's shuffle to ~1 partition, and
@@ -204,9 +238,9 @@ object Llm {
     * row). */
   private def termTf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    Tables(s, d, "documents").withColumn("tk", toks)
-      .select(col("doc_id"), explode(U.grams2).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    Tables(s, d, "documents").withColumn("tk", textTokens)
+      .select(col("doc_id"), explode(gramsN(2)).as("g"))
+      .groupBy("doc_id", "g").agg(count(lit(1)).as("tf"))
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .localCheckpoint(false)
 
@@ -238,19 +272,7 @@ object Llm {
           col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    val wsz = tf.groupBy("doc_id").agg(sum(col("tf")).as("sz"))
-    val pairs = cand
-      .join(tf.as("gx"), col("gx.doc_id") === col("a"))
-      .join(tf.as("gy"), col("gy.doc_id") === col("b") &&
-        col("gy.term") === col("gx.term"))
-      .groupBy("a", "b")
-      .agg(sum(least(col("gx.tf"), col("gy.tf"))).as("i"))
-      .join(wsz.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
-      .join(wsz.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
-      .where(col("i").cast("double") /
-        (col("sza") + col("szb") - col("i")) >= 0.8)
-      .select("a", "b")
-    U.dupGroups(Tables(s, d, "documents"), pairs)
+    U.dupGroups(Tables(s, d, "documents"), jaccardConfirm(tf, cand))
   }
 
   /** MinHash banding candidates (a < b), memoized per (session, sfDir)
@@ -344,7 +366,7 @@ object Llm {
     // The heritage MapReduce query (Dean & Ghemawat §1): word count.
     "q_llm_wordcount" -> ((s, d) =>
       Tables(s, d, "documents")
-        .select(explode(toks).as("word"))
+        .select(explode(textTokens).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("word"))
         .limit(50)),
@@ -385,7 +407,7 @@ object Llm {
     // a sharp testable edge: a candidate collides in ≥1 band of 4 rows,
     // so eq16 < 4 bins are provably empty (PropertySpec pins it).
     // Cost shape: rides the memoized mh-cand frame + ONE signature
-    // aggregate + the family's shared interSizes confirm on candidates
+    // aggregate + the family's shared clippedOverlap on candidates
     // only (O(n·dup-rate), never all-pairs); output is the fixed 17-row
     // domain (full-domain report, the q_dq_psi lesson). Exact-decimal
     // mean of the 1e-6-rounded per-pair Jaccards, one division rounded
@@ -398,12 +420,10 @@ object Llm {
       // full-corpus mhSig re-derivation was the first cut's cost
       // (measured ×100 warm 48.0 → 10.6 s and ×10 8.6 → 5.2 s with this
       // semi-join; the candidate-doc list is n·dup-rate rows, bucketed
-      // semi-join, and interSizes' per-pair work is unchanged — it was
-      // already candidate-bounded)
-      val candDocs = cand.select(col("a").as("doc_id"))
-        .unionAll(cand.select(col("b").as("doc_id"))).distinct()
+      // semi-join, and clippedOverlap's per-pair work is unchanged — it
+      // was already candidate-bounded)
       val g = shingles(s, d)
-        .join(candDocs.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
+        .join(candDocs(cand).hint("shuffle_hash"), Seq("doc_id"), "left_semi")
       val sig = mhSig(g)
       val sa = sig.toDF(sig.columns.map(c =>
         if (c == "doc_id") "a" else s"a_$c"): _*)
@@ -414,7 +434,7 @@ object Llm {
         .reduce(_ + _)
       val withEst = cand.join(sa, "a").join(sb, "b")
         .select(col("a"), col("b"), eq.as("eq16"))
-      val exact = interSizes(g, cand).select(col("a"), col("b"),
+      val exact = clippedOverlap(cand, g).select(col("a"), col("b"),
         round(col("i").cast("double") / (col("sza") + col("szb") - col("i")), 6)
           .as("j"))
       val pairs = withEst.join(exact, Seq("a", "b"), "left")
@@ -463,24 +483,15 @@ object Llm {
     "q_llm_rouge_pairs" -> ((s, d) => {
       val cand = bandCandidates(s, d)
       // the same bigram-tf frame as the CWS dedup (termTf), via the
-      // shared U.grams2 — here under rouge's own lineage because its
-      // consumers join per candidate pair, not per doc partition
-      val bg = Tables(s, d, "documents").withColumn("tk", toks)
-        .select(col("doc_id"), explode(U.grams2).as("g"))
-        .groupBy("doc_id", "g").agg(count(lit(1)).as("tf"))
-      val sz = bg.groupBy("doc_id").agg(sum(col("tf")).as("sz"))
-      cand
-        .join(bg.as("bx"), col("bx.doc_id") === col("a"))
-        .join(bg.as("by"), col("by.doc_id") === col("b") &&
-          col("by.g") === col("bx.g"))
-        .groupBy("a", "b")
-        .agg(sum(least(col("bx.tf"), col("by.tf"))).as("ov"))
-        .join(sz.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
-        .join(sz.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
-        .select(col("a"), col("b"), col("ov"),
-          round(col("ov") * lit(1.0) / col("szb"), 6).as("rouge_p"),
-          round(col("ov") * lit(1.0) / col("sza"), 6).as("rouge_r"),
-          round(col("ov") * lit(2.0) / (col("sza") + col("szb")), 6)
+      // shared U.gramsN(2) — here over the candidate docs only, because
+      // its consumers join per candidate pair, not per doc partition
+      val bg = candTf(s, d, cand)(_.withColumn("tk", textTokens)
+        .select(col("doc_id"), explode(gramsN(2)).as("g")))
+      clippedOverlap(cand, bg)
+        .select(col("a"), col("b"), col("i").as("ov"),
+          round(col("i") * lit(1.0) / col("szb"), 6).as("rouge_p"),
+          round(col("i") * lit(1.0) / col("sza"), 6).as("rouge_r"),
+          round(col("i") * lit(2.0) / (col("sza") + col("szb")), 6)
             .as("rouge_f1"))
         .orderBy("a", "b")
     }),
@@ -491,9 +502,10 @@ object Llm {
     // all-pairs). Each pair is graded as a one-segment corpus: n-gram
     // statistics are NEVER pooled across pairs (a pooled corpus-BLEU
     // over a doc set would be a different operator). Clipped n-gram
-    // precision p_n = Σmin(tf_b, tf_a)/|b|_n for n = 1..4 from
-    // ONE unioned (doc, n, gram, tf) frame (the four orders share the
-    // U.gramsN definition), BLEU = BP·exp(Σ ln p_n / 4) with the
+    // precision p_n = Σmin(tf_b, tf_a)/|b|_n for n = 1..4 from ONE
+    // (doc, n, gram, tf) frame — a single branch with the order n as a
+    // column (U.gramsAt, the U.gramsN strings at every order), BLEU =
+    // BP·exp(Σ ln p_n / 4) with the
     // standard no-smoothing rule: any order with zero overlap ⇒ BLEU 0
     // (the n_orders column says which). EVERY banding candidate emits a
     // row — pairs disjoint at all four orders left-join back onto the
@@ -506,36 +518,13 @@ object Llm {
     // match bit-for-bit. Candidate-bounded like every pair grade.
     "q_llm_bleu_pairs" -> ((s, d) => {
       val cand = bandCandidates(s, d)
-      // the 4-order gram frame is ~4× the corpus token stream — but only
-      // CANDIDATE docs' grams ever reach a join, so the explode is
-      // semi-join-restricted to the candidate doc set BEFORE the shuffle
-      // (measured: corpus-wide tf ran 37 s warm at ×10; restricted, the
-      // frame is candidate-bound like every other pair grade). The doc
-      // set is dup-rate-bounded ⇒ broadcast here; at a 100 TB dup rate
-      // the same restriction rides a keyed semi-join instead.
-      val cd = cand.select(col("a").as("doc_id"))
-        .unionByName(cand.select(col("b").as("doc_id"))).distinct()
-      val base = Tables(s, d, "documents")
-        .join(broadcast(cd), Seq("doc_id"), "left_semi")
-        .withColumn("tk", toks)
-      val tf = (1 to 4).map { n =>
-        base.select(col("doc_id"), lit(n).as("n"),
-          explode(U.gramsN(n)).as("g"))
-      }.reduce(_ unionByName _)
-        .groupBy("doc_id", "n", "g").agg(count(lit(1)).as("tf"))
-      val sz = tf.groupBy("doc_id", "n").agg(sum("tf").as("sz"))
-      val ov = cand
-        .join(tf.as("tx"), col("tx.doc_id") === col("a"))
-        .join(tf.as("ty"), col("ty.doc_id") === col("b") &&
-          col("ty.g") === col("tx.g") && col("ty.n") === col("tx.n"))
-        .groupBy(col("a"), col("b"), col("tx.n").as("n"))
-        .agg(sum(least(col("tx.tf"), col("ty.tf"))).as("ov"))
-      val perN = ov
-        .join(sz.select(col("doc_id").as("b"), col("n"),
-          col("sz").as("szb")), Seq("b", "n"))
-        .withColumn("lnp",
-          round(log(col("ov").cast("double") / col("szb")), 9))
-      val lens = sz.where(col("n") === 1)
+      val tf = candTf(s, d, cand, "n")(_.select(col("doc_id"),
+          textTokens.as("tk"), explode(sequence(lit(1), lit(4))).as("n"))
+        .select(col("doc_id"), col("n"), explode(gramsAt(col("n"))).as("g")))
+      val perN = clippedOverlap(cand, tf, "n").withColumn("lnp",
+        round(log(col("i").cast("double") / col("szb")), 9))
+      val lens = tf.where(col("n") === 1).groupBy("doc_id")
+        .agg(sum(col("tf")).as("sz"))
       val agg = perN.groupBy("a", "b")
         .agg(count(lit(1)).as("n_orders"),
           sum(col("lnp").cast("decimal(18,9)")).cast("double").as("slnp"))
@@ -572,37 +561,21 @@ object Llm {
     // (n_orders = 0, chrf = 0). Grid discipline: P/R/F2 each round to
     // 1e-9 off exact BIGINT counts, the F2 sum rides DECIMAL(18,9),
     // chrf rounds to 1e-6 — identical op order in the twin. The char
-    // n-gram frame is semi-join-restricted to candidate docs BEFORE
-    // its shuffle (the measured-9× BLEU discipline; char grams are ~3×
-    // the char stream, heavier than word grams). Candidate-bounded.
+    // n-gram frame is one branch with the order n as a column, over the
+    // candidate docs only (char grams are ~3× the char stream, heavier
+    // than word grams). Candidate-bounded.
     "q_llm_chrf_pairs" -> ((s, d) => {
       val cand = bandCandidates(s, d)
-      val cd = cand.select(col("a").as("doc_id"))
-        .unionByName(cand.select(col("b").as("doc_id"))).distinct()
-      val base = Tables(s, d, "documents")
-        .join(broadcast(cd), Seq("doc_id"), "left_semi")
-        .withColumn("t", regexp_replace(col("text"), " ", ""))
-      val tf = (2 to 4).map { n =>
-        base.select(col("doc_id"), lit(n).as("n"), explode(expr(
-          s"""CASE WHEN length(t) < $n THEN array()
-              ELSE transform(sequence(1, length(t) - ${n - 1}),
-                i -> substring(t, i, $n)) END""")).as("g"))
-      }.reduce(_ unionByName _)
-        .groupBy("doc_id", "n", "g").agg(count(lit(1)).as("tf"))
-      val sz = tf.groupBy("doc_id", "n").agg(sum("tf").as("sz"))
-      val ov = cand
-        .join(tf.as("tx"), col("tx.doc_id") === col("a"))
-        .join(tf.as("ty"), col("ty.doc_id") === col("b") &&
-          col("ty.g") === col("tx.g") && col("ty.n") === col("tx.n"))
-        .groupBy(col("a"), col("b"), col("tx.n").as("n"))
-        .agg(sum(least(col("tx.tf"), col("ty.tf"))).as("m"))
-      val perN = ov
-        .join(sz.select(col("doc_id").as("a"), col("n"),
-          col("sz").as("sza")), Seq("a", "n"))
-        .join(sz.select(col("doc_id").as("b"), col("n"),
-          col("sz").as("szb")), Seq("b", "n"))
-        .withColumn("p", round(col("m").cast("double") / col("szb"), 9))
-        .withColumn("r", round(col("m").cast("double") / col("sza"), 9))
+      val tf = candTf(s, d, cand, "n")(_.select(col("doc_id"),
+          regexp_replace(col("text"), " ", "").as("t"),
+          explode(sequence(lit(2), lit(4))).as("n"))
+        .select(col("doc_id"), col("n"), explode(expr(
+          """CASE WHEN length(t) < n THEN array()
+             ELSE transform(sequence(1, length(t) - (n - 1)),
+               i -> substring(t, i, n)) END""")).as("g")))
+      val perN = clippedOverlap(cand, tf, "n")
+        .withColumn("p", round(col("i").cast("double") / col("szb"), 9))
+        .withColumn("r", round(col("i").cast("double") / col("sza"), 9))
         .withColumn("f2", round(lit(5.0) * col("p") * col("r") /
           (lit(4.0) * col("p") + col("r")), 9))
       val agg = perN.groupBy("a", "b")
@@ -704,15 +677,15 @@ object Llm {
           count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("sum_chars"),
           (sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"),
-          sum(size(toks).cast("long")).as("sum_tokens"),
-          sum(size(array_distinct(toks)).cast("long")).as("sum_distinct"),
-          (sum(size(array_distinct(toks)).cast("long")).cast("double")
-            / sum(size(toks).cast("long"))).as("ttr"))
+          sum(size(textTokens).cast("long")).as("sum_tokens"),
+          sum(size(array_distinct(textTokens)).cast("long")).as("sum_distinct"),
+          (sum(size(array_distinct(textTokens)).cast("long")).cast("double")
+            / sum(size(textTokens).cast("long"))).as("ttr"))
         .orderBy("lang", "source")),
 
     "q_llm_tfidf" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
-      val tok = docs.select(col("lang"), col("doc_id"), explode(toks).as("term"))
+      val tok = docs.select(col("lang"), col("doc_id"), explode(textTokens).as("term"))
       val tf = tok.groupBy("lang", "term").agg(count(lit(1)).as("tf"))
       val dfT = tok.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
       val n = docs.agg(count(lit(1)).as("n"))
@@ -732,11 +705,8 @@ object Llm {
         // materialize the token array once; indexing a lambda-bound column
         // is O(1), whereas calling split() inside the lambda re-tokenizes
         // the document per n-gram (O(len²) — measured 85 s at sf0.1).
-        .withColumn("tk", split(col("text"), " "))
-        .select(col("lang"), explode(expr(
-          """transform(slice(tk, 1, greatest(size(tk) - 2, 0)),
-               (x, i) -> concat_ws(' ', x, tk[i + 1], tk[i + 2]))"""))
-          .as("trigram"))
+        .withColumn("tk", textTokens)
+        .select(col("lang"), explode(gramsN(3)).as("trigram"))
         .groupBy("lang", "trigram").agg(count(lit(1)).as("cnt"))
         .withColumn("rnk", row_number().over(w))
         .where(col("rnk") <= 20)
@@ -815,8 +785,9 @@ object Llm {
                     md5(string_agg(mh::VARCHAR, ',' ORDER BY i)) AS bkey
                   FROM sig GROUP BY doc_id, i // 4)"""
 
-  /** DuckDB twin of `interSizes` — expects `cand(a, b)` and `g`; ends at
-    * `inter(a, b, i)` with `sz` in scope (shared by every confirm). */
+  /** DuckDB twin of `clippedOverlap` over a gram set — expects
+    * `cand(a, b)` and `g`; ends at `inter(a, b, i)` with `sz` in scope
+    * (shared by every set confirm). */
   private val oInterCte =
     """sz AS (SELECT doc_id, COUNT(*) AS sz FROM g GROUP BY doc_id),
          inter AS (SELECT c.a, c.b, COUNT(*) AS i

@@ -21,9 +21,8 @@ import U._
 object Pipeline {
 
   // tokenizer + 5-gram machinery shared with the Bloom decontamination
-  // path — single definition in U (U.textTokens / U.grams5 / U.oGrams5)
+  // path — single definition in U (U.textTokens / U.gramsN(5) / U.oGramsN(5))
   private def tk = textTokens
-  private val grams5 = U.grams5
 
   private val chunkSize = 32
   private val chunkStride = 24
@@ -38,10 +37,7 @@ object Pipeline {
     // + two partial-aggregated groupBys, no pairwise anything.
     "q_llm_repetition" -> ((s, d) => {
       val docs = Tables(s, d, "documents").withColumn("tk", tk)
-      val bigrams = expr(
-        """transform(slice(tk, 1, greatest(size(tk) - 1, 0)),
-             (x, i) -> concat_ws(' ', x, tk[i + 1]))""")
-      val top = docs.select(col("doc_id"), explode(bigrams).as("bg"))
+      val top = docs.select(col("doc_id"), explode(gramsN(2)).as("bg"))
         .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
         .groupBy("doc_id").agg(max(col("c")).as("m"), sum(col("c")).as("nbg"))
       docs.select(col("doc_id"), size(col("tk")).as("n"),
@@ -63,9 +59,9 @@ object Pipeline {
     "q_llm_decontaminate" -> ((s, d) => {
       val docs = Tables(s, d, "documents").withColumn("tk", tk)
       val bench = docs.where(col("doc_id") % 97 === 0)
-        .select(explode(array_distinct(grams5)).as("g")).distinct()
+        .select(explode(array_distinct(gramsN(5))).as("g")).distinct()
       val corp = docs.where(col("doc_id") % 97 =!= 0)
-      val shared = corp.select(col("doc_id"), explode(array_distinct(grams5)).as("g"))
+      val shared = corp.select(col("doc_id"), explode(array_distinct(gramsN(5))).as("g"))
         .join(broadcast(bench), "g")
         .groupBy("doc_id").agg(count(lit(1)).as("ns"))
       corp.select("doc_id").join(shared, Seq("doc_id"), "left")
@@ -128,23 +124,24 @@ object Pipeline {
     // report). ONE documents pass with a 4-way map-side explode of the
     // bounded L domain, a 4-group aggregate, exact BIGINT token sums,
     // one rounded division. Scales as a single corpus scan at any N.
-    "q_llm_context_fit" -> ((s, d) =>
+    "q_llm_context_fit" -> ((s, d) => {
+      val kept = least(col("n"), col("ctx_len"))
       Tables(s, d, "documents")
         .select(size(tk).cast("long").as("n"))
         .select(col("n"), explode(array(
           lit(256L), lit(512L), lit(1024L), lit(2048L))).as("ctx_len"))
         .groupBy("ctx_len").agg(
           count(lit(1)).as("n_docs"),
-          sum(least(col("n"), col("ctx_len"))).as("kept_tokens"),
+          sum(kept).as("kept_tokens"),
           sum(greatest(col("n") - col("ctx_len"), lit(0L)))
             .as("truncated_tokens"),
-          sum(col("ctx_len") - least(col("n"), col("ctx_len")))
-            .as("padding_tokens"))
+          sum(col("ctx_len") - kept).as("padding_tokens"))
         .select(col("ctx_len"), col("n_docs"), col("kept_tokens"),
           col("truncated_tokens"), col("padding_tokens"),
           round(col("kept_tokens").cast("double")
             / (col("n_docs") * col("ctx_len")), 6).as("utilization"))
-        .orderBy("ctx_len")),
+        .orderBy("ctx_len")
+    }),
 
     // Corpus-statistics vocabulary pruning: the top-5 terms by global
     // frequency are corpus-derived stopwords; strip them from every
@@ -278,7 +275,7 @@ object Pipeline {
     "q_llm_mix" -> ((s, d) => {
       val docs = Tables(s, d, "documents")
         .select(col("doc_id"), col("source"),
-          size(split(col("text"), " ")).as("n"),
+          size(textTokens).as("n"),
           md5(col("doc_id").cast("string")).as("h"))
       // Constant-but-not-foldable key (0·length): same single partition
       // over the 20-row budget dim, but a non-empty partition spec
@@ -320,7 +317,7 @@ object Pipeline {
     // md5-per-token boundary scan TWICE per document (see
     // plans/r14/q_llm_chunk_cdc_before.txt operators (5)+(7)); with no
     // filter on edges the expensive expression is computed once.
-    U.fanOut(docs).withColumn("tk", split(col("text"), " "))
+    U.fanOut(docs).withColumn("tk", textTokens)
       .withColumn("edges", expr(
         s"""array_distinct(concat(array(0),
               filter(sequence(1, size(tk)), i -> $gear % 8 = 0),
@@ -343,8 +340,6 @@ object Pipeline {
       s"(shiftleft(shiftright($a, $x) & 1, ${2 * x}) + " +
         s"shiftleft(shiftright($b, $x) & 1, ${2 * x + 1}))")
       .mkString(" + ")
-
-  private val oGrams5 = U.oGrams5
 
   val oracle: Map[String, String] = Map(
     "q_llm_context_fit" ->
@@ -377,9 +372,9 @@ object Pipeline {
 
     "q_llm_decontaminate" ->
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-         bench AS (SELECT DISTINCT unnest(list_distinct($oGrams5)) AS g
+         bench AS (SELECT DISTINCT unnest(list_distinct(${oGramsN(5)})) AS g
                    FROM d WHERE doc_id % 97 = 0),
-         cg AS (SELECT doc_id, unnest(list_distinct($oGrams5)) AS g
+         cg AS (SELECT doc_id, unnest(list_distinct(${oGramsN(5)})) AS g
                 FROM d WHERE doc_id % 97 <> 0),
          shared AS (SELECT doc_id, COUNT(*) AS ns
                     FROM cg JOIN bench USING (g) GROUP BY doc_id)

@@ -110,9 +110,7 @@ object Refine {
   /** The 1e-6-grid BIGINT view of the embedding table — shared by the
     * PQ training/encode passes and the re-rank probe. */
   private def gridVecs(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables(s, d, "embeddings").select(col("vec_id"), expr(
-      "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))")
-      .as("q"))
+    Tables(s, d, "embeddings").select(col("vec_id"), gridE6("embedding").as("q"))
 
   /** One row per subspace of grid-vector column `v`: explode this into
     * (m, sq) — `sq` is the `m`-th [[SUBDIM]]-dim slice. */
@@ -267,8 +265,7 @@ object Refine {
     // (PlanLock, explain) run them too.
     val res = graft.Memo(s, s"pq-res:$d:$cells") {
       cand.select(col("cid2").as("vec_id"), col("ccell").as("gcell"),
-          expr("transform(ce, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))")
-            .as("q"))
+          gridE6("ce").as("q"))
         .join(broadcast(centG), "gcell")
         .select(col("vec_id"), col("gcell"),
           expr("zip_with(q, gc, (x, y) -> x - y)").as("r"))

@@ -62,24 +62,22 @@ object Scalars {
         least(col("c_acctbal"), lit(1000.0)).as("lz"))
         .orderBy("c_custkey")),
 
-    "q_fn_array" -> ((s, d) => {
-      val toks = split(col("text"), " ")
+    "q_fn_array" -> ((s, d) =>
       Tables(s, d, "documents").select(
         col("doc_id"),
-        size(toks).as("ntok"),
-        array_contains(toks, "spark").as("has_spark"),
-        array_join(slice(toks, 1, 5), ",").as("first5"),
-        size(array_distinct(toks)).as("ndistinct"),
-        element_at(array_sort(toks), 1).as("first_sorted"),
-        aggregate(transform(toks, x => length(x)), lit(0), (a, x) => a + x)
+        size(textTokens).as("ntok"),
+        array_contains(textTokens, "spark").as("has_spark"),
+        array_join(slice(textTokens, 1, 5), ",").as("first5"),
+        size(array_distinct(textTokens)).as("ndistinct"),
+        element_at(array_sort(textTokens), 1).as("first_sorted"),
+        aggregate(transform(textTokens, x => length(x)), lit(0), (a, x) => a + x)
           .as("tok_chars"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     "q_fn_explode" -> ((s, d) =>
       Tables(s, d, "documents")
         .where(col("doc_id") < 200)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .select(col("doc_id"), explode(textTokens).as("token"))
         .orderBy("doc_id", "token")),
 
     // Map functions exercised internally; output exploded to (source, lang,

@@ -68,8 +68,15 @@ object U {
           (x, c) -> x * 16 + c)"""
 
   /** Token array of `text` — the shared tokenizer every text operator
-    * builds on (bind as a column named `tk` before using [[grams5]]). */
+    * builds on (bind as a column named `tk` before using [[gramsN]]). */
   def textTokens: Column = split(col("text"), " ")
+
+  /** The 1e-6 integer grid (BIGINT) of the float array column `arr` —
+    * the one embedding grid every trained quantizer, probe and drift
+    * report scores on; the DuckDB twins spell the same lambda in
+    * `list_transform`, so the engines agree bit for bit. */
+  def gridE6(arr: String): Column =
+    expr(s"transform($arr, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))")
 
   /** Scale-gated scan fan-out (r14 optimization — guide §2.5's
     * "repartition immediately after the read" for unsplittable inputs):
@@ -130,52 +137,29 @@ object U {
       .groupBy(bin, cnt)
       .agg(coalesce(sum("pfx_c2"), lit(0L)).as("off"))
 
-  /** 5-gram array over the token-array column `tk` (0-based Spark lambda
-    * index: x = tk[i], window closes at tk[i+4]). Docs shorter than 5
-    * tokens yield an empty array. Shared by the exact and the Bloom
-    * decontamination paths — they MUST tokenize identically (the
-    * AnalyticsSpec equivalence test rides on it). */
-  val grams5: Column = expr(
-    """transform(slice(tk, 1, greatest(size(tk) - 4, 0)),
-         (x, i) -> concat_ws(' ', x, tk[i + 1], tk[i + 2], tk[i + 3], tk[i + 4]))""")
+  /** n-gram array over the token-array column `tk`: for each window
+    * start i (0-based), concat_ws(' ') of slice(tk, i + 1, n); n = 1
+    * gives the tokens themselves. Docs shorter than n tokens yield an
+    * empty array. The ONE n-gram definition: the exact and the Bloom
+    * decontamination paths (n = 5) MUST tokenize identically (the
+    * AnalyticsSpec equivalence test rides on it), and so must the CWS
+    * weighted-dedup shingles and the ROUGE-2 grade (n = 2). */
+  def gramsN(n: Int): Column = gramsAt(lit(n))
 
-  /** Bigram array over `tk` — same shape as [[grams5]]. Shared by the
-    * CWS weighted-dedup shingle frame and the ROUGE-2 pair grade: a
-    * tokenization fix must reach both (and their DuckDB twins) or the
-    * weighted confirm and the grade silently diverge. */
-  val grams2: Column = expr(
-    """transform(slice(tk, 1, greatest(size(tk) - 1, 0)),
-         (x, i) -> concat_ws(' ', x, tk[i + 1]))""")
+  /** [[gramsN]] with the order carried as the INT column `n`, so one
+    * branch emits several orders (BLEU's four). */
+  def gramsAt(n: Column): Column =
+    transform(slice(col("tk"), lit(1), greatest(size(col("tk")) - (n - 1), lit(0))),
+      (_, i) => concat_ws(" ", slice(col("tk"), i + 1, n)))
 
-  /** DuckDB twin of [[grams2]] (1-based list indexing: range(1, L) =
-    * 1..L−1 bigram starts; L ≤ 1 → empty), over a CTE exposing `tk`. */
-  val oGrams2: String =
-    """list_transform(range(1, greatest(len(tk), 1)),
-         i -> tk[i] || ' ' || tk[i+1])"""
-
-  /** DuckDB twin of [[grams5]] (1-based list indexing; range(1, m) = 1..m-1),
-    * over a CTE exposing `tk` = string_split(text, ' '). */
-  val oGrams5: String =
-    """list_transform(range(1, greatest(len(tk) - 3, 1)),
-         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])"""
-
-  /** Parameterized n-gram array over `tk` — the [[grams2]]/[[grams5]]
-    * construction at any order (n = 1 is the token array itself). One
-    * definition for the BLEU family's four orders, so a tokenization
-    * fix reaches all of them at once. */
-  def gramsN(n: Int): Column =
-    if (n == 1) col("tk")
-    else expr(
-      s"""transform(slice(tk, 1, greatest(size(tk) - ${n - 1}, 0)),
-           (x, i) -> concat_ws(' ', x, ${
-             (1 until n).map(k => s"tk[i + $k]").mkString(", ")}))""")
-
-  /** DuckDB twin of [[gramsN]] (1-based list indexing, the
-    * [[oGrams2]]/[[oGrams5]] convention). */
+  /** DuckDB twin of [[gramsN]] (1-based list indexing: range(1, m) =
+    * 1..m−1 window starts; too-short docs → empty), over a CTE exposing
+    * `tk` = string_split(text, ' '). */
   def oGramsN(n: Int): String =
     if (n == 1) "tk"
-    else s"""list_transform(range(1, greatest(len(tk) - ${n - 2}, 1)),
-           i -> ${(0 until n).map(k => if (k == 0) "tk[i]" else s"tk[i+$k]")
+    else s"""list_transform(range(1, greatest(len(tk)${
+             if (n > 2) s" - ${n - 2}" else ""}, 1)),
+         i -> ${(0 until n).map(k => if (k == 0) "tk[i]" else s"tk[i+$k]")
              .mkString(" || ' ' || ")})"""
 
   /** The quality-classifier logit (fixed linear model over four exact

@@ -75,7 +75,7 @@ object Udx {
     // the Generator and stays codegen-friendly).
     "q_udtf_generator" -> ((s, d) =>
       Tables(s, d, "documents")
-        .withColumn("tk", split(col("text"), " "))
+        .withColumn("tk", textTokens)
         .select(col("lang"), explode(expr(
           """transform(slice(tk, 1, greatest(size(tk) - 1, 0)),
                (x, i) -> concat(x, ' ', tk[i + 1]))"""))

@@ -168,11 +168,11 @@ object Workloads {
       // contaminated-id frame would reference the corpus twice and
       // re-execute the whole score+dedup lineage for each branch.
       val bench = docs.where(col("doc_id") % 97 === 0)
-        .select(explode(array_distinct(grams5)).as("g")).distinct()
+        .select(explode(array_distinct(gramsN(5))).as("g")).distinct()
         .withColumn("hit", lit(1))
       val clean = deduped.where(col("doc_id") % 97 =!= 0)
         .select(col("doc_id"), col("source"), col("n_tok"),
-          explode_outer(array_distinct(grams5)).as("g"))
+          explode_outer(array_distinct(gramsN(5))).as("g"))
         .join(broadcast(bench), Seq("g"), "left")
         .groupBy("doc_id", "source", "n_tok")
         .agg(max(coalesce(col("hit"), lit(0))).as("contaminated"))
@@ -492,9 +492,9 @@ object Workloads {
          dd AS (SELECT * FROM (SELECT *, row_number() OVER (
                   PARTITION BY md5(trim(lower(text))) ORDER BY doc_id) AS rk FROM q)
                 WHERE rk = 1),
-         bench AS (SELECT DISTINCT unnest(list_distinct($oGrams5)) AS g
+         bench AS (SELECT DISTINCT unnest(list_distinct(${oGramsN(5)})) AS g
                    FROM d WHERE doc_id % 97 = 0),
-         cg AS (SELECT doc_id, unnest(list_distinct($oGrams5)) AS g
+         cg AS (SELECT doc_id, unnest(list_distinct(${oGramsN(5)})) AS g
                 FROM dd WHERE doc_id % 97 <> 0),
          cont AS (SELECT DISTINCT doc_id FROM cg JOIN bench USING (g)),
          clean AS (SELECT * FROM dd WHERE doc_id % 97 <> 0

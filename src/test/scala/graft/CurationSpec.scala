@@ -38,7 +38,7 @@ class CurationSpec extends SparkSpec {
     assert(totalDup === 0 || totalDup >= 2)
     // independent recount of duplicated positions, no window machinery
     val docs = Tables(spark, sf, "documents").withColumn("tk", split(col("text"), " "))
-    val spans = docs.select(col("doc_id"), explode(queries.U.grams5).as("gram"))
+    val spans = docs.select(col("doc_id"), explode(queries.U.gramsN(5)).as("gram"))
     val expected = spans.groupBy("gram").count().where(col("count") > 1)
       .join(spans, "gram").count()
     assert(totalDup === expected)

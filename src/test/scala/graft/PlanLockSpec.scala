@@ -13,14 +13,15 @@ package graft
   * the code — the lock turns plan changes into reviewable diffs. */
 class PlanLockSpec extends SparkSpec {
 
+  private lazy val lock: Map[String, String] = {
+    val src = scala.io.Source.fromFile("PLANS.lock")
+    try src.getLines().filter(_.nonEmpty).map { l =>
+      val Array(n, fp) = l.split("\t", 2); n -> fp
+    }.toMap
+    finally src.close()
+  }
+
   test("every declared query's physical plan shape matches PLANS.lock") {
-    val lock = {
-      val src = scala.io.Source.fromFile("PLANS.lock")
-      try src.getLines().filter(_.nonEmpty).map { l =>
-        val Array(n, fp) = l.split("\t", 2); n -> fp
-      }.toMap
-      finally src.close()
-    }
     val names = SparkEntry.queries.keys.toSeq.sorted
     val missing = names.filterNot(lock.contains)
     val stale = lock.keySet -- names
@@ -46,36 +47,39 @@ class PlanLockSpec extends SparkSpec {
     finally walk.close()
   }
 
+  private def mainFiles = scalaFiles("src/main/scala/graft")
+
+  /** `file:line: text` of every line of `files` that `hit` accepts;
+    * `hit` sees the file, the 0-based line index and the line. */
+  private def lineHits(files: Seq[java.nio.file.Path])(
+      hit: (java.nio.file.Path, Int, String) => Boolean): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    assert(files.nonEmpty, "no sources found")
+    for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if hit(f, i, line)
+    } yield s"$f:${i + 1}: ${line.trim}"
+  }
+
   test("plans depend only on (session, sfDir): no env reads in queries/ or Tables") {
     // PLANS.lock and the benchmark's expected results assume one plan per
     // query; an environment switch would fork it. java.io.tmpdir sink
     // paths are deployment paths, not plan switches, and stay allowed.
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val files = scalaFiles("src/main/scala/graft/queries")
-    assert(files.nonEmpty, "no query sources found")
-    val hits = for {
-      f <- files :+ Paths.get("src/main/scala/graft/Tables.scala")
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("sys.env") || line.contains("System.getenv")
-    } yield s"$f:${i + 1}: ${line.trim}"
+    val files = scalaFiles("src/main/scala/graft/queries") :+
+      java.nio.file.Paths.get("src/main/scala/graft/Tables.scala")
+    val hits = lineHits(files)((_, _, l) =>
+      l.contains("sys.env") || l.contains("System.getenv"))
     assert(hits.isEmpty, s"environment reads in plan code:\n${hits.mkString("\n")}")
   }
 
   test("src/main reads the environment only in GraftSession and Bench") {
     // the env knobs are read in the session builder and the bench main;
     // a read anywhere else would add a knob outside those owners
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val allowed = Seq("GraftSession", "Bench")
-      .map(n => Paths.get(s"src/main/scala/graft/$n.scala")).toSet
-    val files = scalaFiles("src/main/scala/graft").filterNot(allowed)
-    assert(files.nonEmpty, "no main sources found")
-    val hits = for {
-      f <- files
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("sys.env") || line.contains("System.getenv")
-    } yield s"$f:${i + 1}: ${line.trim}"
+      .map(n => java.nio.file.Paths.get(s"src/main/scala/graft/$n.scala")).toSet
+    val hits = lineHits(mainFiles.filterNot(allowed))((_, _, l) =>
+      l.contains("sys.env") || l.contains("System.getenv"))
     assert(hits.isEmpty,
       s"environment reads outside GraftSession and Bench:\n${hits.mkString("\n")}")
   }
@@ -84,18 +88,11 @@ class PlanLockSpec extends SparkSpec {
     // outside the connectors, every commit-table write and read goes
     // through GraftTable.write/read (or GraftTable.sinkFormat), so the
     // format names and their options are spelled out in one place
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val sources = Paths.get("src/main/scala/graft/sources")
-    val files = scalaFiles("src/main/scala/graft").filterNot(_.startsWith(sources))
-    assert(files.nonEmpty, "no main sources found")
+    val sources = java.nio.file.Paths.get("src/main/scala/graft/sources")
     val formats = Seq("\"graft.sources.GraftCommitSink\"",
       "\"graft.sources.GraftManifestSource\"")
-    val hits = for {
-      f <- files
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if formats.exists(line.contains)
-    } yield s"$f:${i + 1}: ${line.trim}"
+    val hits = lineHits(mainFiles.filterNot(_.startsWith(sources)))((_, _, l) =>
+      formats.exists(l.contains))
     assert(hits.isEmpty,
       s"commit-table format names outside graft.sources:\n${hits.mkString("\n")}")
   }
@@ -105,24 +102,18 @@ class PlanLockSpec extends SparkSpec {
     // owner; everything else asks it (manifestPath, histGen, tmpGen), so
     // a string literal starting "_GRAFT_COMMIT may appear only in the
     // body of GraftCommitMeta
-    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val owner = Paths.get("src/main/scala/graft/sources/GraftCommitSink.scala")
-    def metaBody(lines: Seq[String]): Range = {
+    val owner = java.nio.file.Paths.get("src/main/scala/graft/sources/GraftCommitSink.scala")
+    val files = mainFiles
+    assert(files.contains(owner), s"$owner not found")
+    val body = {
+      val lines = java.nio.file.Files.readAllLines(owner).asScala.toSeq
       val start = lines.indexWhere(_.startsWith("private[graft] object GraftCommitMeta {"))
       if (start < 0) 0 until 0 else start until lines.indexOf("}", start)
     }
-    val files = scalaFiles("src/main/scala/graft")
-    assert(files.contains(owner), s"$owner not found")
-    assert(metaBody(Files.readAllLines(owner).asScala.toSeq).nonEmpty,
-      s"GraftCommitMeta not found in $owner")
-    val hits = for {
-      f <- files
-      lines = Files.readAllLines(f).asScala.toSeq
-      allowed = if (f == owner) metaBody(lines) else 0 until 0
-      (line, i) <- lines.zipWithIndex
-      if line.contains("\"_GRAFT_COMMIT") && !allowed.contains(i)
-    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(body.nonEmpty, s"GraftCommitMeta not found in $owner")
+    val hits = lineHits(files)((f, i, l) =>
+      l.contains("\"_GRAFT_COMMIT") && !(f == owner && body.contains(i)))
     assert(hits.isEmpty,
       s"manifest names outside GraftCommitMeta:\n${hits.mkString("\n")}")
   }
@@ -130,16 +121,8 @@ class PlanLockSpec extends SparkSpec {
   test("only GraftSession builds sessions in src/main") {
     // one builder owns master, partitions, UTC and the codegen confs, so
     // the mains and the test session cannot drift apart again
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val files = scalaFiles("src/main/scala/graft")
-      .filterNot(_.getFileName.toString == "GraftSession.scala")
-    assert(files.nonEmpty, "no main sources found")
-    val hits = for {
-      f <- files
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("SparkSession.builder")
-    } yield s"$f:${i + 1}: ${line.trim}"
+    val files = mainFiles.filterNot(_.getFileName.toString == "GraftSession.scala")
+    val hits = lineHits(files)((_, _, l) => l.contains("SparkSession.builder"))
     assert(hits.isEmpty,
       s"session builders outside GraftSession:\n${hits.mkString("\n")}")
   }
@@ -148,17 +131,45 @@ class PlanLockSpec extends SparkSpec {
     // every trained quantizer (flat, two-level, k-means, PQ) runs
     // Learn.lloyd; a second copy of its centroid recompute or of its
     // floor division would let the trainers drift apart again
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val files = scalaFiles("src/main/scala/graft")
-    assert(files.nonEmpty, "no main sources found")
     for (needle <- Seq("struct(pos, cv)", "def fdiv")) {
-      val hits = for {
-        f <- files
-        (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-        if line.contains(needle)
-      } yield s"$f:${i + 1}: ${line.trim}"
+      val hits = lineHits(mainFiles)((_, _, l) => l.contains(needle))
       assert(hits.size === 1, s"`$needle` must appear exactly once:\n${hits.mkString("\n")}")
     }
+  }
+
+  private val uScala = "src/main/scala/graft/queries/U.scala:"
+
+  test("one clipped-overlap join in src/main: sum(least( appears once") {
+    // the set confirms, the CWS confirm, ROUGE-2, BLEU and chrF all run
+    // Llm.clippedOverlap; a second Σ min(tf_a, tf_b) would let the pair
+    // operators drift apart again
+    val hits = lineHits(mainFiles)((_, _, l) => l.contains("sum(least("))
+    assert(hits.size === 1, s"`sum(least(` must appear exactly once:\n${hits.mkString("\n")}")
+  }
+
+  test("one tokenizer: only U spells split(col(\"text\"), \" \")") {
+    // every text operator tokenizes through U.textTokens
+    val hits = lineHits(mainFiles)((_, _, l) => l.contains("""split(col("text"), " ")"""))
+    assert(hits.size === 1 && hits.head.startsWith(uScala),
+      s"the tokenizer must be spelled once, in U.textTokens:\n${hits.mkString("\n")}")
+  }
+
+  test("one 1e-6 embedding grid: only U spells the Spark transform") {
+    // U.gridE6 is the Spark side; the DuckDB twins' list_transform
+    // spells the same lambda and stays as the independent reference
+    val grid = "x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT)"
+    val hits = lineHits(mainFiles)((_, _, l) =>
+      l.contains(grid) && !l.contains("list_transform("))
+    assert(hits.size === 1 && hits.head.startsWith(uScala),
+      s"the grid must be spelled once, in U.gridE6:\n${hits.mkString("\n")}")
+  }
+
+  test("q_dq_cohens_kappa's plan does not follow its shared frame's materialization") {
+    // q_llm_label_noise materializes the memoized nnTop3Auto frame that
+    // kappa reduces; its cached relation then reports its real size, and
+    // a size-chosen join above it would flip strategy
+    SparkEntry.queries("q_llm_label_noise")(spark, sf).collect()
+    assert(PlanLock.fingerprintOf(spark, sf, "q_dq_cohens_kappa") ===
+      lock("q_dq_cohens_kappa"))
   }
 }

@@ -1235,4 +1235,27 @@ class PlanSpec extends SparkSpec {
          WHERE a.vec_id < 5 ORDER BY a.vec_id""")
     assert(dot.collect().forall(x => !x.isNullAt(1)))
   }
+
+  test("pair grades: one gram branch per query, over the candidate docs only") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def semi(p: SparkPlan) =
+      p.collectFirst { case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }
+    for (n <- Seq("q_llm_rouge_pairs", "q_llm_bleu_pairs", "q_llm_chrf_pairs")) {
+      val p = SparkEntry.queries(n)(spark, sf).queryExecution.sparkPlan
+      // every gram explode reads documents semi-joined to the candidates
+      val gens = p.collect {
+        case g: GenerateExec if g.generatorOutput.exists(_.name == "g") => g }
+      assert(gens.nonEmpty && gens.forall(semi(_).nonEmpty),
+        s"$n: a gram frame is not restricted to the candidate docs:\n$p")
+      // the candidate doc set (a ∪ b) is the only Union: the orders
+      // ride one branch as a column, never one unioned branch each
+      val unions = p.collect { case u: UnionExec => u }
+      assert(unions.nonEmpty && unions.forall(u => u.children.size == 2 &&
+        u.collect { case g: GenerateExec if g.generatorOutput.exists(_.name == "g") => g }
+          .isEmpty),
+        s"$n: a Union other than the candidate doc set:\n$p")
+    }
+  }
 }

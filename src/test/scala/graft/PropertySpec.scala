@@ -369,6 +369,24 @@ class PropertySpec extends SparkSpec {
       out.length == 1, "chrf degenerate: one value for every pair")
   }
 
+  test("gramsN emits every window of n space-split tokens, joined by one space") {
+    import spark.implicits._
+    // the fixture plus the edge cases: empty text, empty tokens from
+    // double, leading and trailing spaces, docs shorter than the order,
+    // NULL text (no grams)
+    val edge = Seq(Some(""), Some("a"), Some("a  b"), Some(" x y z w v"),
+      Some("p q r s t "), None).toDF("text")
+    val docs = Tables(spark, sf, "documents").select("text")
+      .unionByName(edge).withColumn("tk", textTokens)
+    val texts = docs.select("text").as[Option[String]].collect()
+    for (n <- 1 to 5) {
+      val want = texts.flatten.flatMap(t =>
+        t.split(" ", -1).sliding(n).filter(_.length == n).map(_.mkString(" "))).sorted
+      val got = docs.select(explode(gramsN(n))).as[String].collect().sorted
+      assert(want.nonEmpty && got.toSeq === want.toSeq, s"order $n")
+    }
+  }
+
   test("two-pass approx quartiles agree with exact ntile within one rank") {
     val exact = queries.Windows.queries("q_win_ntile_pct")(spark, sf)
       .select("c_custkey", "quartile")

@@ -77,9 +77,11 @@ object Scale {
         .withColumn("l_orderkey", col("l_orderkey") + lit(k * okStride))
         .withColumn("l_shipdate", col("l_shipdate") + expr(s"INTERVAL ${k * dayShift} DAYS"))
     })
-    // events: read through Tables (ns→µs normalization), write ts as
-    // BIGINT nanos so the scaled dir round-trips through Tables exactly
-    // like the driver-generated one. user_id strides per copy too —
+    // events: read through Tables (TimestampType under the UTC session),
+    // write ts back as TIMESTAMP_NTZ, i.e. the fixtures' parquet
+    // TIMESTAMP(MICROS, isAdjustedToUTC=false), so the scaled dir
+    // round-trips through Tables exactly like the driver-generated one
+    // (the UTC session keeps the wall clock). user_id strides per copy too —
     // without it, per-USER event volume would grow ×F and unbounded
     // per-user windows (asof, ewma, session) would measure the pile-up,
     // not the operator. Accepted trade: copies ≥ 1 have user_ids outside
@@ -96,7 +98,7 @@ object Scale {
     write("events", replicate(events, f) { (df, k) =>
       df.withColumn("event_id", col("event_id") + lit(k * evStride))
         .withColumn("user_id", col("user_id") + lit(k * userStride))
-        .withColumn("ts", (unix_micros(col("ts") + expr(s"INTERVAL ${k * 400} DAYS")) * 1000L))
+        .withColumn("ts", (col("ts") + expr(s"INTERVAL ${k * 400} DAYS")).cast("timestamp_ntz"))
     })
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val docStride = stride(docs, "doc_id")

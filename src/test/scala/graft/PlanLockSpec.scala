@@ -127,6 +127,17 @@ class PlanLockSpec extends SparkSpec {
       s"session builders outside GraftSession:\n${hits.mkString("\n")}")
   }
 
+  test("no session conf is set in src/main outside Streams.withRocksDb") {
+    // GraftSession.builder sets the session confs once; a load or a query
+    // that sets one would change the session under every later query.
+    // withRocksDb swaps the state-store provider for its body only.
+    val streams = java.nio.file.Paths.get("src/main/scala/graft/streaming/Streams.scala")
+    val hits = lineHits(mainFiles.filterNot(_ == streams))((_, _, l) =>
+      l.contains("conf.set("))
+    assert(hits.isEmpty,
+      s"session confs set outside Streams.withRocksDb:\n${hits.mkString("\n")}")
+  }
+
   test("one Lloyd update in src/main: struct(pos, cv) and def fdiv appear once each") {
     // every trained quantizer (flat, two-level, k-means, PQ) runs
     // Learn.lloyd; a second copy of its centroid recompute or of its

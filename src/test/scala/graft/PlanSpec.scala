@@ -1163,7 +1163,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.storage.StorageLevel
-    assert(Tables(spark, sf, "orders").storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(Tables(spark, sf, "orders").storageLevel == StorageLevel.DISK_ONLY)
     val e = queries.U.coPurchaseEdges(spark, sf)
     assert(e.storageLevel == StorageLevel.MEMORY_AND_DISK)
     // a src-keyed aggregate (every iterative graph round's shape) reads
@@ -1178,6 +1178,39 @@ class PlanSpec extends SparkSpec {
       s"edge list not read from the cache:\n$p")
     assert(p.collect { case x: ShuffleExchangeLike => x }.isEmpty,
       s"src-keyed aggregate re-shuffles the cached edge list:\n$p")
+  }
+
+  test("base tables are cached on local disk, not the heap, and scans read the cache") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.{col, sum}
+    val cacheManager = spark.sharedState.cacheManager
+    val rddIds = Tables.names.map { t =>
+      val df = Tables(spark, sf, t)
+      df.count() // materializes every partition of the cached batches
+      val cached = cacheManager.lookupCachedData(
+        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      assert(cached.nonEmpty, s"$t is not in the session's cache")
+      t -> cached.get.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id
+    }
+    val info = spark.sparkContext.getRDDStorageInfo.map(i => i.id -> i).toMap
+    for ((t, id) <- rddIds) {
+      assert(info.contains(id), s"$t: cached RDD $id holds no blocks")
+      assert(info(id).memSize == 0L && info(id).diskSize > 0L,
+        s"$t: cached on the heap, not on local disk: ${info(id)}")
+    }
+    val q = Tables(spark, sf, "lineitem")
+      .where(col("l_quantity") > 10).groupBy("l_returnflag")
+      .agg(sum("l_extendedprice"))
+    val p = q.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    assert(p.collect { case s: InMemoryTableScanExec => s }.nonEmpty,
+      s"lineitem query does not read the cache:\n$p")
+    assert(p.collect { case s: FileSourceScanExec => s }.isEmpty,
+      s"lineitem query re-reads parquet:\n$p")
   }
 
   test("shared derived frames are memoized per session — one instance each") {

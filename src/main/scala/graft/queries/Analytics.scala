@@ -63,16 +63,15 @@ object Analytics {
     // decorrelates it into a ranked join, so no per-row execution at
     // scale. Bounded to custkey<100 only to keep the demo output small.
     "q_sql_lateral" -> ((s, d) => {
-      Tables(s, d, "customer").createOrReplaceTempView("customer")
-      Tables(s, d, "orders").createOrReplaceTempView("orders")
-      s.sql(
+      U.sqlOver(s,
         """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-           FROM customer c, LATERAL (
-             SELECT o_orderkey, o_totalprice FROM orders
+           FROM {customer} c, LATERAL (
+             SELECT o_orderkey, o_totalprice FROM {orders}
              WHERE o_custkey = c.c_custkey
              ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
            WHERE c.c_custkey < 100
-           ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""")
+           ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""",
+        "customer" -> Tables(s, d, "customer"), "orders" -> Tables(s, d, "orders"))
     }),
 
     // Exact median + mode per segment WITHOUT interpolation: lower median
@@ -243,34 +242,34 @@ object Analytics {
     // to the session_window twin (asserted in AnalyticsSpec). Exercises
     // the iterative-fixpoint surface SQL users expect from an engine.
     "q_sql_recursive" -> ((s, d) => {
-      Tables(s, d, "events").createOrReplaceTempView("events")
       // r15: the lagged event frame is LOOP-INVARIANT but was a plain
       // CTE, so every UnionLoop iteration re-ran the per-user window
       // sort over the full events table (depth = the longest session's
       // event count). Materialize it once behind a lazy checkpoint and
       // let the recursion join against the frozen frame — same rows,
       // same recursion, one window pass per invocation.
-      s.sql(
+      val lagged = U.sqlOver(s,
         """SELECT user_id, event_id, unix_micros(ts) AS us,
              lag(unix_micros(ts)) OVER w AS pus,
              lag(event_id) OVER w AS prev_id
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY event_id)""")
+           FROM {events}
+           WINDOW w AS (PARTITION BY user_id ORDER BY event_id)""",
+        "events" -> Tables(s, d, "events"))
         .localCheckpoint(false)
-        .createOrReplaceTempView("sess_lagged")
-      s.sql(
+      U.sqlOver(s,
         """WITH RECURSIVE
            sess(user_id, session_id, event_id, us) AS (
-             SELECT user_id, event_id, event_id, us FROM sess_lagged
+             SELECT user_id, event_id, event_id, us FROM {sess_lagged}
              WHERE pus IS NULL OR us - pus >= 900000000
              UNION ALL
              SELECT s.user_id, s.session_id, e.event_id, e.us
-             FROM sess s JOIN sess_lagged e ON e.user_id = s.user_id
+             FROM sess s JOIN {sess_lagged} e ON e.user_id = s.user_id
                AND e.prev_id = s.event_id AND e.us - s.us < 900000000)
            SELECT user_id, session_id, COUNT(*) AS n_events,
              MIN(us) div 1000000 AS start_s, MAX(us) div 1000000 AS end_s
            FROM sess GROUP BY user_id, session_id
-           ORDER BY user_id, session_id""")
+           ORDER BY user_id, session_id""",
+        "sess_lagged" -> lagged)
     }),
 
     // Salted skew join: spread a hot build key over 8 sub-keys — probe

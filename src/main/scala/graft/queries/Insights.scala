@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import U._
@@ -149,20 +150,14 @@ object Insights {
     // whole-graph community has no boundary, and 0/0 must not NaN).
     // Community-count rows out at any N.
     "q_graph_conductance" -> ((s, d) => {
-      val e = U.coPurchaseEdges(s, d)
       val l2 = louvainCoarse(s, d)
-      val tagged = e
-        .join(l2.select(col("id"), col("lbl").as("ls")), col("src") === col("id"))
-        .drop("id")
-        .join(l2.select(col("id"), col("lbl").as("ld")), col("dst") === col("id"))
-        .drop("id")
-      val per = tagged.groupBy(col("ls").as("community"))
+      val per = tagEnds(U.coPurchaseEdges(s, d), l2)
+        .groupBy(col("ls").as("community"))
         .agg(count(lit(1)).as("vol"),
           sum((col("ls") =!= col("ld")).cast("long")).as("cut"))
       val sizes = l2.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).as("n_nodes"))
-      val m2f = e.agg(count(lit(1)).as("m2"))
-      per.join(sizes, "community").crossJoin(broadcast(m2f))
+      per.join(sizes, "community").crossJoin(broadcast(unitGraph(s, d).m2f))
         .select(col("community"), col("n_nodes"), col("vol"), col("cut"),
           when(col("cut") === 0L, lit(0.0)).otherwise(
             round(col("cut").cast("double") /
@@ -181,24 +176,7 @@ object Insights {
     // aggregate, per-community terms pinned to the 1e-9 grid before
     // the exact decimal sum (integer ratios → one libm-free double
     // expression each). Output is one row at any N.
-    "q_graph_modularity" -> ((s, d) => {
-      val e = U.coPurchaseEdges(s, d)
-      val lbl = labelProp(s, d)
-      val tagged = e
-        .join(lbl.select(col("id"), col("lbl").as("ls")), e("src") === col("id"))
-        .drop("id")
-        .join(lbl.select(col("id"), col("lbl").as("ld")), col("dst") === col("id"))
-      val per = tagged.groupBy("ls")
-        .agg(count(lit(1)).as("dc"),
-          sum((col("ls") === col("ld")).cast("long")).as("within"))
-      val tot = per.agg(sum("dc").as("e2"))
-      per.crossJoin(broadcast(tot))
-        .agg(count(lit(1)).as("n_communities"), max(col("e2")).as("e2"),
-          sum(expr(
-            """CAST(round(CAST(within AS DOUBLE) / e2
-               - (CAST(dc AS DOUBLE) / e2) * (CAST(dc AS DOUBLE) / e2), 9)
-               AS DECIMAL(18,9))""")).cast("double").as("modularity"))
-    }),
+    "q_graph_modularity" -> ((s, d) => modularity(s, d, labelProp(s, d))),
 
     // Inverted index (the classic IR/MapReduce demo): word → document
     // frequency + comma-joined sorted postings list. Distinct (word, doc)
@@ -719,6 +697,56 @@ object Insights {
     "1 * CAST(element_at(embedding, 1) > 0 AS INT) + 2 * CAST(element_at(embedding, 2) > 0 AS INT)" +
       " + 4 * CAST(element_at(embedding, 3) > 0 AS INT) + 8 * CAST(element_at(embedding, 4) > 0 AS INT)")
 
+  /** A both-directions weighted edge frame `e(src, dst, w)` with its
+    * per-node weighted degree `wdeg(id, wdeg)` (self-loops included, the
+    * standard k_i convention) and the 1-row total `m2f(m2)` = Σw = 2m:
+    * the graph every Louvain move round and [[qNum]] read. */
+  private case class WGraph(e: DataFrame, wdeg: DataFrame,
+      m2f: DataFrame)
+
+  /** The [[WGraph]] of `e`; `ckpt` cuts the degree frame's plan (a lazy
+    * localCheckpoint or [[ckptReset]], whichever the caller's loop
+    * needs). */
+  private def wGraph(e: DataFrame, ckpt: DataFrame => DataFrame): WGraph =
+    WGraph(e, ckpt(e.groupBy(col("src").as("id")).agg(sum("w").as("wdeg"))),
+      e.agg(sum("w").as("m2")))
+
+  /** [[U.coPurchaseEdges]] at unit weight. Customers and suppliers never
+    * share an id, so there are no self-loops and every Σw is an edge
+    * count. Memoized per (session, sfDir): [[louvain]], [[louvainFull]]
+    * and q_graph_conductance read one degree frame and one 2m. */
+  private def unitGraph(s: SparkSession, d: String): WGraph =
+    graft.Memo(s, s"unitgraph:$d") {
+      wGraph(U.coPurchaseEdges(s, d) // src-partitioned cache; no ckpt
+        .select(col("src"), col("dst"), lit(1L).as("w")),
+        _.localCheckpoint(false))
+    }
+
+  /** Each `(src, dst, …)` edge tagged with both endpoints' labels from
+    * `lbl(id, lbl)`: `ls` at the source, `ld` at the destination. The
+    * label frame is node-sized, so both are keyed hash joins at any
+    * scale (broadcast at demo scale). */
+  private def tagEnds(e: DataFrame, lbl: DataFrame): DataFrame =
+    e.join(lbl.select(col("id"), col("lbl").as("ls")), col("src") === col("id"))
+      .drop("id")
+      .join(lbl.select(col("id"), col("lbl").as("ld")), col("dst") === col("id"))
+      .drop("id")
+
+  /** The community graph of a membership `lbl(id, lbl)`: one
+    * `(src, dst, w)` edge per ordered community pair, w = the
+    * co-purchase edges between them, so self-loops carry each
+    * community's internal mass (the aggregate a distributed Louvain
+    * materializes between levels). */
+  private def communityGraph(s: SparkSession, d: String,
+      lbl: DataFrame): DataFrame =
+    tagEnds(U.coPurchaseEdges(s, d), lbl)
+      .groupBy(col("ls").as("src"), col("ld").as("dst"))
+      .agg(count(lit(1)).as("w"))
+
+  /** Every distinct `id` as its own community: `(id, lbl = id)`. */
+  private def singletons(ids: DataFrame): DataFrame =
+    ids.distinct().select(col("id"), col("id").as("lbl"))
+
   /** 4 SEMI-SYNCHRONOUS label-propagation rounds over
     * [[U.coPurchaseEdges]] — odd rounds update the supplier side,
     * even rounds the customer side (see q_graph_label_prop: the fully
@@ -728,12 +756,10 @@ object Insights {
     * CC-labels rule, Llm.ccLabels) so the round loop runs once, not
     * once per consuming query; the final frame's lazy localCheckpoint
     * makes the memo effective after its first action. */
-  private[graft] def labelProp(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+  private[graft] def labelProp(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"labelprop:$d") {
       val e = U.coPurchaseEdges(s, d) // src-partitioned cache; no ckpt
-      var lbl = e.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl"))
+      var lbl = singletons(e.select(col("src").as("id")))
       for (k <- 1 to 4) {
         val side =
           if (k % 2 == 1) col("dst") >= U.supplierIdOffset
@@ -750,66 +776,77 @@ object Insights {
       lbl
     }
 
-  /** 4 semi-synchronous Louvain local-move rounds over
-    * [[U.coPurchaseEdges]] — see the q_graph_louvain entry for the
-    * algorithm and determinism notes. `m2` (= 2m, the both-directions
-    * edge count) and the static degree frame derive once; each round
-    * recomputes the community degree masses from the CURRENT labels —
-    * all moving-side nodes decide against one snapshot, then merge.
-    * Memoized per (session, sfDir) like [[labelProp]]. */
-  private[graft] def louvain(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+  /** One semi-synchronous Louvain move round over the weighted,
+    * possibly self-looped graph `g` — the family's one semi-synchronous
+    * move body ([[louvainCoarse]]'s synchronous round is another
+    * algorithm). [[louvain]] and [[louvainFull]]'s phase-1 continuation run it over
+    * the unit-weight [[unitGraph]]; [[louvainFull]]'s levels run it over
+    * each community graph. `lbl(id, lbl)` is the current membership;
+    * round parity `k` picks the moving side (odd = supplier-labeled
+    * ids), and every moving node decides against the same snapshot of
+    * the community degree masses, then merges. Self-loops are EXCLUDED
+    * from k_iC (an edge to yourself is not an edge to another member)
+    * but INCLUDED in wdeg/tot, the standard k_i convention. Candidates
+    * are neighbor communities only (the Louvain invariant). Gains are
+    * the exact-integer ΔQ·2m² = 2m·k_iC − k_i·Σtot(C∖i) in DECIMAL(38,0);
+    * move iff the best foreign gain strictly beats staying, ties stay,
+    * foreign ties to the smallest label — bit-identical to the DuckDB
+    * twins' HUGEINT window form. Per round: one edge⋈label shuffle for
+    * k_iC, one node-sized degree-mass aggregate, keyed node-sized joins. */
+  private def wRound(lbl: DataFrame, g: WGraph, k: Int): DataFrame = {
+    val side = (c: org.apache.spark.sql.Column) =>
+      if (k % 2 == 1) c >= U.supplierIdOffset
+      else c < U.supplierIdOffset
+    // edge mass INTO a moving node from each current community
+    val kic = g.e.where(col("src") =!= col("dst") && side(col("dst")))
+      .join(lbl.select(col("id"), col("lbl").as("clbl")),
+        col("src") === col("id"))
+      .groupBy(col("dst"), col("clbl")).agg(sum("w").as("kic"))
+    // per-community degree mass under the current labels (node-sized)
+    val tot = lbl.join(g.wdeg, "id")
+      .groupBy("lbl").agg(sum("wdeg").as("tot"))
+    // moving-node context: current label, degree, own community mass
+    val cur = lbl.where(side(col("id")))
+      .join(g.wdeg, "id")
+      .join(tot.select(col("lbl"), col("tot").as("totcur")), "lbl")
+      .select(col("id").as("dst"), col("lbl").as("curlbl"),
+        col("wdeg").as("kd"), col("totcur"))
+    val gain = kic.join(cur, "dst")
+      .join(tot.select(col("lbl").as("clbl"), col("tot").as("totc")), "clbl")
+      .crossJoin(broadcast(g.m2f))
+      .withColumn("g", expr(
+        """CAST(m2 AS DECIMAL(38,0)) * kic - CAST(kd AS DECIMAL(38,0)) *
+           (CASE WHEN clbl = curlbl THEN totc - kd ELSE totc END)"""))
+    val best = gain.where(col("clbl") =!= col("curlbl"))
+      .groupBy("dst")
+      .agg(max(struct(col("g"), (-col("clbl")).as("nl"))).as("mb"))
+      .select(col("dst"), col("mb.g").as("gbest"),
+        (-col("mb.nl")).as("bestlbl"))
+    val stay = gain.where(col("clbl") === col("curlbl"))
+      .select(col("dst"), col("g").as("gstay"))
+    val upd = cur.join(best, Seq("dst"), "left")
+      .join(stay, Seq("dst"), "left")
+      // no internal edge ⇒ staying scores −k_i·(Σtot(cur)−k_i)
+      .withColumn("gs", coalesce(col("gstay"), expr(
+        "CAST(0 AS DECIMAL(38,0)) - CAST(kd AS DECIMAL(38,0)) * (totcur - kd)")))
+      .select(col("dst").as("id"),
+        when(col("gbest").isNotNull && col("gbest") > col("gs"),
+          col("bestlbl")).otherwise(col("curlbl")).as("nu"))
+    lbl.join(upd, Seq("id"), "left")
+      .select(col("id"), coalesce(col("nu"), col("lbl")).as("lbl"))
+  }
+
+  /** Louvain phase 1: 4 [[wRound]]s over the unit-weight [[unitGraph]]
+    * from singleton communities (see the q_graph_louvain entry for the
+    * algorithm and determinism notes). Each round's label frame lazily
+    * localCheckpoints (the CC rule); memoized per (session, sfDir) like
+    * [[labelProp]]. */
+  private[graft] def louvain(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"louvain:$d") {
-      val e = U.coPurchaseEdges(s, d) // src-partitioned cache; no ckpt
-      val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(false)
-      val m2f = e.agg(count(lit(1)).as("m2")) // = 2m (both directions)
-      var lbl = e.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lbl"))
-      for (k <- 1 to 4) {
-        val side = (c: org.apache.spark.sql.Column) =>
-          if (k % 2 == 1) c >= U.supplierIdOffset
-          else c < U.supplierIdOffset
-        // edges INTO a moving node from each current community
-        val kic = e.where(side(col("dst")))
-          .join(lbl.select(col("id"), col("lbl").as("clbl")),
-            col("src") === col("id"))
-          .groupBy(col("dst"), col("clbl")).agg(count(lit(1)).as("kic"))
-        // per-community degree mass under the current labels (node-sized)
-        val tot = lbl.join(deg, "id").groupBy("lbl").agg(sum("deg").as("tot"))
-        // moving-node context: current label, degree, own community mass
-        val cur = lbl.where(side(col("id")))
-          .join(deg, "id")
-          .join(tot.select(col("lbl"), col("tot").as("totcur")), "lbl")
-          .select(col("id").as("dst"), col("lbl").as("curlbl"),
-            col("deg").as("kd"), col("totcur"))
-        // exact integer gain: ΔQ·2m² = 2m·k_iC − k_i·Σtot(C∖i)
-        val g = kic.join(cur, "dst")
-          .join(tot.select(col("lbl").as("clbl"), col("tot").as("totc")), "clbl")
-          .crossJoin(broadcast(m2f))
-          .withColumn("g", expr(
-            """CAST(m2 AS DECIMAL(38,0)) * kic - CAST(kd AS DECIMAL(38,0)) *
-               (CASE WHEN clbl = curlbl THEN totc - kd ELSE totc END)"""))
-        val best = g.where(col("clbl") =!= col("curlbl"))
-          .groupBy("dst")
-          .agg(max(struct(col("g"), (-col("clbl")).as("nl"))).as("mb"))
-          .select(col("dst"), col("mb.g").as("gbest"),
-            (-col("mb.nl")).as("bestlbl"))
-        val stay = g.where(col("clbl") === col("curlbl"))
-          .select(col("dst"), col("g").as("gstay"))
-        val upd = cur.join(best, Seq("dst"), "left")
-          .join(stay, Seq("dst"), "left")
-          // no internal edge ⇒ staying scores −k_i·(Σtot(cur)−k_i)
-          .withColumn("gs", coalesce(col("gstay"), expr(
-            "CAST(0 AS DECIMAL(38,0)) - CAST(kd AS DECIMAL(38,0)) * (totcur - kd)")))
-          .select(col("dst").as("id"),
-            when(col("gbest").isNotNull && col("gbest") > col("gs"),
-              col("bestlbl")).otherwise(col("curlbl")).as("nu"))
-        lbl = lbl.join(upd, Seq("id"), "left")
-          .select(col("id"), coalesce(col("nu"), col("lbl")).as("lbl"))
-          .localCheckpoint(false)
+      val g = unitGraph(s, d)
+      (1 to 4).foldLeft(singletons(g.e.select(col("src").as("id")))) {
+        (lbl, k) => wRound(lbl, g, k).localCheckpoint(false)
       }
-      lbl
     }
 
   /** Louvain level 2 — coarsen [[louvain]]'s communities into a weighted
@@ -817,118 +854,44 @@ object Insights {
     * the q_graph_louvain_coarse entry). Memoized per (session, sfDir);
     * rides the phase-1 memo, so the marginal cost is the two node-sized
     * tag joins plus community-count-sized aggregates. */
-  private[graft] def louvainCoarse(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+  private[graft] def louvainCoarse(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"louvain2:$d") {
       val lbl1 = louvain(s, d)
-      val e = U.coPurchaseEdges(s, d)
-      val ce = e
-        .join(lbl1.select(col("id"), col("lbl").as("cs")), col("src") === col("id"))
-        .drop("id")
-        .join(lbl1.select(col("id"), col("lbl").as("cd")), col("dst") === col("id"))
-        .drop("id")
-        .groupBy("cs", "cd").agg(count(lit(1)).as("w"))
-        .localCheckpoint(false)
-      val wdeg = ce.groupBy(col("cs").as("c")).agg(sum("w").as("wdeg"))
       // Σw over the both-direction community graph = 2m, the same total
       // as phase 1 (self-loops carry the internal mass)
-      val m2f = ce.agg(sum("w").as("m2"))
-      val cand = ce.where(col("cs") =!= col("cd"))
-        .join(wdeg.select(col("c").as("cs"), col("wdeg").as("wi")), "cs")
-        .join(wdeg.select(col("c").as("cd"), col("wdeg").as("wc")), "cd")
-        .crossJoin(broadcast(m2f))
+      val g = wGraph(communityGraph(s, d, lbl1).localCheckpoint(false),
+        identity)
+      val cand = g.e.where(col("src") =!= col("dst"))
+        .join(g.wdeg.select(col("id").as("src"), col("wdeg").as("wi")), "src")
+        .join(g.wdeg.select(col("id").as("dst"), col("wdeg").as("wc")), "dst")
+        .crossJoin(broadcast(g.m2f))
         .withColumn("g", expr(
           "CAST(m2 AS DECIMAL(38,0)) * w - CAST(wi AS DECIMAL(38,0)) * wc"))
-      val moved = cand.groupBy("cs")
-        .agg(max(struct(col("g"), (-col("cd")).as("nc"))).as("mb"))
-        .select(col("cs").as("lbl"),
+      val moved = cand.groupBy("src")
+        .agg(max(struct(col("g"), (-col("dst")).as("nc"))).as("mb"))
+        .select(col("src").as("lbl"),
           when(col("mb").getField("g") > lit(0),
-            -col("mb").getField("nc")).otherwise(col("cs")).as("lbl2"))
+            -col("mb").getField("nc")).otherwise(col("src")).as("lbl2"))
       lbl1.join(moved, Seq("lbl"), "left")
         .select(col("id"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
     }
 
   /** Exact-integer modularity NUMERATOR Q·(2m)² = 2m·Σ_c within_c −
-    * Σ_c (Σtot_c)² of a membership over the weighted edge frame —
-    * self-loops count as within mass (they carry a community's internal
-    * edges after coarsening), so the super-node value equals the induced
-    * node-partition value exactly. DECIMAL(38,0) scalar, collected
-    * driver-side: the [[louvainFull]] round-acceptance guard. */
-  private[graft] def qNum(mapping: org.apache.spark.sql.DataFrame,
-      ce: org.apache.spark.sql.DataFrame,
-      wdeg: org.apache.spark.sql.DataFrame,
-      m2f: org.apache.spark.sql.DataFrame): java.math.BigDecimal = {
-    val within = ce
-      .join(mapping.select(col("id"), col("com").as("cs")),
-        col("src") === col("id")).drop("id")
-      .join(mapping.select(col("id"), col("com").as("cd")),
-        col("dst") === col("id")).drop("id")
-      .where(col("cs") === col("cd"))
+    * Σ_c (Σtot_c)² of a membership `lbl(id, lbl)` over the weighted graph
+    * `g` — self-loops count as within mass (they carry a community's
+    * internal edges after coarsening), so the super-node value equals
+    * the induced node-partition value exactly. DECIMAL(38,0) scalar,
+    * collected driver-side: the [[louvainFull]] round-acceptance guard. */
+  private def qNum(lbl: DataFrame, g: WGraph): java.math.BigDecimal = {
+    val within = tagEnds(g.e, lbl)
+      .where(col("ls") === col("ld"))
       .agg(coalesce(sum("w"), lit(0L)).as("win"))
-    val dsq = mapping.join(wdeg, "id")
-      .groupBy("com").agg(sum("wdeg").as("tot"))
+    val dsq = lbl.join(g.wdeg, "id")
+      .groupBy("lbl").agg(sum("wdeg").as("tot"))
       .agg(sum(expr("CAST(tot AS DECIMAL(38,0)) * tot")).as("dsq"))
-    within.crossJoin(broadcast(dsq)).crossJoin(broadcast(m2f))
+    within.crossJoin(broadcast(dsq)).crossJoin(broadcast(g.m2f))
       .select(expr("CAST(m2 AS DECIMAL(38,0)) * win - dsq").as("qn"))
       .collect()(0).getDecimal(0)
-  }
-
-  /** One semi-synchronous WEIGHTED Louvain move round — the [[louvain]]
-    * round body generalized to a weighted, possibly self-looped edge
-    * frame, so ONE definition serves both phase-1 continuation rounds
-    * (w = 1, no self-loops ⇒ sum(w) ≡ the 4-round loop's count) and the
-    * super-node move phases of every coarsened level. `mapping(id, com)`
-    * is the current membership; `ce(src, dst, w)` the static
-    * both-directions weighted edges (self-loops carry internal mass —
-    * they are EXCLUDED from k_iC, an edge to yourself is not an edge to
-    * another member, but INCLUDED in wdeg/tot, the standard k_i
-    * convention); round parity `k` picks the moving side (odd =
-    * supplier-labeled ids). Gains are the exact-integer ΔQ·2m² =
-    * 2m·k_iC − k_i·Σtot(C∖i) in DECIMAL(38,0); move iff the best
-    * foreign gain strictly beats staying, ties stay, foreign ties to
-    * the smallest label — bit-identical to the DuckDB twin's HUGEINT
-    * window form. */
-  private def wRound(mapping: org.apache.spark.sql.DataFrame,
-      ce: org.apache.spark.sql.DataFrame,
-      wdeg: org.apache.spark.sql.DataFrame,
-      m2f: org.apache.spark.sql.DataFrame, k: Int)
-    : org.apache.spark.sql.DataFrame = {
-    val side = (c: org.apache.spark.sql.Column) =>
-      if (k % 2 == 1) c >= U.supplierIdOffset
-      else c < U.supplierIdOffset
-    val kic = ce.where(col("src") =!= col("dst") && side(col("dst")))
-      .join(mapping.select(col("id"), col("com").as("clbl")),
-        col("src") === col("id"))
-      .groupBy(col("dst"), col("clbl")).agg(sum("w").as("kic"))
-    val tot = mapping.join(wdeg, "id")
-      .groupBy("com").agg(sum("wdeg").as("tot"))
-    val cur = mapping.where(side(col("id")))
-      .join(wdeg, "id")
-      .join(tot.select(col("com"), col("tot").as("totcur")), "com")
-      .select(col("id").as("dst"), col("com").as("curlbl"),
-        col("wdeg").as("kd"), col("totcur"))
-    val g = kic.join(cur, "dst")
-      .join(tot.select(col("com").as("clbl"), col("tot").as("totc")), "clbl")
-      .crossJoin(broadcast(m2f))
-      .withColumn("g", expr(
-        """CAST(m2 AS DECIMAL(38,0)) * kic - CAST(kd AS DECIMAL(38,0)) *
-           (CASE WHEN clbl = curlbl THEN totc - kd ELSE totc END)"""))
-    val best = g.where(col("clbl") =!= col("curlbl"))
-      .groupBy("dst")
-      .agg(max(struct(col("g"), (-col("clbl")).as("nl"))).as("mb"))
-      .select(col("dst"), col("mb.g").as("gbest"),
-        (-col("mb.nl")).as("bestlbl"))
-    val stay = g.where(col("clbl") === col("curlbl"))
-      .select(col("dst"), col("g").as("gstay"))
-    val upd = cur.join(best, Seq("dst"), "left")
-      .join(stay, Seq("dst"), "left")
-      .withColumn("gs", coalesce(col("gstay"), expr(
-        "CAST(0 AS DECIMAL(38,0)) - CAST(kd AS DECIMAL(38,0)) * (totcur - kd)")))
-      .select(col("dst").as("id"),
-        when(col("gbest").isNotNull && col("gbest") > col("gs"),
-          col("bestlbl")).otherwise(col("curlbl")).as("nu"))
-    mapping.join(upd, Seq("id"), "left")
-      .select(col("id"), coalesce(col("nu"), col("com")).as("com"))
   }
 
   /** Round/level caps for [[louvainFull]] — part of the operator's
@@ -963,115 +926,100 @@ object Insights {
     * default stat disables auto-broadcast — every small side in
     * [[wRound]]/[[qNum]] is dim- or node-bounded, so that is a
     * planning-cost trade, not a correctness one). */
-  private def ckptReset(df: org.apache.spark.sql.DataFrame)
-    : org.apache.spark.sql.DataFrame = {
+  private def ckptReset(df: DataFrame): DataFrame = {
     val c = df.localCheckpoint(true)
     c.sparkSession.createDataFrame(c.rdd, c.schema)
+  }
+
+  /** Q-GUARDED [[wRound]]s over `g`, one per parity in `ks`, from `lbl0`:
+    * a round's candidate labeling is adopted only if its exact [[qNum]]
+    * strictly rises, and the loop stops after two consecutive
+    * rejections (one full side cycle — see the caps above). Each
+    * candidate goes through [[ckptReset]]. Returns the last adopted
+    * labeling and the number of adopted rounds. */
+  private def guardedRounds(lbl0: DataFrame, g: WGraph,
+      ks: Range): (DataFrame, Int) = {
+    var lbl = lbl0
+    var qn = qNum(lbl, g)
+    var accepted = 0
+    var rej = 0
+    val it = ks.iterator
+    while (it.hasNext && rej < 2) {
+      val cand = ckptReset(wRound(lbl, g, it.next()))
+      val qc = qNum(cand, g)
+      if (qc.compareTo(qn) > 0) { lbl = cand; qn = qc; rej = 0; accepted += 1 }
+      else rej += 1
+    }
+    (lbl, accepted)
   }
 
   /** Louvain TO CONVERGENCE — the full Blondel et al. loop the one-phase
     * [[louvain]] + one-level [[louvainCoarse]] pair demonstrates in
     * fixed form: continue phase-1 local moves until modularity stops
     * improving, then (coarsen, move-until-no-improvement) levels until a
-    * whole level accepts nothing (ΔQ = 0). Each round is Q-GUARDED: the
-    * semi-synchronous candidate labeling is accepted only if its EXACT
-    * integer modularity numerator Q·(2m)² strictly improves ([[qNum]] —
-    * one driver-side DECIMAL(38,0) scalar per round, the `Llm.ccLabels`
-    * bounded-scalar convergence discipline). The guard is load-bearing,
-    * not cosmetic: un-guarded semi-synchronous moves PILE ON (all nodes
-    * of a side chasing the same big community at once) — measured at
-    * sf0.01, free-running rounds collapse the graph to ONE community
-    * (Q = 0) where the guarded loop climbs 418M → 664M and lands
-    * modularity 0.0705 vs the fixed two-level pair's 0.0426. Guarded
-    * acceptance also makes Q monotone from the 4-round base, which is
-    * the q_graph_louvain_full ≥-coarse quality claim's proof sketch.
-    * Label frames checkpoint per round through [[ckptReset]] (each
-    * round runs a qNum action anyway; plain localCheckpoint is NOT
-    * enough — see ckptReset for the compounding-statistics failure it
-    * exists to stop). Memoized per (session, sfDir). */
-  private[graft] def louvainFull(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
+    * whole level accepts nothing (ΔQ = 0). Each round is Q-GUARDED
+    * ([[guardedRounds]]: one driver-side DECIMAL(38,0) scalar per round,
+    * the `Llm.ccLabels` bounded-scalar convergence discipline). The
+    * guard is load-bearing, not cosmetic: un-guarded semi-synchronous
+    * moves PILE ON (all nodes of a side chasing the same big community
+    * at once) — measured at sf0.01, free-running rounds collapse the
+    * graph to ONE community (Q = 0) where the guarded loop climbs
+    * 418M → 664M and lands modularity 0.0705 vs the fixed two-level
+    * pair's 0.0426. Guarded acceptance also makes Q monotone from the
+    * 4-round base, which is the q_graph_louvain_full ≥-coarse quality
+    * claim's proof sketch. Label frames checkpoint per round through
+    * [[ckptReset]] (each round runs a qNum action anyway; plain
+    * localCheckpoint is NOT enough — see ckptReset for the
+    * compounding-statistics failure it exists to stop). Memoized per
+    * (session, sfDir). */
+  private[graft] def louvainFull(s: SparkSession, d: String): DataFrame =
     graft.Memo(s, s"louvainfull:$d") {
-      val e = U.coPurchaseEdges(s, d) // src-partitioned cache; no ckpt
-      val e1 = e.select(col("src"), col("dst"), lit(1L).as("w"))
-      val wdeg1 = e1.groupBy(col("src").as("id")).agg(sum("w").as("wdeg"))
-        .localCheckpoint(false)
-      val m2f1 = e1.agg(sum("w").as("m2"))
       // phase-1 continuation: rounds 5.. from the memoized 4-round frame
       // (side parity carries through, so round 5 moves suppliers)
-      var lbl = ckptReset(louvain(s, d).select(col("id"), col("lbl").as("com")))
-      var qn = qNum(lbl, e1, wdeg1, m2f1)
-      var k = 5
-      var rej = 0
-      while (k <= 4 + FullR1Cap && rej < 2) {
-        val cand = ckptReset(wRound(lbl, e1, wdeg1, m2f1, k))
-        val qc = qNum(cand, e1, wdeg1, m2f1)
-        if (qc.compareTo(qn) > 0) { lbl = cand; qn = qc; rej = 0 }
-        else rej += 1
-        k += 1
-      }
-      // levels: coarsen to the weighted community graph (self-loops =
-      // internal mass), move super-nodes under the same guard, fold the
-      // relabel into the node mapping
-      var nodeLbl = lbl
+      var nodeLbl = guardedRounds(ckptReset(louvain(s, d)),
+        unitGraph(s, d), 5 to 4 + FullR1Cap)._1
+      // levels: coarsen to the community graph, move super-nodes under
+      // the same guard, fold the relabel into the node mapping
       var level = 1
       var levelAccepted = 1
       while (level <= FullLevelCap && levelAccepted > 0) {
-        val ce = e
-          .join(nodeLbl.select(col("id"), col("com").as("cs")),
-            col("src") === col("id")).drop("id")
-          .join(nodeLbl.select(col("id"), col("com").as("cd")),
-            col("dst") === col("id")).drop("id")
-          .groupBy("cs", "cd").agg(count(lit(1)).as("w"))
-          .select(col("cs").as("src"), col("cd").as("dst"), col("w"))
-        val ceR = ckptReset(ce)
-        val wdegC = ckptReset(
-          ceR.groupBy(col("src").as("id")).agg(sum("w").as("wdeg")))
-        val m2fC = ceR.agg(sum("w").as("m2"))
-        var com = ckptReset(nodeLbl.select(col("com").as("id")).distinct()
-          .select(col("id"), col("id").as("com")))
-        var qnC = qNum(com, ceR, wdegC, m2fC)
-        var kk = 1
-        var rj = 0
-        levelAccepted = 0
-        while (kk <= FullR2Cap && rj < 2) {
-          val cand = ckptReset(wRound(com, ceR, wdegC, m2fC, kk))
-          val qc = qNum(cand, ceR, wdegC, m2fC)
-          if (qc.compareTo(qnC) > 0) {
-            com = cand; qnC = qc; rj = 0; levelAccepted += 1
-          } else rj += 1
-          kk += 1
-        }
-        nodeLbl = ckptReset(nodeLbl.select(col("id"), col("com").as("c0"))
-          .join(com.select(col("id").as("c0"), col("com").as("cN")), "c0")
-          .select(col("id"), col("cN").as("com")))
+        val gc = wGraph(ckptReset(communityGraph(s, d, nodeLbl)), ckptReset)
+        val (com, accepted) = guardedRounds(
+          ckptReset(singletons(nodeLbl.select(col("lbl").as("id")))),
+          gc, 1 to FullR2Cap)
+        levelAccepted = accepted
+        nodeLbl = ckptReset(nodeLbl.select(col("id"), col("lbl").as("c0"))
+          .join(com.select(col("id").as("c0"), col("lbl").as("cN")), "c0")
+          .select(col("id"), col("cN").as("lbl")))
         level += 1
       }
-      nodeLbl.select(col("id"), col("com").as("lbl"))
+      nodeLbl
     }
 
-  /** Modularity Q of an arbitrary (id, lbl) partition over
-    * [[U.coPurchaseEdges]] — the q_graph_modularity arithmetic
-    * factored out so specs can grade [[louvainFull]] against
-    * [[louvainCoarse]] on the SAME definition. */
-  private[graft] def modularityOf(s: org.apache.spark.sql.SparkSession,
-      d: String, lbl: org.apache.spark.sql.DataFrame): Double = {
-    val e = U.coPurchaseEdges(s, d)
-    val tagged = e
-      .join(lbl.select(col("id"), col("lbl").as("ls")), e("src") === col("id"))
-      .drop("id")
-      .join(lbl.select(col("id"), col("lbl").as("ld")), col("dst") === col("id"))
-    val per = tagged.groupBy("ls")
+  /** Modularity of a membership `lbl(id, lbl)` over
+    * [[U.coPurchaseEdges]] as one row (n_communities, e2, modularity):
+    * the body of q_graph_modularity (see that entry for the formula and
+    * the 1e-9 grid) and of [[modularityOf]]. */
+  private def modularity(s: SparkSession, d: String,
+      lbl: DataFrame): DataFrame = {
+    val per = tagEnds(U.coPurchaseEdges(s, d), lbl).groupBy("ls")
       .agg(count(lit(1)).as("dc"),
         sum((col("ls") === col("ld")).cast("long")).as("within"))
     val tot = per.agg(sum("dc").as("e2"))
     per.crossJoin(broadcast(tot))
-      .agg(sum(expr(
-        """CAST(round(CAST(within AS DOUBLE) / e2
-           - (CAST(dc AS DOUBLE) / e2) * (CAST(dc AS DOUBLE) / e2), 9)
-           AS DECIMAL(18,9))""")).cast("double").as("q"))
-      .collect()(0).getDouble(0)
+      .agg(count(lit(1)).as("n_communities"), max(col("e2")).as("e2"),
+        sum(expr(
+          """CAST(round(CAST(within AS DOUBLE) / e2
+             - (CAST(dc AS DOUBLE) / e2) * (CAST(dc AS DOUBLE) / e2), 9)
+             AS DECIMAL(18,9))""")).cast("double").as("modularity"))
   }
+
+  /** [[modularity]]'s Q as a driver-side scalar, so specs can grade
+    * [[louvainFull]] against [[louvainCoarse]] on the SAME definition as
+    * q_graph_modularity. */
+  private[graft] def modularityOf(s: SparkSession, d: String,
+      lbl: DataFrame): Double =
+    modularity(s, d, lbl).select("modularity").collect()(0).getDouble(0)
 
   /** Doc-to-doc kNN graph over the 16 sign-bit cells. Each query probes
     * its own cell and the 4 one-bit flips (5 of 16 cells), so per-query
@@ -1122,12 +1070,6 @@ object Insights {
            CAST(150000000 + (85 * COALESCE(i.msum, 0)) // 100 AS BIGINT) AS pr
            FROM nodes n LEFT JOIN i$cur i ON n.id = i.dst)"""
 
-  /** DuckDB twin of [[labelProp]]: the CTE chain `oi, e, l0..l4` with
-    * `l4(id, lbl)` as the final labels — shared by the label-prop and
-    * modularity oracles exactly as [[labelProp]] is on the Spark side.
-    * Round k updates only one bipartite side (odd → suppliers, id ≥
-    * 1e6; even → customers), the carried frame merges via LEFT JOIN +
-    * COALESCE, mirroring the semi-synchronous Spark loop. */
   /** DuckDB twin of [[louvain]] — the unrolled 4-round CTE chain ending
     * at `v4(id, lbl)`. Gains are HUGEINT (the DECIMAL(38,0) twin); the
     * argmax (ORDER BY g DESC, clbl) and the strict move-beats-stay
@@ -1312,6 +1254,12 @@ object Insights {
        lv2 AS MATERIALIZED (SELECT v.id, COALESCE(b.lbl2, v.lbl) AS lbl
          FROM v4 v LEFT JOIN mv b ON v.lbl = b.cs)"""
 
+  /** DuckDB twin of [[labelProp]]: the CTE chain `oi, e, l0..l4` with
+    * `l4(id, lbl)` as the final labels — shared by the label-prop and
+    * modularity oracles exactly as [[labelProp]] is on the Spark side.
+    * Round k updates only one bipartite side (odd → suppliers, id ≥
+    * 1e6; even → customers), the carried frame merges via LEFT JOIN +
+    * COALESCE, mirroring the semi-synchronous Spark loop. */
   private def oLabelChain: String = {
     def round(prev: String, out: String, k: Int): String = {
       val side = if (k % 2 == 1) s"e.dst >= ${U.supplierIdOffset}"

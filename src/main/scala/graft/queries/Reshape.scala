@@ -55,15 +55,14 @@ object Reshape {
     // SQL entry point: correlated EXISTS subquery planned by Catalyst as a
     // left-semi join (shuffle on the correlation key — no per-row probe).
     "q_sql_exists" -> ((s, d) => {
-      Tables(s, d, "customer").createOrReplaceTempView("customer")
-      Tables(s, d, "orders").createOrReplaceTempView("orders")
-      s.sql(
+      U.sqlOver(s,
         """SELECT c_custkey, c_name
-           FROM customer c
-           WHERE EXISTS (SELECT 1 FROM orders o
+           FROM {customer} c
+           WHERE EXISTS (SELECT 1 FROM {orders} o
                          WHERE o.o_custkey = c.c_custkey
                            AND o.o_totalprice > 300000)
-           ORDER BY c_custkey""")
+           ORDER BY c_custkey""",
+        "customer" -> Tables(s, d, "customer"), "orders" -> Tables(s, d, "orders"))
     }),
 
     // Skew-safe exact distinct count: the classic salted two-stage shape.

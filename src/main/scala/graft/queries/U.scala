@@ -49,6 +49,23 @@ object U {
     s"${System.getProperty("java.io.tmpdir")}/graft_rt/${name}_" +
       sfDir.replaceAll("[^0-9.]", "")
 
+  /** Run the SQL text `sql` with each `{name}` in it bound to the frame
+    * `views(name)`, leaving the session's temp views as they were: the
+    * frames are registered under names unique to this call, the text is
+    * analyzed against them, and the names are dropped again. The
+    * analyzed plan holds the frames themselves, so the result outlives
+    * the names. The drop goes through the session catalog, which keeps
+    * the frames' cache entries (`Catalog.dropTempView` would uncache a
+    * cached frame such as a base table). */
+  def sqlOver(s: SparkSession, sql: String,
+      views: (String, DataFrame)*): DataFrame = {
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+    val named = views.map { case (n, df) => (n, df, s"graft_${n}_$tag") }
+    named.foreach { case (_, df, v) => df.createTempView(v) }
+    try s.sql(named.foldLeft(sql) { case (q, (n, _, v)) => q.replace(s"{$n}", v) })
+    finally named.foreach { case (_, _, v) => s.sessionState.catalog.dropTempView(v) }
+  }
+
   /** DuckDB fragment: order-independent decimal sum of a double expr. */
   def oDsum(expr: String): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(18,6))) AS DOUBLE)"

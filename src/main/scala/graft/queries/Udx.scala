@@ -60,14 +60,14 @@ object Udx {
       s.sql(
         """CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(p DOUBLE, disc DOUBLE)
            RETURNS DOUBLE RETURN p * (1.0 - disc)""")
-      Tables(s, d, "lineitem").createOrReplaceTempView("graft_udfsql_li")
-      s.sql(
+      U.sqlOver(s,
         """SELECT l_returnflag,
              CAST(SUM(CAST(graft_disc_price(l_extendedprice, l_discount)
                AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
              COUNT(*) AS cnt
-           FROM graft_udfsql_li
-           GROUP BY l_returnflag ORDER BY l_returnflag""")
+           FROM {lineitem}
+           GROUP BY l_returnflag ORDER BY l_returnflag""",
+        "lineitem" -> Tables(s, d, "lineitem"))
     }),
 
     // UDTF shape: one row in, many rows out — explode over an HOF-built

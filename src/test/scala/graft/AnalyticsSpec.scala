@@ -74,6 +74,33 @@ class AnalyticsSpec extends SparkSpec {
     assert(sessions("q_sql_recursive") == sessions("q_stream_session"))
   }
 
+  test("SQL-surface queries leave the session's temp views as they were") {
+    // the queries bind their frames to per-call view names and drop them
+    // once analyzed: a user's own `orders` view survives them, and a
+    // second build of q_sql_recursive does not swap the first one's
+    // lagged events. A fresh session keeps the check apart from the
+    // views other suites register.
+    val ns = spark.newSession()
+    import ns.implicits._
+    def views = ns.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    Seq((-1L, -1L)).toDF("o_orderkey", "o_custkey").createOrReplaceTempView("orders")
+    try {
+      val before = views
+      for (q <- Seq("q_sql_lateral", "q_sql_exists"))
+        assert(SparkEntry.queries(q)(ns, sf).collect().nonEmpty, q)
+      assert(ns.table("orders").as[(Long, Long)].collect().toSeq === Seq((-1L, -1L)))
+      val serial = SparkEntry.queries("q_sql_recursive")(ns, sf).collect().toSeq
+      val first = SparkEntry.queries("q_sql_recursive")(ns, sf)
+      SparkEntry.queries("q_sql_recursive")(ns, sf)
+      assert(first.collect().toSeq === serial)
+      assert(!views.exists(_.startsWith("sess_lagged")), views)
+      assert(views === before)
+    } finally {
+      ns.catalog.dropTempView("orders")
+      Memo.clear(ns)
+    }
+  }
+
   test("salted join spreads every build key over all 8 salt buckets") {
     // structural: the salted dim has exactly 8 rows per supplier, and the
     // physical plan honors the shuffle_hash hint (no broadcast — the

@@ -10,9 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * the cost unit these budgets pin. The base tables are loaded into the
   * cache first, as a warm pass finds them. */
 class JobBudgetSpec extends SparkSpec {
-  private def jobs(query: String, tables: Seq[String], dir: String = sf,
-      session: org.apache.spark.sql.SparkSession = spark): Int = {
-    tables.foreach(t => Tables(session, dir, t).count())
+  /** Jobs that `body` runs, counted through the job group of `query`. */
+  private def counted(query: String)(body: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"job-budget/$query"
     val n = new AtomicInteger
@@ -25,13 +24,31 @@ class JobBudgetSpec extends SparkSpec {
     sc.addSparkListener(counter)
     sc.setJobGroup(group, query, interruptOnCancel = false)
     try {
-      assert(SparkEntry.queries(query)(session, dir).collect().nonEmpty)
+      body
       GraftTestBus.drain(sc)
       n.get
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(counter)
     }
+  }
+
+  private def jobs(query: String, tables: Seq[String], dir: String = sf,
+      session: org.apache.spark.sql.SparkSession = spark): Int = {
+    tables.foreach(t => Tables(session, dir, t).count())
+    counted(query)(assert(SparkEntry.queries(query)(session, dir).collect().nonEmpty))
+  }
+
+  /** Jobs that run while `query`'s DataFrame is built, with no action, in
+    * a fresh session (nothing memoized) whose base tables and co-purchase
+    * edges are already cached: the operator's own eager work. */
+  private def buildJobs(query: String): Int = {
+    val ns = spark.newSession()
+    try {
+      Seq("orders", "lineitem").foreach(t => Tables(ns, sf, t).count())
+      queries.U.coPurchaseEdges(ns, sf).count()
+      counted(query)(SparkEntry.queries(query)(ns, sf))
+    } finally Memo.clear(ns)
   }
 
   test("q_llm_chi2_terms: one corpus pass and an unsampled final sort in <= 5 jobs") {
@@ -65,4 +82,21 @@ class JobBudgetSpec extends SparkSpec {
     val n = jobs("q_llm_simsearch_pq", Seq("embeddings"), session = spark.newSession())
     assert(n <= 47, s"$n jobs")
   }
+
+  // the community operators cut their round loops with localCheckpoints,
+  // which run the shuffle stages beneath them at build under adaptive
+  // execution. Label propagation and modularity build in 18 jobs every
+  // time. The Louvain builds do not repeat exactly: over 10-19 identical
+  // runs each, louvain took 89-91 jobs, louvain_coarse 92-96,
+  // louvain_full 256-265 and conductance 93-96, every job running one
+  // stage, so timing decides how many stages run. Their budget is the
+  // largest count seen plus that spread; a rise smaller than the spread
+  // cannot be told from timing.
+  for ((q, budget) <- Seq("q_graph_label_prop" -> 18, "q_graph_modularity" -> 18,
+      "q_graph_louvain" -> 93, "q_graph_louvain_coarse" -> 100,
+      "q_graph_louvain_full" -> 274, "q_graph_conductance" -> 99))
+    test(s"$q: built in a fresh session in <= $budget jobs") {
+      val n = buildJobs(q)
+      assert(n <= budget, s"$n jobs")
+    }
 }

@@ -148,6 +148,29 @@ class PlanLockSpec extends SparkSpec {
     }
   }
 
+  test("one Louvain move round and one edge tagging in src/main") {
+    // louvain, louvainFull's continuation rounds and its levels all run
+    // Insights.wRound (the DuckDB twins spell the gain with HUGEINT), and
+    // every community operator tags edge endpoints through tagEnds
+    val gain = lineHits(mainFiles)((_, _, l) => l.contains("DECIMAL(38,0)) * kic"))
+    assert(gain.size === 1, s"the move-round gain must appear once:\n${gain.mkString("\n")}")
+    val insights = mainFiles.filter(_.getFileName.toString == "Insights.scala")
+    val tag = lineHits(insights)((_, _, l) => l.contains("""col("dst") === col("id")"""))
+    assert(tag.size === 1, s"the endpoint tag join must appear once:\n${tag.mkString("\n")}")
+  }
+
+  test("temp views are created only in U and Sql") {
+    // U.sqlOver binds a query's frames to per-call view names and drops
+    // them; Sql.register registers the base tables on purpose. A fixed
+    // name anywhere else would overwrite a user's view of that name.
+    val allowed = Seq("queries/U", "Sql")
+      .map(n => java.nio.file.Paths.get(s"src/main/scala/graft/$n.scala")).toSet
+    val view = """create\w*TempView\(""".r
+    val hits = lineHits(mainFiles.filterNot(allowed))((_, _, l) =>
+      view.findFirstIn(l).nonEmpty)
+    assert(hits.isEmpty, s"temp views created outside U and Sql:\n${hits.mkString("\n")}")
+  }
+
   private val uScala = "src/main/scala/graft/queries/U.scala:"
 
   test("one clipped-overlap join in src/main: sum(least( appears once") {

@@ -1166,6 +1166,9 @@ class PlanSpec extends SparkSpec {
     assert(Tables(spark, sf, "orders").storageLevel == StorageLevel.DISK_ONLY)
     val e = queries.U.coPurchaseEdges(spark, sf)
     assert(e.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    // the cached plan is adaptive and reports its hash partitioning only
+    // once materialized, as any earlier graph query leaves it
+    e.count()
     // a src-keyed aggregate (every iterative graph round's shape) reads
     // the cached hash partitioning: no Exchange between the aggregate and
     // the in-memory scan. collect walks children only, not the cached
